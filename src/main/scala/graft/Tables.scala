@@ -54,10 +54,7 @@ object Tables {
     part.exists { st =>
       val key = (d, s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       nanosProbe.computeIfAbsent(key, { _ =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(st.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
+        withFooter(conf, st.getPath.toString) { r =>
           val schema = r.getFooter.getFileMetaData.getSchema
           schema.containsField("ts") &&
             (schema.getType(schema.getFieldIndex("ts"))
@@ -66,9 +63,21 @@ object Tables {
                 t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
               case _ => false
             })
-        } finally r.close()
+        }
       })
     }
+  }
+
+  /** Opens the footer of the parquet file at `path` with `conf`, runs
+    * `f` on the reader and closes it — the one place a parquet footer
+    * is read on the driver (row counts, row-group layout, schema
+    * probes). */
+  private[graft] def withFooter[A](conf: org.apache.hadoop.conf.Configuration,
+      path: String)(f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), conf))
+    try f(r) finally r.close()
   }
 
   /** Adapt whatever physical `ts` the scan produced to one logical

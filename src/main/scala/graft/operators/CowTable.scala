@@ -29,20 +29,20 @@ import graft.Tables
   * the highest complete manifest; old manifests stay readable (time
   * travel), and replaced data files are never deleted by a merge.
   *
-  * Two manifest generations coexist version-by-version:
-  *  - v1 (`graft-cow-manifest-v1`): header + one path per line,
-  *    deletion vectors as `dv:<path>`. Still written by the
-  *    string-list [[commit]] and still read.
-  *  - v2 (`graft-cow-manifest-v2`): adds the table schema (JSON), a
-  *    pointer to a PARQUET entries sidecar, and a trailing `end`
-  *    marker so an EMPTY snapshot ("delete everything") is a valid,
-  *    distinguishable-from-half-written commit. The entries parquet
-  *    carries one row per file — kind, path, bytes, row count, and a
-  *    per-column min/max/null-count stats JSON — and is what
-  *    [[readWhere]]'s data skipping, [[tableChanges]]'s file-set
-  *    algebra, and [[vacuum]]'s liveness anti-join run on AS
-  *    DATAFRAMES: at 10⁶ files the planning state is a columnar scan,
-  *    not driver text parsing.
+  * The manifest has ONE format (`graft-cow-manifest-v3`): a header,
+  * the table schema (JSON), a pointer to a PARQUET entries sidecar and
+  * its entry count, the optional partition/bloom/bucket/dropped-column
+  * lines, one counted `dv:<runs>:<path>` line per deletion vector, and
+  * a trailing `end` marker so an EMPTY snapshot ("delete everything")
+  * is a valid, distinguishable-from-half-written commit. Data-file
+  * paths are NOT in the text: the entries parquet is the sole data-file
+  * list. It carries one row per file — kind, path, bytes, row count,
+  * and a per-column min/max/null-count stats JSON — and is what
+  * [[readWhere]]'s data skipping, [[tableChanges]]'s file-set algebra,
+  * and [[vacuum]]'s liveness anti-join run on AS DATAFRAMES: at 10⁶
+  * files the planning state is a columnar scan, not driver text
+  * parsing. A complete manifest in any other shape is refused loudly
+  * ([[parseManifest]]).
   *
   * Per-file statistics are collected at [[writeData]] time with one
   * column-pruned aggregate over the just-written (delta-sized, page-
@@ -57,7 +57,7 @@ import graft.Tables
   * writes the content through a temp file + atomic rename. A reader that
   * lands in the tiny window between create and rename sees an empty
   * manifest and falls back to the previous version ([[latestManifest]]
-  * skips unparseable/empty manifests).
+  * skips empty claims).
   *
   * MERGE INTO semantics (update-all flavor): source rows REPLACE
   * matched target rows' non-key columns; a matched source row with
@@ -77,37 +77,16 @@ import graft.Tables
   */
 object CowTable {
 
-  private val HeaderV1 = "graft-cow-manifest-v1"
-  private val HeaderV2 = "graft-cow-manifest-v2"
-  /** v2.1 = v2 body + the counted `dv:<runs>:<path>` line form. Written
-    * ONLY when a counted line is present, so v2-only readers refuse
-    * such manifests loudly instead of misparsing `<runs>:<path>` as a
-    * sidecar path (forward-compat gate; downgrade reading of counted
-    * manifests is unsupported by design). */
-  private val HeaderV21 = "graft-cow-manifest-v2.1"
-  /** v2.2 = v2.1 body + bloom-index lines (`bloomcols:` spec +
-    * `bloomrel:` sidecar pointers). Written ONLY when a bloom line is
-    * present — same forward-compat gating as v2.1's counted dv form:
-    * a pre-bloom reader refuses the manifest instead of misparsing a
-    * `bloomrel:` line as a data-file path. Bloom-free tables keep the
-    * older headers and stay fully downgrade-readable. */
-  private val HeaderV22 = "graft-cow-manifest-v2.2"
-  /** v3 = the metadata lines of v2.2 WITHOUT the per-data-file path
-    * lines: the entries-parquet sidecar is the SOLE data-file list, so
-    * commit writes and reads parse O(1) driver-side text regardless of
-    * file count — the millions-of-files frontier (the last O(#files)
-    * driver wall was exactly this text list). DV lines STAY in the
-    * text: they are delta-sized by contract (maintenance folds them),
-    * the read path needs them driver-side for the anti-join broadcast
-    * decision anyway, and the counted `dv:<runs>:<path>` form keeps
-    * run counts metadata-only. v3 also carries the `dropped:` tombstone
-    * line — every column name (and prior-name chain) ever dropped —
-    * so a later ADD can never resurrect an old file's physical column
-    * under a reused name. Written by every stats commit; v1/v2.x stay
-    * fully readable, and pre-v3 readers refuse a v3 manifest (fall
-    * back / error) instead of misparsing it — the same forward-compat
-    * gate as v2.1/v2.2. */
-  private val HeaderV3 = "graft-cow-manifest-v3"
+  /** The manifest header. The entries-parquet sidecar is the SOLE
+    * data-file list, so commit writes and reads parse O(1) driver-side
+    * text regardless of file count. DV lines stay in the text: they
+    * are delta-sized by contract (maintenance folds them), the read
+    * path needs them driver-side for the anti-join broadcast decision
+    * anyway, and the counted `dv:<runs>:<path>` form keeps run counts
+    * metadata-only. The `dropped:` tombstone line lists every column
+    * name (and prior-name chain) ever dropped, so a later ADD can never
+    * resurrect an old file's physical column under a reused name. */
+  private val Header = "graft-cow-manifest-v3"
   private val DvPrefix = "dv:"
   private val DroppedPrefix = "dropped:"
   private val SchemaPrefix = "schema:"
@@ -167,9 +146,9 @@ object CowTable {
 
   /** One file of a snapshot. `stats` is a JSON object
     * `{"col":{"min":…,"max":…,"nulls":n},…}` for the stats-eligible
-    * columns, absent for deletion vectors and for files committed
-    * through the legacy string-list API. `bytes` is -1 when unknown
-    * (legacy manifests). `part` is a JSON object of partition-column →
+    * columns, absent for deletion vectors and for data entries
+    * registered without stats. `bytes` is -1 when unknown (deletion
+    * vectors). `part` is a JSON object of partition-column →
     * value for files of a partitioned table that are single-valued on
     * the partition columns (NULL otherwise — a compaction that merged
     * across partitions simply loses exact-partition pruning for the
@@ -180,68 +159,51 @@ object CowTable {
 
   /** `files` are the data files of the snapshot; `dvs` are its deletion
     * vector files — parquet of range-encoded (file_path, start, len)
-    * deleted-row runs ([[dvSchema]]) a reader must filter away. v2
-    * manifests add the data schema
-    * (empty snapshots stay readable), the entries-parquet pointer
-    * (stats live there), the entry count (gates the small-sidecar
-    * driver cache without reading the sidecar), and the table's
-    * partition columns. `dvRunCounts` maps a DV path to its total run
-    * count, RECORDED AT COMMIT TIME in the `dv:<runs>:<path>` line
-    * form — the broadcast-vs-anti-join decision on the read path is
-    * then metadata-only, never a per-read footer walk over every
-    * sidecar a MOR-heavy table accumulated between maintenance passes
-    * (entries for legacy `dv:<path>` lines are simply absent and fall
-    * back to one footer read, then migrate forward on the next
-    * commit). */
-  case class Manifest(version: Int, files0: Seq[String],
-      dvs: Seq[String] = Nil, schemaJson: Option[String] = None,
-      entriesRel: Option[String] = None, entryCount: Option[Long] = None,
+    * deleted-row runs ([[dvSchema]]) a reader must filter away.
+    * `schemaJson` is the data schema (empty snapshots stay readable),
+    * `entriesRel` the entries-parquet pointer (relative to the
+    * manifest dir; stats live there), `entryCount` its row count
+    * (gates the small-sidecar driver cache without reading the
+    * sidecar). `dvRunCounts` maps each DV path to its total run count,
+    * RECORDED AT COMMIT TIME in the `dv:<runs>:<path>` line — the
+    * broadcast-vs-anti-join decision on the read path is metadata-only,
+    * never a per-read footer walk over every sidecar a MOR-heavy table
+    * accumulated between maintenance passes. */
+  case class Manifest(version: Int, table: String, dvs: Seq[String],
+      schemaJson: String, entriesRel: String, entryCount: Long,
       partitionCols: Seq[String] = Nil,
       dvRunCounts: Map[String, Long] = Map.empty,
       bloomCols: Map[String, BloomColSpec] = Map.empty,
       bloomRels: Seq[String] = Nil,
       bucketSpec: Option[(String, Int)] = None,
-      droppedNames: Set[String] = Set.empty,
-      filesLoader: Option[() => Seq[String]] = None) {
-    def schemaOpt: Option[StructType] =
-      schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      droppedNames: Set[String] = Set.empty) {
+    @transient lazy val schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
 
-    /** The snapshot's data-file paths. A v3 manifest carries NO file
-      * lines — first touch LOADS the list from the entries sidecar
-      * (one Spark collect, counted by
+    /** The snapshot's data-file paths (normalized). The manifest
+      * carries NO file lines — first touch LOADS the list from the
+      * entries sidecar (one Spark collect, counted by
       * [[CowTable.driverManifestFileListLoads]] so the planning-scale
       * spec can pin which paths stay list-free). Planning, commit, and
       * selective-read paths use [[nData]]/[[dataNonEmpty]] and the
       * sidecar DataFrame instead; the loader fires only where a driver
       * file list is GENUINELY needed (full-table scan planning, rare
-      * race-rebase validation, legacy consumers). Memoized. Lifetime
-      * contract: the list is served by this VERSION's sidecar, so a
-      * manifest handle held across a vacuum that drops the version can
-      * no longer produce it — the same rule as time travel (a vacuumed
-      * version is not readable); materialize before vacuuming if the
-      * old list is needed. */
-    @transient lazy val files: Seq[String] = filesLoader match {
-      case Some(ld) =>
-        CowTable.driverManifestFileListLoads.incrementAndGet()
-        ld()
-      case None => files0
+      * race-rebase validation). Memoized. Lifetime contract: the list
+      * is served by this VERSION's sidecar, so a manifest handle held
+      * across a vacuum that drops the version can no longer produce it
+      * — the same rule as time travel (a vacuumed version is not
+      * readable); materialize before vacuuming if the old list is
+      * needed. */
+    @transient lazy val files: Seq[String] = {
+      CowTable.driverManifestFileListLoads.incrementAndGet()
+      CowTable.sidecarDataPaths(table, entriesRel)
     }
 
-    /** Data-file count WITHOUT materializing the list (v3: entry count
-      * minus the dv lines; earlier formats: the parsed list). */
-    def nData: Long = filesLoader match {
-      case Some(_) => entryCount.getOrElse(0L) - dvs.size
-      case None => files0.size.toLong
-    }
+    /** Data-file count WITHOUT materializing the list: entry count
+      * minus the dv rows (one per dv line, by construction). */
+    def nData: Long = entryCount - dvs.size
 
     def dataNonEmpty: Boolean = nData > 0L
-
-    /** Normalized twin of `files`, index-aligned — memoized so pruning
-      * pays the O(#files) percent-decode ONCE per manifest object
-      * instead of once per prune call (a bloom-probed gate runs many
-      * prunes against one snapshot). */
-    @transient lazy val normalizedFiles: Array[String] =
-      files.iterator.map(CowTable.normalizePath).toArray
   }
 
   private def manifestDir(table: String): Path = Paths.get(table, "manifest")
@@ -266,136 +228,84 @@ object CowTable {
       graft.functions.PathNorm(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
 
-  /** One `dv:`-stripped manifest line → (path, run count if recorded).
-    * The counted form is `<runs>:<path>`; paths are absolute (start
-    * with '/'), so a leading all-digit segment is unambiguous. */
-  private def parseDvLine(l: String): (String, Option[Long]) = {
+  /** One `dv:`-stripped manifest line `<runs>:<path>` → (path, runs).
+    * Paths are absolute (start with '/'), so the leading all-digit
+    * segment is unambiguous. */
+  private def parseDvLine(l: String): Option[(String, Long)] = {
     val i = l.indexOf(':')
     if (i > 0 && l.take(i).forall(_.isDigit))
-      (l.substring(i + 1), Some(l.take(i).toLong))
-    else (l, None)
+      Some((l.substring(i + 1), l.take(i).toLong))
+    else None
   }
 
-  /** The manifest line for one DV file: counted when known. */
-  private def dvLine(p: String, runs: Map[String, Long]): String =
-    runs.get(p) match {
-      case Some(n) => s"$DvPrefix$n:$p"
-      case None => DvPrefix + p
-    }
-
-  private def parseManifest(path: Path, v: Int): Option[Manifest] = {
+  /** Reads manifest `v` of `table`. None ONLY for a missing file or
+    * the zero-length claim [[writeManifestText]] leaves between its
+    * create-exclusive claim and the atomic rename (a claim is either
+    * empty or complete). Any other content that is not a well-formed
+    * v3 manifest — a foreign or retired header, an unknown line, a
+    * malformed dv line, a missing `end`/`entries:`/`nentries:` — throws:
+    * silently skipping it would serve an older snapshot and drop the
+    * version from vacuum's and expiry's live sets. */
+  private def parseManifest(table: String, v: Int): Option[Manifest] = {
+    val path = manifestPath(table, v)
     if (!Files.isRegularFile(path)) return None
-    val lines = scala.io.Source.fromFile(path.toFile, "UTF-8")
-    try {
-      val all = lines.getLines().toList
-      all match {
-        case HeaderV1 :: rest if rest.nonEmpty =>
-          val (dvLines, dataLines) = rest.partition(_.startsWith(DvPrefix))
-          val dvp = dvLines.map(l => parseDvLine(l.stripPrefix(DvPrefix)))
-          Some(Manifest(v, dataLines, dvp.map(_._1),
-            dvRunCounts = dvp.collect { case (p, Some(n)) => p -> n }.toMap))
-        case h :: rest if (h == HeaderV2 || h == HeaderV21 ||
-            h == HeaderV22) && rest.lastOption.contains(EndMarker) =>
-          val body = rest.dropRight(1)
-          val schema = body.find(_.startsWith(SchemaPrefix))
-            .map(_.stripPrefix(SchemaPrefix))
-          val entries = body.find(_.startsWith(EntriesPrefix))
-            .map(_.stripPrefix(EntriesPrefix))
-          val nEntries = body.find(_.startsWith(EntryCountPrefix))
-            .map(_.stripPrefix(EntryCountPrefix).toLong)
-          val partCols = body.find(_.startsWith(PartColsPrefix))
-            .map(_.stripPrefix(PartColsPrefix).split(",").toSeq
-              .filter(_.nonEmpty)).getOrElse(Nil)
-          val bloomCols = body.find(_.startsWith(BloomColsPrefix))
-            .map(l => decodeBloomCols(l.stripPrefix(BloomColsPrefix)))
-            .getOrElse(Map.empty[String, BloomColSpec])
-          val bloomRels = body.filter(_.startsWith(BloomRelPrefix))
-            .map(_.stripPrefix(BloomRelPrefix))
-          val bucketSpec = body.find(_.startsWith(BucketSpecPrefix))
-            .map(l => decodeBucketSpec(l.stripPrefix(BucketSpecPrefix)))
-          val paths = body.filterNot(l =>
-            l.startsWith(SchemaPrefix) || l.startsWith(EntriesPrefix) ||
-              l.startsWith(EntryCountPrefix) ||
-              l.startsWith(PartColsPrefix) ||
-              l.startsWith(BloomColsPrefix) ||
-              l.startsWith(BloomRelPrefix) ||
-              l.startsWith(BucketSpecPrefix))
-          val (dvLines, dataLines) = paths.partition(_.startsWith(DvPrefix))
-          val dvp = dvLines.map(l => parseDvLine(l.stripPrefix(DvPrefix)))
-          Some(Manifest(v, dataLines, dvp.map(_._1),
-            schema, entries, nEntries, partCols,
-            dvp.collect { case (p, Some(n)) => p -> n }.toMap,
-            bloomCols, bloomRels, bucketSpec))
-        case HeaderV3 :: rest if rest.lastOption.contains(EndMarker) =>
-          val body = rest.dropRight(1)
-          val schema = body.find(_.startsWith(SchemaPrefix))
-            .map(_.stripPrefix(SchemaPrefix))
-          val entries = body.find(_.startsWith(EntriesPrefix))
-            .map(_.stripPrefix(EntriesPrefix))
-          val nEntries = body.find(_.startsWith(EntryCountPrefix))
-            .map(_.stripPrefix(EntryCountPrefix).toLong)
-          val partCols = body.find(_.startsWith(PartColsPrefix))
-            .map(_.stripPrefix(PartColsPrefix).split(",").toSeq
-              .filter(_.nonEmpty)).getOrElse(Nil)
-          val bloomCols = body.find(_.startsWith(BloomColsPrefix))
-            .map(l => decodeBloomCols(l.stripPrefix(BloomColsPrefix)))
-            .getOrElse(Map.empty[String, BloomColSpec])
-          val bloomRels = body.filter(_.startsWith(BloomRelPrefix))
-            .map(_.stripPrefix(BloomRelPrefix))
-          val bucketSpec = body.find(_.startsWith(BucketSpecPrefix))
-            .map(l => decodeBucketSpec(l.stripPrefix(BucketSpecPrefix)))
-          val dropped = body.find(_.startsWith(DroppedPrefix))
-            .map(_.stripPrefix(DroppedPrefix).split(",").toSeq
-              .filter(_.nonEmpty)
-              .map(java.net.URLDecoder.decode(_, "UTF-8")).toSet)
-            .getOrElse(Set.empty[String])
-          val leftovers = body.filterNot(l =>
-            l.startsWith(SchemaPrefix) || l.startsWith(EntriesPrefix) ||
-              l.startsWith(EntryCountPrefix) ||
-              l.startsWith(PartColsPrefix) ||
-              l.startsWith(BloomColsPrefix) ||
-              l.startsWith(BloomRelPrefix) ||
-              l.startsWith(BucketSpecPrefix) ||
-              l.startsWith(DroppedPrefix) ||
-              l.startsWith(DvPrefix))
-          // v3 has NO data-file lines; an unknown line means a newer
-          // line form — refuse rather than misparse (the v2.1 gate)
-          if (leftovers.nonEmpty || entries.isEmpty || nEntries.isEmpty)
-            None
-          else {
-            val dvp = body.filter(_.startsWith(DvPrefix))
-              .map(l => parseDvLine(l.stripPrefix(DvPrefix)))
-            val mDir = path.getParent
-            val rel = entries.get
-            Some(Manifest(v, Nil, dvp.map(_._1),
-              schema, entries, nEntries, partCols,
-              dvp.collect { case (p, Some(n)) => p -> n }.toMap,
-              bloomCols, bloomRels, bucketSpec, dropped,
-              Some(() => sidecarDataPathsAt(mDir, rel))))
-          }
-        case _ => None // empty or half-written: fall back to older version
-      }
-    } finally lines.close()
+    val all = {
+      val src = scala.io.Source.fromFile(path.toFile, "UTF-8")
+      try src.getLines().toList finally src.close()
+    }
+    if (all.isEmpty) return None
+    def refuse(why: String): Nothing = throw new IllegalStateException(
+      s"cow table $table: manifest v$v is not a readable " +
+        s"$Header manifest ($why); first line: '${all.head}'")
+    if (all.head != Header) refuse("unknown header")
+    if (all.last != EndMarker) refuse(s"missing '$EndMarker' marker")
+    val body = all.tail.dropRight(1)
+    def one(prefix: String): Option[String] =
+      body.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+    val leftovers = body.filterNot(l => LinePrefixes.exists(l.startsWith))
+    if (leftovers.nonEmpty) refuse(s"unknown line '${leftovers.head}'")
+    val schema = one(SchemaPrefix).getOrElse(refuse(s"no '$SchemaPrefix'"))
+    val rel = one(EntriesPrefix).getOrElse(refuse(s"no '$EntriesPrefix'"))
+    val nEntries = one(EntryCountPrefix).getOrElse(
+      refuse(s"no '$EntryCountPrefix'")).toLong
+    val dvp = body.filter(_.startsWith(DvPrefix)).map { l =>
+      parseDvLine(l.stripPrefix(DvPrefix))
+        .getOrElse(refuse(s"uncounted dv line '$l'")) }
+    Some(Manifest(v, table, dvp.map(_._1), schema, rel, nEntries,
+      partitionCols = one(PartColsPrefix)
+        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil),
+      dvRunCounts = dvp.toMap,
+      bloomCols = one(BloomColsPrefix).map(decodeBloomCols)
+        .getOrElse(Map.empty[String, BloomColSpec]),
+      bloomRels = body.filter(_.startsWith(BloomRelPrefix))
+        .map(_.stripPrefix(BloomRelPrefix)),
+      bucketSpec = one(BucketSpecPrefix).map(decodeBucketSpec),
+      droppedNames = one(DroppedPrefix)
+        .map(_.split(",").toSeq.filter(_.nonEmpty)
+          .map(java.net.URLDecoder.decode(_, "UTF-8")).toSet)
+        .getOrElse(Set.empty[String])))
   }
 
-  /** Test hook: how many times a v3 manifest's data-file list was
+  /** Every line form a manifest body may hold. */
+  private val LinePrefixes = Seq(SchemaPrefix, EntriesPrefix,
+    EntryCountPrefix, PartColsPrefix, BloomColsPrefix, BloomRelPrefix,
+    BucketSpecPrefix, DroppedPrefix, DvPrefix)
+
+  /** Test hook: how many times a manifest's data-file list was
     * materialized on the driver (the [[Manifest.files]] loader). The
     * planning-scale spec pins that commit + selective read planning
     * over a large table never fire it. */
   private[graft] val driverManifestFileListLoads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The v3 file-list loader: one columnar collect of the sidecar's
-    * data rows (kind='data'), normalized to openable filesystem paths.
+  /** The file-list loader: one columnar collect of the sidecar's data
+    * rows (kind='data'), normalized to openable filesystem paths.
     * Needs an active session — every CowTable operation has one; a
     * bare parse that never touches `.files` never pays it. */
-  private def sidecarDataPathsAt(mDir: Path, rel: String): Seq[String] = {
-    val spark = SparkSession.active
-    spark.read.schema(entriesSchema)
-      .parquet(mDir.resolve(rel).toString)
+  private def sidecarDataPaths(table: String, rel: String): Seq[String] =
+    sidecarScan(SparkSession.active, table, rel)
       .filter(col("kind") === "data").select("path")
       .collect().map(r => normalize(r.getString(0))).toSeq
-  }
 
   private def listDir(dir: Path): Seq[Path] = {
     val s = Files.list(dir)
@@ -429,11 +339,11 @@ object CowTable {
 
   def latestManifest(table: String): Option[Manifest] =
     completeVersions(table).iterator
-      .flatMap(v => parseManifest(manifestPath(table, v), v))
+      .flatMap(v => parseManifest(table, v))
       .nextOption()
 
   def readManifest(table: String, version: Int): Manifest =
-    parseManifest(manifestPath(table, version), version).getOrElse(
+    parseManifest(table, version).getOrElse(
       throw new IllegalArgumentException(
         s"cow table $table has no complete manifest v$version"))
 
@@ -476,16 +386,12 @@ object CowTable {
   /** Schema equality for rebase validation — by field names and types,
     * not raw JSON: a parquet scan round-trip flips nullability flags,
     * which is not a conflicting schema change. */
-  private[graft] def schemaCompatible(a: Option[String],
-      b: Option[String]): Boolean = (a, b) match {
-    case (Some(x), Some(y)) =>
-      x == y || scala.util.Try {
-        def norm(j: String) = DataType.fromJson(j).asInstanceOf[StructType]
-          .fields.map(f => (f.name, f.dataType.catalogString)).toSeq
-        norm(x) == norm(y)
-      }.getOrElse(false)
-    case (x, y) => x == y
-  }
+  private[graft] def schemaCompatible(x: String, y: String): Boolean =
+    x == y || scala.util.Try {
+      def norm(j: String) = DataType.fromJson(j).asInstanceOf[StructType]
+        .fields.map(f => (f.name, f.dataType.catalogString)).toSeq
+      norm(x) == norm(y)
+    }.getOrElse(false)
 
   /** Rebase metadata preservation: every rebasing committer re-commits
     * the schema it derived from its BASE, so a concurrent
@@ -500,24 +406,22 @@ object CowTable {
     * bare. Only [[alterTable]] itself opts out — its schema IS the
     * intended change. */
   private[graft] def adoptHeadSchema(schema: StructType,
-      h: Manifest): StructType = h.schemaOpt match {
-    case Some(hs) =>
-      if (hs.json != schema.json &&
-          schemaCompatible(Some(hs.json), Some(schema.json))) hs
-      else {
-        val byName = hs.fields.map(f => f.name -> f).toMap
-        StructType(schema.fields.map { f =>
-          byName.get(f.name) match {
-            case Some(hf)
-                if hf.dataType.catalogString == f.dataType.catalogString &&
-                  f.metadata == org.apache.spark.sql.types.Metadata.empty &&
-                  hf.metadata != org.apache.spark.sql.types.Metadata.empty =>
-              f.copy(metadata = hf.metadata)
-            case _ => f
-          }
-        })
-      }
-    case None => schema
+      h: Manifest): StructType = {
+    val hs = h.schema
+    if (hs.json != schema.json && schemaCompatible(hs.json, schema.json)) hs
+    else {
+      val byName = hs.fields.map(f => f.name -> f).toMap
+      StructType(schema.fields.map { f =>
+        byName.get(f.name) match {
+          case Some(hf)
+              if hf.dataType.catalogString == f.dataType.catalogString &&
+                f.metadata == org.apache.spark.sql.types.Metadata.empty &&
+                hf.metadata != org.apache.spark.sql.types.Metadata.empty =>
+            f.copy(metadata = hf.metadata)
+          case _ => f
+        }
+      })
+    }
   }
 
   private[graft] def commitWithRetry(table: String, base: Manifest,
@@ -592,9 +496,7 @@ object CowTable {
     srcKeys.foreach { case (sk, keys) =>
       val added = addedDataPaths(spark, table, h, base)
       if (added.nonEmpty) {
-        val reader = base.schemaOpt.map(spark.read.schema)
-          .getOrElse(spark.read)
-        if (reader.parquet(added: _*)
+        if (spark.read.schema(base.schema).parquet(added: _*)
             .join(broadcast(sk), keys, "left_semi")
             .limit(1).count() > 0L)
           conflict("write of rows matching this operation's source keys")
@@ -605,35 +507,16 @@ object CowTable {
   /** Data paths of `h` absent from `base` — the rebase validator's
     * "what landed since my snapshot" set, computed as a SIDECAR
     * anti-join (executor-side; the collected result is the
-    * interleaved delta, not a table listing) so a race on a large v3
+    * interleaved delta, not a table listing) so a race on a large
     * table never materializes either side's file list. Returned paths
-    * are openable (v3: normalized; pre-v3: resolved to the manifest's
-    * raw strings). */
+    * are normalized, hence openable. */
   private def addedDataPaths(spark: SparkSession, table: String,
       h: Manifest, base: Manifest): Seq[String] = {
     def side(m: Manifest): DataFrame = entriesDF(spark, table, m)
       .filter(col("kind") === "data")
       .select(normalizeSql(col("path")).as("__np"))
-    val addedN = side(h).join(side(base), Seq("__np"), "left_anti")
+    side(h).join(side(base), Seq("__np"), "left_anti")
       .collect().map(_.getString(0)).toSeq
-    if (addedN.isEmpty || h.filesLoader.isDefined) addedN
-    else {
-      val byNorm = h.files.map(f => normalize(f) -> f).toMap
-      addedN.map(p => byNorm.getOrElse(p, p))
-    }
-  }
-
-  /** Legacy string-list commit (v1 manifest, no stats). Kept for
-    * callers that manage file lists themselves; internal operations go
-    * through [[commitEntries]] so stats survive. */
-  def commit(table: String, version: Int, files: Seq[String],
-      dvs: Seq[String] = Nil): Manifest = {
-    require(files.nonEmpty,
-      s"cow commit v$version with no files — empty snapshots need the " +
-        "entries-based commit (a v2 manifest)")
-    writeManifestText(table, version,
-      (HeaderV1 +: (files ++ dvs.map(DvPrefix + _))).mkString("\n"))
-    Manifest(version, files, dvs)
   }
 
   /** An entries sidecar is IMMUTABLE once its manifest commits (the rel
@@ -696,7 +579,7 @@ object CowTable {
 
   private def cachedEntriesOf(table: String,
       m: Manifest): Option[Seq[FileEntry]] =
-    m.entriesRel.flatMap(rel => Option(entriesCache.get((table, rel))))
+    Option(entriesCache.get((table, m.entriesRel)))
 
   private def cacheEntries(table: String, rel: String,
       entries: Seq[FileEntry]): Unit =
@@ -713,14 +596,13 @@ object CowTable {
   private def canonDvRows(dvs: Seq[String]): Seq[FileEntry] =
     dvs.map(FileEntry("dv", _, -1L, None, None))
 
-  /** The sidecar's stored schema. `part` was added in a later format
-    * round; older sidecars lack the column and NULL-extend on read. */
+  /** The sidecar's stored schema. */
   private val entriesSchema = StructType(Seq(
     StructField("kind", StringType), StructField("path", StringType),
     StructField("bytes", LongType), StructField("numRows", LongType),
     StructField("stats", StringType), StructField("part", StringType)))
 
-  /** v2 commit: entries parquet sidecar + pointer manifest. An empty
+  /** Commit: entries parquet sidecar + pointer manifest. An empty
     * `entries` is a valid snapshot (the `end` marker distinguishes
     * "complete but empty" from "half-written"); `schema` keeps such a
     * snapshot readable. */
@@ -757,7 +639,7 @@ object CowTable {
       partitionCols, carriedSeq = Some(carried))
     // cache mirrors the WRITTEN sidecar: data rows as carried, dv rows
     // in their canonical rebuilt form (appended last)
-    if (newDataFiles.isEmpty) cacheEntries(table, m.entriesRel.get,
+    if (newDataFiles.isEmpty) cacheEntries(table, m.entriesRel,
       carried.filterNot(_.kind == "dv") ++ canonDvRows(dvs))
     m
   }
@@ -835,9 +717,9 @@ object CowTable {
     val bucketSpec = bucketSpecOverride
       .getOrElse(headForBloom.flatMap(_.bucketSpec))
     // DV run counts resolve AT COMMIT TIME: carried counts ride from
-    // the head manifest (knownDvRuns); anything unrecorded — freshly
-    // written sidecars, legacy lines — gets ONE footer read here, so
-    // the read path's broadcast decision never opens a footer again
+    // the head manifest (knownDvRuns); a freshly written sidecar gets
+    // ONE footer read here, so the read path's broadcast decision
+    // never opens a footer again
     val dvRunsAll: Map[String, Long] = carriedDvs.map(p =>
       p -> knownDvRuns.getOrElse(p, dvRunCount(spark, Seq(p)))).toMap
     val rel = s"files/v$version-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -846,10 +728,7 @@ object CowTable {
     // dv sidecar rows are CANONICALIZED on every commit: carried dv
     // rows are dropped and exactly one synthetic row per carriedDvs
     // element is appended, so nData = entryCount - dvs.size holds BY
-    // CONSTRUCTION — even when the carry crossed a pre-v3 base whose
-    // legacy `dv:` manifest lines never had sidecar rows (the
-    // migration undercount: nData would go low/zero and readSnapshot
-    // would return empty on a live table). dv rows carry only
+    // CONSTRUCTION, whatever dv rows the carry held. dv rows carry only
     // (kind, path) information downstream — every bytes/stats consumer
     // filters kind='data' first — so the rebuild loses nothing.
     val fastRows: Option[Seq[FileEntry]] =
@@ -883,7 +762,7 @@ object CowTable {
     val dvs = carriedDvs
     // the sole data-file list is the just-written sidecar: the entry
     // count comes from its parquet FOOTER (metadata-only, no Spark
-    // job, no driver list) — the v3 commit never materializes the
+    // job, no driver list) — the commit never materializes the
     // carried file paths, which is the whole point
     val nEntries = parquetRowCount(spark, out)
     // dropped-column tombstones carry forward on EVERY commit (the
@@ -894,12 +773,6 @@ object CowTable {
     val partLine =
       if (partitionCols.isEmpty) Nil
       else Seq(PartColsPrefix + partitionCols.mkString(","))
-    // protocol gate (the v2.1/v2.2 discipline, one step further): every
-    // stats commit now writes v3 — no data-file lines at all — and a
-    // pre-v3 reader REFUSES the manifest (falls back / errors) instead
-    // of misreading an empty file list. v1/v2.x manifests written by
-    // older builds (and the legacy string-list [[commit]]) stay fully
-    // readable.
     val bloomLines =
       (if (bloomSpecs.isEmpty) Nil
        else Seq(BloomColsPrefix + encodeBloomCols(bloomSpecs))) ++
@@ -911,14 +784,13 @@ object CowTable {
       else Seq(DroppedPrefix + dropped.toSeq.sorted
         .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(","))
     writeManifestText(table, version,
-      (Seq(HeaderV3, SchemaPrefix + commitSchema.json, EntriesPrefix + rel,
+      (Seq(Header, SchemaPrefix + commitSchema.json, EntriesPrefix + rel,
         EntryCountPrefix + nEntries) ++ partLine ++ bloomLines ++
         bucketLine ++ droppedLine ++
-        dvs.map(dvLine(_, dvRunsAll)) :+ EndMarker).mkString("\n"))
-    val mDir = manifestDir(table)
-    Manifest(version, Nil, dvs, Some(commitSchema.json), Some(rel),
-      Some(nEntries), partitionCols, dvRunsAll, bloomSpecs, bloomRels,
-      bucketSpec, dropped, Some(() => sidecarDataPathsAt(mDir, rel)))
+        dvs.map(p => s"$DvPrefix${dvRunsAll(p)}:$p") :+ EndMarker)
+        .mkString("\n"))
+    Manifest(version, table, dvs, commitSchema.json, rel, nEntries,
+      partitionCols, dvRunsAll, bloomSpecs, bloomRels, bucketSpec, dropped)
   }
 
   /** Writes an entries sidecar ON THE DRIVER — one parquet part file
@@ -950,12 +822,8 @@ object CowTable {
     * files) metadata reads, no Spark job. */
   private def parquetRowCount(spark: SparkSession, dir: Path): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    listPartFiles(dir).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    listPartFiles(dir).map(f => Tables.withFooter(conf, f)(_.getRecordCount))
+      .sum
   }
 
   /** Which of `candidates` (normalized) are live data files of `m` —
@@ -963,14 +831,11 @@ object CowTable {
     * guard needs. A SMALL sidecar answers entirely on the driver (set
     * intersection over the cached entries — zero Spark jobs, and this
     * probe runs once per streaming epoch); a large one stays a filtered
-    * columnar scan, so a v3 manifest's full file list never
+    * columnar scan, so a manifest's full file list never
     * materializes for an epoch-sized question. */
   private[graft] def entriesLiveAmong(spark: SparkSession, table: String,
       m: Manifest, candidates: Seq[String]): Set[String] = {
     if (candidates.isEmpty || !m.dataNonEmpty) return Set.empty
-    if (m.filesLoader.isEmpty)
-      return m.normalizedFiles.toSet
-        .intersect(candidates.map(normalize).toSet)
     val candN = candidates.map(normalize)
     smallEntries(spark, table, m) match {
       case Some(es) =>
@@ -990,14 +855,11 @@ object CowTable {
     * path) — None for a large sidecar, which must stay a parquet scan.
     * Paths come back RESOLVED (openable), like [[loadEntries]]. */
   private def smallEntries(spark: SparkSession, table: String,
-      m: Manifest): Option[Seq[FileEntry]] = m.entriesRel match {
-    case None => Some(legacyEntries(m))
-    case Some(_) =>
-      cachedEntriesOf(table, m).orElse(
-        if (m.entryCount.exists(_ <= SmallSidecarEntries))
-          Some(loadEntries(spark, table, m))
-        else None)
-  }
+      m: Manifest): Option[Seq[FileEntry]] =
+    cachedEntriesOf(table, m).orElse(
+      if (m.entryCount <= SmallSidecarEntries)
+        Some(loadEntries(spark, table, m))
+      else None)
 
   /** The manifest's entries as a DataFrame (kind, path, bytes, numRows,
     * stats, part) — the substrate for data skipping and file-set
@@ -1006,17 +868,12 @@ object CowTable {
     * so planning predicates evaluate executor-side and only surviving
     * paths are ever collected. Paths here are the sidecar's STORED
     * strings (normalized URIs for stats-scanned files) — consumers
-    * compare through [[normalizeSql]]/[[normalize]] and resolve back to
-    * manifest-raw strings before opening files. */
+    * compare through [[normalizeSql]]/[[normalize]] before opening
+    * files. */
   def entriesDF(spark: SparkSession, table: String, m: Manifest): DataFrame =
-    m.entriesRel match {
-      case None => spark.createDataFrame(legacyEntries(m))
-      case Some(rel) =>
-        val cached = entriesCache.get((table, rel))
-        if (cached != null) spark.createDataFrame(cached)
-        else if (m.entryCount.exists(_ <= SmallSidecarEntries))
-          spark.createDataFrame(loadEntries(spark, table, m))
-        else sidecarScan(spark, table, rel)
+    smallEntries(spark, table, m) match {
+      case Some(es) => spark.createDataFrame(es)
+      case None => sidecarScan(spark, table, m.entriesRel)
     }
 
   private def sidecarScan(spark: SparkSession, table: String,
@@ -1024,54 +881,42 @@ object CowTable {
     spark.read.schema(entriesSchema)
       .parquet(manifestDir(table).resolve(rel).toString)
 
-  private def legacyEntries(m: Manifest): Seq[FileEntry] =
-    m.files.map(f => FileEntry("data", f, -1L, None, None)) ++
-      m.dvs.map(f => FileEntry("dv", f, -1L, None, None))
-
   /** Driver-side entries, cached per immutable sidecar — SMALL sidecars
     * only; callers must size-gate through [[entriesDF]]. Sidecar paths
-    * written from the stats scan are NORMALIZED URIs; they resolve back
-    * to the manifest's raw path strings here (identical except for
-    * encodable characters), so entry paths are always openable. */
+    * written from the stats scan are NORMALIZED URIs; data paths
+    * resolve through normalize alone and dv rows back to the manifest's
+    * raw dv-line strings, so entry paths are always openable. */
   private def loadEntries(spark: SparkSession, table: String,
-      m: Manifest): Seq[FileEntry] = m.entriesRel match {
-    case None => legacyEntries(m)
-    case Some(rel) =>
-      val cached = entriesCache.get((table, rel))
-      if (cached != null) cached
-      else {
-        // v3: stored paths resolve through normalize alone (the dv
-        // lines are the only raw strings left); pre-v3 maps back to
-        // the manifest's raw strings
-        val byNorm =
-          if (m.filesLoader.isDefined)
-            m.dvs.map(f => normalize(f) -> f).toMap
-          else (m.files ++ m.dvs).map(f => normalize(f) -> f).toMap
-        def resolve(stored: String): String = {
-          val n = normalize(stored)
-          byNorm.getOrElse(n,
-            if (m.filesLoader.isDefined) n else stored)
-        }
-        // size-gated DRIVER-side parquet read (no Spark job): a small
-        // sidecar is headed for the driver cache anyway, and the old
-        // `sidecarScan().collect()` paid a full plan + 1-task job per
-        // fresh sidecar — one such job after EVERY commit, the single
-        // most repeated job in the lakehouse gates' profiles. Large
-        // sidecars never reach this path ([[entriesDF]] gates on
-        // entryCount), so the 10⁶-file discipline is untouched.
-        val loaded = readSidecarDriver(spark, table, rel).map { e =>
-          e.copy(path = resolve(e.path)) }
-        driverEntryRowsLoaded.addAndGet(loaded.size.toLong)
-        cacheEntries(table, rel, loaded)
-        loaded
+      m: Manifest): Seq[FileEntry] = {
+    val rel = m.entriesRel
+    val cached = entriesCache.get((table, rel))
+    if (cached != null) cached
+    else {
+      val byNorm = m.dvs.map(f => normalize(f) -> f).toMap
+      def resolve(stored: String): String = {
+        val n = normalize(stored)
+        byNorm.getOrElse(n, n)
       }
+      // size-gated DRIVER-side parquet read (no Spark job): a small
+      // sidecar is headed for the driver cache anyway, and the old
+      // `sidecarScan().collect()` paid a full plan + 1-task job per
+      // fresh sidecar — one such job after EVERY commit, the single
+      // most repeated job in the lakehouse gates' profiles. Large
+      // sidecars never reach this path ([[entriesDF]] gates on
+      // entryCount), so the 10⁶-file discipline is untouched.
+      val loaded = readSidecarDriver(spark, table, rel).map { e =>
+        e.copy(path = resolve(e.path)) }
+      driverEntryRowsLoaded.addAndGet(loaded.size.toLong)
+      cacheEntries(table, rel, loaded)
+      loaded
+    }
   }
 
   /** Reads a (small, size-gated by the caller) entries sidecar with the
     * parquet example API on the driver — rows come back as
     * [[FileEntry]]s with STORED path strings; the caller resolves them.
-    * Missing `part`/`numRows`/`stats` fields (older sidecar vintages)
-    * read as None. */
+    * Every sidecar is written with the full [[entriesSchema]]; NULL
+    * optional fields read as None. */
   private def readSidecarDriver(spark: SparkSession, table: String,
       rel: String): Seq[FileEntry] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1082,19 +927,17 @@ object CowTable {
           new org.apache.hadoop.fs.Path(f))
         .withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        val t = g.getType
         def strOpt(n: String): Option[String] =
-          if (!t.containsField(n) || g.getFieldRepetitionCount(n) == 0) None
+          if (g.getFieldRepetitionCount(n) == 0) None
           else Some(g.getString(n, 0))
         def longOpt(n: String): Option[Long] =
-          if (!t.containsField(n) || g.getFieldRepetitionCount(n) == 0) None
+          if (g.getFieldRepetitionCount(n) == 0) None
           else Some(g.getLong(n, 0))
-        // kind/path are MANDATORY in every sidecar vintage: a row
-        // missing them is corruption or schema drift, and a defaulted
-        // entry (empty path, kind "data") would look like a real file
-        // to downstream planning — fail loudly instead. bytes keeps
-        // the legacy -1 "unknown" convention ([[legacyEntries]]);
-        // part/numRows/stats are genuinely optional (older vintages).
+        // kind/path are MANDATORY: a row missing them is corruption,
+        // and a defaulted entry (empty path, kind "data") would look
+        // like a real file to downstream planning — fail loudly
+        // instead. bytes keeps the -1 "unknown" convention of dv rows;
+        // part/numRows/stats are genuinely optional.
         FileEntry(strOpt("kind").getOrElse(throw new IllegalStateException(
             s"entries sidecar $f: row missing required field 'kind'")),
           strOpt("path").getOrElse(throw new IllegalStateException(
@@ -1119,7 +962,7 @@ object CowTable {
     case _ => false
   }
 
-  // -------------------------------------------- schema evolution (v2)
+  // ------------------------------------------------- schema evolution
 
   /** Field-metadata keys for stable-column-id schema evolution. `fid`
     * is a stable numeric identity assigned when a field first takes
@@ -1281,8 +1124,7 @@ object CowTable {
       adds: Seq[(String, DataType)] = Nil): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
-    val schema = m.schemaOpt.getOrElse(throw new IllegalArgumentException(
-      s"alterTable needs a v2 manifest with a schema"))
+    val schema = m.schema
     val names = schema.fieldNames.toSet
     (renames.keys ++ drops ++ widens.keys).foreach(c => require(
       names.contains(c), s"alterTable: column $c does not exist"))
@@ -1481,10 +1323,7 @@ object CowTable {
       files: Seq[String]): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     files.filter { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val n = try r.getRecordCount finally r.close()
+      val n = Tables.withFooter(conf, f)(_.getRecordCount)
       if (n == 0L) Files.deleteIfExists(Paths.get(f))
       n > 0L
     }
@@ -1589,8 +1428,7 @@ object CowTable {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     def check(h: Manifest): StructType = {
-      val schema = h.schemaOpt.getOrElse(throw new IllegalArgumentException(
-        "declareBloom needs a v2 manifest with a schema"))
+      val schema = h.schema
       specs.keys.foreach { k =>
         val f = resolveBloomField(schema, k).getOrElse(
           throw new IllegalArgumentException(
@@ -1665,9 +1503,7 @@ object CowTable {
             "the new snapshot")
     def attempt(h: Manifest): Manifest =
       commitWithStatsDF(spark, table, h.version + 1,
-        entriesDF(spark, table, h), Nil, h.schemaOpt.getOrElse(
-          throw new IllegalArgumentException(
-            "consolidateBlooms needs a v2 manifest")),
+        entriesDF(spark, table, h), Nil, h.schema,
         h.dvs, h.partitionCols, knownDvRuns = h.dvRunCounts,
         bloomRelsReplace = Some(Seq(rel)),
         carriedSeq = smallEntries(spark, table, h))
@@ -2017,8 +1853,7 @@ object CowTable {
     * decided from the manifest's per-file stats AND (for partitioned
     * tables) exact partition values — the entries parquet scanned as a
     * DataFrame, never the data files themselves. Files without stats
-    * (legacy commits) always survive; the result preserves manifest
-    * order. */
+    * always survive; the result preserves sidecar order. */
   def pruneDataFiles(spark: SparkSession, table: String, m: Manifest,
       cond: Column): Seq[String] =
     pruneDataFilesExpr(spark, table, m, ColumnBridge.expression(cond))
@@ -2046,9 +1881,8 @@ object CowTable {
     * optimizer rule uses on pushed-down predicates. */
   def pruneDataFilesExpr(spark: SparkSession, table: String, m: Manifest,
       condExpr: Expression, useBloom: Boolean = true): Seq[String] = {
-    if (m.entriesRel.isEmpty) return m.files // legacy v1: no sidecar
     if (!m.dataNonEmpty) return Nil
-    val dataSchema = m.schemaOpt.getOrElse(return m.files)
+    val dataSchema = m.schema
     val stSchema = statsSchemaFor(dataSchema)
     val bloomLive = useBloom && m.bloomCols.nonEmpty && m.bloomRels.nonEmpty
     if (stSchema.isEmpty && m.partitionCols.isEmpty && !bloomLive)
@@ -2060,24 +1894,15 @@ object CowTable {
       else {
         val keep =
           fileKeepPredicate(folded, stSchema, m.partitionCols, dataSchema)
+        // the sidecar IS the file list — the collected survivors are
+        // directly openable; O(survivors), never O(#files)
         val keptSeq = withStatsStruct(
             entriesDF(spark, table, m).filter(col("kind") === "data"),
             stSchema)
           .filter(keep)
           .select("path").collect().map(r => normalize(r.getString(0))).toSeq
         driverReadPathsListed.addAndGet(keptSeq.size.toLong)
-        if (m.filesLoader.isDefined)
-          // v3: the sidecar IS the file list — the collected survivors
-          // are directly openable; O(survivors), never O(#files)
-          keptSeq
-        else {
-          // pre-v3: resolve back to the manifest's RAW path strings
-          val kept = keptSeq.toSet
-          val normFiles = m.normalizedFiles // memoized once per manifest
-          m.files.indices.collect {
-            case i if kept.contains(normFiles(i)) => m.files(i)
-          }
-        }
+        keptSeq
       }
     // bloom pass: equality/IN conjuncts on declared columns subtract
     // the files whose sketches prove no candidate value is present —
@@ -2087,14 +1912,7 @@ object CowTable {
       val proven = bloomPrunedPaths(spark, table, m, folded, dataSchema)
       driverReadPathsListed.addAndGet(proven.size.toLong)
       if (proven.isEmpty) statsKept
-      else if (m.filesLoader.isDefined)
-        statsKept.filterNot(proven.contains) // both sides normalized
-      else {
-        val normFiles = m.normalizedFiles
-        val provenIdx = m.files.indices
-          .filter(i => proven.contains(normFiles(i))).map(m.files).toSet
-        statsKept.filterNot(provenIdx.contains)
-      }
+      else statsKept.filterNot(proven.contains) // both sides normalized
     }
   }
 
@@ -2228,13 +2046,12 @@ object CowTable {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     if (!m.dataNonEmpty) return CountBreakdown(0L, 0, 0, 0, 0L, 0L)
-    val classifiable = m.schemaOpt.exists(s =>
-      statsSchemaFor(s).nonEmpty || m.partitionCols.nonEmpty) &&
-      m.entriesRel.isDefined
+    val dataSchema = m.schema
+    val classifiable =
+      statsSchemaFor(dataSchema).nonEmpty || m.partitionCols.nonEmpty
     val (fullFiles, metaRows, pruned, partialPaths) =
       if (!classifiable) (0, 0L, 0, m.files)
       else {
-        val dataSchema = m.schemaOpt.get
         val stSchema = statsSchemaFor(dataSchema)
         val ce = resolvedCond(spark, dataSchema,
           ColumnBridge.expression(cond))
@@ -2270,16 +2087,8 @@ object CowTable {
           collect_list(when(col("__keep") && !col("__full"), col("path")))
             .as("partials"))
           .head()
-        // v3: the normalized sidecar path IS openable; pre-v3 resolves
-        // back to the manifest's raw strings
-        val partial =
-          if (m.filesLoader.isDefined)
-            agg.getSeq[String](3).map(normalize).toSeq
-          else {
-            val byNorm = m.files.map(f => normalize(f) -> f).toMap
-            agg.getSeq[String](3)
-              .map(p => byNorm.getOrElse(normalize(p), p)).toSeq
-          }
+        // the normalized sidecar path IS openable
+        val partial = agg.getSeq[String](3).map(normalize).toSeq
         (agg.getLong(0).toInt, agg.getLong(1), agg.getLong(2).toInt, partial)
     }
     val scanned =
@@ -2299,14 +2108,12 @@ object CowTable {
     * seam ([[graft.plans.CowDsv2]]): one columnar aggregate over the
     * entries sidecar (+ the delta-sized DV runs), a 1-row `head()`,
     * no data file opened and nothing per-file on the driver. `None`
-    * when the count cannot be PROVEN from metadata — no entries
-    * sidecar (legacy manifests), or any data entry without a recorded
-    * row count — so a caller falls back to scanning rather than ever
-    * serving a guess. */
+    * when the count cannot be PROVEN from metadata — any data entry
+    * without a recorded row count — so a caller falls back to scanning
+    * rather than ever serving a guess. */
   private[graft] def metadataRowCount(spark: SparkSession, table: String,
       m: Manifest): Option[Long] = {
     if (!m.dataNonEmpty) return Some(0L)
-    if (m.entriesRel.isEmpty) return None
     val data = entriesDF(spark, table, m).filter(col("kind") === "data")
     // DV fp keys may reference REPLACED files (carried inert) — the
     // left join keys deletions to LIVE data entries only, mirroring
@@ -2330,8 +2137,7 @@ object CowTable {
     * the set the DSv2 aggregate pushdown may answer MIN/MAX for
     * (stats-eligible types, first-[[MaxStatsCols]] rule). */
   private[graft] def statsCoveredColumns(m: Manifest): Set[String] =
-    m.schemaOpt.map(s => statsSchemaFor(s).fieldNames.toSet)
-      .getOrElse(Set.empty)
+    statsSchemaFor(m.schema).fieldNames.toSet
 
   /** File classes behind [[minWhere]]/[[maxWhere]]. `metaFiles`
     * answered from stats alone; `scannedFiles` were read;
@@ -2377,14 +2183,6 @@ object CowTable {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     if (!m.dataNonEmpty) return MinMaxBreakdown(None, 0, 0, 0, 0)
-    // v3 sidecar paths open as their normalized selves; pre-v3 resolves
-    // back to the manifest's raw strings (lazy: only built if needed)
-    def resolveBack(paths: Seq[String]): Seq[String] =
-      if (m.filesLoader.isDefined) paths.map(normalize)
-      else {
-        val byNorm = m.files.map(f => normalize(f) -> f).toMap
-        paths.map(p => byNorm.getOrElse(normalize(p), p))
-      }
     def agg1(c: Column): Column = if (isMin) min(c) else max(c)
     def scanValue(files: Seq[String]): Option[Any] =
       if (files.isEmpty) None
@@ -2393,17 +2191,14 @@ object CowTable {
           .agg(agg1(col(valueCol))).head()
         if (r.isNullAt(0)) None else Some(r.get(0))
       }
-    val stSchemaOpt = m.schemaOpt.map(statsSchemaFor)
-      .filter(_.fieldNames.contains(valueCol))
-    val stSchema = stSchemaOpt.getOrElse {
+    val dataSchema = m.schema
+    val stSchema = statsSchemaFor(dataSchema)
+    if (!stSchema.fieldNames.contains(valueCol)) {
       // no stats for valueCol: scan every predicate-kept file
-      val files =
-        if (m.schemaOpt.isEmpty) m.files
-        else pruneDataFiles(spark, table, m, cond)
+      val files = pruneDataFiles(spark, table, m, cond)
       return MinMaxBreakdown(scanValue(files), 0, files.size, 0,
         m.nData.toInt - files.size)
     }
-    val dataSchema = m.schemaOpt.get
     val ce = resolvedCond(spark, dataSchema, ColumnBridge.expression(cond))
     val keep = fileKeepPredicate(ce, stSchema, m.partitionCols, dataSchema)
     val full = fileFullPredicate(ce, stSchema, m.partitionCols, dataSchema)
@@ -2444,7 +2239,8 @@ object CowTable {
          else cmp(r.get(1), cand.get) <= 0)
       !unimprovable
     }.map(_.getString(0)).toSeq
-    val scanned = scanValue(resolveBack(scanPaths))
+    // sidecar paths open as their normalized selves
+    val scanned = scanValue(scanPaths.map(normalize))
     def better(x: Any, y: Any): Any =
       if ((isMin && cmp(x, y) <= 0) || (!isMin && cmp(x, y) >= 0)) x else y
     val value = (cand, scanned) match {
@@ -2492,9 +2288,8 @@ object CowTable {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     val total = m.nData.toInt
-    if (total == 0 || m.entriesRel.isEmpty || m.schemaOpt.isEmpty)
-      return conds.map(_ => (total, total, total))
-    val dataSchema = m.schemaOpt.get
+    if (total == 0) return conds.map(_ => (total, total, total))
+    val dataSchema = m.schema
     val stSchema = statsSchemaFor(dataSchema)
     val bloomLive = m.bloomCols.nonEmpty && m.bloomRels.nonEmpty
     if (stSchema.isEmpty && m.partitionCols.isEmpty && !bloomLive)
@@ -2732,7 +2527,7 @@ object CowTable {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     require(m.partitionCols.nonEmpty, s"$table is not partitioned")
-    val dataSchema = m.schemaOpt.getOrElse(StructType(Nil))
+    val dataSchema = m.schema
     val pvs = m.partitionCols.map(c =>
       partValueCol(dataSchema, c).as(c))
     entriesDF(spark, table, m).filter(col("kind") === "data")
@@ -2834,7 +2629,7 @@ object CowTable {
     def attempt(h: Manifest): Manifest =
       commitWithStatsDF(spark, table, h.version + 1,
         spark.createDataFrame(Seq.empty[FileEntry]), files,
-        m.schemaOpt.get, Nil, h.partitionCols, parts)
+        m.schema, Nil, h.partitionCols, parts)
     commitWithRetry(table, m, validate, attempt)
   }
 
@@ -2846,7 +2641,7 @@ object CowTable {
   def fileBuckets(spark: SparkSession, table: String,
       m: Manifest): Option[Map[String, Int]] =
     m.bucketSpec.flatMap { _ =>
-      if (!m.dataNonEmpty || m.entriesRel.isEmpty) None
+      if (!m.dataNonEmpty) None
       else {
         val withB = entriesDF(spark, table, m)
           .filter(col("kind") === "data")
@@ -2865,18 +2660,10 @@ object CowTable {
   /** Empty DataFrame with the snapshot's schema — the "every row
     * deleted" read path. */
   private def emptyOf(spark: SparkSession, m: Manifest): DataFrame =
-    m.schemaOpt match {
-      case Some(sch) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
-      case None => throw new IllegalArgumentException(
-        s"empty snapshot v${m.version} has no schema (legacy manifest)")
-    }
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
 
-  /** Raw file scan under the manifest's schema contract: a v2 manifest
-    * pins the SNAPSHOT schema, so files written before a schema
-    * evolution are NULL-extended for the columns they predate (and the
-    * reader skips schema inference entirely). Legacy manifests infer. */
-  /** Scan of the manifest's data files under its schema. Files that
+  /** Scan of the manifest's data files under its schema — the reader
+    * never infers a schema. Files that
     * predate an ADD null-extend by name (the parquet reader's native
     * behavior); files that predate a WIDEN upcast natively; files that
     * predate a RENAME resolve through the field's recorded prior
@@ -2887,8 +2674,10 @@ object CowTable {
     * identity consumer keeps working; [[dropMeta]] removes it from
     * user-facing reads. */
   private def rawScan(spark: SparkSession, m: Manifest,
-      files: Seq[String]): DataFrame = m.schemaOpt match {
-    case Some(sch) if hasRenames(sch) =>
+      files: Seq[String]): DataFrame = {
+    val sch = m.schema
+    if (!hasRenames(sch)) spark.read.schema(sch).parquet(files: _*)
+    else {
       val readSchema = StructType(sch.fields.flatMap { f =>
         StructField(f.name, f.dataType, nullable = true, f.metadata) +:
           prevNamesOf(f).map(p => StructField(p, f.dataType))
@@ -2900,8 +2689,7 @@ object CowTable {
            else coalesce((f.name +: ps.reverse).map(col): _*))
             .as(f.name, f.metadata)
         }.toSeq :+ col("_metadata").as("_metadata"): _*)
-    case Some(sch) => spark.read.schema(sch).parquet(files: _*)
-    case None => spark.read.parquet(files: _*)
+    }
   }
 
   /** Drop the materialized `_metadata` twin a renamed-table [[rawScan]]
@@ -2925,12 +2713,8 @@ object CowTable {
   private def readSnapshot(spark: SparkSession, m: Manifest,
       onlyFiles: Option[Seq[String]] = None): DataFrame = {
     val files = onlyFiles.getOrElse(m.files)
-    if (files.isEmpty)
-      // schema-bearing manifests (every v2+/v3) answer the empty-subset
-      // shape from metadata; only legacy no-schema manifests pay a
-      // limit(0) scan to derive it
-      return if (m.schemaOpt.isDefined || !m.dataNonEmpty) emptyOf(spark, m)
-      else dropMeta(rawScan(spark, m, m.files).limit(0))
+    // the empty-subset shape comes from the manifest schema
+    if (files.isEmpty) return emptyOf(spark, m)
     val data = rawScan(spark, m, files)
     if (m.dvs.isEmpty) dropMeta(data)
     else
@@ -2955,12 +2739,8 @@ object CowTable {
 
   /** Row-group boundaries of one file — one footer read (driver-side,
     * and only ever for DV-carrying files, a delta-sized set). */
-  private def rowGroupsOf(spark: SparkSession, file: String): Seq[GroupInfo] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
+  private def rowGroupsOf(spark: SparkSession, file: String): Seq[GroupInfo] =
+    Tables.withFooter(spark.sparkContext.hadoopConfiguration, file) { r =>
       var start = 0L
       val blocks = r.getFooter.getBlocks
       (0 until blocks.size()).map { i =>
@@ -2970,8 +2750,7 @@ object CowTable {
         start += b.getRowCount
         g
       }
-    } finally r.close()
-  }
+    }
 
   /** Row-group-level deletion-vector skipping plan: join DV density
     * against footer row-group boundaries; a group whose every row is
@@ -3060,12 +2839,10 @@ object CowTable {
     // byte-scan requests current names only and would null-fill old
     // files' renamed columns — sound to skip the optimization, never
     // to mis-read
-    if (m.schemaOpt.exists(hasRenames)) return readSnapshot(spark, m)
+    if (hasRenames(m.schema)) return readSnapshot(spark, m)
     val (whole, ranges, _) = rowGroupPrunePlan(spark, table)
     if (ranges.isEmpty) return readSnapshot(spark, m)
-    val schema = m.schemaOpt.getOrElse(
-      spark.read.parquet(m.files: _*).schema)
-    val rangedDF = ScanBridge.rangedParquetScan(spark, schema, ranges)
+    val rangedDF = ScanBridge.rangedParquetScan(spark, m.schema, ranges)
     val data =
       if (whole.isEmpty) rangedDF
       else rawScan(spark, m, whole)
@@ -3206,7 +2983,6 @@ object CowTable {
       name: String): String = {
     val m = latestManifest(table).getOrElse(
       throw new IllegalArgumentException(s"cow table $table does not exist"))
-    require(m.schemaOpt.isDefined, "createBranch needs a v2 manifest")
     val bp = branchPath(table, name)
     require(latestManifest(bp).isEmpty, s"branch $name already exists")
     // parent-base lands BEFORE the v0 commit: a crash between the two
@@ -3236,7 +3012,7 @@ object CowTable {
         claimBase()
     }
     commitWithStatsDF(spark, bp, 0, entriesDF(spark, table, m), Nil,
-      m.schemaOpt.get, m.dvs, m.partitionCols,
+      m.schema, m.dvs, m.partitionCols,
       knownDvRuns = m.dvRunCounts, schemaAuthoritative = true,
       bloomColsOverride = Some(m.bloomCols),
       bloomRelsReplace = Some(m.bloomRels.map(r =>
@@ -3296,7 +3072,7 @@ object CowTable {
     validate(m)
     def attempt(h: Manifest): Manifest =
       commitWithStatsDF(spark, table, h.version + 1,
-        entriesDF(spark, bp, bh), Nil, bh.schemaOpt.get,
+        entriesDF(spark, bp, bh), Nil, bh.schema,
         bh.dvs, bh.partitionCols, knownDvRuns = bh.dvRunCounts,
         schemaAuthoritative = true,
         droppedOverride = Some(bh.droppedNames),
@@ -3337,10 +3113,10 @@ object CowTable {
     if (!Files.exists(root)) return
     val bpNorm = normalize(root.toString)
     val keep: Set[String] = completeVersions(table)
-      .flatMap(v => parseManifest(manifestPath(table, v), v))
+      .flatMap(v => parseManifest(table, v))
       .flatMap { m =>
         (m.files ++ m.dvs) ++
-          (m.bloomRels ++ m.entriesRel.toSeq).map(r =>
+          (m.bloomRels :+ m.entriesRel).map(r =>
             manifestDir(table).resolve(r).toString)
       }.map(normalize).filter(_.startsWith(bpNorm)).toSet
     def walk(p: Path): Boolean = {
@@ -3439,15 +3215,14 @@ object CowTable {
         .unionByName(spark.createDataFrame(dvEntries),
           allowMissingColumns = true)
       val m2 = commitWithStatsDF(spark, table, h.version + 1, carriedDF,
-        Nil, h.schemaOpt.getOrElse(raw.schema),
-        h.dvs ++ dvEntries.map(_.path), h.partitionCols,
+        Nil, h.schema, h.dvs ++ dvEntries.map(_.path), h.partitionCols,
         knownDvRuns = h.dvRunCounts)
       // cache hand-off: a DV commit's entries are derivable from the
       // old snapshot's (when cached) — the next read skips the sidecar
       // job
-      for (old <- cachedEntriesOf(table, h); rel <- m2.entriesRel)
-        cacheEntries(table, rel,
-          old.filterNot(_.kind == "dv") ++ canonDvRows(m2.dvs))
+      cachedEntriesOf(table, h).foreach(old =>
+        cacheEntries(table, m2.entriesRel,
+          old.filterNot(_.kind == "dv") ++ canonDvRows(m2.dvs)))
       m2
     }
     commitWithRetry(table, m, validateRebase, commitAttempt)
@@ -3549,33 +3324,21 @@ object CowTable {
   private[graft] val driverDvFootersRead =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Total DV runs of manifest `m`, metadata-only when every sidecar's
-    * count was recorded at commit time (all non-legacy manifests);
-    * falls back to [[dvRunCount]] footer reads otherwise. */
-  private[graft] def dvRunCountOf(spark: SparkSession, m: Manifest): Long =
-    if (m.dvs.forall(m.dvRunCounts.contains)) m.dvs.map(m.dvRunCounts).sum
-    else dvRunCount(spark, m.dvs)
-
   /** Total DV runs across `dvPaths`, from parquet footers alone
     * (driver-side, one footer per sidecar file — a delta-sized set).
-    * COMMIT-TIME machinery: the read path goes through
-    * [[dvRunCountOf]] and only lands here on legacy manifests. */
+    * COMMIT-TIME machinery only: the count lands in the manifest's
+    * `dv:<runs>:<path>` line, so the read path never opens a footer. */
   private[graft] def dvRunCount(spark: SparkSession,
       dvPaths: Seq[String]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     driverDvFootersRead.addAndGet(dvPaths.size.toLong)
-    dvPaths.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val bs = r.getFooter.getBlocks
-        var s = 0L
-        var i = 0
-        while (i < bs.size()) { s += bs.get(i).getRowCount; i += 1 }
-        s
-      } finally r.close()
-    }.sum
+    dvPaths.map(p => Tables.withFooter(conf, p) { r =>
+      val bs = r.getFooter.getBlocks
+      var s = 0L
+      var i = 0
+      while (i < bs.size()) { s += bs.get(i).getRowCount; i += 1 }
+      s
+    }).sum
   }
 
   /** Apply deletion vectors to `df` executor-side: left-join the packed
@@ -3585,14 +3348,14 @@ object CowTable {
     * fallback beyond the threshold is a shuffled range anti-join: still
     * executor-side, no broadcast proportional to the delete set.
     * `fpCol` must already be normalized. The broadcast decision reads
-    * the run counts RECORDED IN THE MANIFEST ([[dvRunCountOf]]) — no
-    * footer is opened on the read path. */
+    * the run counts RECORDED IN THE MANIFEST — no footer is opened on
+    * the read path. */
   private[graft] def applyDvFilter(spark: SparkSession, df: DataFrame,
       m: Manifest, fpCol: Column, riCol: Column): DataFrame = {
     val dvPaths = m.dvs
     val limit = spark.conf.getOption(DvBroadcastRunsConf)
       .map(_.toLong).getOrElse(DvBroadcastRunsDefault)
-    if (dvRunCountOf(spark, m) <= limit)
+    if (m.dvs.map(m.dvRunCounts).sum <= limit)
       df.withColumn("__dv_probe_fp", fpCol)
         .join(broadcast(dvPacked(spark, dvPaths)),
           col("__dv_probe_fp") === col("__dv_fp"), "left")
@@ -3672,9 +3435,7 @@ object CowTable {
     * INTO`) every race rebases. */
   private[graft] def replaceFilesCommit(spark: SparkSession, table: String,
       base: Manifest, removed: Seq[String], added: Seq[String]): Manifest = {
-    val schema = base.schemaOpt.getOrElse(throw new IllegalArgumentException(
-      s"cow table $table has a legacy schemaless manifest — DSv2 writes " +
-        "need a v2 manifest"))
+    val schema = base.schema
     // a stale base behaves exactly like a lost race: validate the real
     // head and rebase onto it
     val head0 = latestManifest(table).getOrElse(base)
@@ -3754,10 +3515,7 @@ object CowTable {
     // upsert's new-column path); the standard rebase rule already
     // refuses interleaved schema changes, so two racing evolutions
     // cannot stomp each other
-    val schema = schemaOverride.getOrElse(
-      base.schemaOpt.getOrElse(throw new IllegalArgumentException(
-        s"cow table $table has a legacy schemaless manifest — DSv2 " +
-          "writes need a v2 manifest")))
+    val schema = schemaOverride.getOrElse(base.schema)
     val head0 = latestManifest(table).getOrElse(base)
     val dvEntries = addedDvs.map(p =>
       FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
@@ -3833,8 +3591,7 @@ object CowTable {
       stagedData: Seq[String] = Nil): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
-    val schema0 = m.schemaOpt.getOrElse(throw new IllegalArgumentException(
-      s"upsertMor needs a v2 manifest with a schema"))
+    val schema0 = m.schema
     require(keys.nonEmpty && keys.forall(source.columns.contains),
       s"upsertMor: keys $keys must exist in the source")
     val missingP = schema0.fields.filterNot(f =>
@@ -4022,14 +3779,13 @@ object CowTable {
     // dead's keys are normalized (dvRuns) and MUST intersect the LIVE
     // file set: DV entries for files a later merge already replaced are
     // carried inert (they can never match again), and rewriting those
-    // paths would resurrect replaced generations. On v3 the membership
-    // probe is candidate-sized against the sidecar — maintenance stays
+    // paths would resurrect replaced generations. The membership probe
+    // is candidate-sized against the sidecar — maintenance stays
     // delta-sized, never O(#files)
-    val dvd =
-      if (m.filesLoader.isDefined) {
-        val live = entriesLiveAmong(spark, table, m, dead.keys.toSeq)
-        dead.keys.filter(live.contains).toSeq.sorted
-      } else m.files.filter(f => dead.contains(normalize(f)))
+    val dvd = {
+      val live = entriesLiveAmong(spark, table, m, dead.keys.toSeq)
+      dead.keys.filter(live.contains).toSeq.sorted
+    }
     val meta =
       if (minDeadFraction <= 0.0) Map.empty[String, (Long, Long)]
       else dataFileMeta(spark, table, m, dvd)
@@ -4067,8 +3823,7 @@ object CowTable {
       }
     val dvEntries = keptDvs.map(p =>
       FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
-    val schema =
-      m.schemaOpt.getOrElse(spark.read.parquet(m.files: _*).schema)
+    val schema = m.schema
     // Concurrency: maintenance is the commit that races a live writer
     // CONSTANTLY — rebase and retry. Compatible interleavings: appends,
     // rewrites of files we did not rewrite, fresh deletes in files we
@@ -4153,11 +3908,10 @@ object CowTable {
         .filterNot(c => keys.contains(c) || targetDataCols.contains(c)).toSeq
     // a new column must not resurrect a HISTORICAL name: old files'
     // physical columns under that name would resolve into two fields
-    m.schemaOpt.map(allKnownNames(_) ++ m.droppedNames).foreach { known =>
-      newCols.foreach(c => require(!known.contains(c),
-        s"mergeInto: evolved column $c reuses a historical column name " +
-          "(renamed away or dropped earlier) — pick a fresh name"))
-    }
+    val known = allKnownNames(m.schema) ++ m.droppedNames
+    newCols.foreach(c => require(!known.contains(c),
+      s"mergeInto: evolved column $c reuses a historical column name " +
+        "(renamed away or dropped earlier) — pick a fresh name"))
     val target = newCols.foldLeft(target0)((d, c) =>
       d.withColumn(c, lit(null).cast(sTypes(c))))
     val dataCols = targetDataCols ++ newCols
@@ -4196,12 +3950,10 @@ object CowTable {
           .select("__file").distinct()
           .collect().map(r => normalize(r.getString(0))).toSet
       }
-    // `touched` is delta-sized and normalized (v3: directly openable);
-    // the untouched majority never materializes — it carries
+    // `touched` is delta-sized and normalized (directly openable); the
+    // untouched majority never materializes — it carries
     // sidecar-to-sidecar in the commit below
-    val touchedF =
-      if (m.filesLoader.isDefined) touched.toSeq.sorted
-      else m.files.filter(f => touched.contains(normalize(f)))
+    val touchedF = touched.toSeq.sorted
 
     // 2. merge only touched rows (deletion-vector-applied: a deleted
     // row is absent, so a source row with its key INSERTS) with the
@@ -4286,10 +4038,10 @@ object CowTable {
       // cache hand-off possible only when nothing new was written (a
       // pure-delete merge): new files' stats live in the sidecar alone
       if (newFiles._1.isEmpty)
-        for (old <- cachedEntriesOf(table, h); rel <- m2.entriesRel)
-          cacheEntries(table, rel, old.filter(e =>
+        cachedEntriesOf(table, h).foreach(old =>
+          cacheEntries(table, m2.entriesRel, old.filter(e =>
             e.kind != "dv" && !touched.contains(normalize(e.path))) ++
-            canonDvRows(m2.dvs))
+            canonDvRows(m2.dvs)))
       m2
     }
     commitWithRetry(table, m, validateRebase, commitAttempt)
@@ -4316,8 +4068,7 @@ object CowTable {
       evolveSchema: Boolean = false): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
-    val schema0 = m.schemaOpt.getOrElse(throw new IllegalArgumentException(
-      s"mergeIntoHybrid needs a v2 manifest with a schema"))
+    val schema0 = m.schema
     require(keys.nonEmpty && keys.forall(source.columns.contains),
       s"mergeIntoHybrid: keys $keys must exist in the source")
     require(schema0.fieldNames.forall(source.columns.contains),
@@ -4375,9 +4126,7 @@ object CowTable {
         require(dup == 0L, "mergeIntoHybrid: a source key matches " +
           "multiple live target rows — resolve duplicates first")
       }
-      val touchedFiles =
-        if (m.filesLoader.isDefined) perFile.keys.toSeq.sorted
-        else m.files.filter(f => perFile.contains(normalize(f)))
+      val touchedFiles = perFile.keys.toSeq.sorted
       val meta = dataFileMeta(spark, table, m, touchedFiles)
       // 2. the per-file choice
       val (cowF, morF) = touchedFiles.partition { f =>
@@ -4480,7 +4229,7 @@ object CowTable {
       bounds: Option[Map[String, (Any, Any)]] = None): Seq[String] = {
     val eligible = source.schema.fields
       .filter(f => keys.contains(f.name) && statsEligible(f.dataType)).toSeq
-    if (eligible.isEmpty || m.entriesRel.isEmpty) return m.files
+    if (eligible.isEmpty) return m.files
     val b: Map[String, (Any, Any)] = bounds.getOrElse {
       val aggs = eligible.flatMap(f =>
         Seq(min(col(f.name)), max(col(f.name))))
@@ -4521,7 +4270,7 @@ object CowTable {
       candidates: Seq[String]): Seq[String] = {
     if (m.bloomCols.isEmpty || m.bloomRels.isEmpty || candidates.isEmpty)
       return candidates
-    val dataSchema = m.schemaOpt.getOrElse(return candidates)
+    val dataSchema = m.schema
     val declared = m.bloomCols.keys
       .flatMap(k => resolveBloomField(dataSchema, k)).map(_.name).toSet
     val fOpt = keys.flatMap(k => dataSchema.fields.find(_.name == k))
@@ -4575,22 +4324,15 @@ object CowTable {
   /** The compactable small tail of `m`, decided EXECUTOR-SIDE on the
     * entries sidecar — only the small files' (path, bytes) rows are
     * collected (they are what gets read and rewritten anyway); the
-    * right-sized majority is never driver-materialized. Legacy v1
-    * manifests (no sidecar, bytes unknown) fall back to a filesystem
-    * probe per file. */
+    * right-sized majority is never driver-materialized. Paths come
+    * back normalized, hence openable. */
   private def smallTail(spark: SparkSession, table: String, m: Manifest,
       small: Long): Seq[(String, Long)] =
-    if (m.entriesRel.isEmpty)
-      m.files.map(f => (f, Files.size(Paths.get(f)))).filter(_._2 < small)
-    else {
-      val byNorm = m.files.map(f => normalize(f) -> f).toMap
-      entriesDF(spark, table, m)
-        .filter(col("kind") === "data" && col("bytes") >= 0L &&
-          col("bytes") < small)
-        .select("path", "bytes").collect()
-        .map(r => (byNorm.getOrElse(normalize(r.getString(0)),
-          r.getString(0)), r.getLong(1))).toSeq
-    }
+    entriesDF(spark, table, m)
+      .filter(col("kind") === "data" && col("bytes") >= 0L &&
+        col("bytes") < small)
+      .select("path", "bytes").collect()
+      .map(r => (normalize(r.getString(0)), r.getLong(1))).toSeq
 
   /** Carried entries for a compaction: everything except the rewritten
     * small tail, as a sidecar-to-sidecar DataFrame filter; `dropDvs`
@@ -4662,8 +4404,7 @@ object CowTable {
           table, v, m.partitionCols)
     val smallNorm = smalls.map(x => normalize(x._1))
     val smallSet = smallNorm.toSet
-    val schema =
-      m.schemaOpt.getOrElse(spark.read.parquet(m.files: _*).schema)
+    val schema = m.schema
     // Concurrency: compaction is the MOST rebasable commit there is —
     // it is valid iff its rewritten tail is untouched. Appends, merges
     // of other files, and deletes outside the tail all interleave and
@@ -4713,8 +4454,7 @@ object CowTable {
     val newFiles = dropEmptyFiles(spark, listPartFiles(out))
     val smallNorm = smalls.map(x => normalize(x._1))
     val smallSet = smallNorm.toSet
-    val schema =
-      m.schemaOpt.getOrElse(spark.read.parquet(m.files: _*).schema)
+    val schema = m.schema
     // same rebase rule as [[compactTable]]: valid iff the rewritten
     // tail is untouched; everything else interleaves and lands
     val validate = standardRebaseValidate(spark, "compactTableZorder",
@@ -4770,7 +4510,7 @@ object CowTable {
         "dropBranch first")
     val versions = completeVersions(table)
     if (versions.isEmpty) return Nil
-    val complete = versions.flatMap(v => parseManifest(manifestPath(table, v), v))
+    val complete = versions.flatMap(v => parseManifest(table, v))
     val kept = complete.take(keepVersions)
     if (kept.isEmpty) return Nil
     val latestComplete = complete.map(_.version).max
@@ -4842,8 +4582,8 @@ object CowTable {
     val keptBloomRels = kept.flatMap(_.bloomRels).map(relId).toSet
     versions.filter(_ < oldestKept).foreach { v =>
       // a dropped manifest's entries sidecar goes with it
-      parseManifest(manifestPath(table, v), v).toSeq
-        .flatMap(pm => pm.entriesRel.toSeq ++
+      parseManifest(table, v).toSeq
+        .flatMap(pm => pm.entriesRel +:
           pm.bloomRels.filterNot(r => keptBloomRels.contains(relId(r))))
         .foreach { rel =>
           val dir = manifestDir(table).resolve(rel)
@@ -5067,7 +4807,7 @@ object CowTable {
       else {
         // the touched set is DV-derived (delta-sized); membership in
         // BOTH versions checks against the sidecars, so neither side's
-        // full file list ever materializes (the v3 discipline)
+        // full file list ever materializes
         val touched = spark.read.schema(dvSchema).parquet(dvNew: _*)
           .select("file_path").distinct()
           .collect().map(r => normalize(r.getString(0))).toSeq
@@ -5075,19 +4815,11 @@ object CowTable {
           .intersect(entriesLiveAmong(spark, table, fm, touched))
         touched.filter(inBoth.contains).sorted
       }
-    // sidecar paths are normalized; a pre-v3 scan needs the manifest's
-    // RAW path strings (they differ only for encodable characters) —
-    // on v3 the normalized string IS the openable path
-    def resolve(m: Manifest, ps: Seq[String]): Seq[String] =
-      if (m.filesLoader.isDefined) ps.map(normalize)
-      else {
-        val byNorm = m.files.map(f => normalize(f) -> f).toMap
-        ps.map(p => byNorm.getOrElse(normalize(p), p))
-      }
+    // the normalized sidecar path IS the openable path
     val oldSideRaw = readSnapshot(spark, fm,
-      Some((resolve(fm, remF) ++ resolve(fm, dvAffected)).distinct))
+      Some((remF ++ dvAffected).map(normalize).distinct))
     val newSide0 = readSnapshot(spark, tm,
-      Some((resolve(tm, addF) ++ resolve(tm, dvAffected)).distinct))
+      Some((addF ++ dvAffected).map(normalize).distinct))
     // schema evolution between the versions: the feed speaks the
     // LATEST schema. The old side maps renamed columns forward through
     // the new schema's recorded prior-name chains and casts widened
@@ -5096,16 +4828,14 @@ object CowTable {
     // pre/post storm; dropped columns leave the vocabulary (rows
     // identical elsewhere net out); added columns NULL-extend on the
     // old side, so a later value-fill emits its pre/post pair.
-    val renameMap: Map[String, String] = tm.schemaOpt.map(_.fields
-      .flatMap(f => prevNamesOf(f).map(p => p -> f.name)).toMap)
-      .getOrElse(Map.empty)
+    val renameMap: Map[String, String] = tm.schema.fields
+      .flatMap(f => prevNamesOf(f).map(p => p -> f.name)).toMap
     val oldSide0 = renameMap.foldLeft(oldSideRaw) { case (d, (from, to)) =>
       if (d.columns.contains(from) && !d.columns.contains(to))
         d.withColumnRenamed(from, to)
       else d
     }
-    val allCols = tm.schemaOpt.map(_.fieldNames.toSeq).getOrElse(
-      (oldSide0.columns ++ newSide0.columns).distinct.toSeq)
+    val allCols = tm.schema.fieldNames.toSeq
     def typeOf(c: String): DataType =
       newSide0.schema.find(_.name == c).orElse(
         oldSide0.schema.find(_.name == c)).get.dataType
@@ -6716,7 +6446,7 @@ object CowTable {
     val mid = latestManifest(t).get
     require(mid.version == 2,
       s"expected create + 2 epoch upserts = v2, got v${mid.version}")
-    require(mid.schemaOpt.exists(!_.fieldNames.contains("o_flag")),
+    require(!mid.schema.fieldNames.contains("o_flag"),
       "the table must not carry o_flag before the source grows it")
     // the source ADDS o_flag; the restarted sink must evolve the table
     Files.move(base.resolve("staged2").resolve("02_slice.parquet"),
@@ -6726,7 +6456,7 @@ object CowTable {
     val m = latestManifest(t).get
     require(m.version == 3,
       s"expected ONE evolving epoch commit after restart, got v${m.version}")
-    require(m.schemaOpt.exists(_.fieldNames.contains("o_flag")),
+    require(m.schema.fieldNames.contains("o_flag"),
       "the evolving epoch must commit the widened schema")
     require(m.dvs.nonEmpty,
       "the evolving epoch must stay a merge-on-read delta (DVs)")
@@ -6865,8 +6595,8 @@ object CowTable {
     require(m.version == 5,
       s"expected create+2 epochs+alter+fill+1 absorbed epoch = v5, " +
         s"got v${m.version}")
-    require(m.schemaOpt.exists(f => f.fieldNames.contains("o_priority") &&
-      f.fieldNames.contains("o_note")),
+    require(m.schema.fieldNames.contains("o_priority") &&
+      m.schema.fieldNames.contains("o_note"),
       "the absorbed epoch must keep the evolved schema")
     require(m.dvs.nonEmpty, "the absorbed epoch must stay merge-on-read")
     s.sql(s"SELECT o_orderkey, o_custkey, o_totalprice, o_priority, " +

@@ -306,10 +306,7 @@ class CowDsv2Table(val tablePath: String,
         s"cow table $tablePath does not exist"))
   }
 
-  private[plans] val dataSchema: StructType =
-    manifest.schemaOpt.getOrElse(throw new IllegalArgumentException(
-      s"cow table $tablePath has a legacy schemaless manifest — the SQL " +
-        "surface needs a v2 manifest"))
+  private[plans] val dataSchema: StructType = manifest.schema
 
   override def name(): String =
     s"cow(`$tablePath`${versionOpt.map(v => s"@v$v").getOrElse("")})"
@@ -1366,7 +1363,7 @@ private[plans] class CowStreamingUpsertWrite(table: CowDsv2Table,
       if (added.forall(p => live.contains(CowTable.normalizePath(p))))
         return
       val staged = spark.read.schema(sinkSchema).parquet(added: _*)
-      val curSchemaOpt = cur.flatMap(_.schemaOpt)
+      val curSchemaOpt = cur.map(_.schema)
       val (aligned, alignedKeys) = curSchemaOpt match {
         case Some(curSchema) => CowDsv2.alignEpochToTable(staged, keys,
           curSchema, cur.map(_.droppedNames).getOrElse(Set.empty))

@@ -43,7 +43,7 @@ object CowSkipCatalog {
   }
 
   def register(table: String, m: CowTable.Manifest): Unit =
-    if (m.files.nonEmpty && m.entriesRel.isDefined) {
+    if (m.dataNonEmpty) {
       if (defs.size >= Cap) defs.clear()
       defs.put(tagOf(m.files), SnapDef(table, m))
     }

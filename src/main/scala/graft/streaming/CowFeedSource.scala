@@ -67,9 +67,7 @@ object CowFeedProvider {
     require(table != null, "cow feed requires option 'table'")
     val m = CowTable.latestManifest(table).getOrElse(
       throw new IllegalArgumentException(s"cow table $table does not exist"))
-    val base = m.schemaOpt.getOrElse(throw new IllegalArgumentException(
-      s"cow table $table has a legacy schemaless manifest"))
-    StructType(base.fields.toSeq :+
+    StructType(m.schema.fields.toSeq :+
       StructField("_change_type", StringType) :+
       StructField("_commit_version", LongType))
   }

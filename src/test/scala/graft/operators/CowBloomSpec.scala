@@ -14,8 +14,8 @@ import graft.functions.{BloomFunctions, BloomKernel}
   * prune files min/max cannot), the declared-fpp bound, conservative
   * behavior across schema evolution (widen ⇒ type-mismatched rows are
   * ignored, rename ⇒ old rows keep serving), the commit-time
-  * auto-sidecar for new files, vacuum liveness, and the v2.2 header
-  * protocol gate. */
+  * auto-sidecar for new files, vacuum liveness, and the round-trip of
+  * the bloom lines through the manifest. */
 class CowBloomSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._

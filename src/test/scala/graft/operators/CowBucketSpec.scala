@@ -191,8 +191,8 @@ class CowBucketSpec extends AnyFunSuite {
   test("unattributed files degrade the report; rebucket restores it") {
     withSpj {
       val (t1, t2) = fixturePair(8)
-      // an out-of-band commit of a NON-routed file (the legacy/append
-      // shape): entries carry, part JSON has no bucket id
+      // an out-of-band commit of a NON-routed file (the append shape):
+      // entries carry, part JSON has no bucket id
       val m0 = CowTable.latestManifest(t1).get
       val extraDir = java.nio.file.Paths.get(t1, "data", "extra")
       Seq((9000L, "x")).toDF("id", "left_name").coalesce(1)
@@ -207,7 +207,7 @@ class CowBucketSpec extends AnyFunSuite {
       CowTable.commitEntries(spark, t1, m0.version + 1,
         m0.files.map(f => CowTable.FileEntry("data", f, -1L, None, None))
           :+ CowTable.FileEntry("data", extraFile, -1L, None, None),
-        m0.schemaOpt.get)
+        m0.schema)
       assert(CowTable.fileBuckets(spark, t1,
         CowTable.latestManifest(t1).get).isEmpty)
       def q: DataFrame =

@@ -310,7 +310,7 @@ class CowConcurrencySpec extends AnyFunSuite {
       try CowTable.mergeInto(spark, t, src(500 to 501, "w"), Seq("id"))
       finally { CowTable.preCommitHook = () => () }
     assert(m2.version == v0 + 2, s"rebased merge must land: $m2")
-    val sch = m2.schemaOpt.get
+    val sch = m2.schema
     assert(sch.fields.forall(_.metadata.contains("graft.fid")),
       "the interleaved field-id assignment must survive the rebase, " +
         s"got schema ${sch.json}")
@@ -320,8 +320,8 @@ class CowConcurrencySpec extends AnyFunSuite {
     assert(got.size == 102 && got(500L) == "w500" && got(0L) == "n0")
   }
 
-  test("every stats commit declares v3; counted dv lines and pre-v3 " +
-      "manifests both round-trip through the reader") {
+  test("every stats commit declares v3; counted dv lines round-trip " +
+      "through the reader") {
     val t = fixture()
     def header(v: Int): String =
       scala.io.Source.fromFile(
@@ -336,23 +336,6 @@ class CowConcurrencySpec extends AnyFunSuite {
     // the reader round-trips the counted form
     assert(CowTable.readManifest(t, m.version).dvRunCounts == m.dvRunCounts)
     assert(CowTable.read(spark, t).count() == 97)
-    // READER COMPAT: hand-written pre-v3 manifests stay readable — a
-    // v2 body (schema + sidecar pointer + explicit file lines) parses
-    // with the file list driver-resident, loader-free
-    val mm = CowTable.readManifest(t, m.version)
-    val v2body = (Seq("graft-cow-manifest-v2",
-      "schema:" + mm.schemaJson.get,
-      "entries:" + mm.entriesRel.get,
-      "nentries:" + mm.entryCount.get) ++
-      mm.files ++ mm.dvs.map("dv:" + _) :+ "end").mkString("\n")
-    val vNext = m.version + 1
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      t, "manifest", s"v$vNext.manifest"), v2body.getBytes("UTF-8"))
-    val back = CowTable.readManifest(t, vNext)
-    assert(back.filesLoader.isEmpty &&
-      back.files.toSet == mm.files.toSet &&
-      back.dvs.toSet == mm.dvs.toSet)
-    assert(CowTable.read(spark, t).count() == 97) // reads via the v2 head
   }
 
   test("two real threads: compaction vs streaming-style upsert both land") {

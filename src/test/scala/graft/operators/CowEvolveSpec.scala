@@ -41,7 +41,7 @@ class CowEvolveSpec extends AnyFunSuite {
       widens = Map("v" -> LongType))
     assert(m1.version == m0.version + 1)
     assert(m1.files == m0.files, "no data file may be rewritten")
-    val sch = m1.schemaOpt.get
+    val sch = m1.schema
     assert(sch.fieldNames.toSeq == Seq("id", "val", "name"))
     assert(sch("val").dataType == LongType)
     assert(CowTable.prevNamesOf(sch("val")) == Seq("v"))
@@ -120,7 +120,7 @@ class CowEvolveSpec extends AnyFunSuite {
     val t = fixture()
     CowTable.alterTable(spark, t, widens = Map("v" -> DecimalType(12, 0)))
     val m = CowTable.latestManifest(t).get
-    assert(m.schemaOpt.get("v").dataType === DecimalType(12, 0))
+    assert(m.schema("v").dataType === DecimalType(12, 0))
     // pre-widen files serve their int values upcast natively
     val s = CowTable.read(spark, t)
       .agg(sum($"v")).head().getDecimal(0)
@@ -214,7 +214,7 @@ class CowEvolveSpec extends AnyFunSuite {
     val ok = (0L until 3L).map(i => (i, (i + 1).toInt, s"z$i", 7L))
       .toDF("id", "v", "name", "memo")
     CowTable.mergeInto(spark, t, ok, Seq("id"), evolveSchema = true)
-    assert(CowTable.latestManifest(t).get.schemaOpt.get.fieldNames
+    assert(CowTable.latestManifest(t).get.schema.fieldNames
       .contains("memo"))
   }
 
@@ -260,7 +260,7 @@ class CowEvolveSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE graft.`$t` RENAME COLUMN v TO val")
     spark.sql(s"ALTER TABLE graft.`$t` ALTER COLUMN val TYPE bigint")
     spark.sql(s"ALTER TABLE graft.`$t` DROP COLUMN note")
-    val sch = CowTable.latestManifest(t).get.schemaOpt.get
+    val sch = CowTable.latestManifest(t).get.schema
     assert(sch.fieldNames.toSeq == Seq("id", "val", "name"))
     assert(sch("val").dataType == LongType)
     assert(CowTable.prevNamesOf(sch("val")) == Seq("v"))
@@ -320,7 +320,7 @@ class CowEvolveSpec extends AnyFunSuite {
     CowTable.mergeInto(spark, t,
       Seq((400L, 5000000001L, "gen3", "note400"))
         .toDF("id", "value", "name", "note"), Seq("id"))
-    val sch = CowTable.latestManifest(t).get.schemaOpt.get
+    val sch = CowTable.latestManifest(t).get.schema
     assert(CowTable.prevNamesOf(sch("value")) == Seq("v", "val"))
     val got = CowTable.read(spark, t).select("id", "value")
       .as[(Long, Long)].collect().toMap
@@ -337,7 +337,7 @@ class CowEvolveSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE graft.`$t` ADD COLUMN score double")
     val m1 = CowTable.latestManifest(t).get
     assert(m1.files == m0.files, "ADD COLUMN must be metadata-only")
-    val sch = m1.schemaOpt.get
+    val sch = m1.schema
     assert(sch.fieldNames.toSeq == Seq("id", "v", "name", "note", "score"))
     assert(sch("score").nullable &&
       CowTable.fieldIdOf(sch("score")).isDefined)
@@ -365,7 +365,7 @@ class CowEvolveSpec extends AnyFunSuite {
     val m1 = CowTable.upsertMor(spark, t, src, Seq("id"),
       evolveSchema = true)
     assert(m0.files.forall(m1.files.contains), "MOR must not rewrite")
-    val sch = m1.schemaOpt.get
+    val sch = m1.schema
     assert(sch.fieldNames.toSeq ==
       Seq("id", "v", "name", "note", "score"))
     assert(sch("score").nullable)
@@ -406,7 +406,7 @@ class CowEvolveSpec extends AnyFunSuite {
          |ON tgt.id = s.id
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
-    val sch = CowTable.latestManifest(t).get.schemaOpt.get
+    val sch = CowTable.latestManifest(t).get.schema
     assert(sch.fieldNames.toSeq == Seq("id", "v", "name", "note", "flag"))
     assert(sch("flag").nullable && sch("flag").dataType == LongType)
     val rows = CowTable.read(spark, t).collect()

@@ -119,7 +119,7 @@ class CowHybridMergeSpec extends AnyFunSuite {
       .toDF("id", "name", "v", "tag")
     val m1 = CowTable.mergeIntoHybrid(spark, t, src, Seq("id"),
       evolveSchema = true)
-    val sch = m1.schemaOpt.get
+    val sch = m1.schema
     assert(sch.fieldNames.toSeq == Seq("id", "name", "v", "tag"))
     val got = CowTable.read(spark, t).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2),

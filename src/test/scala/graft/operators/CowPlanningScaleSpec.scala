@@ -40,7 +40,7 @@ class CowPlanningScaleSpec extends AnyFunSuite {
 
   test("planning a 100k-entry prune never materializes entries on the driver") {
     val (t, m) = syntheticBig()
-    assert(m.entryCount.contains(NFiles.toLong))
+    assert(m.entryCount == NFiles.toLong)
     val before = CowTable.driverEntryRowsLoaded.get()
 
     // prune: only file 77 can contain v = 77
@@ -97,7 +97,7 @@ class CowPlanningScaleSpec extends AnyFunSuite {
       .toDF("v", "__f").withColumn("__f", $"__f".cast("int"))
     CowTable.initFiled(df, t, "__f", 5)
     val m = CowTable.latestManifest(t).get
-    assert(m.entryCount.exists(_ <= 5L))
+    assert(m.entryCount <= 5L)
     CowTable.clearEntriesCache()
     val before = CowTable.driverEntryRowsLoaded.get()
     val kept = CowTable.pruneDataFiles(spark, t, m, $"v" === 42L)
@@ -154,7 +154,7 @@ class CowPlanningScaleSpec extends AnyFunSuite {
       lit(null).cast("string").as("part"))
     val schema = new org.apache.spark.sql.types.StructType().add("v", "long")
     val m0 = CowTable.commitEntriesDF(spark, t, 0, entries, schema)
-    assert(m0.entryCount.contains(N) && m0.nData == N)
+    assert(m0.entryCount == N && m0.nData == N)
     // the manifest TEXT is O(1) lines — no per-file path lines at all
     val text = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(t, "manifest", "v0.manifest")), "UTF-8")

@@ -46,7 +46,7 @@ class CowRowGroupSpec extends AnyFunSuite {
     // the dead groups were never read
     val m = CowTable.latestManifest(t).get
     val raw = org.apache.spark.sql.graftbridge.ScanBridge
-      .rangedParquetScan(spark, m.schemaOpt.get, ranges)
+      .rangedParquetScan(spark, m.schema, ranges)
     assert(raw.count() == rep.liveRows)
     // row indexes from a ranged read are FILE-GLOBAL: they match the
     // written row positions (the file is sorted by id, so ri == id)

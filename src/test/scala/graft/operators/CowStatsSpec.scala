@@ -323,16 +323,42 @@ class CowStatsSpec extends AnyFunSuite {
       (100L, "insert", Some(2.5))), s"unexpected change feed: $ch")
   }
 
-  test("legacy v1 string-list manifests still read; readWhere keeps all files") {
+  test("a pre-v3 or unrecognised complete manifest is refused loudly by " +
+      "latestManifest, readManifest and vacuum; an empty claim is skipped") {
     val t = freshTable()
     CowTable.init(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name"), t)
     val m = CowTable.latestManifest(t).get
-    // hand-commit a v1 manifest over the same files (no stats, no schema)
-    CowTable.commit(t, m.version + 1, m.files)
-    val m1 = CowTable.latestManifest(t).get
-    assert(m1.entriesRel.isEmpty && m1.schemaJson.isEmpty)
-    assert(CowTable.pruneReport(spark, t, $"id" === 2L) ==
-      ((m.files.size, m.files.size)))
+    val v = m.version + 1
+    val target = Paths.get(t, "manifest", s"v$v.manifest")
+    val header = "graft-cow-manifest-v3"
+    val meta = Seq("schema:" + m.schemaJson, "entries:" + m.entriesRel,
+      "nentries:" + m.entryCount)
+    val bodies = Seq(
+      "v1 string list" -> ("graft-cow-manifest-v1" +: m.files),
+      "v2 with file lines" ->
+        ((("graft-cow-manifest-v2" +: meta) ++ m.files) :+ "end"),
+      "unknown v3 line" -> ((header +: meta) ++ Seq("future:x", "end")),
+      "v3 without end" -> (header +: meta),
+      "v3 without entries" -> Seq(header, meta.head, meta(2), "end"),
+      "v3 without nentries" -> Seq(header, meta.head, meta(1), "end"),
+      "uncounted dv line" ->
+        ((header +: meta) ++ Seq(s"dv:$t/dv/x.parquet", "end")))
+    bodies.foreach { case (what, lines) =>
+      Files.write(target, lines.mkString("\n").getBytes("UTF-8"))
+      def refused(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains(t) && e.getMessage.contains(s"v$v") &&
+          e.getMessage.contains(lines.head), s"$what: ${e.getMessage}")
+      }
+      refused(CowTable.latestManifest(t))
+      refused(CowTable.readManifest(t, v))
+      refused(CowTable.vacuum(spark, t))
+      Files.delete(target)
+    }
+    // the zero-length claim a committer leaves before its rename is
+    // still invisible to readers
+    Files.createFile(target)
+    assert(CowTable.latestManifest(t).get.version == m.version)
     checkEq(t, $"id" === 2L)
   }
 }

@@ -543,9 +543,11 @@ class CowTableSpec extends AnyFunSuite {
     val t = freshTable()
     initRanged(t)
     val m = CowTable.latestManifest(t).get
-    CowTable.commit(t, m.version + 1, m.files) // first claim wins
+    val entries = m.files.map(f => CowTable.FileEntry("data", f, -1L, None, None))
+    // first claim wins
+    CowTable.commitEntries(spark, t, m.version + 1, entries, m.schema)
     val e = intercept[java.nio.file.FileAlreadyExistsException] {
-      CowTable.commit(t, m.version + 1, m.files)
+      CowTable.commitEntries(spark, t, m.version + 1, entries, m.schema)
     }
     assert(e != null)
     // a half-written (claimed but empty) newer manifest is skipped by readers

@@ -58,7 +58,7 @@ class CowStreamEvolveSpec extends AnyFunSuite {
     run(base, t, narrow)
     val mid = CowTable.latestManifest(t).get
     assert(mid.version == 1 &&
-      !mid.schemaOpt.get.fieldNames.contains("extra"))
+      !mid.schema.fieldNames.contains("extra"))
     // source adds `extra`: keys 5..14 update/insert with a value
     writeSlice(spark.range(5, 15).select($"id".as("k"),
       ($"id" * 2.0).as("v"), concat(lit("x"), $"id").as("extra")),
@@ -66,7 +66,7 @@ class CowStreamEvolveSpec extends AnyFunSuite {
     run(base, t, wide)
     val m = CowTable.latestManifest(t).get
     assert(m.version == 2, "evolution + data must be ONE epoch commit")
-    assert(m.schemaOpt.get.fieldNames.contains("extra"))
+    assert(m.schema.fieldNames.contains("extra"))
     assert(m.dvs.nonEmpty, "updates must stay merge-on-read")
     val rows = CowTable.read(spark, t).collect()
       .map(r => r.getLong(r.fieldIndex("k")) ->
