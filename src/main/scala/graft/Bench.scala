@@ -260,22 +260,62 @@ object Bench {
     }),
   )
 
-  def main(args: Array[String]): Unit = {
+  /** Cores for the bench session, from `SPARK_GRAFT_CPUS` (default 32). */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The bench session and scale-factor dir (`SPARK_GRAFT_SF_DIR`),
+    * shared by [[main]] and `graft.tools.BenchOne`: `local[cpus]`
+    * through [[Graft.session]], warmed up by one q1 run (JVM and codegen
+    * warm-up outside any timed region). */
+  def warmSession(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val spark = Graft.session(master = s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warm-up outside the timed region
     SparkEntry.queries("q1_pricing_summary")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
+    (spark, sfDir)
+  }
+
+  /** One timed run. `build` is the lakehouse fixture half (None for a
+    * plain query); the op half splits into constructing its DataFrame
+    * (driver-side work: manifests, pruning, commits) and executing it
+    * into the noop sink. `table` is the fixture's path. */
+  final case class Timing(build: Option[Double], construct: Double,
+      execute: Double, table: Option[String]) {
+    def op: Double = construct + execute
+    def total: Double = build.getOrElse(0.0) + op
+  }
+
+  /** One run of `name` under the bench protocol: a `benchSplit` gate
+    * builds a fresh fixture and times build and op halves separately; a
+    * plain query runs its raw production form if it has one. The result
+    * goes through the `noop` sink so the FULL plan executes, and the
+    * cache is cleared afterwards, also on failure. */
+  def timeRun(spark: SparkSession, sfDir: String, name: String): Timing =
+    try graft.operators.CowTable.benchSplit.get(name) match {
+      case Some(mk) =>
+        val (build, op) = mk(spark, sfDir)
+        val t0 = System.nanoTime()
+        val table = build()
+        val t1 = System.nanoTime()
+        val df = op(table)
+        val t2 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t3 = System.nanoTime()
+        Timing(Some((t1 - t0) / 1e9), (t2 - t1) / 1e9, (t3 - t2) / 1e9,
+          Some(table))
+      case None =>
+        val q = raw.getOrElse(name, SparkEntry.queries(name))
+        val t0 = System.nanoTime()
+        val df = q(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t2 = System.nanoTime()
+        Timing(None, (t1 - t0) / 1e9, (t2 - t1) / 1e9, None)
+    } finally spark.catalog.clearCache() // isolate per-query cache/memory
+
+  def main(args: Array[String]): Unit = {
+    val (spark, sfDir) = warmSession()
     // three timed runs per query, report the min; per-run times go to
     // stderr so run-to-run variance is attributable (round-2 verdict:
     // shared-host noise made regressions indistinguishable from drift).
@@ -288,33 +328,21 @@ object Bench {
     // rounds; the split goes to the "lh_split" JSON key)
     val results: Seq[(String, Option[Double], Option[(Double, Double)],
         Option[String])] = headline.map { name =>
-      val splitMk = graft.operators.CowTable.benchSplit.get(name)
       var err: Option[String] = None
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       val splits = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
       var run = 0
       while (run < 3 && err.isEmpty) {
         run += 1
-        try splitMk match {
-          case Some(mk) =>
-            val (build, op) = mk(spark, sfDir)
-            val t0 = System.nanoTime()
-            val table = build()
-            val t1 = System.nanoTime()
-            op(table).write.format("noop").mode("overwrite").save()
-            val t2 = System.nanoTime()
-            splits += (((t1 - t0) / 1e9, (t2 - t1) / 1e9))
-            times += (t2 - t0) / 1e9
-          case None =>
-            val q = raw.getOrElse(name, SparkEntry.queries(name))
-            val t0 = System.nanoTime()
-            q(spark, sfDir).write.format("noop").mode("overwrite").save()
-            times += (System.nanoTime() - t0) / 1e9
+        try {
+          val t = timeRun(spark, sfDir, name)
+          times += t.total
+          t.build.foreach(b => splits += ((b, t.op)))
         } catch {
           case e: Throwable =>
             err = Some(e.toString.replaceAll("""["\\\n\r\t]""", " ").take(300))
             System.err.println(s"[bench] $name FAILED: $e")
-        } finally spark.catalog.clearCache() // isolate per-query cache/memory
+        }
       }
       if (err.isEmpty) System.err.println(
         f"[bench] $name runs: ${times.map(t => f"$t%.3f").mkString(", ")}")

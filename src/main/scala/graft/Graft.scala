@@ -25,21 +25,20 @@ object Graft {
     spark
   }
 
-  /** Build a session with the engine's recommended settings. Partitions
-    * default to cluster parallelism, not Spark's static 200. */
-  def session(
-      master: String = "local[*]",
-      appName: String = "graft",
-      shufflePartitions: Option[Int] = None): SparkSession = {
-    val b = SparkSession.builder()
+  /** Build a session with the engine's recommended settings — the one
+    * place a `SparkSession` is built (Bench, Verify, the tools and the
+    * test session all come through here). Shuffle partitions default to
+    * cluster parallelism, not Spark's static 200. */
+  def session(master: String = "local[*]", appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",
-      shufflePartitions.getOrElse(spark.sparkContext.defaultParallelism).toString)
+      spark.sparkContext.defaultParallelism.toString)
     install(spark)
   }
 }

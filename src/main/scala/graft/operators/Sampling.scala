@@ -416,7 +416,7 @@ object Sampling {
     * bounds each boundary's rank error by ±ε ABSOLUTELY (independent of
     * the share), so the right contract is share ∈ 1/n ± 2ε — not a
     * relative band. Measured worst absolute deviations
-    * (MeasureRangeBuckets, k=200, 16 buckets): 0.0105 / 0.0141 / 0.0306
+    * (retired MeasureRangeBuckets tool, k=200, 16 buckets): 0.0105 / 0.0141 / 0.0306
     * at sf0.001/0.01/0.1 — inside the ±2ε ≈ ±0.033 that ε ≈ 1.65%
     * predicts for k=200; 0.045 leaves margin while still asserting
     * real balance (even share is 0.0625). */

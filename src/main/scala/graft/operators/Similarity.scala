@@ -1402,7 +1402,7 @@ object Similarity {
     * oracle asserts the CONTRACT — PQ+rerank at the shipped settings
     * (M=8, K=32, shortlist = the tuning-time [[chooseShortlist]] value
     * at target 0.9) recovers ≥ [[PqRecallFloor]] of the true top-k.
-    * Measured (MeasurePq): tuned shortlist 43/40/346 → recall 0.90 at
+    * Measured (retired MeasurePq tool): tuned shortlist 43/40/346 → recall 0.90 at
     * every sf (the tune's target, by construction); the fixed-100
     * default measures 0.98/0.96/0.72. The near-uniform synthetic
     * sphere is PQ's adversarial case (same corpus property the IVF
@@ -1615,7 +1615,8 @@ object Similarity {
 
   /** Measured envelope constant for the gate: the fraction of EXACT
     * full-quadratic near-dup pairs whose endpoints co-cluster (and are
-    * therefore caught by the within-cluster compare). MeasureSemDedup:
+    * therefore caught by the within-cluster compare). Measured by the
+    * retired MeasureSemDedup tool:
     * 0.429 / 0.286 / 0.350 at sf0.001/0.01/0.1 — deterministic (fixed
     * data, fixed centroids), so the floor cannot drift. Low absolute
     * coverage is the documented property of the near-uniform synthetic
@@ -1678,8 +1679,9 @@ object Similarity {
     * per subspace). PQ quantizes each subspace INDEPENDENTLY, so
     * correlated/anisotropic data wastes its code budget; rotating into
     * the decorrelated basis and spreading variance evenly across
-    * subspaces recovers it. Measured (MeasureOpq): recall@10 at the
-    * fixed shortlist 0.66 → 1.00 on an anisotropic clustered fixture;
+    * subspaces recovers it. Measured (retired MeasureOpq tool):
+    * recall@10 at the fixed shortlist 0.66 → 1.00 on an anisotropic
+    * clustered fixture;
     * neutral (0.96 vs 0.94) on the near-uniform driver corpus, which
     * has nothing to decorrelate — rotation of a sphere is a sphere.
     *
@@ -1867,7 +1869,7 @@ object Similarity {
     * on the near-uniform driver corpus while recall stays flat/jitters,
     * so an MSE-gain gate cannot separate "genuine un-mixing win" from
     * "quantization-friendlier basis that search doesn't feel" — recall
-    * can. MeasureOpqIter holds the numbers.) O(n²·d) driver flops on
+    * can; the retired MeasureOpqIter tool measured both.) O(n²·d) driver flops on
     * the bounded sample (~2048² · 64), deterministic. */
   private[graft] def sampleAdcRecall(sample: Array[Array[Double]],
       m: Int, rot: Option[Array[Array[Double]]], q: Int = 10, k: Int = 10)

@@ -2,42 +2,39 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, Graft, SparkEntry}
 
-import graft.{Bench, SparkEntry}
-
-/** Writes the formatted physical plan of headline queries — the
-  * artifact of the explain-and-iterate loop (pushdown, pruning,
-  * broadcast choices, codegen spans are all visible and reviewable in
-  * one place). Args: [outPath] [queryName…] — defaults to
-  * `docs/PLANS_r8.md` and the full headline set. */
+/** Per-query formatted physical plans — the before/after evidence of
+  * the explain-and-iterate loop (pushdown, pruning, broadcast choices,
+  * codegen spans), one file per query: `<outDir>/<name>_<suffix>.txt`.
+  * Usage: `runMain graft.tools.DumpPlans <outDir> <suffix> <name…>`,
+  * e.g. `runMain graft.tools.DumpPlans plans/r18 before ss_knn_join`.
+  * Envelope-gated names dump the raw production operator, as the bench
+  * times it. AQE is off so the initial plan shape (exchanges, join
+  * strategy, pushdown) is readable; production runs re-plan adaptively
+  * on top. Reads `SPARK_GRAFT_SF_DIR` (default sf0.01). */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val outPath = if (args.nonEmpty) args(0) else "docs/PLANS_r8.md"
-    val names = if (args.length > 1) args.drop(1).toSeq else Bench.headline
+    if (args.length < 3) {
+      System.err.println(
+        "usage: graft.tools.DumpPlans <outDir> <suffix> <name...>")
+      sys.exit(2)
+    }
+    val outDir = args(0)
+    val suffix = args(1)
+    val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false") // initial plans, readable
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(master = "local[8]")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb ++= "# Formatted physical plans\n\n"
-    sb ++= "Generated by `graft.tools.DumpPlans` (AQE off for readability —\n"
-    sb ++= "production runs re-plan adaptively on top of these).\n"
+    Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      // envelope-gated names dump the raw production operator, like the
-      // bench times it; the gate form additionally computes the exact
-      // twin for the oracle
       val plan = Bench.raw.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-      sb ++= s"\n## $name\n\n```\n$plan```\n"
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
+      println(s"wrote $outDir/${name}_$suffix.txt")
     }
-    Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get(outPath), sb.toString)
-    println(s"wrote $outPath (${names.size} plans)")
     spark.stop()
   }
 }

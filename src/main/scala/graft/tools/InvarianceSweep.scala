@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Partitioning-invariance sweep (builder-side tooling): run every
   * batch query under two different `spark.sql.shuffle.partitions`
   * settings and require BYTE-identical canonical results.
@@ -52,11 +50,7 @@ object InvarianceSweep {
     val outJson = if (args.length > 1) Some(args(1)) else None
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(master = "local[16]")
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.endsWith("_stream"))

@@ -2,19 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM, built by
+  * [[Graft.session]] like every entry point. The warehouse dir is a
+  * static conf, so it rides in as a system property, which the session
+  * builder reads the way it reads the launcher's `-Dspark.*` options. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val s = Graft.session(master = "local[4]", appName = "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.tools.MeasureOpqIter
 
 /** Iterative (parametric) OPQ: the alternation must (a) stay orthogonal
   * and deterministic, (b) measurably cut quantization error, (c) win
@@ -16,7 +15,7 @@ class OpqIterSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val fixture =
-    MeasureOpqIter.mixedSubspaceFixture(spark, 2048).cache()
+    OpqFixtures.mixedSubspaceFixture(spark, 2048).cache()
   private lazy val sample = Similarity.trainSample(fixture)
     .select($"embedding").collect()
     .map(_.getSeq[Float](0).map(_.toDouble).toArray)
@@ -58,8 +57,8 @@ class OpqIterSpec extends AnyFunSuite {
     assert(rot.isDefined, "adoption gate must fire on the mixed-subspace fixture")
     // end-to-end PQ recall through the real pipeline (measured: plain
     // 0.80, refined 0.92 — assert the gap with jitter margin)
-    val plain = MeasureOpqIter.recallOn(fixture, None)
-    val refined = MeasureOpqIter.recallOn(fixture, rot)
+    val plain = OpqFixtures.recallOn(fixture, None)
+    val refined = OpqFixtures.recallOn(fixture, rot)
     assert(refined >= plain + 0.06,
       s"refined recall $refined vs plain $plain — no win")
   }

@@ -339,7 +339,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("OPQ rotation: orthogonal, recall-lifting on anisotropic clusters") {
     import spark.implicits._
-    val fix = graft.tools.MeasureOpq.clusteredFixture(spark, 2000)
+    val fix = OpqFixtures.clusteredFixture(spark, 2000)
     val sample = Similarity.trainSample(fix).select($"embedding")
       .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
     val r = Similarity.opqRotation(sample, Similarity.PqM)
@@ -366,7 +366,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("OPQ anisotropy gate: rotates clusters, skips isotropic data") {
     import spark.implicits._
-    val fix = graft.tools.MeasureOpq.clusteredFixture(spark, 2000)
+    val fix = OpqFixtures.clusteredFixture(spark, 2000)
     val aniso = Similarity.trainSample(fix).select($"embedding")
       .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
     assert(Similarity.opqRotationIfAnisotropic(aniso, Similarity.PqM).isDefined)
