@@ -403,8 +403,8 @@ object CowTable {
     * wholesale; otherwise (an evolve-merge rebasing over a
     * metadata-only commit: shapes differ by design) carry the head's
     * field metadata onto identically-named/typed fields ours left
-    * bare. Only [[alterTable]] itself opts out — its schema IS the
-    * intended change. */
+    * bare. [[alterTable]], [[createBranch]] and [[publishBranch]] opt
+    * out — the schema they commit IS the intended one. */
   private[graft] def adoptHeadSchema(schema: StructType,
       h: Manifest): StructType = {
     val hs = h.schema
@@ -462,17 +462,24 @@ object CowTable {
     * fresh deletion vectors (`dvTargetN`), (c) did not itself add a
     * deletion vector inside any of those files (overlapping deletes
     * are refused at FILE granularity — conservative, never wrong),
-    * and (d) — when `srcKeys` is given — did not add rows carrying
-    * this operation's source keys (a rebase would silently lose an
-    * update or duplicate an insert). All sets are NORMALIZED paths.
-    * Everything else (appends, disjoint-file rewrites, deletes in
-    * other files, maintenance that only moved untouched files)
-    * rebases and lands. */
+    * (d) — when `srcKeys` is given — did not add rows carrying this
+    * operation's source keys (a rebase would silently lose an update
+    * or duplicate an insert), and (e) — with `refuseAddedData` — did
+    * not add any data file at all. (e) is the DSv2 merge-on-read rule:
+    * that write sees only row ids and written files, never the
+    * statement's ON condition, so it cannot re-verify its match
+    * decisions; an added row could have matched (a phantom) and a
+    * rebase would duplicate a MERGE insert or skip an update/delete
+    * the statement owed. It refuses some benign races the key-aware
+    * committers accept, as a loud retryable error. All sets are
+    * NORMALIZED paths. Everything else (appends, disjoint-file
+    * rewrites, deletes in other files, maintenance that only moved
+    * untouched files) rebases and lands. */
   private[graft] def standardRebaseValidate(spark: SparkSession,
       op: String, table: String, base: Manifest,
       rewrittenN: Set[String], dvTargetN: Set[String],
-      srcKeys: Option[(DataFrame, Seq[String])] = None)(
-      h: Manifest): Unit = {
+      srcKeys: Option[(DataFrame, Seq[String])] = None,
+      refuseAddedData: Boolean = false)(h: Manifest): Unit = {
     def conflict(msg: String) = throw new java.util.ConcurrentModificationException(
       s"$op $table: concurrent $msg — rerun against the new snapshot")
     if (!schemaCompatible(h.schemaJson, base.schemaJson))
@@ -484,23 +491,24 @@ object CowTable {
       // never materializes the head's file list
       val live = entriesLiveAmong(spark, table, h, mine.toSeq)
       if (!mine.forall(live.contains))
-        conflict("rewrite of a file this operation touches")
+        conflict("rewrite of a file this operation rewrites or deletes from")
       val freshDvs = h.dvs.filterNot(base.dvs.toSet)
       if (freshDvs.nonEmpty) {
         val refs = dvRuns(spark, freshDvs).select("fp").distinct()
           .collect().map(_.getString(0)).toSet
         if (refs.exists(mine.contains))
-          conflict("delete inside a file this operation touches")
+          conflict("delete inside a file this operation rewrites or deletes from")
       }
     }
+    lazy val added = addedDataPaths(spark, table, h, base)
+    if (refuseAddedData && added.nonEmpty)
+      conflict("write of data files while this statement matched rows " +
+        "against the old snapshot — its match decisions may be stale " +
+        "(phantom rows)")
     srcKeys.foreach { case (sk, keys) =>
-      val added = addedDataPaths(spark, table, h, base)
-      if (added.nonEmpty) {
-        if (spark.read.schema(base.schema).parquet(added: _*)
-            .join(broadcast(sk), keys, "left_semi")
-            .limit(1).count() > 0L)
-          conflict("write of rows matching this operation's source keys")
-      }
+      if (added.nonEmpty && rawScan(spark, base, added)
+          .join(broadcast(sk), keys, "left_semi").limit(1).count() > 0L)
+        conflict("write of rows matching this operation's source keys")
     }
   }
 
@@ -577,10 +585,6 @@ object CowTable {
 
   private[graft] def clearEntriesCache(): Unit = entriesCache.clear()
 
-  private def cachedEntriesOf(table: String,
-      m: Manifest): Option[Seq[FileEntry]] =
-    Option(entriesCache.get((table, m.entriesRel)))
-
   private def cacheEntries(table: String, rel: String,
       entries: Seq[FileEntry]): Unit =
     if (entries.size <= SmallSidecarEntries) {
@@ -590,9 +594,8 @@ object CowTable {
 
   /** The canonical dv sidecar rows for a commit's dv set — what
     * [[commitWithStatsDF]] writes regardless of what the carry
-    * contained (see the canonicalization note there). Cache hand-offs
-    * must mirror this exactly or a cached read diverges from the
-    * stored sidecar. */
+    * contained (see the canonicalization note there); its driver-side
+    * fast path caches exactly these rows. */
   private def canonDvRows(dvs: Seq[String]): Seq[FileEntry] =
     dvs.map(FileEntry("dv", _, -1L, None, None))
 
@@ -634,37 +637,35 @@ object CowTable {
       version: Int, carried: Seq[FileEntry], newDataFiles: Seq[String],
       schema: StructType, partitionCols: Seq[String] = Nil): Manifest = {
     val dvs = carried.collect { case e if e.kind == "dv" => e.path }
-    val m = commitWithStatsDF(spark, table, version,
+    // a data-file-free commit caches what it wrote (the fast path)
+    commitWithStatsDF(spark, table, version,
       spark.createDataFrame(carried), newDataFiles, schema, dvs,
       partitionCols, carriedSeq = Some(carried))
-    // cache mirrors the WRITTEN sidecar: data rows as carried, dv rows
-    // in their canonical rebuilt form (appended last)
-    if (newDataFiles.isEmpty) cacheEntries(table, m.entriesRel,
-      carried.filterNot(_.kind == "dv") ++ canonDvRows(dvs))
-    m
   }
 
-  /** The internal commit: `carriedDF` rides sidecar-to-sidecar as a
-    * DataFrame (at 10⁶ files the carry is a columnar copy, never a
-    * driver seq); `newDataFiles` get their stats computed IN the
-    * sidecar write itself — [[statsEntriesDF]] unioned in, one Spark
-    * job total, nothing collected. `carriedFiles`/`carriedDvs` are the
-    * carried paths for the manifest text (driver-resident by
-    * construction: the manifest format lists paths). */
   /** Test hook: runs at the top of every stats commit — the injection
     * point the concurrency spec uses to land a competing commit in the
     * window between an operation reading its base manifest and
     * claiming its version (deterministic race replay). */
   private[graft] var preCommitHook: () => Unit = () => ()
 
-  /** `carriedSeq`: the carried entries as a driver seq when the caller
+  /** The internal commit: `carriedDF` rides sidecar-to-sidecar as a
+    * DataFrame (at 10⁶ files the carry is a columnar copy, never a
+    * driver seq); `newDataFiles` get their stats computed IN the
+    * sidecar write itself — [[statsEntriesDF]] unioned in, one Spark
+    * job total, nothing collected. `carriedDvs` are the carried DV
+    * paths for the manifest text (driver-resident by construction:
+    * the manifest format lists them).
+    *
+    * `carriedSeq`: the carried entries as a driver seq when the caller
     * already holds them (small sidecars, delta commits) — lets a
     * DATA-FILE-FREE commit (DV-only delete, metadata evolution, bloom
     * fold, branch publish) write its sidecar ON THE DRIVER with zero
     * Spark jobs instead of planning a LocalRelation write job per
     * commit (guide §5: metadata-sized work stays off the cluster; the
-    * write-side twin of the driver-side sidecar READ). Commits that add
-    * data files keep the fused stats-scan + sidecar-write Spark job. */
+    * write-side twin of the driver-side sidecar READ), and cache it.
+    * Commits that add data files keep the fused stats-scan +
+    * sidecar-write Spark job. */
   private def commitWithStatsDF(spark: SparkSession, table: String,
       version: Int, carriedDF: DataFrame, newDataFiles: Seq[String],
       schema: StructType,
@@ -856,10 +857,9 @@ object CowTable {
     * Paths come back RESOLVED (openable), like [[loadEntries]]. */
   private def smallEntries(spark: SparkSession, table: String,
       m: Manifest): Option[Seq[FileEntry]] =
-    cachedEntriesOf(table, m).orElse(
-      if (m.entryCount <= SmallSidecarEntries)
-        Some(loadEntries(spark, table, m))
-      else None)
+    if (m.entryCount <= SmallSidecarEntries)
+      Some(loadEntries(spark, table, m))
+    else None
 
   /** The manifest's entries as a DataFrame (kind, path, bytes, numRows,
     * stats, part) — the substrate for data skipping and file-set
@@ -2658,9 +2658,11 @@ object CowTable {
     }
 
   /** Empty DataFrame with the snapshot's schema — the "every row
-    * deleted" read path. */
+    * deleted" read path. A local relation, so the optimizer sees it is
+    * empty and folds it away (an insert-only merge's join against no
+    * touched rows plans as a plain projection of the source). */
   private def emptyOf(spark: SparkSession, m: Manifest): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
 
   /** Scan of the manifest's data files under its schema — the reader
     * never infers a schema. Files that
@@ -3172,60 +3174,13 @@ object CowTable {
           col("row_index") >= col("__dv_start") &&
           col("row_index") < col("__dv_start") + col("__dv_len"),
         "left_anti")
-    val out = versionDir(table, "dv", m.version + 1)
-    // runs are tiny relative to the delete: one sidecar file suffices.
-    // Write-then-check: emptiness comes from the written footer
-    // (dropEmptyFiles), not a `fresh.isEmpty` pre-check that would
-    // execute the candidate scan + DV anti-join a second time.
-    toDvRuns(fresh).coalesce(1).write.mode("overwrite")
-      .parquet(out.toString)
-    val dvFiles = dropEmptyFiles(spark, listPartFiles(out))
-    if (dvFiles.isEmpty) { dropDirIfNoFiles(out, dvFiles); return m }
-    val dvEntries = dvFiles.map(p =>
-      FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
-    val dvTouched = dvRuns(spark, dvFiles).select("fp").distinct()
-      .collect().map(_.getString(0)).toSet
-
-    // Concurrency: rebase-and-retry on a lost version race. Snapshot
-    // isolation (the Delta "WriteSerializable" stance): the delete
-    // applies to the rows that existed in ITS snapshot, so concurrent
-    // appends and disjoint-file writers are compatible; anything that
-    // moved or re-deleted the rows this DV references throws.
-    def validateRebase(h: Manifest): Unit = {
-      def conflict(msg: String) = throw new java.util.ConcurrentModificationException(
-        s"deleteWhere $table: concurrent $msg — rerun the delete " +
-          "against the new snapshot")
-      if (!schemaCompatible(h.schemaJson, m.schemaJson)) conflict("schema change")
-      if (h.partitionCols != m.partitionCols) conflict("re-partitioning")
-      val live = entriesLiveAmong(spark, table, h, dvTouched.toSeq)
-      if (!dvTouched.forall(live.contains))
-        conflict("rewrite of a file this delete targets")
-      val freshDvs = h.dvs.filterNot(m.dvs.toSet)
-      if (freshDvs.nonEmpty) {
-        val refs = dvRuns(spark, freshDvs).select("fp").distinct()
-          .collect().map(_.getString(0)).toSet
-        if (refs.exists(dvTouched.contains))
-          conflict("delete inside a file this delete also targets")
-      }
-    }
-    def commitAttempt(h: Manifest): Manifest = {
-      // carry ALL head entries sidecar-to-sidecar (columnar, never a
-      // driver seq) and append only the delta-sized DV entries
-      val carriedDF = entriesDF(spark, table, h)
-        .unionByName(spark.createDataFrame(dvEntries),
-          allowMissingColumns = true)
-      val m2 = commitWithStatsDF(spark, table, h.version + 1, carriedDF,
-        Nil, h.schema, h.dvs ++ dvEntries.map(_.path), h.partitionCols,
-        knownDvRuns = h.dvRunCounts)
-      // cache hand-off: a DV commit's entries are derivable from the
-      // old snapshot's (when cached) — the next read skips the sidecar
-      // job
-      cachedEntriesOf(table, h).foreach(old =>
-        cacheEntries(table, m2.entriesRel,
-          old.filterNot(_.kind == "dv") ++ canonDvRows(m2.dvs)))
-      m2
-    }
-    commitWithRetry(table, m, validateRebase, commitAttempt)
+    val dvFiles = writeDvs(spark, table, m.version + 1, fresh)
+    if (dvFiles.isEmpty) return m
+    // Snapshot isolation (the Delta "WriteSerializable" stance): the
+    // delete applies to the rows that existed in ITS snapshot, so
+    // concurrent appends and disjoint-file writers rebase; anything
+    // that moved or re-deleted the rows this DV references throws.
+    rowLevelCommit(spark, "deleteWhere", table, m, addedDvs = dvFiles)
   }
 
   // ------------------------------------------------- DSv2 commit hooks
@@ -3237,13 +3192,13 @@ object CowTable {
   private[graft] def normalizePathSql(c: Column): Column = normalizeSql(c)
 
   /** A fresh data directory for version `v` — where a DSv2 batch write
-    * stages its part files before [[replaceFilesCommit]] publishes them. */
+    * stages its part files before [[rowLevelCommit]] publishes them. */
   private[graft] def newDataDir(table: String, v: Int): String =
     versionDir(table, "data", v).toString
 
   /** A fresh deletion-vector directory for version `v` — where a DSv2
     * merge-on-read (delta) write stages its DV part files before
-    * [[deltaCommit]] publishes them. */
+    * [[rowLevelCommit]] publishes them. */
   private[graft] def newDvDir(table: String, v: Int): String =
     versionDir(table, "dv", v).toString
 
@@ -3417,141 +3372,115 @@ object CowTable {
         fp -> (runs.map(_._1), runs.map(_._2)) }
   }
 
-  /** DSv2 commit: replace `removed` data files with `added` (already
-    * written under this table's data dir) as ONE new version — the
-    * commit behind SQL `MERGE INTO` / `UPDATE` / `DELETE` executed
-    * through [[graft.plans.CowDsv2Table]]'s group-based row-level
-    * operations; with `removed` empty it is the `INSERT INTO` append.
-    * Carried entries ride sidecar-to-sidecar (columnar, never a driver
-    * seq); new files get stats fused into the sidecar write. DV entries
-    * whose data file was removed stay in place — they reference paths no
-    * longer in the manifest, so readers never match them, and
-    * [[rewriteDeletes]]/[[vacuum]] reclaim them. On a lost version race
-    * the commit REBASES and retries ([[commitWithRetry]]): an
-    * interleaved commit that did not touch the removed files (or add a
-    * delete inside them) is compatible and both writers land; anything
-    * else throws ConcurrentModificationException. With `removed` empty
-    * (a pure append — the streaming sink's epoch apply and `INSERT
-    * INTO`) every race rebases. */
-  private[graft] def replaceFilesCommit(spark: SparkSession, table: String,
-      base: Manifest, removed: Seq[String], added: Seq[String]): Manifest = {
-    val schema = base.schema
-    // a stale base behaves exactly like a lost race: validate the real
-    // head and rebase onto it
-    val head0 = latestManifest(table).getOrElse(base)
+  /** The row-level committer: every operation that changes rows —
+    * [[mergeInto]], [[mergeIntoHybrid]], [[upsertMor]], [[deleteWhere]]
+    * and the DSv2 batch, delta and streaming-append writes of
+    * [[graft.plans.CowDsv2Table]] — publishes ONE version through it
+    * that drops the `removed` data files (group rewrites) and adds
+    * `addedData` (written under this table's data dir) and `addedDvs`
+    * (fresh deletion-vector parquet). Each attempt carries the HEAD's
+    * entries minus `removed`, plus the new DV entries, and commits the
+    * head's schema widened by the source-only columns of `evolveFrom`
+    * ([[evolvedSinkSchema]]), so a rebase never reverts what the head
+    * committed (a concurrent field-id assignment included). DV entries
+    * whose data file was removed stay in place — they reference paths
+    * no longer in the manifest, so readers never match them, and
+    * [[rewriteDeletes]]/[[vacuum]] reclaim them.
+    *
+    * A stale `base` or a lost version race validates the head through
+    * [[standardRebaseValidate]] (with `srcKeys` and `refuseAddedData`
+    * as given) and rebases ([[commitWithRetry]]); the files the new
+    * DVs reference are read only then. Added files written under
+    * `__p_`/bucket dirs recover their partition or bucket tuples;
+    * others commit with part=NULL — kept by pruning, never unsound. A
+    * commit that adds no data file writes its sidecar on the driver
+    * when the head's is small. */
+  private[graft] def rowLevelCommit(spark: SparkSession, op: String,
+      table: String, base: Manifest, removed: Seq[String] = Nil,
+      addedData: Seq[String] = Nil, addedDvs: Seq[String] = Nil,
+      evolveFrom: Option[StructType] = None,
+      srcKeys: Option[(DataFrame, Seq[String])] = None,
+      refuseAddedData: Boolean = false): Manifest = {
     val removedN = removed.map(normalize).toSet
-    // added files written under __p_ partition dirs (the DSv2 writer's
-    // partition routing) recover their exact tuples; others commit with
-    // part=NULL — conservatively kept by pruning, never unsound
-    val newParts =
-      if (base.partitionCols.nonEmpty)
-        partJsonOf(added.filter(
-          _.split("/").exists(_.startsWith("__p_"))), base.partitionCols)
-      else if (base.bucketSpec.isDefined) bucketPartsOf(added)
-      else Map.empty[String, String]
-    val validate = standardRebaseValidate(spark, "replaceFilesCommit",
-      table, base, removedN, Set.empty) _
-    if (head0.version != base.version) validate(head0)
-    def attempt(h: Manifest): Manifest = {
-      val carriedDF = entriesDF(spark, table, h).filter(
-        if (removedN.isEmpty) lit(true)
-        else col("kind") === "dv" ||
-          !normalizeSql(col("path")).isInCollection(removedN.toSeq))
-      commitWithStatsDF(spark, table, h.version + 1, carriedDF, added,
-        schema, h.dvs, h.partitionCols, newParts,
-        knownDvRuns = h.dvRunCounts)
-    }
-    commitWithRetry(table, head0, validate, attempt)
-  }
-
-  /** Rebase rule for row-level deltas committed through the DSv2
-    * connector (SQL `MERGE INTO` / `UPDATE` / `DELETE FROM` on
-    * [[graft.plans.CowDsv2Table]]). The connector sees only row ids
-    * and written files — never the statement's ON condition or source
-    * keys — so a lost version race cannot re-verify its match
-    * decisions the way [[upsertMor]] does with its source-key set.
-    * The sound conservative rule: any interleaved commit that ADDED
-    * data files is a conflict, because the added rows could have
-    * matched the statement's condition (phantoms) — a silent rebase
-    * would duplicate a MERGE insert or skip an update/delete the
-    * statement semantically owed. Interleaved commits that added no
-    * data files (MOR deletes in files this delta does not touch,
-    * metadata-only commits) still rebase and land; overlapping
-    * rewrites/deletes inside files this delta targets are refused by
-    * the standard rule either way. This refuses some benign races the
-    * key-aware Scala committers accept — the price of an
-    * ON-condition-blind protocol, paid as a loud retryable error,
-    * never as duplicate rows. */
-  private[graft] def dsv2DeltaValidate(spark: SparkSession, table: String,
-      base: Manifest)(h: Manifest): Unit = {
-    if (addedDataPaths(spark, table, h, base).nonEmpty)
-      throw new java.util.ConcurrentModificationException(
-        "deltaCommit: a concurrent commit added data files while this " +
-          "MERGE/UPDATE/DELETE matched rows against the old snapshot — " +
-          "its match decisions may be stale (phantom rows); rerun the " +
-          "statement against the new snapshot")
-  }
-
-  /** DSv2 merge-on-read (delta) commit: EVERY base data file is kept;
-    * `addedData` (inserted/updated rows, already written under this
-    * table's data dir) and `addedDvs` (freshly written deletion-vector
-    * parquet — the deleted/updated rows' identities) publish as ONE new
-    * version. This is the commit behind `MERGE INTO` / `UPDATE` /
-    * `DELETE` executed through [[graft.plans.CowDsv2Table]] in
-    * merge-on-read mode: write cost is O(delta) regardless of how many
-    * files the matched rows touch — the 100 TB trade where rewriting a
-    * group is the expensive half and readers amortize the DV anti-join
-    * until [[rewriteDeletes]]/compaction materializes. On a lost
-    * version race the commit REBASES and retries: the added DVs' row
-    * identities stay valid as long as no interleaved commit rewrote or
-    * re-deleted inside the files they reference (the standard rule);
-    * `extraValidate` lets callers layer operation-specific conflicts
-    * on top ([[upsertMor]] adds the source-key write check). */
-  private[graft] def deltaCommit(spark: SparkSession, table: String,
-      base: Manifest, addedData: Seq[String], addedDvs: Seq[String],
-      extraValidate: Manifest => Unit = _ => (),
-      schemaOverride: Option[StructType] = None): Manifest = {
-    // a schemaOverride commits an EVOLVED schema with this delta (the
-    // upsert's new-column path); the standard rebase rule already
-    // refuses interleaved schema changes, so two racing evolutions
-    // cannot stomp each other
-    val schema = schemaOverride.getOrElse(base.schema)
-    val head0 = latestManifest(table).getOrElse(base)
-    val dvEntries = addedDvs.map(p =>
-      FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
-    // the files our fresh DVs reference — a delta-sized read, done once
-    val dvTargetN: Set[String] =
-      if (addedDvs.isEmpty) Set.empty
-      else dvRuns(spark, addedDvs).select("fp").distinct()
-        .collect().map(_.getString(0)).toSet
     val newParts =
       if (base.partitionCols.nonEmpty)
         partJsonOf(addedData.filter(
           _.split("/").exists(_.startsWith("__p_"))), base.partitionCols)
       else if (base.bucketSpec.isDefined) bucketPartsOf(addedData)
       else Map.empty[String, String]
-    val validate = { h: Manifest =>
-      standardRebaseValidate(spark, "deltaCommit", table, base,
-        Set.empty, dvTargetN)(h)
-      extraValidate(h)
-    }
-    if (head0.version != base.version) validate(head0)
+    val dvEntries = addedDvs.map(p =>
+      FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
+    lazy val dvTargetN: Set[String] =
+      if (addedDvs.isEmpty) Set.empty
+      else dvRuns(spark, addedDvs).select("fp").distinct()
+        .collect().map(_.getString(0)).toSet
+    def validate(h: Manifest): Unit = standardRebaseValidate(spark, op,
+      table, base, removedN, dvTargetN, srcKeys, refuseAddedData)(h)
     def attempt(h: Manifest): Manifest = {
-      val carriedDF =
-        if (dvEntries.isEmpty) entriesDF(spark, table, h)
-        else entriesDF(spark, table, h).unionByName(
-          spark.createDataFrame(dvEntries), allowMissingColumns = true)
-      commitWithStatsDF(spark, table, h.version + 1, carriedDF, addedData,
-        schema, h.dvs ++ addedDvs, h.partitionCols, newParts,
+      val schema = evolveFrom.fold(h.schema)(s =>
+        evolvedSinkSchema(op, h.schema, s, h.droppedNames))
+      val carried = entriesDF(spark, table, h).filter(
+        if (removedN.isEmpty) lit(true)
+        else col("kind") === "dv" ||
+          !normalizeSql(col("path")).isInCollection(removedN.toSeq))
+      commitWithStatsDF(spark, table, h.version + 1,
+        if (dvEntries.isEmpty) carried
+        else carried.unionByName(spark.createDataFrame(dvEntries),
+          allowMissingColumns = true),
+        addedData, schema, h.dvs ++ addedDvs, h.partitionCols, newParts,
         knownDvRuns = h.dvRunCounts,
-        schemaAuthoritative = schemaOverride.isDefined,
-        // a DV-only delta over a small sidecar writes its sidecar on
-        // the driver (dvEntries ride carriedDvs' canonical rebuild)
+        // dv rows are rebuilt from carriedDvs, so only data rows ride
         carriedSeq =
           if (addedData.nonEmpty) None
-          else smallEntries(spark, table, h))
+          else smallEntries(spark, table, h).map(_.filter(e =>
+            e.kind != "dv" && !removedN.contains(normalize(e.path)))))
     }
+    val head0 = latestManifest(table).getOrElse(base)
+    if (head0.version != base.version) validate(head0)
     commitWithRetry(table, head0, validate, attempt)
+  }
+
+  /** Writes row identities `(file_path, row_index)` as version `v`'s
+    * deletion vector, run-length encoded ([[toDvRuns]]) into one file —
+    * runs are tiny relative to the rows they kill. Write-then-check:
+    * an empty result leaves no file (emptiness comes from the written
+    * footer, not a pre-check that would execute the identity scan a
+    * second time). */
+  private def writeDvs(spark: SparkSession, table: String, v: Int,
+      ids: DataFrame): Seq[String] = {
+    val out = versionDir(table, "dv", v)
+    toDvRuns(ids).coalesce(1).write.mode("overwrite").parquet(out.toString)
+    val kept = dropEmptyFiles(spark, listPartFiles(out))
+    dropDirIfNoFiles(out, kept)
+    kept
+  }
+
+  /** The merge flavors' one delta-sized pass over their source: it
+    * refuses NULL keys (with `refuseNullKeys`, checked first) and
+    * duplicate keys (the SQL MERGE cardinality contract), and returns
+    * the source row count plus the per-key-column [min, max] bounds
+    * [[mergeCandidateFiles]] prunes with — one source execution where
+    * separate probes would pay one each (in the streaming sink, one
+    * job per probe per epoch). */
+  private def checkSourceKeys(op: String, source: DataFrame,
+      keys: Seq[String], refuseNullKeys: Boolean = false)
+      : (Long, Map[String, (Any, Any)]) = {
+    val statsKeys = source.schema.fields
+      .filter(f => keys.contains(f.name) && statsEligible(f.dataType)).toSeq
+    val aggs = Seq(count(lit(1)), count_distinct(struct(keys.map(col): _*)),
+      count(when(keys.map(col(_).isNull).reduce(_ || _), lit(1)))) ++
+      statsKeys.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
+    val r = source.agg(aggs.head, aggs.tail: _*).head()
+    // a NULL never equi-matches, so its postimage would append as a
+    // new row on EVERY apply — a poison pill for a replayed stream
+    require(!refuseNullKeys || r.getLong(2) == 0L,
+      s"$op: source has NULL values in upsert key(s) " +
+        s"${keys.mkString(", ")} — NULL keys never match and would " +
+        "duplicate on every epoch; coalesce them to a sentinel value")
+    require(r.getLong(0) == r.getLong(1),
+      s"$op: source has ${r.getLong(0) - r.getLong(1)} duplicate keys")
+    (r.getLong(0), statsKeys.zipWithIndex.map { case (f, i) =>
+      f.name -> ((r.get(3 + 2 * i), r.get(4 + 2 * i))) }.toMap)
   }
 
   /** MERGE-ON-READ upsert: matched target rows die by deletion vector
@@ -3562,10 +3491,17 @@ object CowTable {
     * ([[mergeCandidateFiles]]) and DV-applied (an already-deleted row
     * cannot re-match), so repeating the same upsert is content-stable:
     * the old copy is dead either way and the latest source values win.
-    * Source keys must be unique (the SQL MERGE cardinality contract).
-    * Refuses to commit over a concurrent writer like every delta
-    * commit. */
-  /** `preserveMissing`: PARTIAL-COLUMN upsert — table columns the
+    * Source keys must be unique and non-NULL (the SQL MERGE cardinality
+    * contract; a NULL key never matches and would re-append on every
+    * streaming replay — coalesce it to a sentinel first). On a lost
+    * race, rows added since its snapshot must not carry its keys.
+    *
+    * `evolveSchema`: source-only columns become new nullable table
+    * columns inside THIS commit — the CDC-ingestion trigger (the
+    * upstream added a field) on the MOR path: untouched files
+    * NULL-extend at read, postimages carry the value.
+    *
+    * `preserveMissing`: PARTIAL-COLUMN upsert — table columns the
     * source does not carry keep their CURRENT value on matched rows
     * (read from the candidate files the match discovery already
     * touches — newest physical row wins when a key is duplicated) and
@@ -3574,8 +3510,9 @@ object CowTable {
     * path for a streaming sink whose table gained a column mid-run:
     * without it, a full-row postimage would silently NULL-clobber
     * values another writer filled. Replay-idempotent: a replayed
-    * epoch preserves FROM ITS OWN postimages, reproducing them. */
-  /** `stagedData`: the source rows ALREADY exist on disk as exactly
+    * epoch preserves FROM ITS OWN postimages, reproducing them.
+    *
+    * `stagedData`: the source rows ALREADY exist on disk as exactly
     * these parquet files, written in the table's schema (the update-
     * mode streaming sink's staged epoch) — commit them BY REFERENCE
     * instead of reading them back and rewriting a byte-identical copy
@@ -3600,43 +3537,12 @@ object CowTable {
       "upsertMor: source must carry every table column " +
         "(or pass preserveMissing = true to keep matched rows' current " +
         "values for the absent columns)")
-    // with `evolveSchema`, source-only columns become new nullable
-    // table columns inside THIS delta commit — the CDC-ingestion
-    // trigger (the upstream added a field) on the MOR path: untouched
-    // files NULL-extend at read, postimages carry the value. A
-    // restarted streaming upsert picks the evolved schema up through
-    // the fresh sink build.
     val schema = mergeEvolvedSchema("upsertMor", schema0, source,
       evolveSchema, m.droppedNames)
     requireSourceTypes("upsertMor", schema, source)
-    // NULL keys are rejected OUTRIGHT (not just flagged as duplicates):
-    // a NULL never equi-matches, so its postimage would append as a new
-    // row on EVERY epoch — in the streaming update sink that's a
-    // poison-pill that re-duplicates on each replay. Callers with a
-    // nullable group key must coalesce it to a sentinel first.
-    // ONE pre-check pass over the delta: row/distinct-key counts, the
-    // null-key count, and the per-key-column bounds the candidate
-    // discovery needs all ride a single aggregate — the old shape paid
-    // three separate source executions (null probe, uniqueness
-    // aggregate, discovery min/max) before any real work, which in the
-    // streaming sink meant three extra jobs per epoch (guide §1.2).
-    val statsKeys = source.schema.fields
-      .filter(f => keys.contains(f.name) && statsEligible(f.dataType)).toSeq
-    val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
-    val preAggs = Seq(count(lit(1)).as("n"),
-      count_distinct(struct(keys.map(col): _*)).as("d"),
-      count(when(anyNullKey, lit(1))).as("nullk")) ++
-      statsKeys.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
-    val pre = source.agg(preAggs.head, preAggs.tail: _*).head()
-    require(pre.getLong(2) == 0L,
-      s"upsertMor: source has NULL values in upsert key(s) " +
-        s"${keys.mkString(", ")} — NULL keys never match and would " +
-        "duplicate on every epoch; coalesce them to a sentinel value")
-    require(pre.getLong(0) == pre.getLong(1),
-      s"upsertMor: source has ${pre.getLong(0) - pre.getLong(1)} duplicate keys")
-    if (pre.getLong(0) == 0L) return m
-    val keyBounds = statsKeys.zipWithIndex.map { case (f, i) =>
-      f.name -> ((pre.get(3 + 2 * i), pre.get(4 + 2 * i))) }.toMap
+    val (nSource, keyBounds) =
+      checkSourceKeys("upsertMor", source, keys, refuseNullKeys = true)
+    if (nSource == 0L) return m
     val v = m.version + 1
     val srcKeys = source.select(keys.map(col): _*).distinct()
     // 1. matched LIVE rows -> this version's deletion vector
@@ -3652,16 +3558,8 @@ object CowTable {
             col("_metadata.row_index").as("row_index"): _*)
         val live = applyDvFilter(spark, ids, m,
           normalizeSql(col("file_path")), col("row_index"))
-        val matched = live.join(broadcast(srcKeys), keys, "left_semi")
-          .select("file_path", "row_index")
-        // write-then-check: a `matched.isEmpty` pre-check would execute
-        // the discovery scan + DV filter + semi-join a second time
-        val out = versionDir(table, "dv", v)
-        toDvRuns(matched).coalesce(1).write.mode("overwrite")
-          .parquet(out.toString)
-        val kept = dropEmptyFiles(spark, listPartFiles(out))
-        dropDirIfNoFiles(out, kept)
-        kept
+        writeDvs(spark, table, v, live.join(broadcast(srcKeys), keys,
+          "left_semi").select("file_path", "row_index"))
       }
     // 2. every source row appends (update postimages + fresh inserts);
     // preserved columns come from the newest live matched row (the
@@ -3691,21 +3589,17 @@ object CowTable {
       if (stagedData.nonEmpty && missingP.isEmpty && (schema eq schema0))
         // by-reference: the staged epoch files ARE the append leg —
         // stats ride the sidecar write's scan of them, partition/bucket
-        // tuples recover from their __p_/bucket dirs in deltaCommit
+        // tuples recover from their __p_/bucket dirs in the commit
         stagedData
       else {
         val ordered = enriched.select(schema.fieldNames.map(col): _*)
         writeDataMaybePartitioned(ordered, table, v, m.partitionCols,
           m.bucketSpec)._1
       }
-    // rebase rule on a lost race: the standard file checks ride in
-    // deltaCommit; on top, rows added since OUR snapshot must not carry
-    // our keys (our DV can't have killed them — a rebase would
-    // duplicate)
-    deltaCommit(spark, table, m, dataFiles, dvFiles,
-      extraValidate = standardRebaseValidate(spark, "upsertMor", table,
-        m, Set.empty, Set.empty, Some((srcKeys, keys))),
-      schemaOverride = if (schema eq schema0) None else Some(schema))
+    rowLevelCommit(spark, "upsertMor", table, m, addedData = dataFiles,
+      addedDvs = dvFiles,
+      evolveFrom = Option.when(evolveSchema)(source.schema),
+      srcKeys = Some((srcKeys, keys)))
   }
 
   /** Source-only columns appended as new nullable fields — the
@@ -3863,70 +3757,22 @@ object CowTable {
       insert: Boolean = true, evolveSchema: Boolean = false): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
-    // unique-source-keys contract (multiple matches = SQL MERGE error);
-    // source is delta-sized so the check is one small aggregate — and
-    // the discovery's per-key min/max bounds ride the SAME aggregate
-    // (one source pass, not two)
-    val statsKeys = source.schema.fields
-      .filter(f => keys.contains(f.name) && statsEligible(f.dataType)).toSeq
-    val uniqAggs = Seq(count(lit(1)).as("n"),
-      count_distinct(struct(keys.map(col): _*)).as("d")) ++
-      statsKeys.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
-    val uniq = source.agg(uniqAggs.head, uniqAggs.tail: _*).head()
-    require(uniq.getLong(0) == uniq.getLong(1),
-      s"mergeInto: source has ${uniq.getLong(0) - uniq.getLong(1)} duplicate keys")
-    val keyBounds = statsKeys.zipWithIndex.map { case (f, i) =>
-      f.name -> ((uniq.get(2 + 2 * i), uniq.get(3 + 2 * i))) }.toMap
-
-    val target0 =
-      if (!m.dataNonEmpty) emptyOf(spark, m)
-      else dropMeta(rawScan(spark, m, m.files))
-    require(keys.forall(target0.columns.contains) &&
+    val schema0 = m.schema
+    require(keys.forall(schema0.fieldNames.contains) &&
       keys.forall(source.columns.contains), s"merge keys $keys missing")
-    val targetDataCols = target0.columns.filterNot(keys.contains).toSeq
-    require(targetDataCols.forall(source.columns.contains),
+    require(schema0.fieldNames.forall(source.columns.contains),
       "mergeInto: source must carry every target column (update-all form)")
-    // type discipline: a coerced merge would commit files whose schema
-    // differs from the carried files', and a later read of the mixed
-    // set resolves to an arbitrary file's schema
-    val tTypes = target0.schema.map(f => f.name -> f.dataType).toMap
-    val sTypes = source.schema.map(f => f.name -> f.dataType).toMap
-    (keys ++ targetDataCols).foreach { c =>
-      require(sTypes(c).catalogString == tTypes(c).catalogString,
-        s"mergeInto: column $c type mismatch — source ${sTypes(c).catalogString}" +
-          s" vs target ${tTypes(c).catalogString}")
-    }
     // schema evolution: with `evolveSchema`, source columns the target
     // lacks become new (nullable) table columns; rows from untouched
     // files NULL-extend at read time through the manifest schema — no
     // old file is touched. Without the flag, extra source columns are
     // IGNORED (the long-standing contract: deleteCond helper columns
     // like a `kill` marker ride the source without entering the table).
-    val newCols =
-      if (!evolveSchema) Seq.empty[String]
-      else source.columns
-        .filterNot(c => keys.contains(c) || targetDataCols.contains(c)).toSeq
-    // a new column must not resurrect a HISTORICAL name: old files'
-    // physical columns under that name would resolve into two fields
-    val known = allKnownNames(m.schema) ++ m.droppedNames
-    newCols.foreach(c => require(!known.contains(c),
-      s"mergeInto: evolved column $c reuses a historical column name " +
-        "(renamed away or dropped earlier) — pick a fresh name"))
-    val target = newCols.foldLeft(target0)((d, c) =>
-      d.withColumn(c, lit(null).cast(sTypes(c))))
-    val dataCols = targetDataCols ++ newCols
-    // evolved columns get fresh stable ids when the table already
-    // carries them (first alterTable assigns the base set)
-    val baseIds = target0.schema.fields.flatMap(fieldIdOf)
-    var nextFid = baseIds.foldLeft(-1L)(math.max)
-    val newSchema = StructType(target0.schema.fields.toSeq ++
-      newCols.map { c =>
-        val md =
-          if (baseIds.isEmpty) Metadata.empty
-          else { nextFid += 1
-            new MetadataBuilder().putLong(FieldIdKey, nextFid).build() }
-        StructField(c, sTypes(c), nullable = true, md)
-      })
+    val schema = mergeEvolvedSchema("mergeInto", schema0, source,
+      evolveSchema, m.droppedNames)
+    requireSourceTypes("mergeInto", schema, source)
+    val (_, keyBounds) = checkSourceKeys("mergeInto", source, keys)
+    val dataCols = schema.fieldNames.filterNot(keys.contains).toSeq
 
     // 1. touched-file discovery: one target scan, broadcast key set —
     // and the scan itself is STATS-BOUNDED: the source's per-key-column
@@ -3939,32 +3785,29 @@ object CowTable {
     // version early) — conservative, never wrong.
     val srcKeys = source.select(keys.map(col): _*).distinct()
     val touched =
-      if (!m.dataNonEmpty) Set.empty[String]
+      if (!m.dataNonEmpty) Seq.empty[String]
       else {
         val candidates = mergeCandidateFiles(spark, table, m, source, keys,
           Some(keyBounds))
-        if (candidates.isEmpty) Set.empty[String]
+        if (candidates.isEmpty) Seq.empty[String]
         else rawScan(spark, m, candidates)
           .withColumn("__file", input_file_name())
           .join(broadcast(srcKeys), keys, "left_semi")
           .select("__file").distinct()
-          .collect().map(r => normalize(r.getString(0))).toSet
+          .collect().map(r => normalize(r.getString(0))).toSeq.sorted
       }
     // `touched` is delta-sized and normalized (directly openable); the
     // untouched majority never materializes — it carries
     // sidecar-to-sidecar in the commit below
-    val touchedF = touched.toSeq.sorted
 
     // 2. merge only touched rows (deletion-vector-applied: a deleted
     // row is absent, so a source row with its key INSERTS) with the
-    // source
-    val touchedRows0 =
-      if (touchedF.isEmpty) target.limit(0)
-      else readSnapshot(spark, m, Some(touchedF))
-    // pre-evolution rows NULL-extend for the columns they predate
-    val touchedRows = newCols.foldLeft(touchedRows0)((d, c) =>
-      if (d.columns.contains(c)) d
-      else d.withColumn(c, lit(null).cast(sTypes(c))))
+    // source; pre-evolution rows NULL-extend for the columns they
+    // predate
+    val touchedRows = schema.fields.foldLeft(
+      readSnapshot(spark, m, Some(touched)))((d, f) =>
+      if (d.columns.contains(f.name)) d
+      else d.withColumn(f.name, lit(null).cast(f.dataType)))
     val srcTagged = source
       .withColumn("__del", deleteCond.getOrElse(lit(false)))
       .withColumn("__src", lit(1))
@@ -3985,66 +3828,18 @@ object CowTable {
           .otherwise(col(s"t.$c")).as(c)): _*)
 
     // 3. new snapshot = carried untouched entries (stats intact) + this
-    // version's rewrites. DVs are carried as-is: entries for untouched
-    // files are still live; entries for rewritten files reference paths
-    // no longer in the manifest and can never match again (version dirs
-    // are never reused) — compaction or rewriteDeletes trims them.
-    // write-then-check: an empty merge result writes no listed file
-    // (dropEmptyFiles), so no `merged.isEmpty` pre-execution of the
-    // full-outer join
-    val newFiles = writeDataMaybePartitioned(merged, table, m.version + 1,
-      m.partitionCols, m.bucketSpec)
-
-    // Concurrency: on a lost version race, rebase against the new head
-    // and retry — DISJOINT writers all land (see [[commitWithRetry]]).
-    // A rebase is sound only when the interleaved commits could not
-    // have changed this merge's inputs; anything else throws.
-    def validateRebase(h: Manifest): Unit = {
-      def conflict(msg: String) = throw new java.util.ConcurrentModificationException(
-        s"mergeInto $table: concurrent $msg — rerun the merge against " +
-          "the new snapshot")
-      if (!schemaCompatible(h.schemaJson, m.schemaJson)) conflict("schema change")
-      if (h.partitionCols != m.partitionCols) conflict("re-partitioning")
-      val live = entriesLiveAmong(spark, table, h, touched.toSeq)
-      if (!touched.forall(live.contains))
-        conflict("rewrite of a file this merge also rewrites")
-      val freshDvs = h.dvs.filterNot(m.dvs.toSet)
-      if (freshDvs.nonEmpty && touched.nonEmpty) {
-        val refs = dvRuns(spark, freshDvs).select("fp").distinct()
-          .collect().map(_.getString(0)).toSet
-        if (refs.exists(touched.contains))
-          conflict("delete inside a file this merge rewrites")
-      }
-      // rows added since our snapshot must not carry our source keys,
-      // or the rebased result would diverge from sequential application
-      // (a lost update or a duplicate insert)
-      val added = addedDataPaths(spark, table, h, m)
-      if (added.nonEmpty &&
-          rawScan(spark, m, added).join(broadcast(srcKeys), keys,
-            "left_semi").limit(1).count() > 0L)
-        conflict("write of rows matching this merge's source keys")
-    }
-    def commitAttempt(h: Manifest): Manifest = {
-      // untouched entries + all DV entries carry sidecar-to-sidecar,
-      // FROM THE HEAD — a rebase keeps what the interleaved commits did
-      val carriedDF = entriesDF(spark, table, h).filter(
-        col("kind") === "dv" ||
-          (if (touched.isEmpty) lit(true)
-           else !normalizeSql(col("path"))
-             .isInCollection(touched.toSeq)))
-      val m2 = commitWithStatsDF(spark, table, h.version + 1, carriedDF,
-        newFiles._1, newSchema, h.dvs, h.partitionCols,
-        newFiles._2, knownDvRuns = h.dvRunCounts)
-      // cache hand-off possible only when nothing new was written (a
-      // pure-delete merge): new files' stats live in the sidecar alone
-      if (newFiles._1.isEmpty)
-        cachedEntriesOf(table, h).foreach(old =>
-          cacheEntries(table, m2.entriesRel, old.filter(e =>
-            e.kind != "dv" && !touched.contains(normalize(e.path))) ++
-            canonDvRows(m2.dvs)))
-      m2
-    }
-    commitWithRetry(table, m, validateRebase, commitAttempt)
+    // version's rewrites. write-then-check: an empty merge result
+    // writes no listed file (dropEmptyFiles), so no `merged.isEmpty`
+    // pre-execution of the full-outer join. A rebase is sound only
+    // when the interleaved commits could not have changed this merge's
+    // inputs: no touched file moved, no delete inside one, and no
+    // added row carries a source key.
+    val (newFiles, _) = writeDataMaybePartitioned(merged, table,
+      m.version + 1, m.partitionCols, m.bucketSpec)
+    rowLevelCommit(spark, "mergeInto", table, m, removed = touched,
+      addedData = newFiles,
+      evolveFrom = Option.when(evolveSchema)(source.schema),
+      srcKeys = Some((srcKeys, keys)))
   }
 
   /** COST-BASED COW/MOR HYBRID upsert: the write mode is chosen PER
@@ -4080,19 +3875,9 @@ object CowTable {
     val schema = mergeEvolvedSchema("mergeIntoHybrid", schema0, source,
       evolveSchema, m.droppedNames)
     requireSourceTypes("mergeIntoHybrid", schema, source)
-    // one delta-sized pre-check pass: uniqueness counts + the
-    // discovery's per-key bounds together (was two source executions)
-    val statsKeys = source.schema.fields
-      .filter(f => keys.contains(f.name) && statsEligible(f.dataType)).toSeq
-    val uniqAggs = Seq(count(lit(1)).as("n"),
-      count_distinct(struct(keys.map(col): _*)).as("d")) ++
-      statsKeys.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
-    val uniq = source.agg(uniqAggs.head, uniqAggs.tail: _*).head()
-    require(uniq.getLong(0) == uniq.getLong(1),
-      s"mergeIntoHybrid: source has duplicate keys")
-    if (uniq.getLong(0) == 0L) return m
-    val keyBounds = statsKeys.zipWithIndex.map { case (f, i) =>
-      f.name -> ((uniq.get(2 + 2 * i), uniq.get(3 + 2 * i))) }.toMap
+    val (nSource, keyBounds) =
+      checkSourceKeys("mergeIntoHybrid", source, keys)
+    if (nSource == 0L) return m
     val v = m.version + 1
     val srcKeys = source.select(keys.map(col): _*).distinct()
     val ordered = source.select(schema.fieldNames.toIndexedSeq.map(col): _*)
@@ -4134,7 +3919,6 @@ object CowTable {
         rows <= 0L ||
           perFile(normalize(f)).toDouble >= denseFraction * rows
       }
-      val cowN = cowF.map(normalize).toSet
       val morKeys = matched.filter(_ => morF.nonEmpty).map(mt =>
         mt.filter(col("__fp").isInCollection(morF.map(normalize)))
           .select(keys.map(col): _*).distinct())
@@ -4157,13 +3941,9 @@ object CowTable {
       // + fresh inserts append
       val dvFiles: Seq[String] = matched match {
         case Some(mt) if morF.nonEmpty =>
-          val dvIds = mt.filter(col("__fp")
+          writeDvs(spark, table, v, mt.filter(col("__fp")
             .isInCollection(morF.map(normalize)))
-            .select("file_path", "row_index")
-          val out = versionDir(table, "dv", v)
-          toDvRuns(dvIds).coalesce(1).write.mode("overwrite")
-            .parquet(out.toString)
-          listPartFiles(out)
+            .select("file_path", "row_index"))
         case _ => Nil
       }
       val appended = {
@@ -4185,44 +3965,28 @@ object CowTable {
       }
       // write-then-check (dropEmptyFiles): no `toWrite.isEmpty`
       // pre-execution of the COW-rewrite + postimage union
-      val (newFiles, newParts) =
-        writeDataMaybePartitioned(toWrite, table, v, m.partitionCols,
-          m.bucketSpec)
+      val (newFiles, _) = writeDataMaybePartitioned(toWrite, table, v,
+        m.partitionCols, m.bucketSpec)
       // 4. one commit: untouched + MOR files carry, COW files leave,
       // DV entries and fresh data entries append. On a lost version
       // race, rebase-and-retry: conflicts are a rewrite of (or fresh
       // delete inside) a file we rewrite or DV, or an interleaved
       // write of our source keys — everything disjoint lands.
-      val dvEntries = dvFiles.map(p =>
-        FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
-      val morN = morF.map(normalize).toSet
-      val validate = standardRebaseValidate(spark, "mergeIntoHybrid",
-        table, m, cowN, morN, Some((srcKeys, keys))) _
-      def attempt(h: Manifest): Manifest = {
-        val carriedData = entriesDF(spark, table, h).filter(
-          col("kind") === "dv" ||
-            (if (cowF.isEmpty) lit(true)
-             else !normalizeSql(col("path")).isInCollection(cowN.toSeq)))
-        val carriedDF =
-          if (dvEntries.isEmpty) carriedData
-          else carriedData.unionByName(spark.createDataFrame(dvEntries),
-            allowMissingColumns = true)
-        commitWithStatsDF(spark, table, h.version + 1, carriedDF, newFiles,
-          schema, h.dvs ++ dvFiles, h.partitionCols, newParts,
-          knownDvRuns = h.dvRunCounts,
-          schemaAuthoritative = !(schema eq schema0))
-      }
-      commitWithRetry(table, m, validate, attempt)
+      rowLevelCommit(spark, "mergeIntoHybrid", table, m, removed = cowF,
+        addedData = newFiles, addedDvs = dvFiles,
+        evolveFrom = Option.when(evolveSchema)(source.schema),
+        srcKeys = Some((srcKeys, keys)))
     } finally matched.foreach(_.unpersist())
   }
 
   /** The files a merge's discovery scan must read: those whose
     * per-key-column stats overlap the source's key bounds (one
     * delta-sized aggregate). A file outside every key range cannot
-    * contain a matched row, so it is untouched by construction. */
-  /** `bounds`: per-key-column (min, max) a caller already computed —
+    * contain a matched row, so it is untouched by construction.
+    * `bounds`: per-key-column (min, max) a caller already computed —
     * the merge flavors fold these into their delta-sized pre-check
-    * aggregate, so discovery pays no second source pass. */
+    * aggregate ([[checkSourceKeys]]), so discovery pays no second
+    * source pass. */
   private[operators] def mergeCandidateFiles(spark: SparkSession,
       table: String, m: Manifest, source: DataFrame,
       keys: Seq[String],

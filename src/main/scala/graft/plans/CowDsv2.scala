@@ -53,7 +53,7 @@ import graft.operators.CowTable
   *    rewrite to the files that actually contain matches (a dynamic IN
   *    subquery — the Iceberg COW discipline); the write replaces exactly
   *    the scanned files with freshly written ones in a single manifest
-  *    commit ([[CowTable.replaceFilesCommit]]).
+  *    commit ([[CowTable.rowLevelCommit]]).
   *  - **Merge-on-read fast path**: the table also implements
   *    `SupportsDelete`, so Spark's `OptimizeMetadataOnlyDeleteFromTable`
   *    turns a fully-convertible `DELETE FROM` into
@@ -886,8 +886,9 @@ private[plans] class CowV2Write(table: CowDsv2Table,
       }.toSeq
       val removed = op.map(_.scannedFiles).getOrElse(Nil)
       if (added.isEmpty && removed.isEmpty) return
-      CowTable.replaceFilesCommit(spark, table.tablePath, table.manifest,
-        removed, added)
+      CowTable.rowLevelCommit(spark,
+        op.fold("INSERT INTO")(_.command().toString), table.tablePath,
+        table.manifest, removed = removed, addedData = added)
       ()
     }
 
@@ -983,7 +984,7 @@ private[plans] class CowDeltaRowLevelOperation(val table: CowDsv2Table,
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new CowDeltaWrite(table, info)
+      override def build(): DeltaWrite = new CowDeltaWrite(table, info, cmd)
     }
 
   override def rowId(): Array[NamedReference] = Array(
@@ -1004,9 +1005,10 @@ private[plans] case class CowDeltaWriteMessage(dataPaths: Seq[String],
 /** The delta write: executors stream inserted rows into parquet data
   * files (partition-routed like the replacing write) and deleted row
   * identities into deletion-vector parquet; the driver publishes both
-  * with [[CowTable.deltaCommit]] — every base data file is carried. */
+  * with [[CowTable.rowLevelCommit]] — every base data file is carried. */
 private[plans] class CowDeltaWrite(table: CowDsv2Table,
-    info: LogicalWriteInfo) extends DeltaWrite {
+    info: LogicalWriteInfo, cmd: RowLevelOperation.Command)
+    extends DeltaWrite {
 
   override def description(): String =
     s"cow merge-on-read delta ${table.tablePath}"
@@ -1047,10 +1049,10 @@ private[plans] class CowDeltaWrite(table: CowDsv2Table,
       // phantom protection on a lost race: the connector cannot replay
       // the statement's match decisions, so an interleaved data-file
       // add conflicts loudly instead of rebasing into duplicate keys
-      // (CowTable.dsv2DeltaValidate's scaladoc has the full rule)
-      CowTable.deltaCommit(spark, table.tablePath, table.manifest, data, dvs,
-        extraValidate = CowTable.dsv2DeltaValidate(spark, table.tablePath,
-          table.manifest))
+      // (CowTable.standardRebaseValidate's scaladoc has the full rule)
+      CowTable.rowLevelCommit(spark, s"merge-on-read $cmd",
+        table.tablePath, table.manifest, addedData = data, addedDvs = dvs,
+        refuseAddedData = true)
       ()
     }
 
@@ -1259,7 +1261,8 @@ private[plans] class CowStreamingWrite(
     val live = CowTable.entriesLiveAmong(spark, table.tablePath, m, added)
     val fresh = added.filterNot(p => live.contains(CowTable.normalizePath(p)))
     if (fresh.nonEmpty)
-      CowTable.replaceFilesCommit(spark, table.tablePath, m, Nil, fresh)
+      CowTable.rowLevelCommit(spark, "streaming append", table.tablePath,
+        m, addedData = fresh)
     ()
   }
 

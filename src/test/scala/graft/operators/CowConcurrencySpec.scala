@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -291,7 +292,8 @@ class CowConcurrencySpec extends AnyFunSuite {
     raceOnce(() => CowTable.mergeInto(spark, t,
       src(10 to 12, "w"), Seq("id")))
     val m2 =
-      try CowTable.replaceFilesCommit(spark, t, m0, Nil, staged)
+      try CowTable.rowLevelCommit(spark, "streaming append", t, m0,
+        addedData = staged)
       finally { CowTable.preCommitHook = () => () }
     assert(m2.version == 2, s"rebased append must land at v2: $m2")
     val got = CowTable.read(spark, t).collect()
@@ -300,24 +302,50 @@ class CowConcurrencySpec extends AnyFunSuite {
   }
 
   test("a rebased commit preserves a concurrent metadata-only schema refinement") {
-    val t = fixture()
-    val v0 = CowTable.latestManifest(t).get.version
     // the competing winner is a metadata-only alterTable: no rename/
     // drop/widen, so its whole effect is assigning stable field ids —
-    // compatible under schemaCompatible, hence NOT a rebase conflict
-    raceOnce(() => CowTable.alterTable(spark, t))
-    val m2 =
-      try CowTable.mergeInto(spark, t, src(500 to 501, "w"), Seq("id"))
-      finally { CowTable.preCommitHook = () => () }
-    assert(m2.version == v0 + 2, s"rebased merge must land: $m2")
-    val sch = m2.schema
-    assert(sch.fields.forall(_.metadata.contains("graft.fid")),
-      "the interleaved field-id assignment must survive the rebase, " +
-        s"got schema ${sch.json}")
-    // and the merge's own effect landed too
-    val got = CowTable.read(spark, t).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got.size == 102 && got(500L) == "w500" && got(0L) == "n0")
+    // compatible under schemaCompatible, hence NOT a rebase conflict.
+    // Every row-level op, plain and evolving, must keep those ids, and
+    // an evolved column must get a fresh one.
+    val ops: Seq[(String, (String, DataFrame, Boolean) => CowTable.Manifest)] =
+      Seq(
+        "mergeInto" -> ((t, s, e) =>
+          CowTable.mergeInto(spark, t, s, Seq("id"), evolveSchema = e)),
+        "upsertMor" -> ((t, s, e) =>
+          CowTable.upsertMor(spark, t, s, Seq("id"), evolveSchema = e)),
+        "mergeIntoHybrid" -> ((t, s, e) =>
+          CowTable.mergeIntoHybrid(spark, t, s, Seq("id"), evolveSchema = e)))
+    for ((name, op) <- ops; evolve <- Seq(false, true)) {
+      val label = s"$name (evolveSchema = $evolve)"
+      val t = fixture()
+      val v0 = CowTable.latestManifest(t).get.version
+      val s0 = src((10 to 10) ++ (500 to 501), "w")
+      raceOnce(() => CowTable.alterTable(spark, t))
+      val m2 =
+        try op(t, if (evolve) s0.withColumn("extra", lit(7L)) else s0, evolve)
+        finally { CowTable.preCommitHook = () => () }
+      assert(m2.version == v0 + 2, s"$label: rebased commit must land: $m2")
+      val sch = m2.schema
+      assert(sch.fieldNames.toSeq ==
+        Seq("id", "name", "v") ++ (if (evolve) Seq("extra") else Nil),
+        s"$label: ${sch.json}")
+      assert(sch.fields.forall(_.metadata.contains("graft.fid")),
+        s"$label: the interleaved field-id assignment must survive the " +
+          s"rebase, got schema ${sch.json}")
+      assert(sch.fields.map(_.metadata.getLong("graft.fid")).distinct.length ==
+        sch.length, s"$label: field ids must be distinct: ${sch.json}")
+      // and the op's own effect landed too
+      val got = CowTable.read(spark, t).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got.size == 102 && got(500L) == "w500" && got(10L) == "w10" &&
+        got(0L) == "n0", s"$label: $got")
+      if (evolve) {
+        val extra = CowTable.read(spark, t).collect()
+          .map(r => r.getLong(0) -> r.getAs[Any]("extra")).toMap
+        assert(extra(500L) == 7L && extra(10L) == 7L && extra(0L) == null,
+          s"$label: $extra")
+      }
+    }
   }
 
   test("every stats commit declares v3; counted dv lines round-trip " +
@@ -364,5 +392,54 @@ class CowConcurrencySpec extends AnyFunSuite {
     assert(got.size == 105)
     (900 to 904).foreach(i => assert(got(i.toLong) == s"u$i"))
     assert(got(0L) == "n0" && got(99L) == "n99")
+  }
+
+  // the hybrid merge commits removals (dense files) and DVs (sparse
+  // files) in one version: 10 of file 3's 25 rows match -> rewrite;
+  // 2 of file 4's -> deletion vector; 2 keys insert
+  private def hybridLoser = src((50 to 59) ++ (75 to 76) ++ (300 to 301), "l")
+
+  test("disjoint hybrid merges race, rebase, and land like sequential application") {
+    def rows(t: String) = CowTable.read(spark, t).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
+    val winner = src(0 to 2, "w") // sparse in file 1 -> a DV there
+    val t = tailFixture()
+    val m0 = CowTable.latestManifest(t).get
+    raceOnce(() => CowTable.mergeIntoHybrid(spark, t, winner, Seq("id")))
+    val m2 =
+      try CowTable.mergeIntoHybrid(spark, t, hybridLoser, Seq("id"))
+      finally { CowTable.preCommitHook = () => () }
+    assert(m2.version == 2, s"rebased hybrid merge must land at v2: $m2")
+    val m1 = CowTable.readManifest(t, 1)
+    val file3 = m0.files.find(_.contains("__f=3")).get
+    assert(m1.files.contains(file3) && !m2.files.contains(file3),
+      "the dense file must be rewritten by the rebased commit")
+    assert(m2.dvs.size == m1.dvs.size + 1 && m1.dvs.forall(m2.dvs.contains),
+      "the winner's DV must carry and the loser's DV must land")
+    val seq = tailFixture()
+    CowTable.mergeIntoHybrid(spark, seq, winner, Seq("id"))
+    CowTable.mergeIntoHybrid(spark, seq, hybridLoser, Seq("id"))
+    assert(rows(t) == rows(seq))
+  }
+
+  test("a hybrid merge racing a delete inside a file it rewrites or DVs fails loudly") {
+    // id 60 sits in file 3 (rewritten), id 80 in file 4 (DV'd); neither
+    // is a source key, so only the file-level rule can catch the race
+    for (victim <- Seq(60L, 80L)) {
+      val t = tailFixture()
+      raceOnce(() => CowTable.deleteWhere(spark, t, $"id" === victim))
+      try {
+        val e = intercept[java.util.ConcurrentModificationException] {
+          CowTable.mergeIntoHybrid(spark, t, hybridLoser, Seq("id"))
+        }
+        assert(e.getMessage.contains("mergeIntoHybrid") &&
+          e.getMessage.contains("delete inside"), e.getMessage)
+      } finally CowTable.preCommitHook = () => ()
+      assert(CowTable.latestManifest(t).get.version == 1)
+      val ids = CowTable.read(spark, t).select("id").collect()
+        .map(_.getLong(0)).toSet
+      assert(ids == (0L until 100L).toSet - victim,
+        s"only the winner's delete of $victim may land")
+    }
   }
 }

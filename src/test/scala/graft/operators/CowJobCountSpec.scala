@@ -1,0 +1,73 @@
+package graft.operators
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** Spark job counts of the four Scala row-level operations on the
+  * 2-file fixture, pinned as upper bounds: a count may drop freely (then
+  * lower the pin); a rise must come with a reason. Each operation runs
+  * on a fresh table with an empty entries cache, so the count does not
+  * depend on which suites ran before. */
+class CowJobCountSpec extends AnyFunSuite {
+  private val spark = TestSpark.spark
+  import spark.implicits._
+
+  /** ids 0..99 split into two files: [0,50) and [50,100). */
+  private def fixture(): String = {
+    CowTable.clearEntriesCache()
+    val t = s"${System.getProperty("java.io.tmpdir")}/graft_cow_jobs/" +
+      java.util.UUID.randomUUID().toString.take(8)
+    val df = (0L until 100L).map(i => (i, s"n$i", i * 1.0))
+      .toDF("id", "name", "v")
+      .withColumn("__f", (col("id") / 50L).cast("int") + 1)
+    CowTable.initFiled(df, t, "__f", 2)
+    t
+  }
+
+  private def src(ids: Seq[Int], tag: String) =
+    ids.map(i => (i.toLong, s"$tag$i", i * 10.0)).toDF("id", "name", "v")
+
+  /** The name of the final stage of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val names = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        names.add(js.stageInfos.lastOption.map(_.name).getOrElse("?")); ()
+      }
+    }
+    ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      ListenerBridge.drain(spark.sparkContext)
+      names.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def pin(op: String, pinned: Int)(body: String => Unit): Unit =
+    test(s"$op runs at most $pinned Spark jobs on the 2-file fixture") {
+      val t = fixture()
+      val jobs = jobsOf(body(t))
+      assert(jobs.size <= pinned,
+        s"$op ran ${jobs.size} jobs (pinned $pinned):\n${jobs.mkString("\n")}")
+    }
+
+  pin("deleteWhere", 2)(t => CowTable.deleteWhere(spark, t, $"id" < 10L))
+
+  pin("upsertMor", 11)(t => CowTable.upsertMor(spark, t,
+    src((10 to 12) ++ (300 to 301), "u"), Seq("id")))
+
+  pin("mergeInto", 13)(t => CowTable.mergeInto(spark, t,
+    src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
+
+  pin("mergeIntoHybrid", 25)(t => CowTable.mergeIntoHybrid(spark, t,
+    src((10 to 12) ++ (60 to 89) ++ (400 to 401), "h"), Seq("id")))
+}

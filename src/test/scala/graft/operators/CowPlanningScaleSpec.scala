@@ -171,8 +171,8 @@ class CowPlanningScaleSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(newDir.toString)
     val newFile = java.nio.file.Files.list(newDir).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).sorted.head
-    val m1 = CowTable.replaceFilesCommit(spark, t,
-      CowTable.latestManifest(t).get, Nil, Seq(newFile))
+    val m1 = CowTable.rowLevelCommit(spark, "INSERT INTO", t,
+      CowTable.latestManifest(t).get, addedData = Seq(newFile))
     assert(m1.nData == N + 1)
     // selective planning stays O(survivors)
     val paths0 = CowTable.driverReadPathsListed.get()

@@ -2,8 +2,13 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,21 +23,27 @@ class SidecarDriverWriteSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private def countJobs[T](body: => T): (T, Int) = {
+  /** `body`'s result, its Spark job count, and the plan text of every
+    * SQL execution it ran (a write's plan names its output path). */
+  private def countJobs[T](body: => T): (T, Int, Seq[String]) = {
     val n = new AtomicInteger(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         n.incrementAndGet(); ()
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription); ()
+        case _ => ()
+      }
     }
+    ListenerBridge.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      // the listener bus is async (and private); an in-process job
-      // start posts within milliseconds — a bounded settle sleep is
-      // enough for the ZERO assertion below
-      Thread.sleep(1500)
-      (r, n.get())
+      ListenerBridge.drain(spark.sparkContext)
+      (r, n.get(), plans.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -46,7 +57,7 @@ class SidecarDriverWriteSpec extends AnyFunSuite {
       t, CowTable.latestManifest(t).get)
       .orderBy("path").collect().map(_.toString).toSeq
 
-    val (_, jobs) = countJobs {
+    val (_, jobs, _) = countJobs {
       CowTable.alterTable(spark, t,
         renames = Map("name" -> "label"), widens = Map("qty" -> LongType))
     }
@@ -75,10 +86,14 @@ class SidecarDriverWriteSpec extends AnyFunSuite {
       .select($"id", ($"id" % 10L).as("k")).repartition(4), t)
     val mBefore = CowTable.latestManifest(t).get
     // deleteWhere needs jobs for the candidate scan + DV write, but
-    // NOT for the sidecar (the old shape planned a LocalRelation write
-    // job per commit); assert indirectly: entries carried intact and
-    // content exact after the delete
-    CowTable.deleteWhere(spark, t, $"k" === 3L)
+    // NOT for the sidecar: no SQL execution may write into the
+    // manifest dir's entries sidecars
+    val (_, jobs, plans) =
+      countJobs(CowTable.deleteWhere(spark, t, $"k" === 3L))
+    assert(jobs > 0, "the candidate scan and DV write run as Spark jobs")
+    val sidecarDir = java.nio.file.Paths.get(t, "manifest", "files").toString
+    assert(!plans.exists(_.contains(sidecarDir)),
+      s"a DV-only delete ran a sidecar-write job:\n${plans.mkString("\n")}")
     val m = CowTable.latestManifest(t).get
     assert(m.dvs.nonEmpty, "MOR delete must land as a DV")
     val dataBefore = CowTable.entriesDF(spark, t, mBefore)

@@ -429,7 +429,7 @@ class CowDsv2Spec extends AnyFunSuite {
     // disjoint (pure append, nothing removed): the stale base VALIDATES
     // against the real head and rebases — both writers land, and the
     // interleaved delete survives the rebased commit
-    val m2 = CowTable.replaceFilesCommit(spark, t, before, Nil, Nil)
+    val m2 = CowTable.rowLevelCommit(spark, "INSERT INTO", t, before)
     assert(m2.version == before.version + 2, s"$m2")
     assert(CowTable.read(spark, t).filter($"id" === 0L).count() == 0,
       "the interleaved delete was lost by the rebase")
@@ -439,7 +439,8 @@ class CowDsv2Spec extends AnyFunSuite {
     val base2 = table2.manifest
     CowTable.deleteWhere(spark, t, $"id" === 1L)
     val ex = intercept[java.util.ConcurrentModificationException] {
-      CowTable.replaceFilesCommit(spark, t, base2, base2.files, Nil)
+      CowTable.rowLevelCommit(spark, "DELETE", t, base2,
+        removed = base2.files)
     }
     assert(ex.getMessage.contains("concurrent"))
   }
