@@ -492,13 +492,8 @@ object CowTable {
       val live = entriesLiveAmong(spark, table, h, mine.toSeq)
       if (!mine.forall(live.contains))
         conflict("rewrite of a file this operation rewrites or deletes from")
-      val freshDvs = h.dvs.filterNot(base.dvs.toSet)
-      if (freshDvs.nonEmpty) {
-        val refs = dvRuns(spark, freshDvs).select("fp").distinct()
-          .collect().map(_.getString(0)).toSet
-        if (refs.exists(mine.contains))
-          conflict("delete inside a file this operation rewrites or deletes from")
-      }
+      if (dvTargets(spark, h.dvs.filterNot(base.dvs.toSet)).exists(mine.contains))
+        conflict("delete inside a file this operation rewrites or deletes from")
     }
     lazy val added = addedDataPaths(spark, table, h, base)
     if (refuseAddedData && added.nonEmpty)
@@ -511,6 +506,14 @@ object CowTable {
         conflict("write of rows matching this operation's source keys")
     }
   }
+
+  /** The normalized data-file paths `dvs` delete rows from — one
+    * delta-sized aggregate over the DV runs; no job when `dvs` is
+    * empty. */
+  private def dvTargets(spark: SparkSession, dvs: Seq[String]): Set[String] =
+    if (dvs.isEmpty) Set.empty
+    else dvRuns(spark, dvs).select("fp").distinct()
+      .collect().map(_.getString(0)).toSet
 
   /** Data paths of `h` absent from `base` — the rebase validator's
     * "what landed since my snapshot" set, computed as a SIDECAR
@@ -611,7 +614,10 @@ object CowTable {
     * snapshot readable. */
   def commitEntries(spark: SparkSession, table: String, version: Int,
       entries: Seq[FileEntry], schema: StructType): Manifest =
-    commitWithStats(spark, table, version, entries, Nil, schema)
+    // a data-file-free commit: the sidecar is written on the driver
+    commitWithStatsDF(spark, table, version, spark.createDataFrame(entries),
+      Nil, schema, entries.collect { case e if e.kind == "dv" => e.path },
+      carriedSeq = Some(entries))
 
   /** [[commitEntries]] with the entries as a DATAFRAME — the
     * registration shape for tables whose file list should never be a
@@ -628,19 +634,16 @@ object CowTable {
     commitWithStatsDF(spark, table, version, entries, Nil, schema,
       Nil, partitionCols)
 
-  /** Driver-seq commit: `carried` entries ride from the driver (they
-    * already have their stats strings). Used where the carried set IS
-    * driver-resident by construction (init, explicit [[commitEntries]],
-    * delta-sized carries); the table-sized carry paths go through
-    * [[commitWithStatsDF]]. */
-  private def commitWithStats(spark: SparkSession, table: String,
-      version: Int, carried: Seq[FileEntry], newDataFiles: Seq[String],
-      schema: StructType, partitionCols: Seq[String] = Nil): Manifest = {
-    val dvs = carried.collect { case e if e.kind == "dv" => e.path }
-    // a data-file-free commit caches what it wrote (the fast path)
-    commitWithStatsDF(spark, table, version,
-      spark.createDataFrame(carried), newDataFiles, schema, dvs,
-      partitionCols, carriedSeq = Some(carried))
+  /** Version 0 of a new table: `files` and nothing carried — the one
+    * commit of every `init*` builder. */
+  private def commitInit(df: DataFrame, table: String, files: Seq[String],
+      schema: StructType, partitionCols: Seq[String] = Nil,
+      bucketSpec: Option[(String, Int)] = None): Manifest = {
+    val spark = df.sparkSession
+    commitWithStatsDF(spark, table, 0,
+      spark.createDataFrame(Seq.empty[FileEntry]), files, schema, Nil,
+      partitionCols, bucketSpecOverride = Some(bucketSpec),
+      carriedSeq = Some(Nil))
   }
 
   /** Test hook: runs at the top of every stats commit — the injection
@@ -670,7 +673,6 @@ object CowTable {
       version: Int, carriedDF: DataFrame, newDataFiles: Seq[String],
       schema: StructType,
       carriedDvs: Seq[String], partitionCols: Seq[String] = Nil,
-      newFileParts: Map[String, String] = Map.empty,
       knownDvRuns: Map[String, Long] = Map.empty,
       schemaAuthoritative: Boolean = false,
       bloomColsOverride: Option[Map[String, BloomColSpec]] = None,
@@ -717,6 +719,15 @@ object CowTable {
     // co-partitioning — a planning downgrade, never a wrong result)
     val bucketSpec = bucketSpecOverride
       .getOrElse(headForBloom.flatMap(_.bucketSpec))
+    // new files written under `__p_`/bucket dirs recover their
+    // partition or bucket tuples from the path; others commit with
+    // part=NULL — kept by pruning, never unsound
+    val newParts =
+      if (partitionCols.nonEmpty)
+        partJsonOf(newDataFiles.filter(
+          _.split("/").exists(_.startsWith("__p_"))), partitionCols)
+      else if (bucketSpec.isDefined) bucketPartsOf(newDataFiles)
+      else Map.empty[String, String]
     // DV run counts resolve AT COMMIT TIME: carried counts ride from
     // the head manifest (knownDvRuns); a freshly written sidecar gets
     // ONE footer read here, so the read path's broadcast decision
@@ -748,7 +759,7 @@ object CowTable {
         val withNew =
           if (newDataFiles.isEmpty) carriedDataDF
           else carriedDataDF.unionByName(
-            statsEntriesDF(spark, newDataFiles, newFileParts),
+            statsEntriesDF(spark, newDataFiles, newParts),
             allowMissingColumns = true)
         val entriesOut =
           if (carriedDvs.isEmpty) withNew
@@ -2409,10 +2420,10 @@ object CowTable {
     * `partitionBy`, so every emitted file is single-valued on the
     * partition columns AND still self-contained (a direct file scan
     * sees the full schema — the MANIFEST, not the directory layout, is
-    * the source of truth, Iceberg-style). Returns (paths, per-path
-    * partition-values JSON) for the entries sidecar. */
+    * the source of truth, Iceberg-style). Returns the written paths;
+    * the commit recovers each one's partition tuple from its dirs. */
   private def writeDataPartitioned(df: DataFrame, table: String, v: Int,
-      partCols: Seq[String]): (Seq[String], Map[String, String]) = {
+      partCols: Seq[String]): Seq[String] = {
     val out = versionDir(table, "data", v)
     val dup = partCols.foldLeft(df)((d, c) =>
       d.withColumn(s"__p_$c", col(c)))
@@ -2420,7 +2431,7 @@ object CowTable {
       .mode("overwrite").parquet(out.toString)
     val files = dropEmptyFiles(df.sparkSession, listPartFilesRec(out))
     dropDirIfNoFiles(out, files)
-    (files, partJsonOf(files, partCols))
+    files
   }
 
   /** Per-file partition-values JSON, recovered from the `__p_<c>=<v>`
@@ -2445,7 +2456,7 @@ object CowTable {
     * degrading it. Rows of untouched buckets write no file (empty
     * shuffle partitions drop), so a narrow delta stays narrow. */
   private def writeDataBucketed(df: DataFrame, table: String, v: Int,
-      bucketCol: String, n: Int): (Seq[String], Map[String, String]) = {
+      bucketCol: String, n: Int): Seq[String] = {
     val out = versionDir(table, "data", v)
     df.withColumn(BucketSegment, bucketIdCol(col(bucketCol), n))
       .repartition(n, col(BucketSegment))
@@ -2453,24 +2464,22 @@ object CowTable {
       .parquet(out.toString)
     val files = dropEmptyFiles(df.sparkSession, listPartFilesRec(out))
     dropDirIfNoFiles(out, files)
-    (files, bucketPartsOf(files))
+    files
   }
 
   private def writeDataMaybePartitioned(df: DataFrame, table: String,
       v: Int, partCols: Seq[String],
-      bucketSpec: Option[(String, Int)] = None)
-      : (Seq[String], Map[String, String]) =
+      bucketSpec: Option[(String, Int)] = None): Seq[String] =
     (partCols, bucketSpec) match {
       case (Seq(), Some((c, n))) if df.columns.contains(c) =>
         writeDataBucketed(df, table, v, c, n)
-      case (Seq(), _) => (writeData(df, table, v), Map.empty)
+      case (Seq(), _) => writeData(df, table, v)
       case _ => writeDataPartitioned(df, table, v, partCols)
     }
 
   /** Initialize the table at version 0 with `df`'s rows. */
   def init(df: DataFrame, table: String): Manifest =
-    commitWithStats(df.sparkSession, table, 0, Nil,
-      writeData(df, table, 0), df.schema)
+    commitInit(df, table, writeData(df, table, 0), df.schema)
 
   /** Initialize a PARTITIONED table at version 0: data files are laid
     * out one-partition-per-file-set on `partCols` (Hive-style dirs, but
@@ -2485,11 +2494,8 @@ object CowTable {
       partCols: Seq[String]): Manifest = {
     require(partCols.nonEmpty && partCols.forall(df.columns.contains),
       s"initPartitioned: partition columns $partCols must exist")
-    val spark = df.sparkSession
-    val (files, parts) = writeDataPartitioned(df, table, 0, partCols)
-    commitWithStatsDF(spark, table, 0,
-      spark.createDataFrame(Seq.empty[FileEntry]), files, df.schema,
-      Nil, partCols, parts)
+    commitInit(df, table, writeDataPartitioned(df, table, 0, partCols),
+      df.schema, partCols)
   }
 
   /** [[initPartitioned]] with an EXPLICIT within-partition file layout
@@ -2511,11 +2517,8 @@ object CowTable {
     dup.repartition(nFiles, col(fileCol))
       .write.partitionBy(partCols.map(c => s"__p_$c") :+ fileCol: _*)
       .mode("overwrite").parquet(out.toString)
-    val files = dropEmptyFiles(spark, listPartFilesRec(out))
-    commitWithStatsDF(spark, table, 0,
-      spark.createDataFrame(Seq.empty[FileEntry]), files,
-      StructType(df.schema.filterNot(_.name == fileCol)), Nil,
-      partCols, partJsonOf(files, partCols))
+    commitInit(df, table, dropEmptyFiles(spark, listPartFilesRec(out)),
+      StructType(df.schema.filterNot(_.name == fileCol)), partCols)
   }
 
   /** Metadata-only partition listing: distinct partition values with
@@ -2547,8 +2550,7 @@ object CowTable {
     val out = versionDir(table, "data", 0)
     df.repartition(nFiles, col(fileCol))
       .write.partitionBy(fileCol).mode("overwrite").parquet(out.toString)
-    commitWithStats(df.sparkSession, table, 0, Nil,
-      dropEmptyFiles(df.sparkSession, listPartFilesRec(out)),
+    commitInit(df, table, dropEmptyFiles(df.sparkSession, listPartFilesRec(out)),
       StructType(df.schema.filterNot(_.name == fileCol)))
   }
 
@@ -2563,8 +2565,7 @@ object CowTable {
     df.repartition(nFiles, col(fileCol))
       .sortWithinPartitions((fileCol +: sortCols).map(col): _*)
       .write.partitionBy(fileCol).mode("overwrite").parquet(out.toString)
-    commitWithStats(df.sparkSession, table, 0, Nil,
-      dropEmptyFiles(df.sparkSession, listPartFilesRec(out)),
+    commitInit(df, table, dropEmptyFiles(df.sparkSession, listPartFilesRec(out)),
       StructType(df.schema.filterNot(_.name == fileCol)))
   }
 
@@ -2601,36 +2602,26 @@ object CowTable {
     require(nBuckets > 0, s"initBucketed: nBuckets $nBuckets <= 0")
     require(df.columns.contains(bucketCol),
       s"initBucketed: column $bucketCol must exist")
-    val spark = df.sparkSession
-    val (files, parts) =
-      writeDataBucketed(df, table, 0, bucketCol, nBuckets)
-    commitWithStatsDF(spark, table, 0,
-      spark.createDataFrame(Seq.empty[FileEntry]), files, df.schema,
-      Nil, Nil, parts,
-      bucketSpecOverride = Some(Some((bucketCol, nBuckets))))
+    commitInit(df, table, writeDataBucketed(df, table, 0, bucketCol, nBuckets),
+      df.schema, bucketSpec = Some((bucketCol, nBuckets)))
   }
 
   /** Restore a bucketed table's file↔bucket attribution after commits
-    * that added non-routed files: ONE rewrite of the live (DV-applied)
-    * rows back into the declared bucket layout, committed as a full
-    * replacement — the bucketed twin of compaction. */
+    * that added non-routed files: ONE rewrite of the base snapshot's
+    * live (DV-applied) rows back into the declared bucket layout,
+    * replacing every base file and retiring every base DV — the
+    * bucketed twin of compaction. Commits that interleave rebase like
+    * any row-level race: disjoint appends land, a rewrite of or delete
+    * inside a base file fails loudly. */
   def rebucketTable(spark: SparkSession, table: String): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     val (bucketCol, n) = m.bucketSpec.getOrElse(
       throw new IllegalArgumentException(s"$table has no bucket spec"))
-    val (files, parts) = writeDataBucketed(read(spark, table), table,
+    val files = writeDataBucketed(readSnapshot(spark, m), table,
       m.version + 1, bucketCol, n)
-    def validate(h: Manifest): Unit =
-      if (h.version != m.version)
-        throw new java.util.ConcurrentModificationException(
-          s"rebucketTable $table: concurrent commit — rerun against " +
-            "the new snapshot")
-    def attempt(h: Manifest): Manifest =
-      commitWithStatsDF(spark, table, h.version + 1,
-        spark.createDataFrame(Seq.empty[FileEntry]), files,
-        m.schema, Nil, h.partitionCols, parts)
-    commitWithRetry(table, m, validate, attempt)
+    rowLevelCommit(spark, "rebucketTable", table, m, removed = m.files,
+      addedData = files, retiredDvs = m.dvs)
   }
 
   /** Per-file bucket ids (normalized path → id) when the table is
@@ -3372,64 +3363,62 @@ object CowTable {
         fp -> (runs.map(_._1), runs.map(_._2)) }
   }
 
-  /** The row-level committer: every operation that changes rows —
-    * [[mergeInto]], [[mergeIntoHybrid]], [[upsertMor]], [[deleteWhere]]
-    * and the DSv2 batch, delta and streaming-append writes of
-    * [[graft.plans.CowDsv2Table]] — publishes ONE version through it
-    * that drops the `removed` data files (group rewrites) and adds
-    * `addedData` (written under this table's data dir) and `addedDvs`
-    * (fresh deletion-vector parquet). Each attempt carries the HEAD's
-    * entries minus `removed`, plus the new DV entries, and commits the
-    * head's schema widened by the source-only columns of `evolveFrom`
+  /** The committer of every operation that rewrites rows or files:
+    * [[mergeInto]], [[mergeIntoHybrid]], [[upsertMor]], [[deleteWhere]],
+    * the DSv2 batch, delta and streaming-append writes of
+    * [[graft.plans.CowDsv2Table]], and the maintenance ops
+    * [[rewriteDeletes]], [[compactTable]], [[compactTableZorder]] and
+    * [[rebucketTable]]. Each publishes ONE version through it that
+    * drops the `removed` data files (group rewrites, compacted tails)
+    * and adds `addedData` (written under this table's data dir) and
+    * `addedDvs` (fresh deletion-vector parquet). Each attempt carries
+    * the HEAD's data entries minus `removed` and the head's DVs minus
+    * `retiredDvs`, plus `addedDvs`, and commits the head's schema
+    * widened by the source-only columns of `evolveFrom`
     * ([[evolvedSinkSchema]]), so a rebase never reverts what the head
     * committed (a concurrent field-id assignment included). DV entries
-    * whose data file was removed stay in place — they reference paths
-    * no longer in the manifest, so readers never match them, and
-    * [[rewriteDeletes]]/[[vacuum]] reclaim them.
+    * whose data file was removed stay in place unless retired — they
+    * reference paths no longer in the manifest, so readers never match
+    * them, and [[rewriteDeletes]]/[[vacuum]] reclaim them.
+    *
+    * `retiredDvs`: base DV files this commit drops because the op
+    * materialized their deletes (rewriteDeletes and rebucketTable
+    * retire every base DV; compaction retires them when no kept file
+    * is a target) or consolidated them into an added DV
+    * (rewriteDeletes' below-threshold sidecar). Their targets are
+    * subtracted from the added DVs' conflict set: a consolidated
+    * sidecar only moves deletes that were already dead at the base.
     *
     * A stale `base` or a lost version race validates the head through
     * [[standardRebaseValidate]] (with `srcKeys` and `refuseAddedData`
-    * as given) and rebases ([[commitWithRetry]]); the files the new
-    * DVs reference are read only then. Added files written under
-    * `__p_`/bucket dirs recover their partition or bucket tuples;
-    * others commit with part=NULL — kept by pruning, never unsound. A
-    * commit that adds no data file writes its sidecar on the driver
-    * when the head's is small. */
+    * as given) and rebases ([[commitWithRetry]]); the files the DVs
+    * reference are read only then. A commit that adds no data file
+    * writes its sidecar on the driver when the head's is small. */
   private[graft] def rowLevelCommit(spark: SparkSession, op: String,
       table: String, base: Manifest, removed: Seq[String] = Nil,
       addedData: Seq[String] = Nil, addedDvs: Seq[String] = Nil,
+      retiredDvs: Seq[String] = Nil,
       evolveFrom: Option[StructType] = None,
       srcKeys: Option[(DataFrame, Seq[String])] = None,
       refuseAddedData: Boolean = false): Manifest = {
     val removedN = removed.map(normalize).toSet
-    val newParts =
-      if (base.partitionCols.nonEmpty)
-        partJsonOf(addedData.filter(
-          _.split("/").exists(_.startsWith("__p_"))), base.partitionCols)
-      else if (base.bucketSpec.isDefined) bucketPartsOf(addedData)
-      else Map.empty[String, String]
-    val dvEntries = addedDvs.map(p =>
-      FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
+    val retired = retiredDvs.toSet
     lazy val dvTargetN: Set[String] =
       if (addedDvs.isEmpty) Set.empty
-      else dvRuns(spark, addedDvs).select("fp").distinct()
-        .collect().map(_.getString(0)).toSet
+      else dvTargets(spark, addedDvs) -- dvTargets(spark, retiredDvs)
     def validate(h: Manifest): Unit = standardRebaseValidate(spark, op,
       table, base, removedN, dvTargetN, srcKeys, refuseAddedData)(h)
     def attempt(h: Manifest): Manifest = {
       val schema = evolveFrom.fold(h.schema)(s =>
         evolvedSinkSchema(op, h.schema, s, h.droppedNames))
+      // dv rows are rebuilt from the carried DV list, so only data
+      // rows need to ride
       val carried = entriesDF(spark, table, h).filter(
         if (removedN.isEmpty) lit(true)
-        else col("kind") === "dv" ||
-          !normalizeSql(col("path")).isInCollection(removedN.toSeq))
-      commitWithStatsDF(spark, table, h.version + 1,
-        if (dvEntries.isEmpty) carried
-        else carried.unionByName(spark.createDataFrame(dvEntries),
-          allowMissingColumns = true),
-        addedData, schema, h.dvs ++ addedDvs, h.partitionCols, newParts,
+        else !normalizeSql(col("path")).isInCollection(removedN.toSeq))
+      commitWithStatsDF(spark, table, h.version + 1, carried, addedData,
+        schema, h.dvs.filterNot(retired) ++ addedDvs, h.partitionCols,
         knownDvRuns = h.dvRunCounts,
-        // dv rows are rebuilt from carriedDvs, so only data rows ride
         carriedSeq =
           if (addedData.nonEmpty) None
           else smallEntries(spark, table, h).map(_.filter(e =>
@@ -3594,7 +3583,7 @@ object CowTable {
       else {
         val ordered = enriched.select(schema.fieldNames.map(col): _*)
         writeDataMaybePartitioned(ordered, table, v, m.partitionCols,
-          m.bucketSpec)._1
+          m.bucketSpec)
       }
     rowLevelCommit(spark, "upsertMor", table, m, addedData = dataFiles,
       addedDvs = dvFiles,
@@ -3691,7 +3680,6 @@ object CowTable {
         val rows = meta.get(normalize(f)).map(_._2).getOrElse(-1L)
         rows <= 0L || dead(normalize(f)).toDouble >= minDeadFraction * rows
       }
-    val touchedN = touchedF.map(normalize).toSet
     val v = m.version + 1
     // below-threshold files' deletes consolidate into one fresh sidecar
     // (old DV files drop regardless — their rewritten-file entries die)
@@ -3705,49 +3693,20 @@ object CowTable {
           .coalesce(1).write.mode("overwrite").parquet(out.toString)
         listPartFiles(out)
       }
-    val (newFiles, newParts) =
-      if (touchedF.isEmpty) (Seq.empty[String], Map.empty[String, String])
-      else {
-        // write-then-check: a fully-dead rewrite set writes no listed
-        // file (dropEmptyFiles) — no `clean.isEmpty` pre-execution of
-        // the DV-applied snapshot read
-        val clean = readSnapshot(spark, m, Some(touchedF))
-        writeDataMaybePartitioned(clean, table, v, m.partitionCols,
-          m.bucketSpec)
-      }
-    val dvEntries = keptDvs.map(p =>
-      FileEntry("dv", p, Files.size(Paths.get(p)), None, None))
-    val schema = m.schema
-    // Concurrency: maintenance is the commit that races a live writer
-    // CONSTANTLY — rebase and retry. Compatible interleavings: appends,
-    // rewrites of files we did not rewrite, fresh deletes in files we
-    // did not rewrite (their sidecars carry). A rewrite of — or a fresh
-    // delete inside — one of OUR rewritten files conflicts (the rewrite
-    // already materialized that file's deletes from OUR snapshot).
-    val validate = standardRebaseValidate(spark, "rewriteDeletes", table,
-      m, touchedN, Set.empty) _
-    def attempt(h: Manifest): Manifest = {
-      // data entries from the HEAD minus our rewrites; DV entries =
-      // our consolidated sidecar + whatever DVs landed after our
-      // snapshot (they reference files we kept — validate proved it)
-      val freshHDvs = h.dvs.filterNot(m.dvs.toSet)
-      val freshHDvsN = freshHDvs.map(normalize)
-      val carriedData = entriesDF(spark, table, h).filter(
-        (col("kind") === "data" &&
-          (if (touchedF.isEmpty) lit(true)
-           else !normalizeSql(col("path")).isInCollection(touchedN.toSeq)))
-        || (col("kind") === "dv" &&
-          (if (freshHDvsN.isEmpty) lit(false)
-           else normalizeSql(col("path")).isInCollection(freshHDvsN))))
-      val carriedDF =
-        if (dvEntries.isEmpty) carriedData
-        else carriedData.unionByName(
-          spark.createDataFrame(dvEntries), allowMissingColumns = true)
-      commitWithStatsDF(spark, table, h.version + 1, carriedDF, newFiles,
-        schema, freshHDvs ++ keptDvs, h.partitionCols,
-        newParts, knownDvRuns = h.dvRunCounts)
-    }
-    commitWithRetry(table, m, validate, attempt)
+    // write-then-check: a fully-dead rewrite set writes no listed file
+    // (dropEmptyFiles) — no `clean.isEmpty` pre-execution of the
+    // DV-applied snapshot read
+    val newFiles =
+      if (touchedF.isEmpty) Nil
+      else writeDataMaybePartitioned(readSnapshot(spark, m, Some(touchedF)),
+        table, v, m.partitionCols, m.bucketSpec)
+    // maintenance races live writers constantly: appends, rewrites of
+    // other files and fresh deletes in files we keep (their DVs carry)
+    // rebase and land; a rewrite of — or a fresh delete inside — a file
+    // we rewrite conflicts (its deletes were materialized from OUR
+    // snapshot)
+    rowLevelCommit(spark, "rewriteDeletes", table, m, removed = touchedF,
+      addedData = newFiles, addedDvs = keptDvs, retiredDvs = m.dvs)
   }
 
   /** MERGE `source` into the table's latest snapshot on `keys`. Returns
@@ -3834,7 +3793,7 @@ object CowTable {
     // when the interleaved commits could not have changed this merge's
     // inputs: no touched file moved, no delete inside one, and no
     // added row carries a source key.
-    val (newFiles, _) = writeDataMaybePartitioned(merged, table,
+    val newFiles = writeDataMaybePartitioned(merged, table,
       m.version + 1, m.partitionCols, m.bucketSpec)
     rowLevelCommit(spark, "mergeInto", table, m, removed = touched,
       addedData = newFiles,
@@ -3900,16 +3859,22 @@ object CowTable {
           .persist())
       }
     try {
+      // per-file match counts and the duplicate-key check in ONE
+      // aggregate: per key its match count (above 1 = a duplicate
+      // target key) and a file, rolled up per file — exact whenever no
+      // key repeats, and a repeat fails the check
       val perFile: Map[String, Long] = matched match {
         case None => Map.empty
-        case Some(mt) => mt.groupBy(col("__fp")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      matched.foreach { mt =>
-        val dup = mt.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1L).limit(1).count()
-        require(dup == 0L, "mergeIntoHybrid: a source key matches " +
-          "multiple live target rows — resolve duplicates first")
+        case Some(mt) =>
+          val byFile = mt.groupBy(keys.map(col): _*)
+            .agg(count(lit(1)).as("n"), min(col("__fp")).as("__fp"))
+            .groupBy(col("__fp"))
+            .agg(sum(col("n")).as("n"), max(col("n")).as("maxN"))
+            .collect()
+          require(byFile.forall(_.getLong(2) <= 1L), "mergeIntoHybrid: a " +
+            "source key matches multiple live target rows — resolve " +
+            "duplicates first")
+          byFile.map(r => r.getString(0) -> r.getLong(1)).toMap
       }
       val touchedFiles = perFile.keys.toSeq.sorted
       val meta = dataFileMeta(spark, table, m, touchedFiles)
@@ -3965,7 +3930,7 @@ object CowTable {
       }
       // write-then-check (dropEmptyFiles): no `toWrite.isEmpty`
       // pre-execution of the COW-rewrite + postimage union
-      val (newFiles, _) = writeDataMaybePartitioned(toWrite, table, v,
+      val newFiles = writeDataMaybePartitioned(toWrite, table, v,
         m.partitionCols, m.bucketSpec)
       // 4. one commit: untouched + MOR files carry, COW files leave,
       // DV entries and fresh data entries append. On a lost version
@@ -4098,100 +4063,36 @@ object CowTable {
       .select("path", "bytes").collect()
       .map(r => (normalize(r.getString(0)), r.getLong(1))).toSeq
 
-  /** Carried entries for a compaction: everything except the rewritten
-    * small tail, as a sidecar-to-sidecar DataFrame filter; `dropDvs`
-    * additionally drops every dv-kind entry (the rewrite materialized
-    * all remaining deletes). */
-  private def carryAllBut(spark: SparkSession, table: String, m: Manifest,
-      dropNorm: Seq[String], dropDvs: Boolean = false): DataFrame = {
-    val keepData =
-      if (dropNorm.isEmpty) lit(true)
-      else !normalizeSql(col("path")).isInCollection(dropNorm)
-    entriesDF(spark, table, m).filter(
-      if (dropDvs) col("kind") =!= "dv" && keepData
-      else col("kind") === "dv" || keepData)
-  }
-
-  /** The DV files still worth carrying once only `kept` data files
-    * remain: when NO deletion-vector identity references a kept file,
-    * the whole DV set is dead — the rewrite materialized those rows —
-    * and the new version commits DV-free instead of making every later
-    * reader pay a no-op anti-join until rewriteDeletes. Delta-sized
-    * driver peek; only runs when DVs exist. */
-  private def dvsReferencing(spark: SparkSession, m: Manifest,
-      kept: Seq[String]): Seq[String] = {
-    if (m.dvs.isEmpty) return Nil
-    val keptN = kept.map(normalize).toSet
-    val refs = dvRuns(spark, m.dvs)
-      .select("fp").distinct()
-      .collect().map(_.getString(0))
-    if (refs.exists(keptN.contains)) m.dvs else Nil
-  }
-
   /** Compact the latest snapshot's small files into ~targetBytes files
     * as a NEW table version: right-sized files are carried by reference
     * (the metadata-only move [[Layout.compactSmallFiles]] documents),
     * only the small tail is read and rewritten. No-op (returns the
     * current manifest) when ≤1 small file exists. */
   def compactTable(spark: SparkSession, table: String, targetBytes: Long,
-      smallThreshold: Option[Long] = None): Manifest = {
-    val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
-      s"cow table $table does not exist"))
-    val small = smallThreshold.getOrElse(targetBytes / 2)
-    val smalls = smallTail(spark, table, m, small)
-    if (smalls.size <= 1) return m
-    val smallBytes = smalls.map(_._2).sum
-    val n = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
-    val v = m.version + 1
-    // DV-applied rows: compaction materializes the tail's deletes for
-    // free; kept files' DV entries stay live and are carried
-    val tail = readSnapshot(spark, m, Some(smalls.map(_._1)))
-    val (newFiles, newParts) =
-      if (m.partitionCols.isEmpty && m.bucketSpec.isDefined &&
-          m.bucketSpec.exists(b => tail.columns.contains(b._1))) {
-        // BUCKET-PRESERVING: the rewritten tail re-routes by the
-        // declared bucket expression (one file per present bucket), so
-        // compaction heals rather than degrades the SPJ layout
-        val (c2, n2) = m.bucketSpec.get
-        writeDataBucketed(tail, table, v, c2, n2)
-      } else if (m.partitionCols.isEmpty) {
-        val out = versionDir(table, "data", v)
-        Layout.compactRows(tail, n, out.toString)
-        (dropEmptyFiles(spark, listPartFiles(out)), Map.empty[String, String])
-      } else
-        // PARTITION-PRESERVING: re-split the rewritten tail by its
-        // partition dirs (one shuffle task per partition tuple → one
-        // compacted file per partition), so the new files keep exact
-        // partition tuples and pruning never degrades
-        writeDataPartitioned(
-          tail.repartition(math.max(n, 1), m.partitionCols.map(col): _*),
-          table, v, m.partitionCols)
-    val smallNorm = smalls.map(x => normalize(x._1))
-    val smallSet = smallNorm.toSet
-    val schema = m.schema
-    // Concurrency: compaction is the MOST rebasable commit there is —
-    // it is valid iff its rewritten tail is untouched. Appends, merges
-    // of other files, and deletes outside the tail all interleave and
-    // land; the per-attempt recompute keeps whatever they did (incl.
-    // carrying their fresh DVs when those reference kept files).
-    val validate = standardRebaseValidate(spark, "compactTable", table,
-      m, smallSet, Set.empty) _
-    def attempt(h: Manifest): Manifest = {
-      // keptFiles materializes only on a DV-carrying snapshot (the
-      // dead-DV-set decision needs the kept identities) — DV-free
-      // compactions stay file-list-free
-      val liveDvs =
-        if (h.dvs.isEmpty) Nil
-        else dvsReferencing(spark, h,
-          h.files.filterNot(f => smallSet.contains(normalize(f))))
-      commitWithStatsDF(spark, table, h.version + 1,
-        carryAllBut(spark, table, h, smallNorm,
-          dropDvs = liveDvs.isEmpty && h.dvs.nonEmpty), newFiles,
-        schema, liveDvs, h.partitionCols, newParts,
-        knownDvRuns = h.dvRunCounts)
+      smallThreshold: Option[Long] = None): Manifest =
+    compactTail(spark, "compactTable", table, targetBytes,
+        smallThreshold) { (m, tail, n, v) =>
+      m.bucketSpec.filter(b => m.partitionCols.isEmpty &&
+          tail.columns.contains(b._1)) match {
+        case Some((c, nb)) =>
+          // BUCKET-PRESERVING: the rewritten tail re-routes by the
+          // declared bucket expression (one file per present bucket), so
+          // compaction heals rather than degrades the SPJ layout
+          writeDataBucketed(tail, table, v, c, nb)
+        case None if m.partitionCols.isEmpty =>
+          val out = versionDir(table, "data", v)
+          Layout.compactRows(tail, n, out.toString)
+          dropEmptyFiles(spark, listPartFiles(out))
+        case None =>
+          // PARTITION-PRESERVING: re-split the rewritten tail by its
+          // partition dirs (one shuffle task per partition tuple → one
+          // compacted file per partition), so the new files keep exact
+          // partition tuples and pruning never degrades
+          writeDataPartitioned(
+            tail.repartition(n, m.partitionCols.map(col): _*),
+            table, v, m.partitionCols)
+      }
     }
-    commitWithRetry(table, m, validate, attempt)
-  }
 
   /** [[compactTable]] with Z-order re-clustering of the rewritten tail
     * ([[Layout.compactSmallFilesZorder]]): right-sized files are still
@@ -4203,38 +4104,41 @@ object CowTable {
     * separate rewrite. */
   def compactTableZorder(spark: SparkSession, table: String,
       targetBytes: Long, zCols: Seq[String], bits: Int = Layout.ZBits,
-      smallThreshold: Option[Long] = None): Manifest = {
+      smallThreshold: Option[Long] = None): Manifest =
+    compactTail(spark, "compactTableZorder", table, targetBytes,
+        smallThreshold) { (_, tail, n, v) =>
+      val out = versionDir(table, "data", v)
+      Layout.compactRowsZorder(tail, n, out.toString, zCols, bits)
+      dropEmptyFiles(spark, listPartFiles(out))
+    }
+
+  /** The body both compactions share: `writeTail(base, tail, n, v)`
+    * writes the small tail's DV-applied rows as ~`n` version-`v` files
+    * and returns their paths. The commit removes the tail; compaction
+    * is valid iff the tail is untouched, so appends, merges of other
+    * files and deletes outside the tail interleave and land. The base's
+    * DVs retire when every target still live at the base is in the
+    * tail (the rewrite materialized them all), so later readers skip a
+    * no-op anti-join; otherwise they all carry. */
+  private def compactTail(spark: SparkSession, op: String, table: String,
+      targetBytes: Long, smallThreshold: Option[Long])(
+      writeTail: (Manifest, DataFrame, Int, Int) => Seq[String]): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
-    val small = smallThreshold.getOrElse(targetBytes / 2)
-    val smalls = smallTail(spark, table, m, small)
+    val smalls = smallTail(spark, table, m,
+      smallThreshold.getOrElse(targetBytes / 2))
     if (smalls.size <= 1) return m
-    val smallBytes = smalls.map(_._2).sum
-    val n = math.max(1, math.ceil(smallBytes.toDouble / targetBytes).toInt)
-    val v = m.version + 1
-    val out = versionDir(table, "data", v)
-    Layout.compactRowsZorder(readSnapshot(spark, m, Some(smalls.map(_._1))),
-      n, out.toString, zCols, bits)
-    val newFiles = dropEmptyFiles(spark, listPartFiles(out))
-    val smallNorm = smalls.map(x => normalize(x._1))
-    val smallSet = smallNorm.toSet
-    val schema = m.schema
-    // same rebase rule as [[compactTable]]: valid iff the rewritten
-    // tail is untouched; everything else interleaves and lands
-    val validate = standardRebaseValidate(spark, "compactTableZorder",
-      table, m, smallSet, Set.empty) _
-    def attempt(h: Manifest): Manifest = {
-      val liveDvs =
-        if (h.dvs.isEmpty) Nil
-        else dvsReferencing(spark, h,
-          h.files.filterNot(f => smallSet.contains(normalize(f))))
-      commitWithStatsDF(spark, table, h.version + 1,
-        carryAllBut(spark, table, h, smallNorm,
-          dropDvs = liveDvs.isEmpty && h.dvs.nonEmpty), newFiles,
-        schema, liveDvs, h.partitionCols,
-        knownDvRuns = h.dvRunCounts)
-    }
-    commitWithRetry(table, m, validate, attempt)
+    val n = math.max(1,
+      math.ceil(smalls.map(_._2).sum.toDouble / targetBytes).toInt)
+    val tail = smalls.map(_._1)
+    val newFiles = writeTail(m, readSnapshot(spark, m, Some(tail)), n,
+      m.version + 1)
+    val keptTargets = dvTargets(spark, m.dvs) -- tail
+    val retired =
+      if (entriesLiveAmong(spark, table, m, keptTargets.toSeq).isEmpty) m.dvs
+      else Nil
+    rowLevelCommit(spark, op, table, m, removed = tail,
+      addedData = newFiles, retiredDvs = retired)
   }
 
   /** Delete data files and manifests unreachable from the newest

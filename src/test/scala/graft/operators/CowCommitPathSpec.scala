@@ -1,0 +1,56 @@
+package graft.operators
+
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source guards on CowTable's commit paths: every operation that
+  * rewrites rows or files commits through `rowLevelCommit`, so the
+  * retry protocol has one data-side caller next to the metadata-only
+  * commits, and no op keeps a private copy of the carry. */
+class CowCommitPathSpec extends AnyFunSuite {
+  private val lines = Files.readAllLines(
+    Paths.get("src/main/scala/graft/operators/CowTable.scala")).toArray
+    .map(_.toString).toSeq
+
+  private val MemberDef = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+
+  /** The object members (two-space-indented `def`s) whose bodies call
+    * `callee`; comments and the definition itself do not count. */
+  private def callersOf(callee: String): Set[String] = {
+    var owner = "?"
+    lines.flatMap { l =>
+      MemberDef.findPrefixMatchOf(l).foreach(m => owner = m.group(1))
+      val t = l.trim
+      val comment = t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      if (!comment && l.contains(callee + "(") && !l.contains("def " + callee + "("))
+        Some(owner)
+      else None
+    }.toSet
+  }
+
+  private val metadataCommits =
+    Set("alterTable", "declareBloom", "consolidateBlooms", "publishBranch")
+
+  test("commitWithRetry is called only by rowLevelCommit and the metadata commits") {
+    val callers = callersOf("commitWithRetry")
+    assert(callers.contains("rowLevelCommit"), callers)
+    assert(callers.subsetOf(metadataCommits + "rowLevelCommit"),
+      s"commit data rewrites through rowLevelCommit: $callers")
+  }
+
+  test("commitWithStatsDF is called only by the committers that own a version") {
+    val callers = callersOf("commitWithStatsDF")
+    val allowed = metadataCommits ++ Set("rowLevelCommit", "commitInit",
+      "createBranch", "commitEntries", "commitEntriesDF")
+    assert(callers.contains("rowLevelCommit"), callers)
+    assert(callers.subsetOf(allowed),
+      s"commit data rewrites through rowLevelCommit: ${callers -- allowed}")
+  }
+
+  test("the per-op carry helpers are gone") {
+    val src = lines.mkString("\n")
+    Seq("carryAllBut", "dvsReferencing").foreach(name =>
+      assert(!src.contains(name), s"$name is back in CowTable.scala"))
+  }
+}

@@ -248,6 +248,24 @@ class CowConcurrencySpec extends AnyFunSuite {
     assert(CowTable.read(spark, t).count() == 94)
   }
 
+  test("selective rewriteDeletes racing a delete inside a below-threshold file rebases") {
+    val t = tailFixture()
+    // file 1 goes 40% dead (rewritten at 0.3); file 2 holds one delete,
+    // below the threshold, so its DV moves into the consolidated sidecar
+    CowTable.deleteWhere(spark, t, $"id" < 10L)
+    CowTable.deleteWhere(spark, t, $"id" === 30L)
+    // the competing delete lands inside file 2 during our commit
+    raceOnce(() => CowTable.deleteWhere(spark, t, $"id" === 35L))
+    val m2 =
+      try CowTable.rewriteDeletes(spark, t, minDeadFraction = 0.3)
+      finally { CowTable.preCommitHook = () => () }
+    assert(m2.version == 4, s"rebased rewrite must land at v4: $m2")
+    val ids = CowTable.read(spark, t).select("id").collect()
+      .map(_.getLong(0)).toSeq
+    assert(ids.sorted == ((10L until 100L).toSet - 30L - 35L).toSeq.sorted,
+      "both deletes applied exactly once")
+  }
+
   test("disjoint-key MOR upserts race, rebase, and both land") {
     val t = fixture()
     raceOnce(() => CowTable.upsertMor(spark, t,
@@ -441,5 +459,39 @@ class CowConcurrencySpec extends AnyFunSuite {
       assert(ids == (0L until 100L).toSet - victim,
         s"only the winner's delete of $victim may land")
     }
+  }
+
+  /** 100 rows in 4 buckets on `id`. */
+  private def bucketFixture(): String = {
+    val t = freshTable()
+    CowTable.initBucketed(src(0 until 100, "n"), t, "id", 4)
+    t
+  }
+
+  test("rebucketTable racing a disjoint append rebases; both row sets land once") {
+    val t = bucketFixture()
+    raceOnce(() => CowTable.mergeInto(spark, t, src(500 to 502, "w"), Seq("id")))
+    val m2 =
+      try CowTable.rebucketTable(spark, t)
+      finally { CowTable.preCommitHook = () => () }
+    assert(m2.version == 2, s"rebased rebucket must land at v2: $m2")
+    val ids = CowTable.read(spark, t).select("id").collect()
+      .map(_.getLong(0)).toSeq
+    assert(ids.sorted == ((0L until 100L) ++ (500L to 502L)),
+      "every base row and every appended row exactly once")
+  }
+
+  test("rebucketTable racing a delete in a file it rewrites fails loudly") {
+    val t = bucketFixture()
+    raceOnce(() => CowTable.deleteWhere(spark, t, $"id" === 7L))
+    try {
+      val e = intercept[java.util.ConcurrentModificationException] {
+        CowTable.rebucketTable(spark, t)
+      }
+      assert(e.getMessage.contains("rebucketTable") &&
+        e.getMessage.contains("delete inside"), e.getMessage)
+    } finally CowTable.preCommitHook = () => ()
+    assert(CowTable.latestManifest(t).get.version == 1)
+    assert(CowTable.read(spark, t).count() == 99)
   }
 }

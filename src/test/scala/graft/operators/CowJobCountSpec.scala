@@ -11,11 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Spark job counts of the four Scala row-level operations on the
-  * 2-file fixture, pinned as upper bounds: a count may drop freely (then
-  * lower the pin); a rise must come with a reason. Each operation runs
-  * on a fresh table with an empty entries cache, so the count does not
-  * depend on which suites ran before. */
+/** Spark job counts of the Scala row-level and maintenance operations
+  * on small fixtures, pinned as upper bounds: a count may drop freely
+  * (then lower the pin); a rise must come with a reason. Each operation
+  * runs on a fresh table with an empty entries cache (cleared after any
+  * setup commits), so the count does not depend on which suites ran
+  * before. */
 class CowJobCountSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -52,10 +53,13 @@ class CowJobCountSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  private def pin(op: String, pinned: Int)(body: String => Unit): Unit =
-    test(s"$op runs at most $pinned Spark jobs on the 2-file fixture") {
-      val t = fixture()
+  private def pin(op: String, pinned: Int, build: () => String = () => fixture(),
+      fixtureName: String = "the 2-file fixture")(body: String => Unit): Unit =
+    test(s"$op runs at most $pinned Spark jobs on $fixtureName") {
+      val t = build()
+      CowTable.clearEntriesCache()
       val jobs = jobsOf(body(t))
+      info(s"$op ran ${jobs.size} jobs")
       assert(jobs.size <= pinned,
         s"$op ran ${jobs.size} jobs (pinned $pinned):\n${jobs.mkString("\n")}")
     }
@@ -68,6 +72,51 @@ class CowJobCountSpec extends AnyFunSuite {
   pin("mergeInto", 13)(t => CowTable.mergeInto(spark, t,
     src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
 
-  pin("mergeIntoHybrid", 25)(t => CowTable.mergeIntoHybrid(spark, t,
+  pin("mergeIntoHybrid", 23)(t => CowTable.mergeIntoHybrid(spark, t,
     src((10 to 12) ++ (60 to 89) ++ (400 to 401), "h"), Seq("id")))
+
+  /** The 2-file fixture plus three one-row appends (the compactable
+    * tail) and one DV delete inside the tail. */
+  private def withTail(): String = {
+    val t = fixture()
+    (200 to 202).foreach(i => CowTable.mergeInto(spark, t, src(Seq(i), "a"), Seq("id")))
+    CowTable.deleteWhere(spark, t, $"id" === 201L)
+    t
+  }
+
+  /** Base files stay; only the one-row appends are small. */
+  private def tailThreshold(t: String): Long =
+    CowTable.readManifest(t, 0).files
+      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).min
+
+  pin("compactTable", 14, () => withTail(), "the 2-file fixture plus a tail")(t =>
+    CowTable.compactTable(spark, t, targetBytes = 1L << 20,
+      smallThreshold = Some(tailThreshold(t))))
+
+  pin("compactTableZorder", 22, () => withTail(), "the 2-file fixture plus a tail")(t =>
+    CowTable.compactTableZorder(spark, t, targetBytes = 1L << 20,
+      zCols = Seq("id", "v"), smallThreshold = Some(tailThreshold(t))))
+
+  /** File 1 goes 40% dead, file 2 2% dead. */
+  private def withDeletes(): String = {
+    val t = fixture()
+    CowTable.deleteWhere(spark, t, $"id" < 20L)
+    CowTable.deleteWhere(spark, t, $"id" === 70L)
+    t
+  }
+
+  pin("rewriteDeletes(minDeadFraction = 0.0)", 8, () => withDeletes(),
+    "the 2-file fixture with deletes")(t => CowTable.rewriteDeletes(spark, t))
+
+  pin("rewriteDeletes(minDeadFraction = 0.3)", 9, () => withDeletes(),
+    "the 2-file fixture with deletes")(t =>
+    CowTable.rewriteDeletes(spark, t, minDeadFraction = 0.3))
+
+  pin("rebucketTable", 8, () => {
+    val t = s"${System.getProperty("java.io.tmpdir")}/graft_cow_jobs/" +
+      java.util.UUID.randomUUID().toString.take(8)
+    CowTable.initBucketed(src(0 until 100, "n"), t, "id", 4)
+    CowTable.deleteWhere(spark, t, $"id" < 5L)
+    t
+  }, "a 4-bucket fixture with a delete")(t => CowTable.rebucketTable(spark, t))
 }

@@ -451,6 +451,33 @@ class CowTableSpec extends AnyFunSuite {
     val got = rows(t)
     assert(got.size == 102 && !got.exists(_._1 == 201L))
     assert(got.contains((200L, "x0", 0.0)) && got.contains((202L, "x2", 2.0)))
+    // every DV target was in the tail: the rewrite materialized them all
+    assert(m.dvs.isEmpty, s"a tail-only DV set must retire: ${m.dvs}")
+  }
+
+  test("compaction carries the deletion vectors when a kept file holds one") {
+    val t = freshTable()
+    initRanged(t)
+    val baseSizes = CowTable.latestManifest(t).get.files
+      .map(f => Files.size(Paths.get(f)))
+    (0 until 3).foreach { i =>
+      CowTable.mergeInto(spark, t,
+        Seq((200L + i, s"x$i", i * 1.0)).toDF("id", "name", "v"), Seq("id"))
+    }
+    // one delete in a kept range file, one in the one-row tail
+    CowTable.deleteWhere(spark, t, $"id" === 7L || $"id" === 201L)
+    val before = CowTable.latestManifest(t).get
+    assert(before.dvs.nonEmpty)
+    // only the one-row appends are below the threshold
+    val m = CowTable.compactTable(spark, t, targetBytes = baseSizes.max * 10,
+      smallThreshold = Some(baseSizes.min))
+    assert(m.version == before.version + 1)
+    assert(m.files.size == before.files.size - 2,
+      s"the three-file tail must compact into one: ${m.files}")
+    assert(m.dvs == before.dvs, "a kept file's DV must carry")
+    val got = rows(t)
+    assert(got.size == 101 && !got.exists(r => r._1 == 7L || r._1 == 201L))
+    assert(got.contains((200L, "x0", 0.0)) && got.contains((202L, "x2", 2.0)))
   }
 
   test("tableChanges: layout maintenance is change-free; DV deletes emit pre-images") {
