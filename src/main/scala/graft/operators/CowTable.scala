@@ -67,9 +67,14 @@ import graft.Tables
   * source column types must match the target's (a silently-coerced
   * merge would commit mixed-schema files).
   *
+  * The merge flavors ([[mergeInto]], [[upsertMor]], [[mergeIntoHybrid]])
+  * are three rules over one engine ([[mergeRows]]): one discovery, one
+  * write, one commit; the rule only decides which matched files
+  * rewrite and which keep their bytes behind a deletion vector.
+  *
   * 100 TB shape: touched-file discovery is ONE scan of the target with
   * the (broadcast, delta-sized) source key set semi-joined against
-  * `input_file_name()` — on a table laid out by key (range partition,
+  * `_metadata.file_path` — on a table laid out by key (range partition,
   * Z-order, or compaction by key), a delta that touches few key ranges
   * rewrites few files while every other file is carried by reference
   * into the new manifest, never read or rewritten. The merge join runs
@@ -3364,13 +3369,14 @@ object CowTable {
   }
 
   /** The committer of every operation that rewrites rows or files:
-    * [[mergeInto]], [[mergeIntoHybrid]], [[upsertMor]], [[deleteWhere]],
-    * the DSv2 batch, delta and streaming-append writes of
-    * [[graft.plans.CowDsv2Table]], and the maintenance ops
-    * [[rewriteDeletes]], [[compactTable]], [[compactTableZorder]] and
-    * [[rebucketTable]]. Each publishes ONE version through it that
-    * drops the `removed` data files (group rewrites, compacted tails)
-    * and adds `addedData` (written under this table's data dir) and
+    * the merge engine [[mergeRows]] (behind [[mergeInto]], [[upsertMor]]
+    * and [[mergeIntoHybrid]]), [[deleteWhere]], the DSv2 batch, delta
+    * and streaming-append writes of [[graft.plans.CowDsv2Table]], and
+    * the maintenance ops [[rewriteDeletes]], [[compactTable]],
+    * [[compactTableZorder]] and [[rebucketTable]]. Each publishes ONE
+    * version through it that drops the `removed` data files (group
+    * rewrites, compacted tails) and adds `addedData` (written under
+    * this table's data dir) and
     * `addedDvs` (fresh deletion-vector parquet). Each attempt carries
     * the HEAD's data entries minus `removed` and the head's DVs minus
     * `retiredDvs`, plus `addedDvs`, and commits the head's schema
@@ -3444,7 +3450,7 @@ object CowTable {
     kept
   }
 
-  /** The merge flavors' one delta-sized pass over their source: it
+  /** The merge engine's one delta-sized pass over its source: it
     * refuses NULL keys (with `refuseNullKeys`, checked first) and
     * duplicate keys (the SQL MERGE cardinality contract), and returns
     * the source row count plus the per-key-column [min, max] bounds
@@ -3452,7 +3458,7 @@ object CowTable {
     * separate probes would pay one each (in the streaming sink, one
     * job per probe per epoch). */
   private def checkSourceKeys(op: String, source: DataFrame,
-      keys: Seq[String], refuseNullKeys: Boolean = false)
+      keys: Seq[String], refuseNullKeys: Boolean)
       : (Long, Map[String, (Any, Any)]) = {
     val statsKeys = source.schema.fields
       .filter(f => keys.contains(f.name) && statsEligible(f.dataType)).toSeq
@@ -3476,14 +3482,16 @@ object CowTable {
     * (range-encoded, no data file rewritten) and EVERY source row
     * appends as new data files — one delta-priced commit, the Scala
     * twin of SQL `MERGE` under merge-on-read mode and the epoch apply
-    * of the update-mode streaming sink. The match scan is stats-bounded
+    * of the update-mode streaming sink. The [[DvMatched]] rule of the
+    * one merge engine ([[mergeRows]]): the match scan is stats-bounded
     * ([[mergeCandidateFiles]]) and DV-applied (an already-deleted row
     * cannot re-match), so repeating the same upsert is content-stable:
     * the old copy is dead either way and the latest source values win.
     * Source keys must be unique and non-NULL (the SQL MERGE cardinality
     * contract; a NULL key never matches and would re-append on every
-    * streaming replay — coalesce it to a sentinel first). On a lost
-    * race, rows added since its snapshot must not carry its keys.
+    * streaming replay — coalesce it to a sentinel first). An empty
+    * source commits nothing. On a lost race, rows added since its
+    * snapshot must not carry its keys.
     *
     * `evolveSchema`: source-only columns become new nullable table
     * columns inside THIS commit — the CDC-ingestion trigger (the
@@ -3514,102 +3522,18 @@ object CowTable {
   def upsertMor(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], evolveSchema: Boolean = false,
       preserveMissing: Boolean = false,
-      stagedData: Seq[String] = Nil): Manifest = {
-    val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
-      s"cow table $table does not exist"))
-    val schema0 = m.schema
-    require(keys.nonEmpty && keys.forall(source.columns.contains),
-      s"upsertMor: keys $keys must exist in the source")
-    val missingP = schema0.fields.filterNot(f =>
-      source.columns.contains(f.name)).toSeq
-    require(preserveMissing || missingP.isEmpty,
-      "upsertMor: source must carry every table column " +
-        "(or pass preserveMissing = true to keep matched rows' current " +
-        "values for the absent columns)")
-    val schema = mergeEvolvedSchema("upsertMor", schema0, source,
-      evolveSchema, m.droppedNames)
-    requireSourceTypes("upsertMor", schema, source)
-    val (nSource, keyBounds) =
-      checkSourceKeys("upsertMor", source, keys, refuseNullKeys = true)
-    if (nSource == 0L) return m
-    val v = m.version + 1
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    // 1. matched LIVE rows -> this version's deletion vector
-    val cands =
-      if (!m.dataNonEmpty) Nil
-      else mergeCandidateFiles(spark, table, m, source, keys,
-        Some(keyBounds))
-    val dvFiles: Seq[String] =
-      if (cands.isEmpty) Nil
-      else {
-        val ids = rawScan(spark, m, cands).select(
-          (keys.map(col) :+ col("_metadata.file_path").as("file_path")) :+
-            col("_metadata.row_index").as("row_index"): _*)
-        val live = applyDvFilter(spark, ids, m,
-          normalizeSql(col("file_path")), col("row_index"))
-        writeDvs(spark, table, v, live.join(broadcast(srcKeys), keys,
-          "left_semi").select("file_path", "row_index"))
-      }
-    // 2. every source row appends (update postimages + fresh inserts);
-    // preserved columns come from the newest live matched row (the
-    // candidate files the DV discovery already bounded — one more
-    // column-pruned pass over exactly those files), NULL for inserts
-    val enriched =
-      if (missingP.isEmpty) source
-      else if (cands.isEmpty)
-        missingP.foldLeft(source)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-      else {
-        val liveVals = applyDvFilter(spark,
-          rawScan(spark, m, cands).select(keys.map(col) ++
-            missingP.map(f => col(f.name)) :+
-            col("_metadata.file_path").as("__fp") :+
-            col("_metadata.row_index").as("__ri"): _*),
-          m, normalizeSql(col("__fp")), col("__ri"))
-        val newest = liveVals.join(broadcast(srcKeys), keys, "left_semi")
-          .groupBy(keys.map(col): _*)
-          .agg(max_by(struct(missingP.map(f => col(f.name)): _*),
-            struct(col("__fp"), col("__ri"))).as("__pv"))
-          .select(keys.map(col) ++
-            missingP.map(f => col(s"__pv.${f.name}").as(f.name)): _*)
-        source.join(newest, keys, "left")
-      }
-    val dataFiles =
-      if (stagedData.nonEmpty && missingP.isEmpty && (schema eq schema0))
-        // by-reference: the staged epoch files ARE the append leg —
-        // stats ride the sidecar write's scan of them, partition/bucket
-        // tuples recover from their __p_/bucket dirs in the commit
-        stagedData
-      else {
-        val ordered = enriched.select(schema.fieldNames.map(col): _*)
-        writeDataMaybePartitioned(ordered, table, v, m.partitionCols,
-          m.bucketSpec)
-      }
-    rowLevelCommit(spark, "upsertMor", table, m, addedData = dataFiles,
-      addedDvs = dvFiles,
-      evolveFrom = Option.when(evolveSchema)(source.schema),
-      srcKeys = Some((srcKeys, keys)))
-  }
+      stagedData: Seq[String] = Nil): Manifest =
+    mergeRows(spark, "upsertMor", table, source, keys, evolveSchema,
+      DvMatched(preserveMissing, stagedData))
 
-  /** Source-only columns appended as new nullable fields — the
-    * [[mergeInto]] evolution discipline shared by the MOR upsert:
-    * stable ids assigned when the base schema carries them,
-    * historical-name resurrection refused (old files' physical
-    * columns under that name would resolve into two fields). Returns
-    * `schema` unchanged when evolution is off or the source adds
-    * nothing. */
-  private def mergeEvolvedSchema(op: String, schema: StructType,
-      source: DataFrame, evolve: Boolean,
-      dropped: Set[String] = Set.empty): StructType =
-    if (!evolve) schema
-    else evolvedSinkSchema(op, schema, source.schema, dropped)
-
-  /** The StructType core of [[mergeEvolvedSchema]], shared with the
-    * STREAMING upsert sink (whose "source" is the query's write schema
-    * at sink-build time, not a DataFrame): source-only columns append
-    * as new nullable fields, stable ids assigned when the base schema
-    * carries them, historical-name (and dropped-name tombstone)
-    * resurrection refused. */
+  /** Schema evolution for a row-level write: source-only columns
+    * append as new nullable fields, stable ids assigned when the base
+    * schema carries them, historical-name (and dropped-name tombstone)
+    * resurrection refused (old files' physical columns under that name
+    * would resolve into two fields). Used by the merge engine
+    * ([[mergeRows]]) and the STREAMING upsert sink, whose "source" is
+    * the query's write schema at sink-build time. Returns `schema`
+    * itself when the source adds nothing. */
   private[graft] def evolvedSinkSchema(op: String, schema: StructType,
       sourceSchema: StructType,
       dropped: Set[String] = Set.empty): StructType = {
@@ -3665,21 +3589,11 @@ object CowTable {
     // paths would resurrect replaced generations. The membership probe
     // is candidate-sized against the sidecar — maintenance stays
     // delta-sized, never O(#files)
-    val dvd = {
-      val live = entriesLiveAmong(spark, table, m, dead.keys.toSeq)
-      dead.keys.filter(live.contains).toSeq.sorted
-    }
-    val meta =
-      if (minDeadFraction <= 0.0) Map.empty[String, (Long, Long)]
-      else dataFileMeta(spark, table, m, dvd)
+    val live = entriesLiveAmong(spark, table, m, dead.keys.toSeq)
     // the touched set is DV-derived (delta-sized); the untouched carry
     // is a sidecar-to-sidecar DataFrame filter, never a driver seq
-    val (touchedF, keepDvF) =
-      if (minDeadFraction <= 0.0) (dvd, Seq.empty[String])
-      else dvd.partition { f =>
-        val rows = meta.get(normalize(f)).map(_._2).getOrElse(-1L)
-        rows <= 0L || dead(normalize(f)).toDouble >= minDeadFraction * rows
-      }
+    val (touchedF, keepDvF) = denseSplit(spark, table, m,
+      dead.filter(kv => live.contains(kv._1)), minDeadFraction)
     val v = m.version + 1
     // below-threshold files' deletes consolidate into one fresh sidecar
     // (old DV files drop regardless — their rewritten-file entries die)
@@ -3709,100 +3623,20 @@ object CowTable {
       addedData = newFiles, addedDvs = keptDvs, retiredDvs = m.dvs)
   }
 
-  /** MERGE `source` into the table's latest snapshot on `keys`. Returns
+  /** MERGE `source` into the table's latest snapshot on `keys`: the
+    * [[RewriteMatched]] rule of the one merge engine ([[mergeRows]]) —
+    * every file holding a matched key group-rewrites, every other file
+    * carries by reference. An empty source commits nothing. Returns
     * the committed manifest. See the object doc for semantics. */
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], deleteCond: Option[Column] = None,
-      insert: Boolean = true, evolveSchema: Boolean = false): Manifest = {
-    val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
-      s"cow table $table does not exist"))
-    val schema0 = m.schema
-    require(keys.forall(schema0.fieldNames.contains) &&
-      keys.forall(source.columns.contains), s"merge keys $keys missing")
-    require(schema0.fieldNames.forall(source.columns.contains),
-      "mergeInto: source must carry every target column (update-all form)")
-    // schema evolution: with `evolveSchema`, source columns the target
-    // lacks become new (nullable) table columns; rows from untouched
-    // files NULL-extend at read time through the manifest schema — no
-    // old file is touched. Without the flag, extra source columns are
-    // IGNORED (the long-standing contract: deleteCond helper columns
-    // like a `kill` marker ride the source without entering the table).
-    val schema = mergeEvolvedSchema("mergeInto", schema0, source,
-      evolveSchema, m.droppedNames)
-    requireSourceTypes("mergeInto", schema, source)
-    val (_, keyBounds) = checkSourceKeys("mergeInto", source, keys)
-    val dataCols = schema.fieldNames.filterNot(keys.contains).toSeq
-
-    // 1. touched-file discovery: one target scan, broadcast key set —
-    // and the scan itself is STATS-BOUNDED: the source's per-key-column
-    // [min,max] (one more column pair on the delta-sized uniqueness
-    // aggregate) prunes files whose key range cannot overlap the delta,
-    // so a narrow delta against a key-clustered 100 TB table discovers
-    // its touched files by reading only the overlapping slice. The RAW
-    // scan is deliberate with DVs present: a file whose only matching
-    // rows are deleted gets rewritten (its DV entries materialize a
-    // version early) — conservative, never wrong.
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val touched =
-      if (!m.dataNonEmpty) Seq.empty[String]
-      else {
-        val candidates = mergeCandidateFiles(spark, table, m, source, keys,
-          Some(keyBounds))
-        if (candidates.isEmpty) Seq.empty[String]
-        else rawScan(spark, m, candidates)
-          .withColumn("__file", input_file_name())
-          .join(broadcast(srcKeys), keys, "left_semi")
-          .select("__file").distinct()
-          .collect().map(r => normalize(r.getString(0))).toSeq.sorted
-      }
-    // `touched` is delta-sized and normalized (directly openable); the
-    // untouched majority never materializes — it carries
-    // sidecar-to-sidecar in the commit below
-
-    // 2. merge only touched rows (deletion-vector-applied: a deleted
-    // row is absent, so a source row with its key INSERTS) with the
-    // source; pre-evolution rows NULL-extend for the columns they
-    // predate
-    val touchedRows = schema.fields.foldLeft(
-      readSnapshot(spark, m, Some(touched)))((d, f) =>
-      if (d.columns.contains(f.name)) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val srcTagged = source
-      .withColumn("__del", deleteCond.getOrElse(lit(false)))
-      .withColumn("__src", lit(1))
-      .select(keys.map(col) ++ dataCols.map(col) :+ col("__del") :+
-        col("__src"): _*)
-    val tgtTagged = touchedRows.withColumn("__tgt", lit(1))
-    val joined = tgtTagged.as("t")
-      .join(srcTagged.as("s"), keys, "full_outer")
-    val matchedDelete = col("__src").isNotNull && col("__tgt").isNotNull &&
-      col("__del")
-    val insertOnly = col("__tgt").isNull
-    val kept = joined
-      .filter(!coalesce(matchedDelete, lit(false)))
-      .filter(if (insert) lit(true) else !insertOnly)
-    val merged = kept.select(
-      keys.map(col) ++ dataCols.map(c =>
-        when(col("__src").isNotNull, col(s"s.$c"))
-          .otherwise(col(s"t.$c")).as(c)): _*)
-
-    // 3. new snapshot = carried untouched entries (stats intact) + this
-    // version's rewrites. write-then-check: an empty merge result
-    // writes no listed file (dropEmptyFiles), so no `merged.isEmpty`
-    // pre-execution of the full-outer join. A rebase is sound only
-    // when the interleaved commits could not have changed this merge's
-    // inputs: no touched file moved, no delete inside one, and no
-    // added row carries a source key.
-    val newFiles = writeDataMaybePartitioned(merged, table,
-      m.version + 1, m.partitionCols, m.bucketSpec)
-    rowLevelCommit(spark, "mergeInto", table, m, removed = touched,
-      addedData = newFiles,
-      evolveFrom = Option.when(evolveSchema)(source.schema),
-      srcKeys = Some((srcKeys, keys)))
-  }
+      insert: Boolean = true, evolveSchema: Boolean = false): Manifest =
+    mergeRows(spark, "mergeInto", table, source, keys, evolveSchema,
+      RewriteMatched(deleteCond, insert))
 
   /** COST-BASED COW/MOR HYBRID upsert: the write mode is chosen PER
-    * FILE from match density, inside one commit. The discovery scan
+    * FILE from match density, inside one commit — the [[ByDensity]]
+    * rule of the one merge engine ([[mergeRows]]). The discovery scan
     * (stats-bounded, DV-applied) counts each candidate file's matched
     * LIVE rows; files whose matches reach `denseFraction` of their
     * manifest row count GROUP-REWRITE (copy-on-write — they were going
@@ -3816,132 +3650,232 @@ object CowTable {
     * `spark.graft.cow.rowLevelMode` picks per STATEMENT; this picks
     * per FILE. Upsert form (update-all + insert); target keys must be
     * unique among matched rows (the SQL MERGE cardinality contract).
-    * Files without a usable manifest row count rewrite conservatively. */
+    * Files without a usable manifest row count rewrite conservatively.
+    * An empty source commits nothing. */
   def mergeIntoHybrid(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], denseFraction: Double = 0.3,
-      evolveSchema: Boolean = false): Manifest = {
+      evolveSchema: Boolean = false): Manifest =
+    mergeRows(spark, "mergeIntoHybrid", table, source, keys, evolveSchema,
+      ByDensity(denseFraction))
+
+  /** How [[mergeRows]] treats the target files the source keys match:
+    * rewrite them, delete their matched rows by deletion vector, or
+    * choose per file by match density. */
+  private sealed trait MergeRule
+
+  /** [[mergeInto]]: every matched file group-rewrites; a matched source
+    * row with `deleteCond` true deletes its target row, and unmatched
+    * source rows insert only with `insert`. Discovery reads the
+    * candidates RAW: a file whose only matching rows are already
+    * deleted rewrites too (its DVs materialize a version early —
+    * conservative, never wrong), and the rewrite applies DVs anyway, so
+    * a DV-applied discovery would only add the packed-DV broadcast to
+    * every merge. Duplicate live target keys all take the update. */
+  private case class RewriteMatched(deleteCond: Option[Column],
+      insert: Boolean) extends MergeRule
+
+  /** [[upsertMor]]: nothing rewrites; matched LIVE rows die by deletion
+    * vector and every source row appends (one postimage per key, even
+    * over duplicate target keys). NULL source keys are refused. */
+  private case class DvMatched(preserveMissing: Boolean,
+      stagedData: Seq[String]) extends MergeRule
+
+  /** [[mergeIntoHybrid]]: files whose matched live rows reach
+    * `denseFraction` of their row count rewrite, the rest take a DV
+    * ([[denseSplit]]); a source key matching two live rows is refused. */
+  private case class ByDensity(denseFraction: Double) extends MergeRule
+
+  /** The one merge engine behind [[mergeInto]], [[upsertMor]] and
+    * [[mergeIntoHybrid]]; `rule` decides which matched files rewrite
+    * and which take a deletion vector.
+    *
+    *  1. Prologue: the table, keys and columns are checked; with
+    *     `evolveSchema` source-only columns become new nullable table
+    *     columns inside this commit ([[evolvedSinkSchema]]; rows of
+    *     older files NULL-extend at read), without it they are ignored
+    *     (deleteCond helper columns like a `kill` marker ride the
+    *     source without entering the table); source types must match
+    *     ([[requireSourceTypes]]) and one delta-sized pass checks the
+    *     source keys and takes their bounds ([[checkSourceKeys]]). An
+    *     empty source returns the current manifest.
+    *  2. Identity scan: the candidate files ([[mergeCandidateFiles]]:
+    *     stats- and bloom-bounded, so a narrow delta against a
+    *     key-clustered table reads only the overlapping slice) are
+    *     scanned for `(keys, file_path, row_index)` and semi-joined to
+    *     the broadcast source keys.
+    *  3. The rule splits the matched files into a rewrite set and a DV
+    *     set.
+    *  4. One write: the rewrite set's live rows full-outer-joined with
+    *     the source. Matched rows take the source values, unmatched
+    *     target rows carry, and unmatched source rows — inserts and the
+    *     postimages of DV'd rows — append. An empty rewrite set is a
+    *     local relation, so the join plans as a projection of the
+    *     source. An empty result writes no listed file
+    *     (write-then-check), so nothing pre-executes the join.
+    *  5. One commit: the DV set's matched rows become this version's
+    *     deletion vector, then [[rowLevelCommit]] publishes it all. A
+    *     rebase is sound only when the interleaved commits could not
+    *     have changed this merge's inputs: no rewritten file moved, no
+    *     delete inside a rewritten or DV'd file, and no added row
+    *     carries a source key. */
+  private def mergeRows(spark: SparkSession, op: String, table: String,
+      source: DataFrame, keys: Seq[String], evolveSchema: Boolean,
+      rule: MergeRule): Manifest = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
+    // 1. prologue
     val schema0 = m.schema
-    require(keys.nonEmpty && keys.forall(source.columns.contains),
-      s"mergeIntoHybrid: keys $keys must exist in the source")
-    require(schema0.fieldNames.forall(source.columns.contains),
-      "mergeIntoHybrid: source must carry every table column")
-    // evolveSchema: source-only columns join the table inside this
-    // commit (the [[mergeEvolvedSchema]] discipline all merge flavors
-    // share) — COW-rewritten unmatched rows and untouched files both
-    // NULL-extend, postimages/inserts carry the value
-    val schema = mergeEvolvedSchema("mergeIntoHybrid", schema0, source,
-      evolveSchema, m.droppedNames)
-    requireSourceTypes("mergeIntoHybrid", schema, source)
-    val (nSource, keyBounds) =
-      checkSourceKeys("mergeIntoHybrid", source, keys)
+    val missing = schema0.fields.filterNot(f =>
+      source.columns.contains(f.name)).toSeq
+    val preserved = rule match {
+      case DvMatched(true, _) => missing
+      case _ =>
+        require(missing.isEmpty, s"$op: source must carry every table " +
+          "column" + (if (!rule.isInstanceOf[DvMatched]) "" else " (or " +
+            "pass preserveMissing = true to keep matched rows' current " +
+            "values for the absent columns)"))
+        Nil
+    }
+    val schema =
+      if (evolveSchema)
+        evolvedSinkSchema(op, schema0, source.schema, m.droppedNames)
+      else schema0
+    require(keys.nonEmpty && keys.forall(k =>
+      schema.fieldNames.contains(k) && source.columns.contains(k)),
+      s"$op: keys $keys must exist in the table and the source")
+    requireSourceTypes(op, schema, source)
+    val (nSource, keyBounds) = checkSourceKeys(op, source, keys,
+      refuseNullKeys = rule.isInstanceOf[DvMatched])
     if (nSource == 0L) return m
     val v = m.version + 1
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    val ordered = source.select(schema.fieldNames.toIndexedSeq.map(col): _*)
 
-    // 1. matched LIVE target rows with file identity (delta-sized)
+    // 2. matched target rows with their identity (and the preserved
+    // columns' values); DV-applied unless the rule rewrites every match
     val cands =
       if (!m.dataNonEmpty) Nil
       else mergeCandidateFiles(spark, table, m, source, keys,
         Some(keyBounds))
-    val matched =
-      if (cands.isEmpty) None
-      else {
-        val ids = rawScan(spark, m, cands).select(
-          keys.map(col) ++ Seq(col("_metadata.file_path").as("file_path"),
-            col("_metadata.row_index").as("row_index")): _*)
-        val live = applyDvFilter(spark, ids, m,
-          normalizeSql(col("file_path")), col("row_index"))
-        Some(live.join(broadcast(srcKeys), keys, "left_semi")
-          .withColumn("__fp", normalizeSql(col("file_path")))
-          .persist())
+    val matched = Option.when(cands.nonEmpty) {
+      val ids = rawScan(spark, m, cands).select(keys.map(col) ++
+        preserved.map(f => col(f.name)) :+
+        col("_metadata.file_path").as("__fp") :+
+        col("_metadata.row_index").as("__ri"): _*)
+      val scan = rule match {
+        case _: RewriteMatched => ids
+        case _ => applyDvFilter(spark, ids, m, normalizeSql(col("__fp")),
+          col("__ri"))
       }
+      val mt = scan.join(broadcast(srcKeys), keys, "left_semi")
+      // the density rule reads the matches twice (aggregate, DV write)
+      if (rule.isInstanceOf[ByDensity]) mt.persist() else mt
+    }
     try {
-      // per-file match counts and the duplicate-key check in ONE
-      // aggregate: per key its match count (above 1 = a duplicate
-      // target key) and a file, rolled up per file — exact whenever no
-      // key repeats, and a repeat fails the check
-      val perFile: Map[String, Long] = matched match {
-        case None => Map.empty
-        case Some(mt) =>
+      // 3. the rule's split: files to rewrite (normalized, sorted) and
+      // the matched rows to delete by DV
+      val (rewrite, dvRows) = (rule, matched) match {
+        case (_, None) => (Nil, None)
+        case (_: RewriteMatched, Some(mt)) =>
+          (mt.select(normalizeSql(col("__fp"))).distinct().collect()
+            .map(_.getString(0)).toSeq.sorted, None)
+        case (_: DvMatched, Some(mt)) => (Nil, Some(mt))
+        case (ByDensity(fraction), Some(mt)) =>
+          // per-file match counts and the duplicate-key check in ONE
+          // aggregate: per key its match count (above 1 = a duplicate
+          // target key) and a file, rolled up per file — exact whenever
+          // no key repeats, and a repeat fails the check
           val byFile = mt.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("n"), min(col("__fp")).as("__fp"))
-            .groupBy(col("__fp"))
-            .agg(sum(col("n")).as("n"), max(col("n")).as("maxN"))
+            .agg(count(lit(1)).as("__n"),
+              min(normalizeSql(col("__fp"))).as("__nfp"))
+            .groupBy(col("__nfp"))
+            .agg(sum(col("__n")), max(col("__n")))
             .collect()
-          require(byFile.forall(_.getLong(2) <= 1L), "mergeIntoHybrid: a " +
-            "source key matches multiple live target rows — resolve " +
-            "duplicates first")
-          byFile.map(r => r.getString(0) -> r.getLong(1)).toMap
+          require(byFile.forall(_.getLong(2) <= 1L), s"$op: a source key " +
+            "matches multiple live target rows — resolve duplicates first")
+          val (dense, sparse) = denseSplit(spark, table, m,
+            byFile.map(r => r.getString(0) -> r.getLong(1)).toMap, fraction)
+          (dense, Option.when(sparse.nonEmpty)(
+            mt.filter(normalizeSql(col("__fp")).isInCollection(sparse))))
       }
-      val touchedFiles = perFile.keys.toSeq.sorted
-      val meta = dataFileMeta(spark, table, m, touchedFiles)
-      // 2. the per-file choice
-      val (cowF, morF) = touchedFiles.partition { f =>
-        val rows = meta.get(normalize(f)).map(_._2).getOrElse(-1L)
-        rows <= 0L ||
-          perFile(normalize(f)).toDouble >= denseFraction * rows
-      }
-      val morKeys = matched.filter(_ => morF.nonEmpty).map(mt =>
-        mt.filter(col("__fp").isInCollection(morF.map(normalize)))
-          .select(keys.map(col): _*).distinct())
-      val cowKeys = matched.filter(_ => cowF.nonEmpty).map(mt =>
-        mt.filter(col("__fp").isInCollection(cowF.map(normalize)))
-          .select(keys.map(col): _*).distinct())
-      // 3a. COW half: dense files rewrite — their unmatched live rows
-      // carry, matched rows take the source values
-      val cowNew =
-        if (cowF.isEmpty) None
-        else {
-          val liveRows = readSnapshot(spark, m, Some(cowF))
-          // pre-evolution carries NULL-extend via name alignment (the
-          // evolved columns append, so the union's order is the schema)
-          Some(liveRows.join(broadcast(srcKeys), keys, "left_anti")
-            .unionByName(ordered.join(broadcast(cowKeys.get), keys,
-              "left_semi"), allowMissingColumns = true))
+
+      // 4. preserved columns take the newest live matched row's value
+      // (NULL for inserts); then the one full outer join
+      val src =
+        if (preserved.isEmpty) source
+        else matched match {
+          case None => preserved.foldLeft(source)((d, f) =>
+            d.withColumn(f.name, lit(null).cast(f.dataType)))
+          case Some(mt) => source.join(mt.groupBy(keys.map(col): _*)
+            .agg(max_by(struct(preserved.map(f => col(f.name)): _*),
+              struct(col("__fp"), col("__ri"))).as("__pv"))
+            .select(keys.map(col) ++
+              preserved.map(f => col(s"__pv.${f.name}").as(f.name)): _*),
+            keys, "left")
         }
-      // 3b. MOR half: sparse files' matched rows die by DV; postimages
-      // + fresh inserts append
-      val dvFiles: Seq[String] = matched match {
-        case Some(mt) if morF.nonEmpty =>
-          writeDvs(spark, table, v, mt.filter(col("__fp")
-            .isInCollection(morF.map(normalize)))
-            .select("file_path", "row_index"))
-        case _ => Nil
+      val (deleteCond, insert) = rule match {
+        case RewriteMatched(d, i) => (d, i)
+        case _ => (None, true)
       }
-      val appended = {
-        val inserts = matched match {
-          case None => ordered
-          case Some(mt) => ordered.join(
-            mt.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        }
-        morKeys match {
-          case Some(mk) =>
-            inserts.unionByName(ordered.join(broadcast(mk), keys,
-              "left_semi"))
-          case None => inserts
-        }
+      val dataCols = schema.fieldNames.filterNot(keys.contains).toSeq
+      val tgtTagged = schema.fields.foldLeft(
+        readSnapshot(spark, m, Some(rewrite)))((d, f) =>
+        if (d.columns.contains(f.name)) d
+        else d.withColumn(f.name, lit(null).cast(f.dataType)))
+        .withColumn("__tgt", lit(1))
+      val srcTagged = src
+        .withColumn("__del", deleteCond.getOrElse(lit(false)))
+        .withColumn("__src", lit(1))
+        .select(keys.map(col) ++ dataCols.map(col) :+ col("__del") :+
+          col("__src"): _*)
+      val matchedDelete = col("__src").isNotNull &&
+        col("__tgt").isNotNull && col("__del")
+      val merged = tgtTagged.as("t")
+        .join(srcTagged.as("s"), keys, "full_outer")
+        .filter(!coalesce(matchedDelete, lit(false)))
+        .filter(if (insert) lit(true) else col("__tgt").isNotNull)
+        .select(schema.fieldNames.toSeq.map(c =>
+          if (keys.contains(c)) col(c)
+          else when(col("__src").isNotNull, col(s"s.$c"))
+            .otherwise(col(s"t.$c")).as(c)): _*)
+      val dataFiles = rule match {
+        // by reference: the staged epoch files ARE the append leg —
+        // stats ride the sidecar write's scan of them, partition/bucket
+        // tuples recover from their __p_/bucket dirs in the commit
+        case DvMatched(_, staged)
+            if staged.nonEmpty && missing.isEmpty && (schema eq schema0) =>
+          staged
+        case _ => writeDataMaybePartitioned(merged, table, v,
+          m.partitionCols, m.bucketSpec)
       }
-      val toWrite = cowNew match {
-        case Some(c) => c.unionByName(appended)
-        case None => appended
-      }
-      // write-then-check (dropEmptyFiles): no `toWrite.isEmpty`
-      // pre-execution of the COW-rewrite + postimage union
-      val newFiles = writeDataMaybePartitioned(toWrite, table, v,
-        m.partitionCols, m.bucketSpec)
-      // 4. one commit: untouched + MOR files carry, COW files leave,
-      // DV entries and fresh data entries append. On a lost version
-      // race, rebase-and-retry: conflicts are a rewrite of (or fresh
-      // delete inside) a file we rewrite or DV, or an interleaved
-      // write of our source keys — everything disjoint lands.
-      rowLevelCommit(spark, "mergeIntoHybrid", table, m, removed = cowF,
-        addedData = newFiles, addedDvs = dvFiles,
+
+      // 5. one commit: rewritten files leave, untouched and DV'd files
+      // carry, DV and data entries append
+      val dvFiles = dvRows.fold(Seq.empty[String])(ids => writeDvs(spark,
+        table, v, ids.select(col("__fp").as("file_path"),
+          col("__ri").as("row_index"))))
+      rowLevelCommit(spark, op, table, m, removed = rewrite,
+        addedData = dataFiles, addedDvs = dvFiles,
         evolveFrom = Option.when(evolveSchema)(source.schema),
         srcKeys = Some((srcKeys, keys)))
-    } finally matched.foreach(_.unpersist())
+    } finally if (rule.isInstanceOf[ByDensity]) matched.foreach(_.unpersist())
+  }
+
+  /** Splits the files of `counts` (normalized path → rows of interest:
+    * a merge's matched rows, a file's deleted rows) into those whose
+    * count reaches `fraction` of the file's manifest row count and the
+    * rest, both sorted. A file without a usable row count counts as
+    * dense (conservative); `fraction` ≤ 0 makes every file dense
+    * without reading the row counts. */
+  private def denseSplit(spark: SparkSession, table: String, m: Manifest,
+      counts: Map[String, Long], fraction: Double)
+      : (Seq[String], Seq[String]) = {
+    val files = counts.keys.toSeq.sorted
+    if (fraction <= 0.0) return (files, Nil)
+    val meta = dataFileMeta(spark, table, m, files)
+    files.partition { f =>
+      val rows = meta.get(normalize(f)).map(_._2).getOrElse(-1L)
+      rows <= 0L || counts(f).toDouble >= fraction * rows
+    }
   }
 
   /** The files a merge's discovery scan must read: those whose

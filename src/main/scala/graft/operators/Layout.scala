@@ -293,17 +293,28 @@ object Layout {
     if (plan.smallFiles.isEmpty) return 0L
     compactRows(spark.read.parquet(plan.smallFiles.map(_._1): _*),
       plan.targetFileCount, outDir)
+    writtenRows(spark, outDir)
   }
 
   /** Row-level form of [[compactSmallFiles]]: callers that must apply
     * row-level corrections to the tail first (a CoW table's deletion
     * vectors) pass the already-filtered rows. */
   def compactRows(df: DataFrame, targetFileCount: Int,
-      outDir: String): Long = {
-    val n = df.count()
+      outDir: String): Unit =
     df.repartition(targetFileCount)
       .write.mode("overwrite").parquet(outDir)
-    n
+
+  /** Rows in the parquet files directly under `dir`, summed from their
+    * footers — the compactions' row count without a second pass over
+    * the rewritten rows. */
+  private def writtenRows(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(conf).listStatus(path)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(f => graft.Tables.withFooter(conf, f.getPath.toString)(
+        _.getRecordCount))
+      .sum
   }
 
   /** Z-order flavor of [[compactSmallFiles]]: the rewritten small-file
@@ -325,21 +336,19 @@ object Layout {
     if (plan.smallFiles.isEmpty) return 0L
     compactRowsZorder(spark.read.parquet(plan.smallFiles.map(_._1): _*),
       plan.targetFileCount, outDir, zCols, bits, k)
+    writtenRows(spark, outDir)
   }
 
   /** Row-level form of [[compactSmallFilesZorder]] (see
     * [[compactRows]]). */
   def compactRowsZorder(df: DataFrame, targetFileCount: Int,
       outDir: String, zCols: Seq[String], bits: Int = ZBits,
-      k: Int = 200): Long = {
-    val n = df.count()
+      k: Int = 200): Unit =
     withZValue(df, zCols.map(col), bits, k, "__zv")
       .repartitionByRange(targetFileCount, col("__zv"))
       .sortWithinPartitions("__zv")
       .drop("__zv")
       .write.mode("overwrite").parquet(outDir)
-    n
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sc_zorder" -> scZorder,

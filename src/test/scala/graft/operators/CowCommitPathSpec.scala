@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards on CowTable's commit paths: every operation that
   * rewrites rows or files commits through `rowLevelCommit`, so the
   * retry protocol has one data-side caller next to the metadata-only
-  * commits, and no op keeps a private copy of the carry. */
+  * commits, no op keeps a private copy of the carry, and the three
+  * merge entries run one engine (`mergeRows`). */
 class CowCommitPathSpec extends AnyFunSuite {
   private val lines = Files.readAllLines(
     Paths.get("src/main/scala/graft/operators/CowTable.scala")).toArray
@@ -46,6 +47,16 @@ class CowCommitPathSpec extends AnyFunSuite {
     assert(callers.contains("rowLevelCommit"), callers)
     assert(callers.subsetOf(allowed),
       s"commit data rewrites through rowLevelCommit: ${callers -- allowed}")
+  }
+
+  test("the merge entries share one engine: source check, discovery, DV write, commit") {
+    val entries = Set("mergeInto", "upsertMor", "mergeIntoHybrid")
+    assert(callersOf("checkSourceKeys") == Set("mergeRows"))
+    assert(callersOf("mergeCandidateFiles") == Set("mergeRows"))
+    assert(callersOf("writeDvs") == Set("mergeRows", "deleteWhere"))
+    assert(callersOf("mergeRows") == entries)
+    val own = callersOf("rowLevelCommit") intersect entries
+    assert(own.isEmpty, s"merge entries commit through mergeRows: $own")
   }
 
   test("the per-op carry helpers are gone") {

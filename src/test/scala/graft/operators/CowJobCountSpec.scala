@@ -72,8 +72,22 @@ class CowJobCountSpec extends AnyFunSuite {
   pin("mergeInto", 13)(t => CowTable.mergeInto(spark, t,
     src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
 
-  pin("mergeIntoHybrid", 23)(t => CowTable.mergeIntoHybrid(spark, t,
+  pin("mergeIntoHybrid", 17)(t => CowTable.mergeIntoHybrid(spark, t,
     src((10 to 12) ++ (60 to 89) ++ (400 to 401), "h"), Seq("id")))
+
+  /** The 2-file fixture after one DV delete — the shape every
+    * `lh_mixed` merge and upsert meets. */
+  private def withDelete(): String = {
+    val t = fixture()
+    CowTable.deleteWhere(spark, t, $"id" === 61L)
+    t
+  }
+
+  pin("upsertMor", 13, () => withDelete(), "the 2-file fixture with a delete")(t =>
+    CowTable.upsertMor(spark, t, src((10 to 12) ++ (300 to 301), "u"), Seq("id")))
+
+  pin("mergeInto", 15, () => withDelete(), "the 2-file fixture with a delete")(t =>
+    CowTable.mergeInto(spark, t, src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
 
   /** The 2-file fixture plus three one-row appends (the compactable
     * tail) and one DV delete inside the tail. */
@@ -89,11 +103,11 @@ class CowJobCountSpec extends AnyFunSuite {
     CowTable.readManifest(t, 0).files
       .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).min
 
-  pin("compactTable", 14, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTable", 10, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTable(spark, t, targetBytes = 1L << 20,
       smallThreshold = Some(tailThreshold(t))))
 
-  pin("compactTableZorder", 22, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTableZorder", 18, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTableZorder(spark, t, targetBytes = 1L << 20,
       zCols = Seq("id", "v"), smallThreshold = Some(tailThreshold(t))))
 
