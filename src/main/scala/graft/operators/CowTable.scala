@@ -497,7 +497,8 @@ object CowTable {
       val live = entriesLiveAmong(spark, table, h, mine.toSeq)
       if (!mine.forall(live.contains))
         conflict("rewrite of a file this operation rewrites or deletes from")
-      if (dvTargets(spark, h.dvs.filterNot(base.dvs.toSet)).exists(mine.contains))
+      if (dvTargets(spark, h.dvs.filterNot(base.dvs.toSet), h.dvRunCounts)
+          .exists(mine.contains))
         conflict("delete inside a file this operation rewrites or deletes from")
     }
     lazy val added = addedDataPaths(spark, table, h, base)
@@ -512,12 +513,11 @@ object CowTable {
     }
   }
 
-  /** The normalized data-file paths `dvs` delete rows from — one
-    * delta-sized aggregate over the DV runs; no job when `dvs` is
-    * empty. */
-  private def dvTargets(spark: SparkSession, dvs: Seq[String]): Set[String] =
-    if (dvs.isEmpty) Set.empty
-    else dvRuns(spark, dvs).select("fp").distinct()
+  /** The normalized data-file paths `dvs` delete rows from — a
+    * projection of [[dvFiles]] (`runs` counts every path of `dvs`). */
+  private def dvTargets(spark: SparkSession, dvs: Seq[String],
+      runs: Map[String, Long]): Set[String] =
+    dvFiles(spark, dvs, runs).select("__dv_fp")
       .collect().map(_.getString(0)).toSet
 
   /** Data paths of `h` absent from `base` — the rebase validator's
@@ -555,7 +555,8 @@ object CowTable {
     * [[countWhereDetailed]], [[tableChanges]], [[vacuum]], merge
     * discovery, compaction sizing) runs its predicate/set algebra on
     * the parquet-backed entries DataFrame and collects only surviving
-    * paths or aggregated counts. */
+    * paths or aggregated counts. The same bound, counted in runs, is
+    * [[dvFiles]]' switch between a driver read and a columnar one. */
   private[graft] val SmallSidecarEntries = 10000L
 
   /** Test hook: total sidecar entry rows materialized on the driver by
@@ -738,7 +739,7 @@ object CowTable {
     // ONE footer read here, so the read path's broadcast decision
     // never opens a footer again
     val dvRunsAll: Map[String, Long] = carriedDvs.map(p =>
-      p -> knownDvRuns.getOrElse(p, dvRunCount(spark, Seq(p)))).toMap
+      p -> knownDvRuns.getOrElse(p, dvRunCount(spark, p))).toMap
     val rel = s"files/v$version-${java.util.UUID.randomUUID().toString.take(8)}"
     val out = manifestDir(table).resolve(rel)
     Files.createDirectories(out.getParent)
@@ -920,50 +921,88 @@ object CowTable {
       // most repeated job in the lakehouse gates' profiles. Large
       // sidecars never reach this path ([[entriesDF]] gates on
       // entryCount), so the 10⁶-file discipline is untouched.
-      val loaded = readSidecarDriver(spark, table, rel).map { e =>
-        e.copy(path = resolve(e.path)) }
+      // NULL optional fields read as None; bytes keeps the -1
+      // "unknown" convention of dv rows
+      val loaded = readParquetDriver(spark,
+          listPartFiles(manifestDir(table).resolve(rel))) { r =>
+        FileEntry(r.needStr("kind"), resolve(r.needStr("path")),
+          r.long("bytes").getOrElse(-1L), r.long("numRows"), r.str("stats"),
+          r.str("part"))
+      }
       driverEntryRowsLoaded.addAndGet(loaded.size.toLong)
       cacheEntries(table, rel, loaded)
       loaded
     }
   }
 
-  /** Reads a (small, size-gated by the caller) entries sidecar with the
-    * parquet example API on the driver — rows come back as
-    * [[FileEntry]]s with STORED path strings; the caller resolves them.
-    * Every sidecar is written with the full [[entriesSchema]]; NULL
-    * optional fields read as None. */
-  private def readSidecarDriver(spark: SparkSession, table: String,
-      rel: String): Seq[FileEntry] = {
+  /** Reads small parquet files with the parquet example API on the
+    * driver — no Spark job; callers size-gate. The one driver reader of
+    * the entries sidecars ([[loadEntries]]) and the deletion vectors
+    * ([[dvFiles]]). */
+  private def readParquetDriver[T](spark: SparkSession, files: Seq[String])(
+      row: DriverRecord => T): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = manifestDir(table).resolve(rel)
-    listPartFiles(dir).flatMap { f =>
+    files.flatMap { f =>
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
           new org.apache.hadoop.fs.Path(f))
         .withConf(conf).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        def strOpt(n: String): Option[String] =
-          if (g.getFieldRepetitionCount(n) == 0) None
-          else Some(g.getString(n, 0))
-        def longOpt(n: String): Option[Long] =
-          if (g.getFieldRepetitionCount(n) == 0) None
-          else Some(g.getLong(n, 0))
-        // kind/path are MANDATORY: a row missing them is corruption,
-        // and a defaulted entry (empty path, kind "data") would look
-        // like a real file to downstream planning — fail loudly
-        // instead. bytes keeps the -1 "unknown" convention of dv rows;
-        // part/numRows/stats are genuinely optional.
-        FileEntry(strOpt("kind").getOrElse(throw new IllegalStateException(
-            s"entries sidecar $f: row missing required field 'kind'")),
-          strOpt("path").getOrElse(throw new IllegalStateException(
-            s"entries sidecar $f: row missing required field 'path'")),
-          longOpt("bytes").getOrElse(-1L),
-          longOpt("numRows"), strOpt("stats"), strOpt("part"))
-      }.toVector
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => row(new DriverRecord(f, g))).toVector
       finally reader.close()
     }
   }
+
+  /** One record of [[readParquetDriver]]. A NULL optional field reads
+    * as None; a NULL mandatory field is corruption — a defaulted value
+    * (an empty path) would look real to downstream planning — so the
+    * `need` getters fail loudly instead. */
+  private final class DriverRecord(file: String,
+      g: org.apache.parquet.example.data.Group) {
+    def str(n: String): Option[String] =
+      if (g.getFieldRepetitionCount(n) == 0) None else Some(g.getString(n, 0))
+    def long(n: String): Option[Long] =
+      if (g.getFieldRepetitionCount(n) == 0) None else Some(g.getLong(n, 0))
+    def needStr(n: String): String = str(n).getOrElse(missing(n))
+    def needLong(n: String): Long = long(n).getOrElse(missing(n))
+    private def missing(n: String): Nothing = throw new IllegalStateException(
+      s"parquet file $file: row missing required field '$n'")
+  }
+
+  /** The one deletion-vector reader: ONE row per DV'd data file of
+    * `dvs` — `__dv_fp` (the normalized path), `__dv_starts`/`__dv_lens`
+    * (its runs, sorted by start) and `__dv_n` (its deleted rows; runs
+    * are disjoint, so summed lengths are exact). The reserved names let
+    * the result join onto user-schema rows. One size switch, decided
+    * from the run counts manifests record (`runs` must count every
+    * path of `dvs`): at most [[SmallSidecarEntries]] runs are read on
+    * the driver into a LocalRelation, so a projection of it collects
+    * with no Spark job; above it, a columnar per-file aggregate over
+    * the DV parquet. */
+  private[graft] def dvFiles(spark: SparkSession, dvs: Seq[String],
+      runs: Map[String, Long]): DataFrame =
+    if (dvs.map(runs).sum <= SmallSidecarEntries) {
+      val rows = readParquetDriver(spark, dvs)(r =>
+          (normalize(r.needStr("file_path")), r.needLong("start"),
+            r.needLong("len")))
+        .groupBy(_._1).toSeq.map { case (fp, rs) =>
+          val sorted = rs.sortBy(_._2)
+          Row(fp, sorted.map(_._2), sorted.map(_._3), sorted.map(_._3).sum)
+        }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), dvFilesSchema)
+    } else
+      dvRuns(spark, dvs).groupBy(col("fp").as("__dv_fp"))
+        .agg(sort_array(collect_list(struct(col("start"), col("len"))))
+          .as("__rs"), sum(col("len")).as("__dv_n"))
+        .select(col("__dv_fp"), col("__rs.start").as("__dv_starts"),
+          col("__rs.len").as("__dv_lens"), col("__dv_n"))
+
+  /** [[dvFiles]] of a snapshot's deletion vectors. */
+  private[graft] def dvFiles(spark: SparkSession, m: Manifest): DataFrame =
+    dvFiles(spark, m.dvs, m.dvRunCounts)
+
+  private val dvFilesSchema = StructType.fromDDL("__dv_fp STRING, " +
+    "__dv_starts ARRAY<BIGINT>, __dv_lens ARRAY<BIGINT>, __dv_n BIGINT")
 
   // ------------------------------------------------------- file stats
 
@@ -2085,17 +2124,9 @@ object CowTable {
             keep.as("__keep"),
             (col("numRows").isNotNull &&
               coalesce(full, lit(false))).as("__full"))
-        val dvAdj =
-          if (m.dvs.isEmpty) classified.withColumn("__dv", lit(0L))
-          else classified.join(
-            dvRuns(spark, m.dvs)
-              .groupBy(col("fp").as("__dvp"))
-              .agg(sum(col("len")).as("__dv")),
-            normalizeSql(col("path")) === col("__dvp"), "left")
-            .withColumn("__dv", coalesce(col("__dv"), lit(0L)))
-        // ONE job: counts + DV-adjusted metadata total + the boundary
-        // files' paths (bounded — they get scanned anyway)
-        val agg = dvAdj.agg(
+        // ONE aggregate: counts + DV-adjusted metadata total + the
+        // boundary files' paths (bounded — they get scanned anyway)
+        val agg = withDeletedRows(spark, classified, m).agg(
           sum(when(col("__full"), lit(1)).otherwise(lit(0))).as("nfull"),
           sum(when(col("__full"), col("numRows") - col("__dv"))
             .otherwise(lit(0L))).as("meta"),
@@ -2131,23 +2162,24 @@ object CowTable {
       m: Manifest): Option[Long] = {
     if (!m.dataNonEmpty) return Some(0L)
     val data = entriesDF(spark, table, m).filter(col("kind") === "data")
-    // DV fp keys may reference REPLACED files (carried inert) — the
-    // left join keys deletions to LIVE data entries only, mirroring
-    // every other DV consumer
-    val dvAdj =
-      if (m.dvs.isEmpty) data.withColumn("__dv", lit(0L))
-      else data.join(
-        dvRuns(spark, m.dvs).groupBy(col("fp").as("__dvp"))
-          .agg(sum(col("len")).as("__dv")),
-        normalizeSql(col("path")) === col("__dvp"), "left")
-        .withColumn("__dv", coalesce(col("__dv"), lit(0L)))
-    val r = dvAdj.agg(
+    val r = withDeletedRows(spark, data, m).agg(
       sum(when(col("numRows").isNull || col("numRows") < 0L, 1L)
         .otherwise(0L)).as("unproven"),
       sum(col("numRows") - col("__dv")).as("live")).head()
     if (r.isNullAt(0) || r.getLong(0) > 0L) None
     else Some(if (r.isNullAt(1)) 0L else r.getLong(1))
   }
+
+  /** `entries` (data entries with their sidecar `path`) plus `__dv`,
+    * each file's deleted-row count from [[dvFiles]] (0 without one).
+    * DV paths may reference REPLACED files (carried inert) — the left
+    * join keys deletions to LIVE data entries only. */
+  private def withDeletedRows(spark: SparkSession, entries: DataFrame,
+      m: Manifest): DataFrame =
+    if (m.dvs.isEmpty) entries.withColumn("__dv", lit(0L))
+    else entries.join(dvFiles(spark, m).select("__dv_fp", "__dv_n"),
+        normalizeSql(col("path")) === col("__dv_fp"), "left")
+      .withColumn("__dv", coalesce(col("__dv_n"), lit(0L)))
 
   /** Columns with per-file min/max stats in this manifest's schema —
     * the set the DSv2 aggregate pushdown may answer MIN/MAX for
@@ -2223,18 +2255,11 @@ object CowTable {
       .withColumn("__keep", keep)
       .withColumn("__full",
         col("numRows").isNotNull && coalesce(full, lit(false)))
-    val withDv =
-      if (m.dvs.isEmpty) base.withColumn("__hasdv", lit(false))
-      else base.join(
-        dvRuns(spark, m.dvs)
-          .select(col("fp").as("__dvp")).distinct(),
-        normalizeSql(col("path")) === col("__dvp"), "left")
-        .withColumn("__hasdv", col("__dvp").isNotNull)
     val stat = col("__st").getField(valueCol)
       .getField(if (isMin) "min" else "max")
-    val e = withDv.withColumn("__stat", stat)
+    val e = withDeletedRows(spark, base, m).withColumn("__stat", stat)
       .withColumn("__meta", col("__keep") && col("__full") &&
-        !col("__hasdv") && stat.isNotNull)
+        col("__dv") === 0L && stat.isNotNull)
     // ONE job: the metadata candidate + counts + the kept-non-meta
     // files' (path, stat) pairs — bounded (boundary + DV'd files; they
     // are scan candidates by definition). The stat bound is then
@@ -2696,18 +2721,20 @@ object CowTable {
     if (df.columns.contains("_metadata")) df.drop("_metadata") else df
 
   /** DV-aware snapshot read: scan the data files and drop deleted row
-    * positions PER FILE — a left join against the packed per-file run
-    * arrays (one row per DV'd file, broadcast at O(total runs)) probed
-    * by the codegen'd binary-search [[graft.functions.DvRunsContain]]
-    * on `_metadata.row_index` (a PUBLIC Spark metadata column: the
-    * row's stable position within its parquet file), so the positional
+    * positions PER FILE ([[applyDvFilter]]) — a left join against the
+    * one DV reader's rows ([[dvFiles]]: one per DV'd file, read on the
+    * driver as a LocalRelation at or under [[SmallSidecarEntries]] runs,
+    * a columnar aggregate above; broadcast at O(total runs)) probed by
+    * the codegen'd binary-search [[graft.functions.DvRunsContain]] on
+    * `_metadata.row_index` (a PUBLIC Spark metadata column: the row's
+    * stable position within its parquet file), so the positional
     * delete needs no key or schema requirement on the table and
     * never builds state proportional to the number of deleted ROWS —
     * only to the number of runs, and past [[DvBroadcastRunsConf]] runs
     * it becomes a shuffled range anti-join (spillable, executor-side).
     * Restricting the scan to `onlyFiles` keeps the same semantics on a
-    * file subset: packed rows for files outside the subset simply
-    * never match. */
+    * file subset: DV rows for files outside the subset simply never
+    * match. */
   private def readSnapshot(spark: SparkSession, m: Manifest,
       onlyFiles: Option[Seq[String]] = None): DataFrame = {
     val files = onlyFiles.getOrElse(m.files)
@@ -2766,10 +2793,9 @@ object CowTable {
       s"cow table $table does not exist"))
     if (m.dvs.isEmpty || !m.dataNonEmpty)
       return (m.files, Nil, RowGroupReport(0, 0, 0, 0L))
-    val dv = dvRuns(spark, m.dvs)
-    val dvFiles = dv.select("fp").distinct()
-      .collect().map(_.getString(0)).toSet
-    val (dvd, clean) = m.files.partition(f => dvFiles.contains(normalize(f)))
+    val dv = dvFiles(spark, m)
+    val dvTargetN = dv.select("__dv_fp").collect().map(_.getString(0)).toSet
+    val (dvd, clean) = m.files.partition(f => dvTargetN.contains(normalize(f)))
     val groups = dvd.flatMap(f => rowGroupsOf(spark, f))
     // per-group deletion counts from run overlaps (runs are disjoint,
     // so summed overlap lengths are exact): one broadcast join,
@@ -2777,7 +2803,9 @@ object CowTable {
     val gdf = spark.createDataFrame(groups.map(g =>
       (normalize(g.path), g.idx, g.startRow, g.nRows)))
       .toDF("gp", "gidx", "gstart", "gn")
-    val dead = dv.withColumnRenamed("fp", "gp")
+    val dead = dv.select(col("__dv_fp"),
+        inline(arrays_zip(col("__dv_starts"), col("__dv_lens"))))
+      .toDF("gp", "start", "len")
       .join(broadcast(gdf), Seq("gp"))
       .withColumn("__ov",
         least(col("start") + col("len"), col("gstart") + col("gn")) -
@@ -3161,22 +3189,17 @@ object CowTable {
     val cand = raw.filter(cond)
       .select(col("_metadata.file_path").as("file_path"),
         col("_metadata.row_index").as("row_index"))
-    // reserved __dv_ names on the runs side: a user column named fp/
-    // start/len must never make this join ambiguous
     val fresh =
       if (m.dvs.isEmpty) cand
-      else cand.join(dvRunsReserved(spark, m.dvs),
-        normalizeSql(col("file_path")) === col("__dv_fp") &&
-          col("row_index") >= col("__dv_start") &&
-          col("row_index") < col("__dv_start") + col("__dv_len"),
-        "left_anti")
-    val dvFiles = writeDvs(spark, table, m.version + 1, fresh)
-    if (dvFiles.isEmpty) return m
+      else applyDvFilter(spark, cand, m, normalizeSql(col("file_path")),
+        col("row_index"))
+    val written = writeDvs(spark, table, m.version + 1, fresh)
+    if (written.isEmpty) return m
     // Snapshot isolation (the Delta "WriteSerializable" stance): the
     // delete applies to the rows that existed in ITS snapshot, so
     // concurrent appends and disjoint-file writers rebase; anything
     // that moved or re-deleted the rows this DV references throws.
-    rowLevelCommit(spark, "deleteWhere", table, m, addedDvs = dvFiles)
+    rowLevelCommit(spark, "deleteWhere", table, m, addedDvs = written)
   }
 
   // ------------------------------------------------- DSv2 commit hooks
@@ -3217,21 +3240,13 @@ object CowTable {
     StructField("len", LongType)))
 
   /** DV runs of `dvPaths` with normalized file identity:
-    * `(fp, start, len)`. */
+    * `(fp, start, len)` — a columnar scan, read only by [[dvFiles]]'
+    * columnar branch and [[applyDvFilter]]'s range anti-join. */
   private[graft] def dvRuns(spark: SparkSession,
       dvPaths: Seq[String]): DataFrame =
     spark.read.schema(dvSchema).parquet(dvPaths: _*)
       .select(normalizeSql(col("file_path")).as("fp"), col("start"),
         col("len"))
-
-  /** [[dvRuns]] under RESERVED `__dv_`-prefixed names — the side a
-    * join against user-schema rows must use (a table column named
-    * `fp`, `start`, or `len` would otherwise make the condition
-    * ambiguous and throw on every delete/read). */
-  private[graft] def dvRunsReserved(spark: SparkSession,
-      dvPaths: Seq[String]): DataFrame =
-    dvRuns(spark, dvPaths).select(col("fp").as("__dv_fp"),
-      col("start").as("__dv_start"), col("len").as("__dv_len"))
 
   /** Run-length encode distinct `(file_path, row_index)` identities
     * into the sidecar's `(file_path, start, len)` runs — the classic
@@ -3245,19 +3260,6 @@ object CowTable {
       .agg(min("row_index").as("start"), count(lit(1)).as("len"))
       .select("file_path", "start", "len")
   }
-
-  /** Per-file packed DV runs: ONE row per DV'd data file with sorted
-    * `starts`/`lens` arrays — what a snapshot read broadcasts
-    * (O(total runs) longs, never O(deleted rows)) and probes with the
-    * codegen'd binary-search [[graft.functions.DvRunsContain]]. */
-  private[graft] def dvPacked(spark: SparkSession,
-      dvPaths: Seq[String]): DataFrame =
-    dvRuns(spark, dvPaths)
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(struct(col("start"), col("len"))))
-        .as("__rs"))
-      .select(col("fp").as("__dv_fp"), col("__rs.start").as("__dv_starts"),
-        col("__rs.len").as("__dv_lens"))
 
   /** Session conf: max total DV runs a snapshot read will broadcast as
     * packed per-file arrays; beyond it the read falls back to a
@@ -3275,53 +3277,52 @@ object CowTable {
   private[graft] val driverDvFootersRead =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Total DV runs across `dvPaths`, from parquet footers alone
-    * (driver-side, one footer per sidecar file — a delta-sized set).
-    * COMMIT-TIME machinery only: the count lands in the manifest's
-    * `dv:<runs>:<path>` line, so the read path never opens a footer. */
-  private[graft] def dvRunCount(spark: SparkSession,
-      dvPaths: Seq[String]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    driverDvFootersRead.addAndGet(dvPaths.size.toLong)
-    dvPaths.map(p => Tables.withFooter(conf, p) { r =>
-      val bs = r.getFooter.getBlocks
-      var s = 0L
-      var i = 0
-      while (i < bs.size()) { s += bs.get(i).getRowCount; i += 1 }
-      s
-    }).sum
+  /** DV runs in the sidecar `dvPath`, from its parquet footer alone
+    * (driver-side). COMMIT-TIME machinery only: the count lands in the
+    * manifest's `dv:<runs>:<path>` line, so the read path never opens
+    * a footer. */
+  private[graft] def dvRunCount(spark: SparkSession, dvPath: String): Long = {
+    driverDvFootersRead.incrementAndGet()
+    Tables.withFooter(spark.sparkContext.hadoopConfiguration, dvPath)(
+      _.getRecordCount)
   }
 
-  /** Apply deletion vectors to `df` executor-side: left-join the packed
-    * per-file run arrays (broadcast when the total run count is under
-    * [[DvBroadcastRunsConf]]) and drop rows whose `riCol` falls in a
-    * run — binary search per row, inside whole-stage codegen. The
-    * fallback beyond the threshold is a shuffled range anti-join: still
-    * executor-side, no broadcast proportional to the delete set.
-    * `fpCol` must already be normalized. The broadcast decision reads
-    * the run counts RECORDED IN THE MANIFEST — no footer is opened on
-    * the read path. */
+  /** Apply deletion vectors to `df` executor-side. Up to
+    * [[DvBroadcastRunsConf]] total runs, `df` left-joins the broadcast
+    * [[dvFiles]] rows (one per DV'd file: a LocalRelation read on the
+    * driver at or under [[SmallSidecarEntries]] runs, a columnar
+    * aggregate above) and drops rows whose `riCol` falls in a run —
+    * binary search per row, inside whole-stage codegen. Past that
+    * budget it is a shuffled range anti-join against the raw runs:
+    * still executor-side, no broadcast proportional to the delete set.
+    * `fpCol` must already be normalized. Both decisions read the run
+    * counts RECORDED IN THE MANIFEST — no footer is opened on the read
+    * path. The probe column carries the DV file set in its metadata
+    * ([[DvFilesMetaKey]]): the MV rewrite reads a DV-applied scan's
+    * snapshot identity from it. */
   private[graft] def applyDvFilter(spark: SparkSession, df: DataFrame,
       m: Manifest, fpCol: Column, riCol: Column): DataFrame = {
-    val dvPaths = m.dvs
     val limit = spark.conf.getOption(DvBroadcastRunsConf)
       .map(_.toLong).getOrElse(DvBroadcastRunsDefault)
+    val probed = df.withColumn("__dv_probe_fp", fpCol.as("__dv_probe_fp",
+      new MetadataBuilder().putStringArray(DvFilesMetaKey, m.dvs.toArray)
+        .build()))
     if (m.dvs.map(m.dvRunCounts).sum <= limit)
-      df.withColumn("__dv_probe_fp", fpCol)
-        .join(broadcast(dvPacked(spark, dvPaths)),
+      probed.join(broadcast(dvFiles(spark, m)),
           col("__dv_probe_fp") === col("__dv_fp"), "left")
         .filter(!graft.functions.DvRunsContain(
           col("__dv_starts"), col("__dv_lens"), riCol))
-        .drop("__dv_probe_fp", "__dv_fp", "__dv_starts", "__dv_lens")
+        .drop("__dv_probe_fp", "__dv_fp", "__dv_starts", "__dv_lens",
+          "__dv_n")
     else {
-      // probe columns materialize on the left FIRST: the runs side is
+      // the row index materializes on the left FIRST: the runs side is
       // itself a parquet scan, so a raw `_metadata` reference in the
       // join condition would be ambiguous between the two scans. The
-      // runs side rides under reserved __dv_ names so user columns
-      // named fp/start/len can't collide either.
-      val runs = dvRunsReserved(spark, dvPaths)
-      df.withColumn("__dv_probe_fp", fpCol)
-        .withColumn("__dv_probe_ri", riCol)
+      // runs ride under reserved __dv_ names so user columns named
+      // fp/start/len can't collide either.
+      val runs = dvRuns(spark, m.dvs).select(col("fp").as("__dv_fp"),
+        col("start").as("__dv_start"), col("len").as("__dv_len"))
+      probed.withColumn("__dv_probe_ri", riCol)
         .join(runs,
           col("__dv_probe_fp") === col("__dv_fp") &&
             col("__dv_probe_ri") >= col("__dv_start") &&
@@ -3330,6 +3331,10 @@ object CowTable {
         .drop("__dv_probe_fp", "__dv_probe_ri")
     }
   }
+
+  /** Metadata key of [[applyDvFilter]]'s probe column: the snapshot's
+    * DV file paths. */
+  private[graft] val DvFilesMetaKey = "graft.dvFiles"
 
   /** (bytes, numRows) per NORMALIZED path for the given planned data
     * files — the scan-planning/statistics lookup of the DSv2 table.
@@ -3348,24 +3353,6 @@ object CowTable {
         (if (r.isNullAt(1)) -1L else r.getLong(1)),
         (if (r.isNullAt(2)) -1L else r.getLong(2))))
       .toMap
-  }
-
-  /** Deleted-row RUNS per NORMALIZED data-file path — sorted parallel
-    * `(starts, lens)` arrays, restricted to `files` — the DV side a
-    * DSv2 partition reader probes executor-side with a binary search.
-    * Driver-resident at O(#runs), never O(#deleted rows): a dense
-    * retention delete is a handful of longs per file. */
-  private[graft] def dvRunArrays(spark: SparkSession, m: Manifest,
-      files: Seq[String]): Map[String, (Array[Long], Array[Long])] = {
-    if (m.dvs.isEmpty || files.isEmpty) return Map.empty
-    val norm = files.map(normalize)
-    dvRuns(spark, m.dvs)
-      .filter(col("fp").isInCollection(norm))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (fp, rows) =>
-        val runs = rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-        fp -> (runs.map(_._1), runs.map(_._2)) }
   }
 
   /** The committer of every operation that rewrites rows or files:
@@ -3409,9 +3396,13 @@ object CowTable {
       refuseAddedData: Boolean = false): Manifest = {
     val removedN = removed.map(normalize).toSet
     val retired = retiredDvs.toSet
+    // fresh DV files get their run counts from one footer read each,
+    // shared by the conflict set and every commit attempt
+    val addedRuns = addedDvs.map(p => p -> dvRunCount(spark, p)).toMap
     lazy val dvTargetN: Set[String] =
       if (addedDvs.isEmpty) Set.empty
-      else dvTargets(spark, addedDvs) -- dvTargets(spark, retiredDvs)
+      else dvTargets(spark, addedDvs, addedRuns) --
+        dvTargets(spark, retiredDvs, base.dvRunCounts)
     def validate(h: Manifest): Unit = standardRebaseValidate(spark, op,
       table, base, removedN, dvTargetN, srcKeys, refuseAddedData)(h)
     def attempt(h: Manifest): Manifest = {
@@ -3424,7 +3415,7 @@ object CowTable {
         else !normalizeSql(col("path")).isInCollection(removedN.toSeq))
       commitWithStatsDF(spark, table, h.version + 1, carried, addedData,
         schema, h.dvs.filterNot(retired) ++ addedDvs, h.partitionCols,
-        knownDvRuns = h.dvRunCounts,
+        knownDvRuns = h.dvRunCounts ++ addedRuns,
         carriedSeq =
           if (addedData.nonEmpty) None
           else smallEntries(spark, table, h).map(_.filter(e =>
@@ -3577,13 +3568,10 @@ object CowTable {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
       s"cow table $table does not exist"))
     if (m.dvs.isEmpty) return m
-    // per-file dead counts: one DV-run aggregate, delta-sized by
-    // contract (runs are disjoint, so summed lengths are exact)
-    val dead = dvRuns(spark, m.dvs)
-      .groupBy(col("fp"))
-      .agg(sum(col("len")).as("ndead"))
+    // per-file dead counts: a projection of the DV reader
+    val dead = dvFiles(spark, m).select("__dv_fp", "__dv_n")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // dead's keys are normalized (dvRuns) and MUST intersect the LIVE
+    // dead's keys are normalized (dvFiles) and MUST intersect the LIVE
     // file set: DV entries for files a later merge already replaced are
     // carried inert (they can never match again), and rewriting those
     // paths would resurrect replaced generations. The membership probe
@@ -4067,7 +4055,7 @@ object CowTable {
     val tail = smalls.map(_._1)
     val newFiles = writeTail(m, readSnapshot(spark, m, Some(tail)), n,
       m.version + 1)
-    val keptTargets = dvTargets(spark, m.dvs) -- tail
+    val keptTargets = dvTargets(spark, m.dvs, m.dvRunCounts) -- tail
     val retired =
       if (entriesLiveAmong(spark, table, m, keptTargets.toSeq).isEmpty) m.dvs
       else Nil
@@ -4355,64 +4343,48 @@ object CowTable {
     // manifest paths on both sides originate from listPartFiles, so
     // raw string equality is the anti-join key; only DV-recorded
     // identities (URIs from _metadata.file_path) need normalization
-    def side(m: Manifest, kind: String): DataFrame =
-      entriesDF(spark, table, m).filter(col("kind") === kind).select("path")
-    // LIMIT cap+1 bounds the driver collect BEFORE it happens (one
-    // job, no pre-count); crossing the cap is diagnosed, never OOM'd
-    def changed(df: DataFrame, what: String): Seq[String] = {
-      val rows = df.limit(maxChangedFilesPerSlice + 1).collect()
-      if (rows.length > maxChangedFilesPerSlice)
-        throw new IllegalStateException(
-          s"tableChanges $table v$fromV..v$toV: more than " +
-            s"$maxChangedFilesPerSlice $what files changed — this " +
-            "version pair spans a table rewrite (compaction/" +
-            "re-clustering), not a delta; read the snapshots directly " +
-            "or split the range at the rewrite version")
-      rows.map(_.getString(0)).toSeq
-    }
+    def dataPaths(m: Manifest): DataFrame =
+      entriesDF(spark, table, m).filter(col("kind") === "data").select("path")
+    // crossing the cap is diagnosed, never OOM'd
+    def capped(paths: Seq[String], what: String): Seq[String] =
+      if (paths.length <= maxChangedFilesPerSlice) paths
+      else throw new IllegalStateException(
+        s"tableChanges $table v$fromV..v$toV: more than " +
+          s"$maxChangedFilesPerSlice $what files changed — this " +
+          "version pair spans a table rewrite (compaction/" +
+          "re-clustering), not a delta; read the snapshots directly " +
+          "or split the range at the rewrite version")
     // small sidecars (both sides driver-cached/affordable — the same
-    // size gate as entriesDF's LocalRelation path) answer the three
-    // file-set diffs with driver set algebra: ZERO jobs, where the
-    // anti-join formulation paid three collect jobs PER SLICE — on a
-    // replayed feed that's three jobs per micro-batch. Large sidecars
-    // keep the distributed anti-joins (the 10⁶-file discipline).
-    val (remF, addF, dvNew) = (smallEntries(spark, table, fm),
+    // size gate as entriesDF's LocalRelation path) answer the two
+    // data-file diffs with driver set algebra: ZERO jobs, where the
+    // anti-join formulation paid two collect jobs PER SLICE — on a
+    // replayed feed that's two jobs per micro-batch. Large sidecars
+    // keep the distributed anti-joins (the 10⁶-file discipline), and
+    // LIMIT cap+1 bounds their collect BEFORE it happens.
+    val (remF, addF) = (smallEntries(spark, table, fm),
         smallEntries(spark, table, tm)) match {
       case (Some(fe), Some(te)) =>
-        def ps(es: Seq[FileEntry], kind: String): Seq[String] =
-          es.collect { case e if e.kind == kind => e.path }
-        def diff(a: Seq[String], b: Seq[String], what: String): Seq[String] = {
-          val bs = b.toSet
-          val d = a.filterNot(bs)
-          if (d.length > maxChangedFilesPerSlice)
-            throw new IllegalStateException(
-              s"tableChanges $table v$fromV..v$toV: more than " +
-                s"$maxChangedFilesPerSlice $what files changed — this " +
-                "version pair spans a table rewrite (compaction/" +
-                "re-clustering), not a delta; read the snapshots directly " +
-                "or split the range at the rewrite version")
-          d
-        }
-        val (fd, td) = (ps(fe, "data"), ps(te, "data"))
-        (diff(fd, td, "removed"), diff(td, fd, "added"),
-          diff(ps(te, "dv"), ps(fe, "dv"), "deletion-vector"))
+        def ps(es: Seq[FileEntry]): Seq[String] =
+          es.collect { case e if e.kind == "data" => e.path }
+        val (fd, td) = (ps(fe), ps(te))
+        (capped(fd.filterNot(td.toSet), "removed"),
+          capped(td.filterNot(fd.toSet), "added"))
       case _ =>
-        (changed(side(fm, "data")
-          .join(side(tm, "data"), Seq("path"), "left_anti"), "removed"),
-        changed(side(tm, "data")
-          .join(side(fm, "data"), Seq("path"), "left_anti"), "added"),
-        changed(side(tm, "dv")
-          .join(side(fm, "dv"), Seq("path"), "left_anti"), "deletion-vector"))
+        def changed(a: Manifest, b: Manifest, what: String): Seq[String] =
+          capped(dataPaths(a).join(dataPaths(b), Seq("path"), "left_anti")
+            .limit(maxChangedFilesPerSlice + 1).collect()
+            .map(_.getString(0)).toSeq, what)
+        (changed(fm, tm, "removed"), changed(tm, fm, "added"))
     }
+    // the manifests list their DV files: the new ones are a driver diff
+    val dvNew = tm.dvs.filterNot(fm.dvs.toSet)
     val dvAffected: Seq[String] =
       if (dvNew.isEmpty) Nil
       else {
         // the touched set is DV-derived (delta-sized); membership in
         // BOTH versions checks against the sidecars, so neither side's
         // full file list ever materializes
-        val touched = spark.read.schema(dvSchema).parquet(dvNew: _*)
-          .select("file_path").distinct()
-          .collect().map(r => normalize(r.getString(0))).toSeq
+        val touched = dvTargets(spark, dvNew, tm.dvRunCounts).toSeq
         val inBoth = entriesLiveAmong(spark, table, tm, touched)
           .intersect(entriesLiveAmong(spark, table, fm, touched))
         touched.filter(inBoth.contains).sorted
@@ -4600,10 +4572,8 @@ object CowTable {
       denseFraction = 0.25)
     val keptN = m1.files.map(normalize).toSet
     val rewritten = m0.files.count(f => !keptN.contains(normalize(f)))
-    val newDvs = m1.dvs.filterNot(m0.dvs.toSet)
-    val morFiles =
-      if (newDvs.isEmpty) 0L
-      else dvRuns(s, newDvs).select("fp").distinct().count()
+    val morFiles = dvTargets(s, m1.dvs.filterNot(m0.dvs.toSet),
+      m1.dvRunCounts).size.toLong
     read(s, table)
       .agg(count(lit(1)).as("n"),
         count_distinct($"o_orderkey").as("n_keys"),
@@ -5548,14 +5518,11 @@ object CowTable {
     val afterN = after.files.map(normalize).toSet
     val rewritten = before.files.count(f => !afterN.contains(normalize(f)))
     require(after.dvs.nonEmpty, "below-threshold files must keep DV entries")
-    val keptDvFiles = dvRuns(s, after.dvs)
-      .select("fp").distinct().count()
-    val remainingDead = dvRuns(s, after.dvs)
-      .agg(sum(col("len"))).head().getLong(0)
+    val kept = dvFiles(s, after).agg(count(lit(1)), sum(col("__dv_n"))).head()
     read(s, table).agg(count(lit(1)).as("n"))
       .withColumn("n_rewritten", lit(rewritten.toLong))
-      .withColumn("n_kept_dv", lit(keptDvFiles))
-      .withColumn("remaining_dead", lit(remainingDead))
+      .withColumn("n_kept_dv", lit(kept.getLong(0)))
+      .withColumn("remaining_dead", lit(kept.getLong(1)))
   }
 
   val lhDvMaintSql: String =

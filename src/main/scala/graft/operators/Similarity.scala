@@ -216,13 +216,14 @@ object Similarity {
 
   /** Nearest-centroid id by dot product (vectors are unit-normalized, so
     * dot ranks like cosine for the ASSIGNMENT step where only the query
-    * side is unit). Centroids are plan-time literals: K codegen'd VecDot
-    * calls + a `greatest` over (score, cell) structs, ties to the higher
-    * cell id — no join, no shuffle, scan-parallel. */
+    * side is unit). Centroids are a plan-time literal: one codegen'd
+    * [[graft.functions.NearestCentroid]] call runs the K dot products,
+    * ties to the higher cell id (the order of a `greatest` over
+    * (score, cell) structs, in a few bytes of generated code) — no
+    * join, no shuffle, scan-parallel. */
   def assignCell(vec: Column, cents: Seq[Array[Double]]): Column =
-    greatest(cents.zipWithIndex.map { case (c, i) =>
-      struct(dot(vec, typedLit(c)).as("d"), lit(i).as("c"))
-    }: _*).getField("c")
+    graft.functions.VectorFunctions.nearest_centroid(vec,
+      typedLit(cents.map(_.toSeq)))
 
   /** Deterministic hash-sample for centroid training: at corpus scale
     * the Lloyd rounds must not scan 100 TB five times — k-means cell

@@ -681,7 +681,13 @@ private[plans] class CowBatchScan(table: CowDsv2Table,
     val files = currentFiles
     plannedFiles = files
     val meta = CowTable.dataFileMeta(spark, table.tablePath, m, files)
-    val dvs = CowTable.dvRunArrays(spark, m, files)
+    // each planned file's sorted runs: a projection of the DV reader
+    val dvs = CowTable.dvFiles(spark, m)
+      .filter(col("__dv_fp").isInCollection(
+        files.map(CowTable.normalizePath)))
+      .collect()
+      .map(r => r.getString(0) ->
+        (r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray)).toMap
     val buckets: Map[String, Int] =
       if (required.fieldNames.contains(
           m.bucketSpec.map(_._1).getOrElse("")))

@@ -13,6 +13,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.operators.CowTable
+
 /** Transparent materialized-view rewrite — the optimizer-rule extension
   * point (`injectOptimizerRule` / `experimental.extraOptimizations`),
   * complementing graft's custom expressions, TVF, and planner strategy.
@@ -204,49 +206,29 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** The file paths of a bare parquet relation. */
-  private def rootPathsOf(rel: LogicalRelation): Option[Seq[String]] =
-    rel.relation match {
-      case fs: HadoopFsRelation => Some(fs.location.rootPaths.map(_.toString))
-      case _ => None
-    }
-
   /** Match the DATA side of a DV-applied snapshot read: the projection
     * [[graft.operators.CowTable]]'s read path plants over the data scan
     * (data attrs + the `__dv_probe_fp` pathnorm alias + the row-index
-    * extract). The marker alias is the recognizer; data attributes pass
-    * through untouched, so the aggregate above still references the
-    * relation's own output. */
+    * extract). The marker alias is the recognizer, and its metadata
+    * carries the snapshot's DV file set — the runs side may be a
+    * driver-built LocalRelation with no paths of its own. Data
+    * attributes pass through untouched, so the aggregate above still
+    * references the relation's own output. */
   private def dvDataSide(plan: LogicalPlan):
-      Option[(LogicalRelation, Seq[Expression])] =
+      Option[(LogicalRelation, Seq[Expression], Seq[String])] = {
+    def dvFiles(pl: Seq[NamedExpression]): Option[Seq[String]] =
+      pl.collectFirst {
+        case a: Alias if a.name == "__dv_probe_fp" &&
+            a.metadata.contains(CowTable.DvFilesMetaKey) =>
+          a.metadata.getStringArray(CowTable.DvFilesMetaKey).toSeq
+      }
     plan match {
-      case Project(pl, rel: LogicalRelation)
-          if pl.exists(_.name == "__dv_probe_fp") => Some((rel, Nil))
+      case Project(pl, rel: LogicalRelation) =>
+        dvFiles(pl).map((rel, Nil, _))
       // a user predicate pushed below the DV join lands between the
       // probe projection and the scan — capture it as a filter
-      case Project(pl, Filter(c, rel: LogicalRelation))
-          if pl.exists(_.name == "__dv_probe_fp") =>
-        Some((rel, splitConjunctivePredicates(c)))
-      case _ => None
-    }
-
-  /** Match the RUNS side: the packed per-file DV-run aggregate over the
-    * sidecar parquet scan; returns the DV file paths. */
-  private def dvRunsSide(plan: LogicalPlan): Option[Seq[String]] = {
-    def descend(p: LogicalPlan): Option[Seq[String]] = p match {
-      case Project(_, child) => descend(child)
-      case Aggregate(_, _, child, _) => descend(child)
-      case Filter(_, child) => descend(child)
-      case rel: LogicalRelation => rootPathsOf(rel)
-      case other =>
-        // analyzed-plan hints survive until the optimizer strips them
-        other.children match {
-          case Seq(one) => descend(one)
-          case _ => None
-        }
-    }
-    plan match {
-      case Project(pl, _) if pl.exists(_.name == "__dv_fp") => descend(plan)
+      case Project(pl, Filter(c, rel: LogicalRelation)) =>
+        dvFiles(pl).map((rel, splitConjunctivePredicates(c), _))
       case _ => None
     }
   }
@@ -256,7 +238,7 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     * computed in between makes the shape unrecognizable. ONE shape of
     * computed subtree IS recognized: the DV-application pattern the CoW
     * read path plants (NOT dvrunscontain(...) over a left-outer join of
-    * the data scan against the packed-runs aggregate) — it returns the
+    * the data scan against the per-file DV runs) — it returns the
     * data relation plus the DV file set, so a DV-adjusted MV can serve
     * aggregates over a merge-on-read snapshot without a rewriteDeletes
     * pass. */
@@ -272,11 +254,9 @@ object MvRewriteRule extends Rule[LogicalPlan] {
           case _ => false
         }
         child match {
-          case Join(l, r, LeftOuter, _, _) if dvc.nonEmpty =>
-            for {
-              (dataRel, pushed) <- dvDataSide(l)
-              dvs <- dvRunsSide(r)
-            } yield (filters ++ rest ++ pushed, dataRel, Some(dvs))
+          case Join(l, _, LeftOuter, _, _) if dvc.nonEmpty =>
+            for ((dataRel, pushed, dvs) <- dvDataSide(l))
+              yield (filters ++ rest ++ pushed, dataRel, Some(dvs))
           case _ if dvc.isEmpty => stripToScan(child, filters ++ rest)
           case _ => None
         }

@@ -57,4 +57,34 @@ class VectorExpressionsSpec extends AnyFunSuite {
       df.select(vec_dot($"a", $"b")).head()
     }
   }
+
+  test("nearest_centroid picks what greatest(struct(dot, i)) picks, on both eval paths") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // 16 centroids with duplicate rows (exact ties) and a signed zero
+    val base = Seq.fill(12)(Array.fill(8)(rnd.nextGaussian() * 0.3))
+    val cents = (base ++ Seq(base(3), base(7), Array.fill(8)(0.0),
+      Array.fill(8)(-0.0))).toIndexedSeq
+    val vecs = Seq.fill(300)(Array.fill(8)(rnd.nextGaussian().toFloat)) ++
+      Seq(Array.fill(8)(0.0f), Array(Float.NaN) ++ Array.fill(7)(1.0f), null)
+    val df = vecs.map(Tuple1(_)).toDF("v")
+    val viaGreatest = greatest(cents.zipWithIndex.map { case (c, i) =>
+      struct(vec_dot($"v", typedLit(c)).as("d"), lit(i).as("c"))
+    }: _*).getField("c")
+    val viaNearest = VectorFunctions.nearest_centroid($"v",
+      typedLit(cents.map(_.toSeq)))
+    def pairs(): Seq[(Int, Int)] =
+      df.select(viaGreatest, viaNearest).collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    val gen = pairs()
+    assert(gen.forall { case (a, b) => a == b }, gen.filter(p => p._1 != p._2))
+    // interpreted: no whole-stage codegen, no codegen'd projections
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assert(pairs() == gen)
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
 }

@@ -60,8 +60,8 @@ class CowDvCompressSpec extends AnyFunSuite {
     assert(runs.length == 2, s"expected 2 runs, got ${runs.toSeq}")
     assert(runs.map(_.getLong(runs.head.fieldIndex("len"))).sorted.toSeq
       == Seq(50L, 100L))
-    // the packed broadcast side is one row per DV'd FILE
-    assert(CowTable.dvPacked(spark, m.dvs).count() == 2L)
+    // the DV reader (the broadcast side) is one row per DV'd FILE
+    assert(CowTable.dvFiles(spark, m).count() == 2L)
     // Scala read path (packed broadcast + binary-search probe)
     val got = CowTable.read(spark, t).select("id").collect()
       .map(_.getLong(0)).sorted
@@ -155,8 +155,9 @@ class CowDvCompressSpec extends AnyFunSuite {
     CowTable.deleteWhere(spark, t, $"id" >= 100L && $"id" < 105L)
     val m = CowTable.latestManifest(t).get
     val file2 = m.files.find(_.contains("__f=2")).get
-    val (starts, lens) = CowTable.dvRunArrays(spark, m,
-      Seq(file2))(CowTable.normalizePath(file2))
+    val r = CowTable.dvFiles(spark, m)
+      .filter(col("__dv_fp") === CowTable.normalizePath(file2)).head()
+    val (starts, lens) = (r.getSeq[Long](1), r.getSeq[Long](2))
     assert(starts.toSeq == starts.sorted.toSeq, "starts must be sorted")
     val pos = starts.zip(lens).flatMap { case (s, l) => s until (s + l) }
     // file 2 holds ids 100..199 at positions 0..99

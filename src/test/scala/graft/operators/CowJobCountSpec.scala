@@ -103,11 +103,11 @@ class CowJobCountSpec extends AnyFunSuite {
     CowTable.readManifest(t, 0).files
       .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).min
 
-  pin("compactTable", 10, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTable", 7, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTable(spark, t, targetBytes = 1L << 20,
       smallThreshold = Some(tailThreshold(t))))
 
-  pin("compactTableZorder", 18, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTableZorder", 13, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTableZorder(spark, t, targetBytes = 1L << 20,
       zCols = Seq("id", "v"), smallThreshold = Some(tailThreshold(t))))
 
@@ -119,7 +119,7 @@ class CowJobCountSpec extends AnyFunSuite {
     t
   }
 
-  pin("rewriteDeletes(minDeadFraction = 0.0)", 8, () => withDeletes(),
+  pin("rewriteDeletes(minDeadFraction = 0.0)", 5, () => withDeletes(),
     "the 2-file fixture with deletes")(t => CowTable.rewriteDeletes(spark, t))
 
   pin("rewriteDeletes(minDeadFraction = 0.3)", 9, () => withDeletes(),
@@ -133,4 +133,39 @@ class CowJobCountSpec extends AnyFunSuite {
     CowTable.deleteWhere(spark, t, $"id" < 5L)
     t
   }, "a 4-bucket fixture with a delete")(t => CowTable.rebucketTable(spark, t))
+
+  /** `build`, then one one-row merge: the slice `tableChanges` reads. */
+  private def thenMerge(build: () => String)(): String = {
+    val t = build()
+    CowTable.mergeInto(spark, t, src(Seq(70), "c"), Seq("id"))
+    t
+  }
+
+  /** The read-side DV consumers on `build`'s table. */
+  private def readPins(fixtureName: String, build: () => String)(
+      countWhere: Int, metadataRowCount: Int, minWhere: Int,
+      readWhere: Int, tableChanges: Int): Unit = {
+    pin("countWhere (all files fully matching)", countWhere, build,
+        fixtureName)(t =>
+      assert(CowTable.countWhere(spark, t, $"id" >= 0L) >= 99L))
+    pin("metadataRowCount", metadataRowCount, build, fixtureName)(t =>
+      assert(CowTable.metadataRowCount(spark, t,
+        CowTable.latestManifest(t).get).exists(_ >= 99L)))
+    pin("minWhere", minWhere, build, fixtureName)(t =>
+      assert(CowTable.minWhere(spark, t, "id", $"id" >= 55L).contains(55L)))
+    pin("readWhere(...).collect()", readWhere, build, fixtureName)(t =>
+      assert(CowTable.readWhere(spark, t, $"id" >= 55L).collect()
+        .length >= 44))
+    pin("tableChanges(...).collect() over a one-row merge", tableChanges,
+        thenMerge(build), fixtureName) { t =>
+      val v = CowTable.latestManifest(t).get.version
+      assert(CowTable.tableChanges(spark, t, v - 1, v, Seq("id")).collect()
+        .length == 2)
+    }
+  }
+
+  readPins("the 2-file fixture", () => fixture())(2, 2, 4, 1, 6)
+
+  readPins("the 2-file fixture with a delete", () => withDelete())(
+    3, 3, 6, 2, 8)
 }

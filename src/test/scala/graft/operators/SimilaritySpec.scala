@@ -257,8 +257,20 @@ class SimilaritySpec extends AnyFunSuite {
     // codes: M entries per vector, all in [0, K)
     val codes = emb.select($"vec_id",
       Similarity.pqEncode($"embedding", books).as("codes"))
-    val bad = codes.select(explode($"codes").as("c"))
-      .filter($"c" < 0 || $"c" >= Similarity.PqK).count()
+    // with the codegen fallback off, a whole-stage method past the JVM's
+    // 64 KB limit throws instead of silently falling back: the encode
+    // (under a global count) and the PQ join's shortlist sort must fit
+    val fallback = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val bad = try {
+      assert(Similarity.knnJoinPqOn(emb, Similarity.cachedCentroids(emb, dir),
+        books, Similarity.IvfProbe).count() > 0L)
+      codes.select(explode($"codes").as("c"))
+        .filter($"c" < 0 || $"c" >= Similarity.PqK).count()
+    } finally fallback match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+      case None => spark.conf.unset("spark.sql.codegen.fallback")
+    }
     assert(bad == 0L)
     // deterministic under re-partitioning (scan-side literal dots)
     val a = codes.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
