@@ -20,9 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * (`exists(zip_with(starts, lens, ...), x -> x)`) is a linear walk of
   * every run per data row; this is one binary search, codegen'd, so
   * the DV filter on the hot side of a snapshot read stays inside
-  * whole-stage codegen at O(log #runs) per row. NULL arrays (the
-  * left-join miss for files with no deletes) evaluate FALSE — "not
-  * deleted" — so the surrounding filter needs no coalesce. */
+  * whole-stage codegen at O(log #runs) per row. NULL arrays (a
+  * file with no deletes) evaluate FALSE — "not deleted". */
 case class DvRunsContain(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression {
 

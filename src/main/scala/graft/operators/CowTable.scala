@@ -44,10 +44,12 @@ import graft.Tables
   * parsing. A complete manifest in any other shape is refused loudly
   * ([[parseManifest]]).
   *
-  * Per-file statistics are collected at [[writeData]] time with one
+  * Per-file statistics are collected at commit time — the moral
+  * equivalent of Delta's writer-side stats collection. On a small
+  * table they fold from the just-written files' parquet footers on the
+  * driver; otherwise (or when a footer cannot prove a value) one
   * column-pruned aggregate over the just-written (delta-sized, page-
-  * cached) files, grouped by `_metadata.file_path` — the moral
-  * equivalent of Delta's writer-side stats collection. Carried files
+  * cached) files, grouped by `_metadata.file_path`. Carried files
   * keep their stats entries verbatim across merges/compactions, so a
   * long-lived table never re-scans old data to keep skipping working.
   *
@@ -667,14 +669,13 @@ object CowTable {
     * the manifest format lists them).
     *
     * `carriedSeq`: the carried entries as a driver seq when the caller
-    * already holds them (small sidecars, delta commits) — lets a
-    * DATA-FILE-FREE commit (DV-only delete, metadata evolution, bloom
-    * fold, branch publish) write its sidecar ON THE DRIVER with zero
-    * Spark jobs instead of planning a LocalRelation write job per
-    * commit (guide §5: metadata-sized work stays off the cluster; the
-    * write-side twin of the driver-side sidecar READ), and cache it.
-    * Commits that add data files keep the fused stats-scan +
-    * sidecar-write Spark job. */
+    * already holds them (small sidecars) — lets the commit write its
+    * sidecar ON THE DRIVER with zero Spark jobs ([[driverSidecarRows]]:
+    * the new files' entries fold from their footers) and cache it,
+    * and build the new files' bloom sketches on the driver too
+    * ([[buildBloomSidecar]]); metadata-sized work stays off the
+    * cluster. A new file whose footer cannot prove its stats keeps the
+    * fused stats-scan + sidecar-write Spark job. */
   private def commitWithStatsDF(spark: SparkSession, table: String,
       version: Int, carriedDF: DataFrame, newDataFiles: Seq[String],
       schema: StructType,
@@ -709,10 +710,15 @@ object CowTable {
       .getOrElse(headForBloom.map(_.bloomCols).getOrElse(
         Map.empty[String, BloomColSpec]))
       .filter { case (k, _) => resolveBloomField(commitSchema, k).isDefined }
+    // one footer read per new file, shared with dropEmptyFiles: row
+    // counts, sizes and stats for the driver path below
+    val conf = spark.sparkContext.hadoopConfiguration
+    val facts = newDataFiles.map(f =>
+      Option(writtenFacts.remove(f)).getOrElse(readFooterFacts(conf, f)))
     val newBloomRel =
       if (bloomSpecs.isEmpty || newDataFiles.isEmpty) None
       else buildBloomSidecar(spark, table, version, newDataFiles,
-        bloomSpecs, commitSchema)
+        bloomSpecs, commitSchema, carriedSeq.map(_ => facts.map(_.numRows)))
     val bloomRels = bloomRelsReplace match {
       case Some(rels) => (rels ++ newBloomRel).distinct
       case None => (headForBloom.map(_.bloomRels).getOrElse(Nil) ++
@@ -749,18 +755,13 @@ object CowTable {
     // CONSTRUCTION, whatever dv rows the carry held. dv rows carry only
     // (kind, path) information downstream — every bytes/stats consumer
     // filters kind='data' first — so the rebuild loses nothing.
-    val fastRows: Option[Seq[FileEntry]] =
-      if (newDataFiles.nonEmpty) None
-      else carriedSeq.map(cs =>
-        cs.filterNot(_.kind == "dv") ++ canonDvRows(carriedDvs))
-    fastRows match {
+    driverSidecarRows(spark, carriedSeq, facts, newParts, carriedDvs) match {
       case Some(rows) =>
-        // driver-side sidecar write — zero Spark jobs; rows are
-        // driver-resident by the caller's size gate, and there is no
-        // stats scan to fuse (no new data files)
+        // driver-side sidecar write — zero Spark jobs
         writeSidecarDriver(spark, out, rows)
         cacheEntries(table, rel, rows)
-      case None =>
+      case None => describedJobs(spark, "CowTable.commitWithStatsDF: " +
+          s"stats scan of ${newDataFiles.size} files + sidecar write") {
         val carriedDataDF = carriedDF.filter(col("kind") =!= "dv")
         val withNew =
           if (newDataFiles.isEmpty) carriedDataDF
@@ -776,6 +777,7 @@ object CowTable {
             if (entriesOut.columns.contains(c)) col(c)
             else lit(null).cast("string").as(c)): _*)
           .coalesce(1).write.mode("overwrite").parquet(out.toString)
+      }
     }
     val dvs = carriedDvs
     // the sole data-file list is the just-written sidecar: the entry
@@ -811,29 +813,45 @@ object CowTable {
       partitionCols, dvRunsAll, bloomSpecs, bloomRels, bucketSpec, dropped)
   }
 
-  /** Writes an entries sidecar ON THE DRIVER — one parquet part file
-    * through the SAME writer `df.write.parquet` uses
-    * ([[org.apache.spark.sql.graftbridge.WriteBridge]]), so the bytes
-    * are layout-identical to the Spark-written sidecars; zero Spark
-    * jobs. Only for data-file-free commits whose carry is already a
-    * driver seq ([[commitWithStatsDF]]'s fast path). */
+  /** Writes an entries sidecar ON THE DRIVER ([[writeParquetDriver]]).
+    * Only for commits whose rows are already a driver seq
+    * ([[commitWithStatsDF]]'s driver path). */
   private def writeSidecarDriver(spark: SparkSession, out: Path,
       rows: Seq[FileEntry]): Unit = {
     import org.apache.spark.unsafe.types.UTF8String
+    writeParquetDriver(spark, out, entriesSchema, rows.map(e =>
+      org.apache.spark.sql.catalyst.InternalRow(
+        UTF8String.fromString(e.kind), UTF8String.fromString(e.path),
+        e.bytes, e.numRows.map(Long.box).orNull,
+        e.stats.map(UTF8String.fromString).orNull,
+        e.part.map(UTF8String.fromString).orNull)))
+  }
+
+  /** Writes metadata rows as one parquet part file under `out`, ON THE
+    * DRIVER, through the SAME writer `df.write.parquet` uses
+    * ([[org.apache.spark.sql.graftbridge.WriteBridge]]), so the bytes
+    * are layout-identical to a Spark-written sidecar; zero Spark jobs. */
+  private def writeParquetDriver(spark: SparkSession, out: Path,
+      schema: StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Unit = {
     Files.createDirectories(out)
     val w = org.apache.spark.sql.graftbridge.WriteBridge
-      .parquetWriter(spark, entriesSchema)
+      .parquetWriter(spark, schema)
       .open(out.resolve("part-00000-" +
         java.util.UUID.randomUUID().toString.take(8) +
         ".parquet").toString, 0, 0)
-    try rows.foreach { e =>
-      w.write(new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(Array[Any](
-          UTF8String.fromString(e.kind), UTF8String.fromString(e.path),
-          e.bytes, e.numRows.map(Long.box).orNull,
-          e.stats.map(UTF8String.fromString).orNull,
-          e.part.map(UTF8String.fromString).orNull)))
-    } finally w.close()
+    try rows.foreach(w.write) finally w.close()
+  }
+
+  /** Runs `body` with `what` as the Spark job description (restoring the
+    * caller's afterwards), so the SQL executions and jobs of a metadata
+    * fallback name the engine function that started them. */
+  private def describedJobs[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty(key, prev)
   }
 
   /** Footer-only row count of a just-written parquet dir — O(#part
@@ -877,6 +895,22 @@ object CowTable {
     if (m.entryCount <= SmallSidecarEntries)
       Some(loadEntries(spark, table, m))
     else None
+
+  /** The write side of the small-table switch: a commit's whole
+    * sidecar as driver rows — the carried data entries, the new files'
+    * entries folded from their footers ([[driverStatsEntries]]) and one
+    * canonical row per DV — when the carry is a driver seq (the head's
+    * sidecar is at or under [[SmallSidecarEntries]], so the caller holds
+    * it) and the new files keep the sidecar under that gate. None: the
+    * commit runs the fused stats scan + sidecar write, as large
+    * sidecars always do. */
+  private[operators] def driverSidecarRows(spark: SparkSession,
+      carried: Option[Seq[FileEntry]], newFiles: Seq[FooterFacts],
+      parts: Map[String, String], dvs: Seq[String]): Option[Seq[FileEntry]] =
+    carried.filter(cs => newFiles.isEmpty ||
+        cs.size + newFiles.size <= SmallSidecarEntries)
+      .flatMap(cs => driverStatsEntries(spark, newFiles, parts).map(nr =>
+        cs.filterNot(_.kind == "dv") ++ nr ++ canonDvRows(dvs)))
 
   /** The manifest's entries as a DataFrame (kind, path, bytes, numRows,
     * stats, part) — the substrate for data skipping and file-set
@@ -981,7 +1015,7 @@ object CowTable {
     * the DV parquet. */
   private[graft] def dvFiles(spark: SparkSession, dvs: Seq[String],
       runs: Map[String, Long]): DataFrame =
-    if (dvs.map(runs).sum <= SmallSidecarEntries) {
+    if (dvsSmall(dvs, runs)) {
       val rows = readParquetDriver(spark, dvs)(r =>
           (normalize(r.needStr("file_path")), r.needLong("start"),
             r.needLong("len")))
@@ -996,6 +1030,10 @@ object CowTable {
           .as("__rs"), sum(col("len")).as("__dv_n"))
         .select(col("__dv_fp"), col("__rs.start").as("__dv_starts"),
           col("__rs.len").as("__dv_lens"), col("__dv_n"))
+
+  /** [[dvFiles]]' size switch: the driver branch serves `dvs`. */
+  private def dvsSmall(dvs: Seq[String], runs: Map[String, Long]): Boolean =
+    dvs.map(runs).sum <= SmallSidecarEntries
 
   /** [[dvFiles]] of a snapshot's deletion vectors. */
   private[graft] def dvFiles(spark: SparkSession, m: Manifest): DataFrame =
@@ -1324,7 +1362,7 @@ object CowTable {
     * Spark job that never materializes per-file stats on the driver
     * (the shape that still works at 10⁶ files). Reads only the
     * delta-sized, just-written, page-cached files. */
-  private def statsEntriesDF(spark: SparkSession, files: Seq[String],
+  private[operators] def statsEntriesDF(spark: SparkSession, files: Seq[String],
       parts: Map[String, String] = Map.empty): DataFrame = {
     val df = spark.read.parquet(files: _*)
     val sc = df.schema.fields.filter(f => statsEligible(f.dataType))
@@ -1373,15 +1411,222 @@ object CowTable {
 
   /** Zero-row part files (empty shuffle partitions) carry no data and
     * would need a sidecar fallback row — a manifest simply never lists
-    * them. One footer read per just-written (local, delta-sized) file. */
-  private def dropEmptyFiles(spark: SparkSession,
-      files: Seq[String]): Seq[String] = {
+    * them. One footer read per just-written (local, delta-sized) file;
+    * for data files (`keepFacts`) that read also yields the file's
+    * [[FooterFacts]], kept for the commit that lists the file. */
+  private def dropEmptyFiles(spark: SparkSession, files: Seq[String],
+      keepFacts: Boolean = true): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     files.filter { f =>
-      val n = Tables.withFooter(conf, f)(_.getRecordCount)
+      val n =
+        if (!keepFacts) Tables.withFooter(conf, f)(_.getRecordCount)
+        else {
+          val ff = readFooterFacts(conf, f)
+          if (writtenFacts.size >= WrittenFactsCap) writtenFacts.clear()
+          writtenFacts.put(f, ff)
+          ff.numRows
+        }
       if (n == 0L) Files.deleteIfExists(Paths.get(f))
       n > 0L
     }
+  }
+
+  // ------------------------------- driver-side commit metadata
+
+  /** What ONE footer read proves about a just-written data file: the
+    * path and size its [[statsEntriesDF]] row would carry (`path` is
+    * the normalized qualified URI `_metadata.file_path` yields), its row
+    * count, the stats columns of its own schema (the scan's selection)
+    * and, per stats column, the folded (min, max, nulls) as catalyst
+    * values — None when the footer cannot prove a value the scan would
+    * compute (see [[footerColumnStats]]). */
+  private[operators] final case class FooterFacts(path: String, bytes: Long,
+      numRows: Long, statsFields: Seq[StructField],
+      stats: Option[Seq[(Any, Any, Long)]])
+
+  /** Facts of files [[dropEmptyFiles]] just read, keyed by the path it
+    * returned, so the commit that lists them reads no footer twice. The
+    * files are immutable; entries are dropped when a commit takes them
+    * and the map clears whole past its cap (abandoned writes). */
+  private val writtenFacts =
+    new java.util.concurrent.ConcurrentHashMap[String, FooterFacts]()
+  private val WrittenFactsCap = 4096
+
+  /** The key Spark's parquet writer stores its row schema under. */
+  private val SparkRowMetaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private[operators] def readFooterFacts(
+      conf: org.apache.hadoop.conf.Configuration, file: String): FooterFacts = {
+    val (path, bytes) = scanIdentity(conf, file)
+    Tables.withFooter(conf, file) { r =>
+      val meta = r.getFooter
+      val schema = sparkSchemaOf(meta)
+      val fields = schema.toSeq.flatMap(_.fields
+        .filter(f => statsEligible(f.dataType)).take(MaxStatsCols))
+      // rebased (pre-Gregorian) datetimes read back shifted
+      val legacy = meta.getFileMetaData.getKeyValueMetaData.keySet.stream()
+        .anyMatch(_.startsWith("org.apache.spark.legacy"))
+      val stats =
+        if (schema.isEmpty || legacy) None
+        else {
+          val cols = fields.map(f => footerColumnStats(f, meta.getBlocks))
+          if (cols.forall(_.isDefined)) Some(cols.map(_.get)) else None
+        }
+      FooterFacts(path, bytes, r.getRecordCount, fields, stats)
+    }
+  }
+
+  /** A file's path and size as the stats scan names them: the
+    * normalized qualified URI `_metadata.file_path` yields, and
+    * `_metadata.file_size`. */
+  private def scanIdentity(conf: org.apache.hadoop.conf.Configuration,
+      file: String): (String, Long) = {
+    val hp = new org.apache.hadoop.fs.Path(file)
+    val st = hp.getFileSystem(conf).getFileStatus(hp)
+    (normalize(st.getPath.toUri.toString), st.getLen)
+  }
+
+  /** The schema `spark.read.parquet` infers for a Spark-written file
+    * (the row schema its writer stores); None for any other file. */
+  private def sparkSchemaOf(
+      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata): Option[StructType] =
+    Option(meta.getFileMetaData.getKeyValueMetaData.get(SparkRowMetaKey))
+      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption).collect {
+        case s: StructType => s
+      }
+
+  /** How a value of parquet column `pt`, boxed as parquet-mr boxes it
+    * (Integer, Long, Boolean, Float, Double, Binary), becomes the
+    * catalyst value Spark reads for `dt` — None for a physical form this
+    * does not decode (INT96 or nanosecond timestamps, unsigned or
+    * narrowed integers, anything not written the way Spark writes
+    * `dt`). */
+  private def catalystValue(dt: DataType,
+      pt: org.apache.parquet.schema.PrimitiveType): Option[Any => Any] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    def bytes(v: Any): Array[Byte] =
+      v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+    val ann = pt.getLogicalTypeAnnotation
+    def int(bits: Int): Boolean = ann match {
+      case i: IntLogicalTypeAnnotation => i.isSigned && i.getBitWidth == bits
+      case null => bits == 32 || bits == 64
+      case _ => false
+    }
+    def micros(utc: Boolean): Option[Any => Any] = ann match {
+      case t: TimestampLogicalTypeAnnotation
+          if t.isAdjustedToUTC == utc && pt.getPrimitiveTypeName == INT64 =>
+        t.getUnit match {
+          case TimeUnit.MICROS => Some(identity)
+          case TimeUnit.MILLIS => Some(v => v.asInstanceOf[Long] * 1000L)
+          case _ => None
+        }
+      case _ => None
+    }
+    (dt, pt.getPrimitiveTypeName) match {
+      case (BooleanType, BOOLEAN) | (FloatType, FLOAT) | (DoubleType, DOUBLE) =>
+        Some(identity)
+      case (ByteType, INT32) if int(8) => Some(v => v.asInstanceOf[Integer].toByte)
+      case (ShortType, INT32) if int(16) => Some(v => v.asInstanceOf[Integer].toShort)
+      case (IntegerType, INT32) if int(32) => Some(identity)
+      case (LongType, INT64) if int(64) => Some(identity)
+      case (DateType, INT32) if ann.isInstanceOf[DateLogicalTypeAnnotation] =>
+        Some(identity)
+      case (TimestampType, _) => micros(utc = true)
+      case (TimestampNTZType, _) => micros(utc = false)
+      case (StringType, BINARY) if ann.isInstanceOf[StringLogicalTypeAnnotation] =>
+        Some(v => org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes(v)))
+      case (BinaryType, BINARY) if ann == null => Some(bytes)
+      case (d: DecimalType, p) => ann match {
+        case a: DecimalLogicalTypeAnnotation if a.getScale == d.scale => p match {
+          case INT32 | INT64 => Some(v => Decimal(
+            v.asInstanceOf[Number].longValue, d.precision, d.scale))
+          case FIXED_LEN_BYTE_ARRAY | BINARY => Some(v => Decimal(
+            new java.math.BigDecimal(new java.math.BigInteger(bytes(v)), d.scale),
+            d.precision, d.scale))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** (min, max, nulls) of top-level column `f` folded over the row-group
+    * statistics — exactly what `min`/`max`/`sum(isnull)` over the file
+    * compute, or None where the footer cannot prove it: a missing or
+    * dropped min/max (parquet-mr omits binary stats past 4 KiB), INT96
+    * or nanosecond timestamps, a physical encoding this fold does not
+    * decode, and float/double extrema that are NaN or a zero (the
+    * footer rewrites a 0.0 min as -0.0 and drops NaN bounds, while
+    * `min` keeps whichever zero came first and ranks NaN highest). */
+  private def footerColumnStats(f: StructField,
+      blocks: java.util.List[org.apache.parquet.hadoop.metadata.BlockMetaData])
+      : Option[(Any, Any, Long)] = {
+    val path = org.apache.parquet.hadoop.metadata.ColumnPath.get(f.name)
+    var lo, hi: Any = null
+    var nulls = 0L
+    def less(a: Any, b: Any): Boolean =
+      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    val it = blocks.iterator()
+    while (it.hasNext) {
+      val b = it.next()
+      if (b.getRowCount > 0L) {
+        val chunk = b.getColumns.stream().filter(_.getPath == path)
+          .findFirst().orElse(null)
+        if (chunk == null) return None
+        val s = chunk.getStatistics
+        if (s == null || !s.isNumNullsSet) return None
+        nulls += s.getNumNulls
+        if (s.hasNonNullValue) {
+          val c = catalystValue(f.dataType, chunk.getPrimitiveType)
+            .getOrElse(return None)
+          val (mn, mx) = (c(s.genericGetMin), c(s.genericGetMax))
+          if (lo == null || less(mn, lo)) lo = mn
+          if (hi == null || less(hi, mx)) hi = mx
+        } else if (s.getNumNulls != b.getRowCount) return None
+      }
+    }
+    val unordered = (lo, hi) match {
+      case (a: java.lang.Float, b: java.lang.Float) =>
+        a.isNaN || b.isNaN || a == 0.0f || b == 0.0f
+      case (a: java.lang.Double, b: java.lang.Double) =>
+        a.isNaN || b.isNaN || a == 0.0 || b == 0.0
+      case _ => false
+    }
+    if (unordered) None else Some((lo, hi, nulls))
+  }
+
+  /** The entry rows [[statsEntriesDF]] would produce for `files`, built
+    * from their footers on the driver — byte for byte: the stats JSON
+    * goes through Spark's own `to_json` evaluator with the session's
+    * time zone. None when any file's facts are unproven or the files
+    * disagree on their stats columns. Zero-row files get no row, as in
+    * the scan (which groups rows by file). */
+  private[operators] def driverStatsEntries(spark: SparkSession, facts: Seq[FooterFacts],
+      parts: Map[String, String]): Option[Seq[FileEntry]] = {
+    val live = facts.filter(_.numRows > 0L)
+    if (live.exists(_.stats.isEmpty) ||
+        live.map(_.statsFields.map(f => (f.name, f.dataType))).distinct.size > 1)
+      return None
+    val partN = parts.map { case (k, v) => normalize(k) -> v }
+    val fields = live.headOption.map(_.statsFields).getOrElse(Nil)
+    val toJson = org.apache.spark.sql.catalyst.expressions.json
+      .StructsToJsonEvaluator(Map.empty, StructType(fields.map(f =>
+        StructField(f.name, StructType(Seq(StructField("min", f.dataType),
+          StructField("max", f.dataType), StructField("nulls", LongType)))))),
+        Some(spark.sessionState.conf.sessionLocalTimeZone))
+    import org.apache.spark.sql.catalyst.InternalRow
+    Some(org.apache.spark.sql.internal.SQLConf.withExistingConf(
+        spark.sessionState.conf) {
+      live.map { ff =>
+        val stats = Option.when(fields.nonEmpty)(toJson.evaluate(InternalRow
+          .fromSeq(ff.stats.get.map { case (mn, mx, n) => InternalRow(mn, mx, n) }))
+          .toString)
+        FileEntry("data", ff.path, ff.bytes, Some(ff.numRows), stats,
+          partN.get(ff.path))
+      }
+    })
   }
 
   // ------------------------------------------- per-file bloom sidecars
@@ -1392,7 +1637,7 @@ object CowTable {
     * not xxhash64 of its upcast long): probes consult only rows whose
     * coltype equals the current type, so a pre-widen file simply keeps
     * conservatively until a maintenance rewrite refreshes its row. */
-  private val bloomEntrySchema = StructType(Seq(
+  private[operators] val bloomEntrySchema = StructType(Seq(
     StructField("path", StringType), StructField("col", StringType),
     StructField("coltype", StringType), StructField("sketch", BinaryType)))
 
@@ -1419,23 +1664,47 @@ object CowTable {
   private[graft] val bloomPrunesConsulted =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Build ONE bloom sidecar covering `files`: a single distributed
-    * job — scan the files, one [[graft.functions.BloomSketchBytes]]
-    * aggregate per declared column grouped by `_metadata.file_path`,
-    * write (path, col, coltype, sketch) parquet under the manifest dir.
-    * Reads resolve historical names per file vintage (coalesce over the
-    * recorded prev-name chain, narrow physical types upcast natively),
-    * so a declareBloom backfill over an evolved table hashes every
-    * file's values at the CURRENT logical type — the same domain later
-    * probes use. Sketch bytes never land on the driver. */
-  private def buildBloomSidecar(spark: SparkSession, table: String,
+  /** Build ONE bloom sidecar covering `files`: (path, col, coltype,
+    * sketch) parquet under the manifest dir. With `fileRows` (the
+    * files' row counts, given when the table's entries are small) and
+    * at most [[BloomDriverRows]] rows, the sketches are built on the
+    * driver ([[driverBloomRows]]); otherwise in a single distributed
+    * job ([[bloomSketchesDF]]) — scan the files, one
+    * [[graft.functions.BloomSketchBytes]] aggregate per declared column
+    * grouped by `_metadata.file_path`. Reads resolve historical names
+    * per file vintage (coalesce over the recorded prev-name chain,
+    * narrow physical types upcast natively), so a declareBloom backfill
+    * over an evolved table hashes every file's values at the CURRENT
+    * logical type — the same domain later probes use. */
+  private[operators] def buildBloomSidecar(spark: SparkSession, table: String,
       version: Int, files: Seq[String], specs: Map[String, BloomColSpec],
-      schema: StructType): Option[String] = {
+      schema: StructType, fileRows: Option[Seq[Long]]): Option[String] = {
     val resolved = specs.toSeq.sortBy(_._1).flatMap { case (k, spec) =>
       resolveBloomField(schema, k)
         .filter(f => bloomEligible(f.dataType)).map(f => (f, spec))
     }.distinctBy(_._1.name)
     if (resolved.isEmpty || files.isEmpty) return None
+    val rel =
+      s"files/bloom-v$version-${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = manifestDir(table).resolve(rel)
+    Files.createDirectories(out.getParent)
+    val driverRows = fileRows.filter(_.sum <= BloomDriverRows)
+      .flatMap(_ => driverBloomRows(spark, files, resolved))
+    driverRows match {
+      case Some(rows) => writeParquetDriver(spark, out, bloomEntrySchema, rows)
+      case None => describedJobs(spark, "CowTable.buildBloomSidecar: sketch " +
+          s"scan of ${files.size} files") {
+        bloomSketchesDF(spark, files, resolved)
+          .write.mode("overwrite").parquet(out.toString)
+      }
+    }
+    Some(rel)
+  }
+
+  /** The columnar sketch build: one scan, one [[graft.functions.
+    * BloomSketchBytes]] aggregate per column grouped by file. */
+  private[operators] def bloomSketchesDF(spark: SparkSession, files: Seq[String],
+      resolved: Seq[(StructField, BloomColSpec)]): DataFrame = {
     val readSchema = StructType(resolved.flatMap { case (f, _) =>
       StructField(f.name, f.dataType) +:
         prevNamesOf(f).map(p => StructField(p, f.dataType))
@@ -1450,7 +1719,7 @@ object CowTable {
         .bloom_sketch(col(f.name), spec.itemsPerFile, spec.fpp)
         .as("__bl_" + f.name)
     }
-    val rows = df.groupBy(col("path"))
+    df.groupBy(col("path"))
       .agg(aggs.head, aggs.tail: _*)
       .select(col("path"), explode(array(resolved.map { case (f, _) =>
         struct(lit(f.name).as("col"),
@@ -1459,12 +1728,102 @@ object CowTable {
       }: _*)).as("e"))
       .select(col("path"), col("e.col").as("col"),
         col("e.coltype").as("coltype"), col("e.sketch").as("sketch"))
-    val rel =
-      s"files/bloom-v$version-${java.util.UUID.randomUUID().toString.take(8)}"
-    val out = manifestDir(table).resolve(rel)
-    Files.createDirectories(out.getParent)
-    rows.write.mode("overwrite").parquet(out.toString)
-    Some(rel)
+  }
+
+  /** Total new rows up to which a commit builds its bloom sketches on
+    * the driver: one thread there reads and hashes ~1.4M rows/s, while
+    * the sketch job pays a fixed ~0.4 s but scales with the cores.
+    * Measured on a 4-vCPU VM (`local[4]`, one `bigint` column, 30k-row
+    * files, median of 5): 120k rows took 80 ms on the driver against
+    * 442 ms for the job, 1M rows 743 ms against 855 ms, 2M rows 1,465 ms
+    * against 1,285 ms — the crossover lies between 1M and 2M rows. */
+  private[operators] val BloomDriverRows = 1L << 20
+
+  /** The rows [[bloomSketchesDF]] writes, built on the driver with
+    * [[graft.functions.BloomState]] — byte-identical sketches, since a
+    * sketch depends only on the hashed value set. One file open per
+    * file reads just the bloom columns. None (the commit runs the job)
+    * where the scan would do what this reader does not: coalesce a
+    * renamed column's prior names, upcast a widened type, or decode a
+    * physical form other than the one Spark writes for the type (INT96
+    * timestamps among them). Zero-row files get no rows, as in the
+    * scan's group-by. */
+  private[operators] def driverBloomRows(spark: SparkSession, files: Seq[String],
+      resolved: Seq[(StructField, BloomColSpec)])
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.parquet.column.ColumnReader
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{BloomKernel, BloomState}
+    if (resolved.exists(r => prevNamesOf(r._1).nonEmpty)) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = Seq.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
+    files.foreach { file =>
+      val (path, _) = scanIdentity(conf, file)
+      val ok = Tables.withFooter(conf, file) { r =>
+        val meta = r.getFooter
+        val mt = meta.getFileMetaData.getSchema
+        // per column: one value as catalyst sees it, when the file holds
+        // the column at the declared type in the form Spark writes it
+        val readers = resolved.map { case (f, _) =>
+          Option.when(mt.containsField(f.name) && sparkSchemaOf(meta)
+              .exists(_.find(_.name == f.name).exists(_.dataType == f.dataType)))(
+            mt.getType(mt.getFieldIndex(f.name)))
+            .filter(_.isPrimitive).map(_.asPrimitiveType).flatMap { pt =>
+              val raw: ColumnReader => Any = pt.getPrimitiveTypeName match {
+                case INT32 => _.getInteger
+                case INT64 => _.getLong
+                case _ => _.getBinary
+              }
+              catalystValue(f.dataType, pt).map(c => raw.andThen(c))
+            }
+        }
+        if (readers.exists(_.isEmpty)) false
+        else {
+          val proj = new org.apache.parquet.schema.MessageType(mt.getName,
+            resolved.map(r => mt.getType(mt.getFieldIndex(r._1.name))): _*)
+          r.setRequestedSchema(proj)
+          val states = resolved.map { case (_, spec) =>
+            val bits = BloomKernel.optimalNumBits(spec.itemsPerFile, spec.fpp)
+            new BloomState(bits, BloomKernel.optimalNumHashes(spec.itemsPerFile, bits))
+          }
+          var pages = r.readNextRowGroup()
+          val nonEmpty = pages != null
+          while (pages != null) {
+            val store = new org.apache.parquet.column.impl.ColumnReadStoreImpl(pages,
+              new org.apache.parquet.example.data.simple.convert
+                .GroupRecordConverter(proj).getRootConverter,
+              proj, meta.getFileMetaData.getCreatedBy)
+            resolved.indices.foreach { i =>
+              val dt = resolved(i)._1.dataType
+              val desc = proj.getColumnDescription(Array(resolved(i)._1.name))
+              val c = store.getColumnReader(desc)
+              val read = readers(i).get
+              var n = pages.getRowCount
+              while (n > 0L) {
+                if (c.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel) {
+                  val v = read(c)
+                  states(i).put(BloomKernel.hash1(v, dt), BloomKernel.hash2(v, dt))
+                }
+                c.consume()
+                n -= 1
+              }
+            }
+            pages = r.readNextRowGroup()
+          }
+          if (nonEmpty) resolved.indices.foreach { i =>
+            val f = resolved(i)._1
+            out += org.apache.spark.sql.catalyst.InternalRow(
+              UTF8String.fromString(path), UTF8String.fromString(f.name),
+              UTF8String.fromString(f.dataType.catalogString),
+              BloomKernel.serialize(states(i)))
+          }
+          true
+        }
+      }
+      if (!ok) return None
+    }
+    Some(out.result())
   }
 
   /** Declare per-file bloom point-lookup indexes on `cols` — the
@@ -1497,8 +1856,13 @@ object CowTable {
     check(m)
     def attempt(h: Manifest): Manifest = {
       val schema = check(h)
-      val backfill =
-        buildBloomSidecar(spark, table, h.version + 1, h.files, specs, schema)
+      // a small head's entries name the files and their row counts, so
+      // the backfill can take the driver path
+      val small = smallEntries(spark, table, h)
+      val data = small.map(_.filter(_.kind == "data"))
+      val backfill = buildBloomSidecar(spark, table, h.version + 1,
+        data.fold(h.files)(_.map(_.path)), specs, schema,
+        data.filter(_.forall(_.numRows.isDefined)).map(_.map(_.numRows.get)))
       // the sidecar is written BEFORE the create-exclusive commit; a
       // lost race rebuilds a fresh backfill on retry, so the abandoned
       // rel would be referenced by no manifest ever — vacuum only
@@ -1509,7 +1873,7 @@ object CowTable {
         h.partitionCols, knownDvRuns = h.dvRunCounts,
         bloomColsOverride = Some(h.bloomCols ++ specs),
         extraBloomRels = backfill.toSeq,
-        carriedSeq = smallEntries(spark, table, h))
+        carriedSeq = small)
       catch { case e: Throwable =>
         backfill.foreach(r => deleteRecursively(manifestDir(table).resolve(r)))
         throw e
@@ -2114,33 +2478,41 @@ object CowTable {
           dataSchema)
         val full = fileFullPredicate(ce, stSchema, m.partitionCols,
           dataSchema)
-        // classification stays executor-side: one aggregate row (counts
-        // + the DV-adjusted metadata total) plus a collect of ONLY the
-        // boundary (partial) files' paths — never one row per file
-        val classified = withStatsStruct(
-            entriesDF(spark, table, m).filter(col("kind") === "data"),
-            stSchema)
-          .select(col("path"), col("numRows"),
-            keep.as("__keep"),
-            (col("numRows").isNotNull &&
-              coalesce(full, lit(false))).as("__full"))
-        // ONE aggregate: counts + DV-adjusted metadata total + the
-        // boundary files' paths (bounded — they get scanned anyway)
-        val agg = withDeletedRows(spark, classified, m).agg(
-          sum(when(col("__full"), lit(1)).otherwise(lit(0))).as("nfull"),
-          sum(when(col("__full"), col("numRows") - col("__dv"))
-            .otherwise(lit(0L))).as("meta"),
-          sum(when(!col("__keep"), lit(1)).otherwise(lit(0))).as("npruned"),
-          collect_list(when(col("__keep") && !col("__full"), col("path")))
-            .as("partials"))
-          .head()
-        // the normalized sidecar path IS openable
-        val partial = agg.getSeq[String](3).map(normalize).toSeq
-        (agg.getLong(0).toInt, agg.getLong(1), agg.getLong(2).toInt, partial)
+        val classes = Seq(col("numRows"), keep.as("__keep"),
+          (col("numRows").isNotNull && coalesce(full, lit(false))).as("__full"))
+        smallFileClasses(spark, table, m, stSchema, classes) match {
+          case Some(rows) =>
+            // (normalized path, numRows, __keep, __full) + deleted rows
+            val full = rows.filter(_._1.getBoolean(3))
+            (full.size, full.map { case (r, dv) => r.getLong(1) - dv }.sum,
+              rows.count(r => isFalse(r._1, 2)),
+              rows.collect { case (r, _) if isTrue(r, 2) && !r.getBoolean(3) =>
+                r.getString(0) })
+          case None =>
+            // one aggregate row (counts + the DV-adjusted metadata total +
+            // the boundary files' paths, bounded — they get scanned
+            // anyway), never one row per file
+            val agg = withDeletedRows(spark, withStatsStruct(
+                entriesDF(spark, table, m).filter(col("kind") === "data"),
+                stSchema).select(col("path") +: classes: _*), m).agg(
+              sum(when(col("__full"), lit(1)).otherwise(lit(0))).as("nfull"),
+              sum(when(col("__full"), col("numRows") - col("__dv"))
+                .otherwise(lit(0L))).as("meta"),
+              sum(when(!col("__keep"), lit(1)).otherwise(lit(0))).as("npruned"),
+              collect_list(when(col("__keep") && !col("__full"), col("path")))
+                .as("partials"))
+              .head()
+            // the normalized sidecar path IS openable
+            (agg.getLong(0).toInt, agg.getLong(1), agg.getLong(2).toInt,
+              agg.getSeq[String](3).map(normalize).toSeq)
+        }
     }
     val scanned =
       if (partialPaths.isEmpty) 0L
-      else readSnapshot(spark, m, Some(partialPaths)).filter(cond).count()
+      else describedJobs(spark, "CowTable.countWhere: boundary scan of " +
+        s"${partialPaths.size} files") {
+        readSnapshot(spark, m, Some(partialPaths)).filter(cond).count()
+      }
     CountBreakdown(metaRows + scanned, fullFiles, partialPaths.size, pruned,
       metaRows, scanned)
   }
@@ -2152,23 +2524,56 @@ object CowTable {
     * of the data entries' recorded row counts minus their deletion-
     * vector run lengths — the unfiltered special case of
     * [[countWhereDetailed]], shaped for the DSv2 aggregate-pushdown
-    * seam ([[graft.plans.CowDsv2]]): one columnar aggregate over the
-    * entries sidecar (+ the delta-sized DV runs), a 1-row `head()`,
-    * no data file opened and nothing per-file on the driver. `None`
+    * seam ([[graft.plans.CowDsv2]]): a Scala sum over a small table's
+    * entries ([[smallFileClasses]], no job), else one columnar
+    * aggregate over the entries sidecar (+ the delta-sized DV runs), a
+    * 1-row `head()`; no data file is opened either way. `None`
     * when the count cannot be PROVEN from metadata — any data entry
     * without a recorded row count — so a caller falls back to scanning
     * rather than ever serving a guess. */
   private[graft] def metadataRowCount(spark: SparkSession, table: String,
       m: Manifest): Option[Long] = {
     if (!m.dataNonEmpty) return Some(0L)
-    val data = entriesDF(spark, table, m).filter(col("kind") === "data")
-    val r = withDeletedRows(spark, data, m).agg(
-      sum(when(col("numRows").isNull || col("numRows") < 0L, 1L)
-        .otherwise(0L)).as("unproven"),
-      sum(col("numRows") - col("__dv")).as("live")).head()
-    if (r.isNullAt(0) || r.getLong(0) > 0L) None
-    else Some(if (r.isNullAt(1)) 0L else r.getLong(1))
+    smallFileClasses(spark, table, m, StructType(Nil), Seq(col("numRows"))) match {
+      case Some(rows) =>
+        if (rows.exists { case (r, _) => r.isNullAt(1) || r.getLong(1) < 0L }) None
+        else Some(rows.map { case (r, dv) => r.getLong(1) - dv }.sum)
+      case None =>
+        val data = entriesDF(spark, table, m).filter(col("kind") === "data")
+        val r = withDeletedRows(spark, data, m).agg(
+          sum(when(col("numRows").isNull || col("numRows") < 0L, 1L)
+            .otherwise(0L)).as("unproven"),
+          sum(col("numRows") - col("__dv")).as("live")).head()
+        if (r.isNullAt(0) || r.getLong(0) > 0L) None
+        else Some(if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
   }
+
+  /** The read side of the small-table switch, shared by
+    * [[countWhereDetailed]], [[minMaxDetailed]] and [[metadataRowCount]]:
+    * the data entries of `m` as driver rows — the normalized path, then
+    * `cols` over the parsed stats struct `__st` — each with its deleted
+    * rows from [[dvFiles]], when both the entries and the DV runs are at
+    * or under [[SmallSidecarEntries]]. Both sides are LocalRelations
+    * then, and a projection of one collects with no Spark job; the
+    * callers fold sums and extrema in Scala. None above the gate: the
+    * callers aggregate columnarly over [[withDeletedRows]], so the
+    * 10⁶-file rung never collects a row per file. */
+  private def smallFileClasses(spark: SparkSession, table: String,
+      m: Manifest, stSchema: StructType,
+      cols: Seq[Column]): Option[Seq[(Row, Long)]] =
+    if (m.entryCount > SmallSidecarEntries || !dvsSmall(m.dvs, m.dvRunCounts))
+      None
+    else {
+      val dv =
+        if (m.dvs.isEmpty) Map.empty[String, Long]
+        else dvFiles(spark, m).select("__dv_fp", "__dv_n").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      Some(withStatsStruct(
+          entriesDF(spark, table, m).filter(col("kind") === "data"), stSchema)
+        .select(normalizeSql(col("path")) +: cols: _*).collect().toSeq
+        .map(r => (r, dv.getOrElse(r.getString(0), 0L))))
+    }
 
   /** `entries` (data entries with their sidecar `path`) plus `__dv`,
     * each file's deleted-row count from [[dvFiles]] (0 without one).
@@ -2180,6 +2585,10 @@ object CowTable {
     else entries.join(dvFiles(spark, m).select("__dv_fp", "__dv_n"),
         normalizeSql(col("path")) === col("__dv_fp"), "left")
       .withColumn("__dv", coalesce(col("__dv_n"), lit(0L)))
+
+  /** SQL's three-valued truth of a collected boolean column. */
+  private def isTrue(r: Row, i: Int): Boolean = !r.isNullAt(i) && r.getBoolean(i)
+  private def isFalse(r: Row, i: Int): Boolean = !r.isNullAt(i) && !r.getBoolean(i)
 
   /** Columns with per-file min/max stats in this manifest's schema —
     * the set the DSv2 aggregate pushdown may answer MIN/MAX for
@@ -2223,9 +2632,10 @@ object CowTable {
     * whose min ≥ candidate holds only rows ≥ candidate; deletions only
     * remove rows, so the bound survives DVs). On a clustered table an
     * interval MIN reads ONE boundary file: the interior answers from
-    * metadata and the far boundary bound-skips. All classification runs
-    * on the parquet-backed entries sidecar; only boundary paths and
-    * single-row aggregates are collected. */
+    * metadata and the far boundary bound-skips. A small table
+    * classifies its files on the driver ([[smallFileClasses]], no
+    * job); a large one on the parquet-backed entries sidecar, where only
+    * boundary paths and single-row aggregates are collected. */
   private def minMaxDetailed(spark: SparkSession, table: String,
       valueCol: String, cond: Column, isMin: Boolean): MinMaxBreakdown = {
     val m = latestManifest(table).getOrElse(throw new IllegalArgumentException(
@@ -2234,7 +2644,8 @@ object CowTable {
     def agg1(c: Column): Column = if (isMin) min(c) else max(c)
     def scanValue(files: Seq[String]): Option[Any] =
       if (files.isEmpty) None
-      else {
+      else describedJobs(spark, s"CowTable.${if (isMin) "min" else "max"}" +
+          s"Where: boundary scan of ${files.size} files") {
         val r = readSnapshot(spark, m, Some(files)).filter(cond)
           .agg(agg1(col(valueCol))).head()
         if (r.isNullAt(0)) None else Some(r.get(0))
@@ -2250,46 +2661,64 @@ object CowTable {
     val ce = resolvedCond(spark, dataSchema, ColumnBridge.expression(cond))
     val keep = fileKeepPredicate(ce, stSchema, m.partitionCols, dataSchema)
     val full = fileFullPredicate(ce, stSchema, m.partitionCols, dataSchema)
-    val base = withStatsStruct(
-        entriesDF(spark, table, m).filter(col("kind") === "data"), stSchema)
-      .withColumn("__keep", keep)
-      .withColumn("__full",
-        col("numRows").isNotNull && coalesce(full, lit(false)))
-    val stat = col("__st").getField(valueCol)
-      .getField(if (isMin) "min" else "max")
-    val e = withDeletedRows(spark, base, m).withColumn("__stat", stat)
-      .withColumn("__meta", col("__keep") && col("__full") &&
-        col("__dv") === 0L && stat.isNotNull)
-    // ONE job: the metadata candidate + counts + the kept-non-meta
-    // files' (path, stat) pairs — bounded (boundary + DV'd files; they
-    // are scan candidates by definition). The stat bound is then
-    // applied driver-side against the candidate.
-    val a = e.agg(
-      agg1(when(col("__meta"), col("__stat"))).as("cand"),
-      sum(when(col("__meta"), 1L).otherwise(0L)).as("nmeta"),
-      sum(when(!col("__keep"), 1L).otherwise(0L)).as("npruned"),
-      collect_list(when(col("__keep") && !col("__meta"),
-        struct(col("path"), col("__stat")))).as("rest")).head()
-    val cand = if (a.isNullAt(0)) None else Some(a.get(0))
-    def cmp(x: Any, y: Any): Int =
-      x.asInstanceOf[Comparable[Any]].compareTo(y)
-    val rest = a.getSeq[Row](3)
-    val scanPaths = rest.filter { r =>
-      val unimprovable = cand.isDefined && !r.isNullAt(1) &&
-        (if (isMin) cmp(r.get(1), cand.get) >= 0
-         else cmp(r.get(1), cand.get) <= 0)
-      !unimprovable
-    }.map(_.getString(0)).toSeq
-    // sidecar paths open as their normalized selves
-    val scanned = scanValue(scanPaths.map(normalize))
+    val classes = Seq(keep.as("__keep"),
+      (col("numRows").isNotNull && coalesce(full, lit(false))).as("__full"),
+      col("__st").getField(valueCol).getField(if (isMin) "min" else "max")
+        .as("__stat"))
+    // candidates compare in the statistic's own ordering, as min/max do
+    val statType = stSchema(valueCol).dataType.asInstanceOf[StructType]("min")
+      .dataType
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(statType)
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(statType)
+    def cmp(x: Any, y: Any): Int = ord.compare(toCatalyst(x), toCatalyst(y))
     def better(x: Any, y: Any): Any =
       if ((isMin && cmp(x, y) <= 0) || (!isMin && cmp(x, y) >= 0)) x else y
+    // the metadata candidate, the metadata and pruned file counts, and
+    // the kept non-metadata files (boundary + DV'd: scan candidates by
+    // definition) with their stat bound (normalized, hence openable)
+    val (cand, nmeta, npruned, rest): (Option[Any], Int, Int,
+        Seq[(String, Option[Any])]) =
+      smallFileClasses(spark, table, m, stSchema, classes) match {
+        case Some(rows) =>
+          // (normalized path, __keep, __full, __stat) + deleted rows
+          def meta(r: Row, dv: Long): Boolean =
+            isTrue(r, 1) && r.getBoolean(2) && dv == 0L && !r.isNullAt(3)
+          val metas = rows.collect { case (r, dv) if meta(r, dv) => r.get(3) }
+          (metas.reduceOption(better), metas.size,
+            rows.count(r => isFalse(r._1, 1)),
+            rows.collect { case (r, dv) if isTrue(r, 1) && !meta(r, dv) =>
+              (r.getString(0), Option(r.get(3))) })
+        case None =>
+          // one aggregate row; the stat bound is applied below
+          val a = withDeletedRows(spark, withStatsStruct(
+              entriesDF(spark, table, m).filter(col("kind") === "data"),
+              stSchema).select(col("path") +: classes: _*), m)
+            .withColumn("__meta", col("__keep") && col("__full") &&
+              col("__dv") === 0L && col("__stat").isNotNull)
+            .agg(
+              agg1(when(col("__meta"), col("__stat"))).as("cand"),
+              sum(when(col("__meta"), 1L).otherwise(0L)).as("nmeta"),
+              sum(when(!col("__keep"), 1L).otherwise(0L)).as("npruned"),
+              collect_list(when(col("__keep") && !col("__meta"),
+                struct(col("path"), col("__stat")))).as("rest")).head()
+          (Option.when(!a.isNullAt(0))(a.get(0)), a.getLong(1).toInt,
+            a.getLong(2).toInt, a.getSeq[Row](3).map(r =>
+              (normalize(r.getString(0)), Option(r.get(1)))).toSeq)
+      }
+    val scanPaths = rest.collect {
+      case (p, st) if !(cand.isDefined && st.isDefined &&
+          (if (isMin) cmp(st.get, cand.get) >= 0
+           else cmp(st.get, cand.get) <= 0)) => p
+    }
+    val scanned = scanValue(scanPaths)
     val value = (cand, scanned) match {
       case (Some(x), Some(y)) => Some(better(x, y))
       case (x, y) => x.orElse(y)
     }
-    MinMaxBreakdown(value, a.getLong(1).toInt, scanPaths.size,
-      rest.size - scanPaths.size, a.getLong(2).toInt)
+    MinMaxBreakdown(value, nmeta, scanPaths.size, rest.size - scanPaths.size,
+      npruned)
   }
 
   /** Skipping effectiveness of `cond` on the current snapshot:
@@ -2721,7 +3150,7 @@ object CowTable {
     if (df.columns.contains("_metadata")) df.drop("_metadata") else df
 
   /** DV-aware snapshot read: scan the data files and drop deleted row
-    * positions PER FILE ([[applyDvFilter]]) — a left join against the
+    * positions PER FILE ([[applyDvFilter]]) — an anti join against the
     * one DV reader's rows ([[dvFiles]]: one per DV'd file, read on the
     * driver as a LocalRelation at or under [[SmallSidecarEntries]] runs,
     * a columnar aggregate above; broadcast at O(total runs)) probed by
@@ -3288,10 +3717,10 @@ object CowTable {
   }
 
   /** Apply deletion vectors to `df` executor-side. Up to
-    * [[DvBroadcastRunsConf]] total runs, `df` left-joins the broadcast
+    * [[DvBroadcastRunsConf]] total runs, `df` anti-joins the broadcast
     * [[dvFiles]] rows (one per DV'd file: a LocalRelation read on the
     * driver at or under [[SmallSidecarEntries]] runs, a columnar
-    * aggregate above) and drops rows whose `riCol` falls in a run —
+    * aggregate above), dropping rows whose `riCol` falls in a run —
     * binary search per row, inside whole-stage codegen. Past that
     * budget it is a shuffled range anti-join against the raw runs:
     * still executor-side, no broadcast proportional to the delete set.
@@ -3308,12 +3737,18 @@ object CowTable {
       new MetadataBuilder().putStringArray(DvFilesMetaKey, m.dvs.toArray)
         .build()))
     if (m.dvs.map(m.dvRunCounts).sum <= limit)
-      probed.join(broadcast(dvFiles(spark, m)),
-          col("__dv_probe_fp") === col("__dv_fp"), "left")
-        .filter(!graft.functions.DvRunsContain(
-          col("__dv_starts"), col("__dv_lens"), riCol))
-        .drop("__dv_probe_fp", "__dv_fp", "__dv_starts", "__dv_lens",
-          "__dv_n")
+      // an anti join, not a left join + filter: Spark sizes a left join
+      // against a LocalRelation as the PRODUCT of both sides (it cannot
+      // see that __dv_fp is unique), which turned every join above a
+      // DV'd read into a sort-merge join that AQE demoted only after
+      // running its shuffle stages; an anti join is sized as its left
+      probed.withColumn("__dv_probe_ri", riCol)
+        .join(broadcast(dvFiles(spark, m)),
+          col("__dv_probe_fp") === col("__dv_fp") &&
+            graft.functions.DvRunsContain(col("__dv_starts"),
+              col("__dv_lens"), col("__dv_probe_ri")),
+          "left_anti")
+        .drop("__dv_probe_fp", "__dv_probe_ri")
     else {
       // the row index materializes on the left FIRST: the runs side is
       // itself a parquet scan, so a raw `_metadata` reference in the
@@ -3416,10 +3851,8 @@ object CowTable {
       commitWithStatsDF(spark, table, h.version + 1, carried, addedData,
         schema, h.dvs.filterNot(retired) ++ addedDvs, h.partitionCols,
         knownDvRuns = h.dvRunCounts ++ addedRuns,
-        carriedSeq =
-          if (addedData.nonEmpty) None
-          else smallEntries(spark, table, h).map(_.filter(e =>
-            e.kind != "dv" && !removedN.contains(normalize(e.path)))))
+        carriedSeq = smallEntries(spark, table, h).map(_.filter(e =>
+          e.kind != "dv" && !removedN.contains(normalize(e.path)))))
     }
     val head0 = latestManifest(table).getOrElse(base)
     if (head0.version != base.version) validate(head0)
@@ -3436,7 +3869,7 @@ object CowTable {
       ids: DataFrame): Seq[String] = {
     val out = versionDir(table, "dv", v)
     toDvRuns(ids).coalesce(1).write.mode("overwrite").parquet(out.toString)
-    val kept = dropEmptyFiles(spark, listPartFiles(out))
+    val kept = dropEmptyFiles(spark, listPartFiles(out), keepFacts = false)
     dropDirIfNoFiles(out, kept)
     kept
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
@@ -237,8 +237,8 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     * file scan. Only attribute-only Projects are transparent — anything
     * computed in between makes the shape unrecognizable. ONE shape of
     * computed subtree IS recognized: the DV-application pattern the CoW
-    * read path plants (NOT dvrunscontain(...) over a left-outer join of
-    * the data scan against the per-file DV runs) — it returns the
+    * read path plants (a left-anti join of the data scan against the
+    * per-file DV runs on dvrunscontain(...)) — it returns the
     * data relation plus the DV file set, so a DV-adjusted MV can serve
     * aggregates over a merge-on-read snapshot without a rewriteDeletes
     * pass. */
@@ -246,20 +246,11 @@ object MvRewriteRule extends Rule[LogicalPlan] {
       Option[(Seq[Expression], LogicalRelation, Option[Seq[String]])] =
     plan match {
       case Filter(cond, child) =>
-        // peel the DV-application conjunct (the optimizer may merge a
-        // user predicate into the same Filter node)
-        val conj = splitConjunctivePredicates(cond)
-        val (dvc, rest) = conj.partition {
-          case Not(_: graft.functions.DvRunsContain) => true
-          case _ => false
-        }
-        child match {
-          case Join(l, _, LeftOuter, _, _) if dvc.nonEmpty =>
-            for ((dataRel, pushed, dvs) <- dvDataSide(l))
-              yield (filters ++ rest ++ pushed, dataRel, Some(dvs))
-          case _ if dvc.isEmpty => stripToScan(child, filters ++ rest)
-          case _ => None
-        }
+        stripToScan(child, filters ++ splitConjunctivePredicates(cond))
+      case Join(l, _, LeftAnti, Some(cond), _)
+          if cond.exists(_.isInstanceOf[graft.functions.DvRunsContain]) =>
+        for ((dataRel, pushed, dvs) <- dvDataSide(l))
+          yield (filters ++ pushed, dataRel, Some(dvs))
       case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
         stripToScan(child, filters)
       case rel: LogicalRelation => Some((filters, rel, None))

@@ -53,26 +53,48 @@ class CowJobCountSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  private val twoFile = "the 2-file fixture"
+  private val withADelete = "the 2-file fixture with a delete"
+
+  /** The bound a lowered pin's test is still named with: lowering a pin
+    * leaves the test's name, and so its identity in test history, as it
+    * was (the name stays true — the count is lower still); the assertion
+    * and the reported line use the current pin. */
+  private val namedAt: Map[(String, String), Int] = Map(
+    ("upsertMor", twoFile) -> 11, ("mergeInto", twoFile) -> 13,
+    ("mergeIntoHybrid", twoFile) -> 17,
+    ("upsertMor", withADelete) -> 13, ("mergeInto", withADelete) -> 15,
+    ("compactTable", "the 2-file fixture plus a tail") -> 7,
+    ("compactTableZorder", "the 2-file fixture plus a tail") -> 13,
+    ("rewriteDeletes(minDeadFraction = 0.0)", "the 2-file fixture with deletes") -> 5,
+    ("rewriteDeletes(minDeadFraction = 0.3)", "the 2-file fixture with deletes") -> 9,
+    ("rebucketTable", "a 4-bucket fixture with a delete") -> 8,
+    ("countWhere (all files fully matching)", twoFile) -> 2,
+    ("countWhere (all files fully matching)", withADelete) -> 3,
+    ("metadataRowCount", twoFile) -> 2, ("metadataRowCount", withADelete) -> 3,
+    ("minWhere", twoFile) -> 4, ("minWhere", withADelete) -> 6)
+
   private def pin(op: String, pinned: Int, build: () => String = () => fixture(),
-      fixtureName: String = "the 2-file fixture")(body: String => Unit): Unit =
-    test(s"$op runs at most $pinned Spark jobs on $fixtureName") {
+      fixtureName: String = twoFile)(body: String => Unit): Unit =
+    test(s"$op runs at most ${namedAt.getOrElse((op, fixtureName), pinned)} " +
+        s"Spark jobs on $fixtureName") {
       val t = build()
       CowTable.clearEntriesCache()
       val jobs = jobsOf(body(t))
-      info(s"$op ran ${jobs.size} jobs")
+      info(s"$op ran ${jobs.size} jobs (pinned $pinned)")
       assert(jobs.size <= pinned,
         s"$op ran ${jobs.size} jobs (pinned $pinned):\n${jobs.mkString("\n")}")
     }
 
   pin("deleteWhere", 2)(t => CowTable.deleteWhere(spark, t, $"id" < 10L))
 
-  pin("upsertMor", 11)(t => CowTable.upsertMor(spark, t,
+  pin("upsertMor", 8)(t => CowTable.upsertMor(spark, t,
     src((10 to 12) ++ (300 to 301), "u"), Seq("id")))
 
-  pin("mergeInto", 13)(t => CowTable.mergeInto(spark, t,
+  pin("mergeInto", 10)(t => CowTable.mergeInto(spark, t,
     src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
 
-  pin("mergeIntoHybrid", 17)(t => CowTable.mergeIntoHybrid(spark, t,
+  pin("mergeIntoHybrid", 14)(t => CowTable.mergeIntoHybrid(spark, t,
     src((10 to 12) ++ (60 to 89) ++ (400 to 401), "h"), Seq("id")))
 
   /** The 2-file fixture after one DV delete — the shape every
@@ -83,10 +105,10 @@ class CowJobCountSpec extends AnyFunSuite {
     t
   }
 
-  pin("upsertMor", 13, () => withDelete(), "the 2-file fixture with a delete")(t =>
+  pin("upsertMor", 9, () => withDelete(), withADelete)(t =>
     CowTable.upsertMor(spark, t, src((10 to 12) ++ (300 to 301), "u"), Seq("id")))
 
-  pin("mergeInto", 15, () => withDelete(), "the 2-file fixture with a delete")(t =>
+  pin("mergeInto", 11, () => withDelete(), withADelete)(t =>
     CowTable.mergeInto(spark, t, src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
 
   /** The 2-file fixture plus three one-row appends (the compactable
@@ -103,11 +125,11 @@ class CowJobCountSpec extends AnyFunSuite {
     CowTable.readManifest(t, 0).files
       .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).min
 
-  pin("compactTable", 7, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTable", 4, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTable(spark, t, targetBytes = 1L << 20,
       smallThreshold = Some(tailThreshold(t))))
 
-  pin("compactTableZorder", 13, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTableZorder", 10, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTableZorder(spark, t, targetBytes = 1L << 20,
       zCols = Seq("id", "v"), smallThreshold = Some(tailThreshold(t))))
 
@@ -119,14 +141,14 @@ class CowJobCountSpec extends AnyFunSuite {
     t
   }
 
-  pin("rewriteDeletes(minDeadFraction = 0.0)", 5, () => withDeletes(),
+  pin("rewriteDeletes(minDeadFraction = 0.0)", 2, () => withDeletes(),
     "the 2-file fixture with deletes")(t => CowTable.rewriteDeletes(spark, t))
 
-  pin("rewriteDeletes(minDeadFraction = 0.3)", 9, () => withDeletes(),
+  pin("rewriteDeletes(minDeadFraction = 0.3)", 3, () => withDeletes(),
     "the 2-file fixture with deletes")(t =>
     CowTable.rewriteDeletes(spark, t, minDeadFraction = 0.3))
 
-  pin("rebucketTable", 8, () => {
+  pin("rebucketTable", 4, () => {
     val t = s"${System.getProperty("java.io.tmpdir")}/graft_cow_jobs/" +
       java.util.UUID.randomUUID().toString.take(8)
     CowTable.initBucketed(src(0 until 100, "n"), t, "id", 4)
@@ -164,8 +186,33 @@ class CowJobCountSpec extends AnyFunSuite {
     }
   }
 
-  readPins("the 2-file fixture", () => fixture())(2, 2, 4, 1, 6)
+  readPins(twoFile, () => fixture())(0, 0, 2, 1, 6)
 
-  readPins("the 2-file fixture with a delete", () => withDelete())(
-    3, 3, 6, 2, 8)
+  /** `lh_mixed`'s feed shape: 10k-row files of incompressible names
+    * (~0.7 MB each), a DV in every file, then a merge that rewrites one
+    * of them. Its changed side is large enough
+    * that a join sized as the product of the data and the DV rows plans
+    * as a sort-merge join, which AQE demotes to a broadcast only after
+    * running the shuffle stages. */
+  private def lhShaped(): String = {
+    CowTable.clearEntriesCache()
+    val t = s"${System.getProperty("java.io.tmpdir")}/graft_cow_jobs/" +
+      java.util.UUID.randomUUID().toString.take(8)
+    CowTable.initFiled(spark.range(40000L).select($"id",
+        sha2($"id".cast("string"), 256).as("name"),
+        ($"id" * 1.0).as("v"), (($"id" / 10000L).cast("int") + 1).as("__f")),
+      t, "__f", 4)
+    CowTable.deleteWhere(spark, t, $"id" % 1000L === 7L)
+    t
+  }
+
+  pin("tableChanges(...).collect() over a one-row merge", 8,
+      thenMerge(() => lhShaped()), "a 4-file table with a DV in every file") { t =>
+    val v = CowTable.latestManifest(t).get.version
+    assert(CowTable.tableChanges(spark, t, v - 1, v, Seq("id")).collect()
+      .length == 2)
+  }
+
+  readPins(withADelete, () => withDelete())(
+    0, 0, 3, 2, 8)
 }

@@ -518,7 +518,7 @@ class CowTableSpec extends AnyFunSuite {
     val q = CowTable.read(spark, t).filter($"id" >= 90L).select("id", "v")
     val plan = q.queryExecution.executedPlan.toString
     // the user predicate reaches the parquet scan THROUGH the DV
-    // left-join (an outer join preserves its left rows, so Catalyst may
+    // anti join (it keeps or drops whole left rows, so Catalyst may
     // push the filter below it) — without this, every DV'd read becomes
     // a full scan
     assert(plan.contains("PushedFilters") &&
@@ -526,7 +526,7 @@ class CowTableSpec extends AnyFunSuite {
     // the packed per-file runs ride a broadcast, never a shuffle, and
     // the probe is the codegen'd binary-search dv_runs_contain filter
     assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftOuter") && plan.contains("dvrunscontain"), plan)
+      plan.contains("LeftAnti") && plan.contains("dvrunscontain"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
     // name is not read: pruning intact despite the _metadata projection
     val readSchemas = plan.split("ReadSchema: ").drop(1).map(_.split("\n").head)
