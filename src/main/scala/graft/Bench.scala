@@ -292,7 +292,7 @@ object Bench {
     * goes through the `noop` sink so the FULL plan executes, and the
     * cache is cleared afterwards, also on failure. */
   def timeRun(spark: SparkSession, sfDir: String, name: String): Timing =
-    try graft.operators.CowTable.benchSplit.get(name) match {
+    try graft.operators.CowGates.benchSplit.get(name) match {
       case Some(mk) =>
         val (build, op) = mk(spark, sfDir)
         val t0 = System.nanoTime()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Advanced, BpeTokenizer, Changelog, CowTable, DataQuality, Dedup, Layout, MatView, Multimodal, Relational, Sampling, Scale, Similarity, TextAnalysis, TpchDerived, WordCount}
+import graft.operators.{Advanced, BpeTokenizer, Changelog, CowGates, DataQuality, Dedup, Layout, MatView, Multimodal, Relational, Sampling, Scale, Similarity, TextAnalysis, TpchDerived, WordCount}
 import graft.streaming.EventStreams
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -24,7 +24,7 @@ object SparkEntry {
       Dedup.queries ++ Similarity.queries ++ Multimodal.queries ++
       EventStreams.queries ++ Sampling.queries ++ Scale.queries ++
       Changelog.queries ++ Layout.queries ++ MatView.queries ++
-      DataQuality.queries ++ CowTable.queries ++ TpchDerived.queries ++
+      DataQuality.queries ++ CowGates.queries ++ TpchDerived.queries ++
       BpeTokenizer.queries ++ graft.sources.SourceGates.queries
 
   private val wordcountOracle =
@@ -39,6 +39,6 @@ object SparkEntry {
     Dedup.oracles ++ Similarity.oracles ++ Multimodal.oracles ++
     EventStreams.oracles ++ Sampling.oracles ++ Scale.oracles ++
     Changelog.oracles ++ Layout.oracles ++ MatView.oracles ++
-    DataQuality.oracles ++ CowTable.oracles ++ TpchDerived.oracles ++
+    DataQuality.oracles ++ CowGates.oracles ++ TpchDerived.oracles ++
     BpeTokenizer.oracles ++ graft.sources.SourceGates.oracles
 }

@@ -907,12 +907,69 @@ private[plans] class CowV2Write(table: CowDsv2Table,
   }
 }
 
-/** Opens parquet writers lazily (zero-row tasks emit no file). With a
-  * non-empty `partSpec`, rows route to `__p_<c>=<v>` subdirectories —
-  * one open writer per partition tuple the task sees (fine for the
+/** The data rows of one write task, shared by the batch, delta and
+  * streaming writers. Each row routes to its directory suffix — the
+  * `__p_<c>=<v>` segments of a non-empty `partSpec`, then the
+  * `__gbucket=<id>` segment of a `bucketSpec` — projects to the table's
+  * data columns (`srcIdx`), and goes to that directory's parquet writer,
+  * opened lazily on its first row (zero-row tasks emit no file). One
+  * writer stays open per directory the task sees: fine for the
   * delta-sized rewrites row-level operations produce; a full-table
   * re-layout goes through `CowTable.compactTable`, which shuffles by
-  * partition first). */
+  * partition first. `pathsOf(dir)` names the (written, final) file of a
+  * directory suffix; they differ only where the caller publishes by
+  * rename. */
+private[plans] final class RoutedRows(handle: WriteBridge.ParquetWriterHandle,
+    srcIdx: Array[Int], types: Array[DataType],
+    partSpec: Array[(String, Int, DataType)],
+    bucketSpec: Option[(Int, DataType, Int)], partitionId: Int,
+    pathsOf: String => (String, String)) {
+  private val writers = scala.collection.mutable.LinkedHashMap
+    .empty[String, WriteBridge.ParquetRowWriter]
+  private val out = new GenericInternalRow(srcIdx.length)
+  /** (written, final) path of every writer opened, in open order. */
+  val opened = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  var rows = 0L
+
+  private def dirOf(r: InternalRow): String =
+    (if (partSpec.isEmpty) ""
+     else partSpec.map { case (c, ti, dt) =>
+       "__p_" + c + "=" + CowDsv2.partPathValue(r, srcIdx(ti), dt)
+     }.mkString("/", "/", "")) +
+      CowDsv2.bucketDirOf(r, srcIdx, bucketSpec)
+
+  def write(r: InternalRow): Unit = {
+    val dir = dirOf(r)
+    val w = writers.getOrElseUpdate(dir, {
+      val (written, fin) = pathsOf(dir)
+      opened += ((written, fin))
+      handle.open(written, partitionId, 0)
+    })
+    var i = 0
+    while (i < srcIdx.length) {
+      out.update(i,
+        if (r.isNullAt(srcIdx(i))) null else r.get(srcIdx(i), types(i)))
+      i += 1
+    }
+    w.write(out)
+    rows += 1
+  }
+
+  def close(): Unit = {
+    writers.values.foreach(_.close())
+    writers.clear()
+  }
+
+  /** Closes the writers and deletes every file they wrote. */
+  def abort(): Unit = {
+    close()
+    opened.foreach { case (written, _) =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(written))
+    }
+  }
+}
+
+/** The replacing (batch) write's task writer over [[RoutedRows]]. */
 private[plans] case class CowDataWriterFactory(destDir: String,
     handle: WriteBridge.ParquetWriterHandle, srcIdx: Array[Int],
     types: Array[DataType], partSpec: Array[(String, Int, DataType)],
@@ -921,50 +978,20 @@ private[plans] case class CowDataWriterFactory(destDir: String,
 
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] = new DataWriter[InternalRow] {
-    private val writers = scala.collection.mutable.LinkedHashMap
-      .empty[String, WriteBridge.ParquetRowWriter]
-    private val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-    private var n = 0L
-    private val out = new GenericInternalRow(srcIdx.length)
-
-    private def dirOf(r: InternalRow): String =
-      (if (partSpec.isEmpty) ""
-       else partSpec.map { case (c, ti, dt) =>
-         "__p_" + c + "=" + CowDsv2.partPathValue(r, srcIdx(ti), dt)
-       }.mkString("/", "/", "")) +
-        CowDsv2.bucketDirOf(r, srcIdx, bucketSpec)
-
-    private def writerFor(dir: String): WriteBridge.ParquetRowWriter =
-      writers.getOrElseUpdate(dir, {
+    private val data = new RoutedRows(handle, srcIdx, types, partSpec,
+      bucketSpec, partitionId, { dir =>
         val p = s"$destDir$dir/part-$partitionId-$taskId.parquet"
-        paths += p
-        handle.open(p, partitionId, 0)
+        (p, p)
       })
 
-    override def write(r: InternalRow): Unit = {
-      val w = writerFor(dirOf(r))
-      var i = 0
-      while (i < srcIdx.length) {
-        out.update(i,
-          if (r.isNullAt(srcIdx(i))) null else r.get(srcIdx(i), types(i)))
-        i += 1
-      }
-      w.write(out)
-      n += 1
-    }
+    override def write(r: InternalRow): Unit = data.write(r)
 
     override def commit(): WriterCommitMessage = {
-      writers.values.foreach(_.close())
-      writers.clear()
-      CowWriteMessage(paths.toSeq, n)
+      data.close()
+      CowWriteMessage(data.opened.map(_._2).toSeq, data.rows)
     }
 
-    override def abort(): Unit = {
-      writers.values.foreach(_.close())
-      writers.clear()
-      paths.foreach(p =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p)))
-    }
+    override def abort(): Unit = data.abort()
 
     override def close(): Unit = ()
   }
@@ -1071,9 +1098,9 @@ private[plans] class CowDeltaWrite(table: CowDsv2Table,
   }
 }
 
-/** Per-task delta writer: lazily opened parquet writers for inserted
-  * rows (one per partition tuple seen, like the replacing write) plus
-  * one lazily opened deletion-vector writer for deleted identities.
+/** Per-task delta writer: inserted rows go through [[RoutedRows]], like
+  * the replacing write, plus one lazily opened deletion-vector writer
+  * for deleted identities.
   * `update` never fires (updates arrive pre-split as delete + insert)
   * but is implemented as exactly that pair for API completeness. */
 private[plans] case class CowDeltaWriterFactory(dataDir: String,
@@ -1086,15 +1113,14 @@ private[plans] case class CowDeltaWriterFactory(dataDir: String,
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
-      private val writers = scala.collection.mutable.LinkedHashMap
-        .empty[String, WriteBridge.ParquetRowWriter]
-      private val dataPaths =
-        scala.collection.mutable.ArrayBuffer.empty[String]
+      private val data = new RoutedRows(dataHandle, srcIdx, types, partSpec,
+        bucketSpec, partitionId, { dir =>
+          val p = s"$dataDir$dir/part-$partitionId-$taskId.parquet"
+          (p, p)
+        })
       private var dvWriter: WriteBridge.ParquetRowWriter = _
       private var dvPath: String = _
-      private var nIns = 0L
       private var nDel = 0L
-      private val out = new GenericInternalRow(srcIdx.length)
       private val dvOut = new GenericInternalRow(3)
       // run-length buffer for the range-encoded DV sidecar: deletes of
       // one file typically arrive in ascending row order, so chaining
@@ -1105,32 +1131,10 @@ private[plans] case class CowDeltaWriterFactory(dataDir: String,
       private var runStart = 0L
       private var runLen = 0L
 
-      private def dirOf(r: InternalRow): String =
-        (if (partSpec.isEmpty) ""
-         else partSpec.map { case (c, ti, dt) =>
-           "__p_" + c + "=" + CowDsv2.partPathValue(r, srcIdx(ti), dt)
-         }.mkString("/", "/", "")) +
-          CowDsv2.bucketDirOf(r, srcIdx, bucketSpec)
-
-      private def writerFor(dir: String): WriteBridge.ParquetRowWriter =
-        writers.getOrElseUpdate(dir, {
-          val p = s"$dataDir$dir/part-$partitionId-$taskId.parquet"
-          dataPaths += p
-          dataHandle.open(p, partitionId, 0)
-        })
-
       override def insert(r: InternalRow): Unit = {
         require(srcIdx.nonEmpty,
           "delta insert arrived on a write planned without data columns")
-        val w = writerFor(dirOf(r))
-        var i = 0
-        while (i < srcIdx.length) {
-          out.update(i,
-            if (r.isNullAt(srcIdx(i))) null else r.get(srcIdx(i), types(i)))
-          i += 1
-        }
-        w.write(out)
-        nIns += 1
+        data.write(r)
       }
 
       private def flushRun(): Unit = {
@@ -1168,18 +1172,16 @@ private[plans] case class CowDeltaWriterFactory(dataDir: String,
       }
 
       override def commit(): WriterCommitMessage = {
-        writers.values.foreach(_.close())
-        writers.clear()
+        data.close()
         if (dvWriter != null) { flushRun(); dvWriter.close() }
-        CowDeltaWriteMessage(dataPaths.toSeq, Option(dvPath).toSeq,
-          nIns, nDel)
+        CowDeltaWriteMessage(data.opened.map(_._2).toSeq,
+          Option(dvPath).toSeq, data.rows, nDel)
       }
 
       override def abort(): Unit = {
-        writers.values.foreach(_.close())
-        writers.clear()
+        data.abort()
         if (dvWriter != null) dvWriter.close()
-        (dataPaths.toSeq ++ Option(dvPath)).foreach(p =>
+        Option(dvPath).foreach(p =>
           java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p)))
       }
 
@@ -1393,8 +1395,8 @@ private[plans] class CowStreamingUpsertWrite(table: CowDsv2Table,
     }
 }
 
-/** Streaming task writer: deterministic final path per (epoch,
-  * partition, partition-tuple dir); the attempt writes a
+/** Streaming task writer over [[RoutedRows]]: deterministic final path
+  * per (epoch, partition, partition-tuple dir); the attempt writes a
   * taskId-suffixed tmp and publishes by ATOMIC_MOVE at task commit, so
   * speculative/retried attempts and replayed epochs land equivalent
   * bytes at the same final paths. */
@@ -1406,58 +1408,27 @@ private[plans] case class CowStreamWriterFactory(streamDir: String,
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = new DataWriter[InternalRow] {
-    // dir suffix -> (writer, tmp path, final path)
-    private val writers = scala.collection.mutable.LinkedHashMap
-      .empty[String, (WriteBridge.ParquetRowWriter, String, String)]
-    private var n = 0L
-    private val out = new GenericInternalRow(srcIdx.length)
-
-    private def dirOf(r: InternalRow): String =
-      (if (partSpec.isEmpty) ""
-       else partSpec.map { case (c, ti, dt) =>
-         "__p_" + c + "=" + CowDsv2.partPathValue(r, srcIdx(ti), dt)
-       }.mkString("/", "/", "")) +
-        CowDsv2.bucketDirOf(r, srcIdx, bucketSpec)
-
-    private def writerFor(dir: String): WriteBridge.ParquetRowWriter =
-      writers.getOrElseUpdate(dir, {
+    private val data = new RoutedRows(handle, srcIdx, types, partSpec,
+      bucketSpec, partitionId, { dir =>
         val fin = s"$streamDir/e$epochId$dir/part-$partitionId.parquet"
-        val tmp = s"$fin.tmp-$taskId"
-        (handle.open(tmp, partitionId, 0), tmp, fin)
-      })._1
+        (s"$fin.tmp-$taskId", fin)
+      })
 
-    override def write(r: InternalRow): Unit = {
-      val w = writerFor(dirOf(r))
-      var i = 0
-      while (i < srcIdx.length) {
-        out.update(i,
-          if (r.isNullAt(srcIdx(i))) null else r.get(srcIdx(i), types(i)))
-        i += 1
-      }
-      w.write(out)
-      n += 1
-    }
+    override def write(r: InternalRow): Unit = data.write(r)
 
     override def commit(): WriterCommitMessage = {
-      val finals = writers.values.map { case (w, tmp, fin) =>
-        w.close()
+      data.close()
+      val finals = data.opened.map { case (tmp, fin) =>
         java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
           java.nio.file.Paths.get(fin),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         fin
       }.toSeq
-      writers.clear()
-      CowWriteMessage(finals, n)
+      CowWriteMessage(finals, data.rows)
     }
 
-    override def abort(): Unit = {
-      writers.values.foreach { case (w, tmp, _) =>
-        w.close()
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tmp))
-      }
-      writers.clear()
-    }
+    override def abort(): Unit = data.abort()
 
     override def close(): Unit = ()
   }
