@@ -453,7 +453,10 @@ private[operators] trait CowCommit { self: CowTable.type =>
   private[graft] val lastVacuumExecutorDeletes =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private[graft] def clearEntriesCache(): Unit = entriesCache.clear()
+  private[graft] def clearEntriesCache(): Unit = {
+    entriesCache.clear()
+    dvRunCache.clear()
+  }
 
   private def cacheEntries(table: String, rel: String,
       entries: Seq[FileEntry]): Unit =
@@ -2123,10 +2126,6 @@ private[operators] trait CowCommit { self: CowTable.type =>
     * [[rowLevelCommit]] publishes them. */
   private[graft] def newDvDir(table: String, v: Int): String =
     versionDir(table, "dv", v).toString
-
-  /** Metadata key of [[applyDvFilter]]'s probe column: the snapshot's
-    * DV file paths. */
-  private[graft] val DvFilesMetaKey = "graft.dvFiles"
 
   /** (bytes, numRows) per NORMALIZED path for the given planned data
     * files — the scan-planning/statistics lookup of the DSv2 table.

@@ -608,21 +608,20 @@ private[operators] trait CowMaintenance { self: CowTable.type =>
     val newSide = align(newSide0)
     require(keys.forall(oldSide.columns.contains), s"keys $keys missing")
     // a duplicated key would silently misclassify under the key join;
-    // both sides are changed-file-sized, so the check is delta-priced —
-    // and BOTH sides ride one union + one aggregate (one job per slice,
-    // was two)
-    locally {
-      val k = struct(keys.map(col): _*).as("__k")
-      oldSide.select(lit("from").as("__side"), k)
-        .unionByName(newSide.select(lit("to").as("__side"), k))
-        .groupBy(col("__side"))
-        .agg(count(lit(1)).as("n"), count_distinct(col("__k")).as("d"))
-        .collect().foreach { r =>
-          require(r.getLong(1) == r.getLong(2),
-            s"tableChanges: ${r.getString(0)} version has " +
-              s"${r.getLong(1) - r.getLong(2)} duplicate keys on $keys")
-        }
-    }
+    // both sides are changed-file-sized, so the check is delta-priced:
+    // ONE exchange groups both sides by (side, key); the duplicated keys
+    // fold to one count per side, so at most 2 rows reach the driver
+    def keyed(side: DataFrame, name: String): DataFrame =
+      side.select(lit(name).as("__side") +: keys.map(col): _*)
+    val dups = keyed(oldSide, "from").unionByName(keyed(newSide, "to"))
+      .groupBy(col("__side") +: keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > 1L)
+      .groupBy("__side").agg(sum(col("__n") - 1L).as("__dups"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).sorted
+    require(dups.isEmpty, dups.map { case (side, n) =>
+      s"tableChanges: $side version has $n duplicate keys on $keys"
+    }.mkString("; "))
     val dataCols = oldSide.columns.filterNot(keys.contains).toSeq
 
     val o = oldSide.select(keys.map(col) ++

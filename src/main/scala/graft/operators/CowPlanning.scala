@@ -23,20 +23,19 @@ private[operators] trait CowPlanning { self: CowTable.type =>
     * are disjoint, so summed lengths are exact). The reserved names let
     * the result join onto user-schema rows. One size switch, decided
     * from the run counts manifests record (`runs` must count every
-    * path of `dvs`): at most [[SmallSidecarEntries]] runs are read on
-    * the driver into a LocalRelation, so a projection of it collects
-    * with no Spark job; above it, a columnar per-file aggregate over
-    * the DV parquet. */
+    * path of `dvs`): at most [[SmallSidecarEntries]] runs are served on
+    * the driver from [[driverRuns]] as a LocalRelation, so a projection
+    * of it collects with no Spark job; above it, a columnar per-file
+    * aggregate over the DV parquet. `onDriver` serves any size on the
+    * driver — for a caller that may not start a Spark job
+    * ([[applyDvFilter]]'s probe outside whole-stage codegen). */
   private[graft] def dvFiles(spark: SparkSession, dvs: Seq[String],
-      runs: Map[String, Long]): DataFrame =
-    if (dvsSmall(dvs, runs)) {
-      val rows = readParquetDriver(spark, dvs)(r =>
-          (normalize(r.needStr("file_path")), r.needLong("start"),
-            r.needLong("len")))
-        .groupBy(_._1).toSeq.map { case (fp, rs) =>
-          val sorted = rs.sortBy(_._2)
-          Row(fp, sorted.map(_._2), sorted.map(_._3), sorted.map(_._3).sum)
-        }
+      runs: Map[String, Long], onDriver: Boolean = false): DataFrame =
+    if (onDriver || dvsSmall(dvs, runs)) {
+      val rows = driverRuns(spark, dvs).toSeq.map {
+        case (fp, (starts, lens)) =>
+          Row(fp, starts.toSeq, lens.toSeq, lens.sum)
+      }
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), dvFilesSchema)
     } else
       dvRuns(spark, dvs).groupBy(col("fp").as("__dv_fp"))
@@ -55,6 +54,56 @@ private[operators] trait CowPlanning { self: CowTable.type =>
 
   private val dvFilesSchema = StructType.fromDDL("__dv_fp STRING, " +
     "__dv_starts ARRAY<BIGINT>, __dv_lens ARRAY<BIGINT>, __dv_n BIGINT")
+
+  /** Sorted runs per normalized data-file path. */
+  private type FileRuns = Map[String, (Array[Long], Array[Long])]
+
+  /** Each DV file's parsed runs, keyed by the DV path. A DV file is
+    * IMMUTABLE once its manifest commits (its directory name carries a
+    * UUID, [[versionDir]]) — the argument [[loadEntries]]' cache makes
+    * for sidecars — so a later snapshot read assembles its runs with no
+    * file I/O. Only [[dvFiles]]' driver branch fills it (an entry passes
+    * [[SmallSidecarEntries]] runs only through its `onDriver` override);
+    * bounded like the entries cache (whole-map clear past the cap) and
+    * cleared with it ([[clearEntriesCache]]). */
+  private[operators] val dvRunCache =
+    new java.util.concurrent.ConcurrentHashMap[String, FileRuns]()
+  private val DvRunCacheCap = 256
+
+  /** The runs of the DV file `dv`: a driver parquet read (no Spark job)
+    * on the first call, the cache after. Paths normalize once per
+    * distinct stored form, not per run. */
+  private def dvRunsOf(spark: SparkSession, dv: String): FileRuns = {
+    val hit = dvRunCache.get(dv)
+    if (hit != null) hit
+    else {
+      val parsed = mergeRuns(readParquetDriver(spark, Seq(dv))(r =>
+          (r.needStr("file_path"), (r.needLong("start"), r.needLong("len"))))
+        .groupBy(_._1).toSeq.map { case (raw, rs) =>
+          normalize(raw) -> rs.map(_._2) })
+      if (dvRunCache.size >= DvRunCacheCap) dvRunCache.clear()
+      dvRunCache.put(dv, parsed)
+      parsed
+    }
+  }
+
+  /** `(path, (start, len))` groups as [[FileRuns]], each sorted by
+    * start. */
+  private def mergeRuns(parts: Seq[(String, Seq[(Long, Long)])]): FileRuns =
+    parts.groupBy(_._1).map { case (fp, ps) =>
+      val sorted = ps.flatMap(_._2).sortBy(_._1)
+      fp -> ((sorted.map(_._1).toArray, sorted.map(_._2).toArray))
+    }
+
+  /** [[dvFiles]]' driver branch: every DV'd file's runs across `dvs`
+    * (a file deleted from by several versions has runs in several DV
+    * files), assembled from [[dvRunsOf]]. */
+  private def driverRuns(spark: SparkSession, dvs: Seq[String]): FileRuns =
+    dvs.map(dvRunsOf(spark, _)) match {
+      case Seq(one) => one
+      case many => mergeRuns(many.flatMap(_.toSeq.map { case (fp, (s, l)) =>
+        fp -> s.toSeq.zip(l) }))
+    }
 
   /** Exact-integral adaptation of a predicate literal to the declared
     * column's type — the only cross-type probes attempted. Hashing is
@@ -979,20 +1028,19 @@ private[operators] trait CowPlanning { self: CowTable.type =>
     if (df.columns.contains("_metadata")) df.drop("_metadata") else df
 
   /** DV-aware snapshot read: scan the data files and drop deleted row
-    * positions PER FILE ([[applyDvFilter]]) — an anti join against the
-    * one DV reader's rows ([[dvFiles]]: one per DV'd file, read on the
-    * driver as a LocalRelation at or under [[SmallSidecarEntries]] runs,
-    * a columnar aggregate above; broadcast at O(total runs)) probed by
-    * the codegen'd binary-search [[graft.functions.DvRunsContain]] on
-    * `_metadata.row_index` (a PUBLIC Spark metadata column: the row's
-    * stable position within its parquet file), so the positional
-    * delete needs no key or schema requirement on the table and
-    * never builds state proportional to the number of deleted ROWS —
-    * only to the number of runs, and past [[DvBroadcastRunsConf]] runs
-    * it becomes a shuffled range anti-join (spillable, executor-side).
-    * Restricting the scan to `onlyFiles` keeps the same semantics on a
-    * file subset: DV rows for files outside the subset simply never
-    * match. */
+    * positions PER FILE ([[applyDvFilter]]) — a Filter probing the
+    * snapshot's per-file runs (from the one DV reader, [[dvFiles]],
+    * collected when the read executes) through a broadcast variable,
+    * with the codegen'd binary-search
+    * [[graft.functions.DvRunsContain]] on `_metadata.row_index` (a
+    * PUBLIC Spark metadata column: the row's stable position within its
+    * parquet file), so the positional delete needs no key or schema
+    * requirement on the table and never builds state proportional to
+    * the number of deleted ROWS — only to the number of runs, and past
+    * [[DvBroadcastRunsConf]] runs it becomes a shuffled range anti-join
+    * (spillable, executor-side). Restricting the scan to `onlyFiles`
+    * keeps the same semantics on a file subset: runs for files outside
+    * the subset simply never match. */
   private[operators] def readSnapshot(spark: SparkSession, m: Manifest,
       onlyFiles: Option[Seq[String]] = None): DataFrame = {
     val files = onlyFiles.getOrElse(m.files)
@@ -1293,39 +1341,38 @@ private[operators] trait CowPlanning { self: CowTable.type =>
   }
 
   /** Apply deletion vectors to `df` executor-side. Up to
-    * [[DvBroadcastRunsConf]] total runs, `df` anti-joins the broadcast
-    * [[dvFiles]] rows (one per DV'd file: a LocalRelation read on the
-    * driver at or under [[SmallSidecarEntries]] runs, a columnar
-    * aggregate above), dropping rows whose `riCol` falls in a run —
-    * binary search per row, inside whole-stage codegen. Past that
-    * budget it is a shuffled range anti-join against the raw runs:
-    * still executor-side, no broadcast proportional to the delete set.
-    * `fpCol` must already be normalized. Both decisions read the run
-    * counts RECORDED IN THE MANIFEST — no footer is opened on the read
-    * path. The probe column carries the DV file set in its metadata
-    * ([[DvFilesMetaKey]]): the MV rewrite reads a DV-applied scan's
-    * snapshot identity from it. */
+    * [[DvBroadcastRunsConf]] total runs, the per-file runs ship as ONE
+    * broadcast variable ([[graft.functions.DvRunSet]]: one collect of
+    * [[dvFiles]], a driver LocalRelation with no Spark job at or under
+    * [[SmallSidecarEntries]] runs, a columnar aggregate above) and a
+    * Filter drops rows whose `riCol` falls in a run of their file — a
+    * hash lookup per file and a binary search per row
+    * ([[graft.functions.DvRunsContain]]), inside whole-stage codegen.
+    * The collect happens when the read EXECUTES, never when it is built,
+    * explained or answered by the MV rewrite. No join: the runs are no
+    * plan-side relation, so the read plans no broadcast exchange, and
+    * predicate pushdown and column pruning reach the scan as through
+    * any filter. Past that budget it is a shuffled range anti-join
+    * against the raw runs: still executor-side, no broadcast
+    * proportional to the delete set. `fpCol` must already be
+    * normalized. Both decisions read the run counts RECORDED IN THE
+    * MANIFEST — no footer is opened on the read path. The probe carries
+    * the DV file set: the MV rewrite reads a DV-applied scan's snapshot
+    * identity from it. */
   private[graft] def applyDvFilter(spark: SparkSession, df: DataFrame,
       m: Manifest, fpCol: Column, riCol: Column): DataFrame = {
     val limit = spark.conf.getOption(DvBroadcastRunsConf)
       .map(_.toLong).getOrElse(DvBroadcastRunsDefault)
-    val probed = df.withColumn("__dv_probe_fp", fpCol.as("__dv_probe_fp",
-      new MetadataBuilder().putStringArray(DvFilesMetaKey, m.dvs.toArray)
-        .build()))
-    if (m.dvs.map(m.dvRunCounts).sum <= limit)
-      // an anti join, not a left join + filter: Spark sizes a left join
-      // against a LocalRelation as the PRODUCT of both sides (it cannot
-      // see that __dv_fp is unique), which turned every join above a
-      // DV'd read into a sort-merge join that AQE demoted only after
-      // running its shuffle stages; an anti join is sized as its left
-      probed.withColumn("__dv_probe_ri", riCol)
-        .join(broadcast(dvFiles(spark, m)),
-          col("__dv_probe_fp") === col("__dv_fp") &&
-            graft.functions.DvRunsContain(col("__dv_starts"),
-              col("__dv_lens"), col("__dv_probe_ri")),
-          "left_anti")
-        .drop("__dv_probe_fp", "__dv_probe_ri")
-    else {
+    if (m.dvs.isEmpty) df
+    else if (m.dvs.map(m.dvRunCounts).sum <= limit) {
+      val runs = new graft.functions.DvRunSet(m.dvs, jobs =>
+        spark.sparkContext.broadcast(new graft.functions.DvRunIndex(
+          dvFiles(spark, m.dvs, m.dvRunCounts, onDriver = !jobs)
+            .select("__dv_fp", "__dv_starts", "__dv_lens").collect()
+            .map(r => r.getString(0) -> ((r.getSeq[Long](1).toArray,
+              r.getSeq[Long](2).toArray))).toMap)))
+      df.filter(!graft.functions.DvRunsContain(runs, fpCol, riCol))
+    } else {
       // the row index materializes on the left FIRST: the runs side is
       // itself a parquet scan, so a raw `_metadata` reference in the
       // join condition would be ambiguous between the two scans. The
@@ -1333,7 +1380,8 @@ private[operators] trait CowPlanning { self: CowTable.type =>
       // fp/start/len can't collide either.
       val runs = dvRuns(spark, m.dvs).select(col("fp").as("__dv_fp"),
         col("start").as("__dv_start"), col("len").as("__dv_len"))
-      probed.withColumn("__dv_probe_ri", riCol)
+      df.withColumn("__dv_probe_fp", fpCol)
+        .withColumn("__dv_probe_ri", riCol)
         .join(runs,
           col("__dv_probe_fp") === col("__dv_fp") &&
             col("__dv_probe_ri") >= col("__dv_start") &&

@@ -542,12 +542,6 @@ private[plans] case class CowReaderFactory(
     val it = readFn(cp.path, cp.bytes)
     val starts = cp.dvStarts
     val lens = cp.dvLens
-    // deleted iff ri falls in the run with the greatest start <= ri
-    def deleted(ri: Long): Boolean = {
-      var i = java.util.Arrays.binarySearch(starts, ri)
-      if (i < 0) i = -i - 2
-      i >= 0 && ri < starts(i) + lens(i)
-    }
     val fileUtf8 = UTF8String.fromString(cp.path)
     val out = new GenericInternalRow(plan.length)
     new PartitionReader[InternalRow] {
@@ -556,7 +550,8 @@ private[plans] case class CowReaderFactory(
         while (it.hasNext) {
           val r = it.next()
           val ri = r.getLong(nData)
-          if (starts.length == 0 || !deleted(ri)) {
+          if (starts.length == 0 ||
+              !graft.functions.DvRunsContain.contains(starts, lens, ri)) {
             var i = 0
             while (i < plan.length) {
               val cands = plan(i)

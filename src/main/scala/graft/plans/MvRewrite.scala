@@ -6,13 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.functions.DvRunsContain
 import graft.operators.CowTable
 
 /** Transparent materialized-view rewrite — the optimizer-rule extension
@@ -206,54 +206,30 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Match the DATA side of a DV-applied snapshot read: the projection
-    * [[graft.operators.CowTable]]'s read path plants over the data scan
-    * (data attrs + the `__dv_probe_fp` pathnorm alias + the row-index
-    * extract). The marker alias is the recognizer, and its metadata
-    * carries the snapshot's DV file set — the runs side may be a
-    * driver-built LocalRelation with no paths of its own. Data
-    * attributes pass through untouched, so the aggregate above still
-    * references the relation's own output. */
-  private def dvDataSide(plan: LogicalPlan):
-      Option[(LogicalRelation, Seq[Expression], Seq[String])] = {
-    def dvFiles(pl: Seq[NamedExpression]): Option[Seq[String]] =
-      pl.collectFirst {
-        case a: Alias if a.name == "__dv_probe_fp" &&
-            a.metadata.contains(CowTable.DvFilesMetaKey) =>
-          a.metadata.getStringArray(CowTable.DvFilesMetaKey).toSeq
-      }
-    plan match {
-      case Project(pl, rel: LogicalRelation) =>
-        dvFiles(pl).map((rel, Nil, _))
-      // a user predicate pushed below the DV join lands between the
-      // probe projection and the scan — capture it as a filter
-      case Project(pl, Filter(c, rel: LogicalRelation)) =>
-        dvFiles(pl).map((rel, splitConjunctivePredicates(c), _))
-      case _ => None
-    }
-  }
-
   /** Strip pruning Projects and collect Filter conjuncts down to a bare
     * file scan. Only attribute-only Projects are transparent — anything
-    * computed in between makes the shape unrecognizable. ONE shape of
-    * computed subtree IS recognized: the DV-application pattern the CoW
-    * read path plants (a left-anti join of the data scan against the
-    * per-file DV runs on dvrunscontain(...)) — it returns the
-    * data relation plus the DV file set, so a DV-adjusted MV can serve
-    * aggregates over a merge-on-read snapshot without a rewriteDeletes
-    * pass. */
-  private def stripToScan(plan: LogicalPlan, filters: Seq[Expression] = Nil):
+    * computed in between makes the shape unrecognizable. ONE computed
+    * conjunct IS recognized: the DV filter the CoW read path plants
+    * over the data scan (`NOT dvrunscontain(...)`) — it is dropped from
+    * the filters and its DV file set returned with the data relation,
+    * so a DV-adjusted MV can serve aggregates over a merge-on-read
+    * snapshot without a rewriteDeletes pass. Two DV filters on one scan
+    * are not a snapshot read: no match. */
+  private def stripToScan(plan: LogicalPlan, filters: Seq[Expression] = Nil,
+      dvs: Option[Seq[String]] = None):
       Option[(Seq[Expression], LogicalRelation, Option[Seq[String]])] =
     plan match {
       case Filter(cond, child) =>
-        stripToScan(child, filters ++ splitConjunctivePredicates(cond))
-      case Join(l, _, LeftAnti, Some(cond), _)
-          if cond.exists(_.isInstanceOf[graft.functions.DvRunsContain]) =>
-        for ((dataRel, pushed, dvs) <- dvDataSide(l))
-          yield (filters ++ pushed, dataRel, Some(dvs))
+        val (probes, rest) = splitConjunctivePredicates(cond).partition {
+          case Not(_: DvRunsContain) => true
+          case _ => false
+        }
+        val found = probes.collect { case Not(p: DvRunsContain) => p.dvs }
+        if (found.size + dvs.size > 1) None
+        else stripToScan(child, filters ++ rest, dvs.orElse(found.headOption))
       case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
-        stripToScan(child, filters)
-      case rel: LogicalRelation => Some((filters, rel, None))
+        stripToScan(child, filters, dvs)
+      case rel: LogicalRelation => Some((filters, rel, dvs))
       case _ => None
     }
 

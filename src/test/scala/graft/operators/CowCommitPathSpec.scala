@@ -84,6 +84,21 @@ class CowCommitPathSpec extends AnyFunSuite {
         text.contains("dvRuns(") || text.contains(".schema(CowTable.dvSchema)")
       }.toSeq
     assert(others.isEmpty, s"read DVs through CowTable.dvFiles: $others")
+    // DV parquet reaches the driver only through the cached per-file
+    // reader (the entries sidecars are the other driver read)
+    assert(callersOf("readParquetDriver") == Set("loadEntries", "dvRunsOf"))
+    assert(callersOf("dvRunsOf") == Set("driverRuns"))
+    // and one size switch decides it: only dvFiles serves driverRuns
+    assert(callersOf("driverRuns") == Set("dvFiles"))
+    // the read-side filter probes a broadcast variable: no source
+    // broadcasts the reader's DataFrame into a join
+    val joinBroadcast = """broadcast\(\s*(?:CowTable\.)?dvFiles\(""".r
+    val joined = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => joinBroadcast.findFirstIn(
+        new String(Files.readAllBytes(p), "UTF-8")).isDefined).toSeq
+    assert(joined.isEmpty, s"a dvFiles DataFrame is broadcast: $joined")
+    assert(!ownersOf(".join(broadcast(").contains("applyDvFilter"))
   }
 
   test("the per-op carry helpers are gone") {

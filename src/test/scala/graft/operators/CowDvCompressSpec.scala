@@ -128,22 +128,25 @@ class CowDvCompressSpec extends AnyFunSuite {
     val lens = runs.map(_._2).toArray
     val naive = (i: Long) =>
       runs.exists { case (s, l) => i >= s && i < s + l }
-    val probes = (0L until 800L).toDF("i")
-      .withColumn("starts", typedLit(starts))
-      .withColumn("lens", typedLit(lens))
-    val got = probes.select(col("i"),
-        graft.functions.DvRunsContain(col("starts"), col("lens"),
-          col("i")).as("hit"))
+    val path = "/t/data/part-0.parquet"
+    val bc = spark.sparkContext.broadcast(new graft.functions.DvRunIndex(
+      Map(path -> ((starts, lens)))))
+    val runSet = new graft.functions.DvRunSet(Seq("dv"), _ => bc)
+    // a range scan, not a local relation: the projection stays in
+    // whole-stage codegen instead of folding on the driver
+    def probe(p: String) = spark.range(0L, 800L).toDF("i")
+      .select(col("i"), graft.functions.DvRunsContain(runSet,
+        lit(p), col("i")).as("hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val got = probe(path)
     (0L until 800L).foreach { i =>
       assert(got(i) == naive(i), s"probe $i: got ${got(i)}")
     }
-    // null arrays (left-join miss) evaluate FALSE, not NULL
+    // a file with no runs (absent from the index) evaluates FALSE
+    assert(probe("/t/data/part-1.parquet").values.forall(!_))
     val nulls = Seq((1L)).toDF("i")
-      .withColumn("starts", lit(null).cast("array<bigint>"))
-      .withColumn("lens", lit(null).cast("array<bigint>"))
-      .select(graft.functions.DvRunsContain(col("starts"), col("lens"),
-        col("i")).as("hit"))
+      .select(graft.functions.DvRunsContain(runSet,
+        lit(null).cast("string"), col("i")).as("hit"))
       .head()
     assert(!nulls.isNullAt(0) && !nulls.getBoolean(0))
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -110,6 +111,81 @@ class CowDvReaderSpec extends AnyFunSuite {
         .select("id", "_change_type").as[(Long, String)].collect()
       assert(feed.length == deleted.size)
       assert(feed.forall(_._2 == "delete") && feed.map(_._1).toSet == deleted)
+    }
+  }
+
+  test("a second DV'd read of the same snapshot opens no DV file") {
+    val (t, m) = build(Seq("par", "id"))
+    assert(runs(m) <= CowTable.SmallSidecarEntries)
+    def ids() = CowTable.readWhere(spark, t, $"id" < 5000L).select("id")
+      .as[Long].collect().toSet
+    val want = live.filter(_ < 5000L)
+    assert(ids() == want)
+    // the first read cached every DV file's runs: with the DV parquet
+    // gone from its path, the second read still drops exactly the
+    // deleted rows
+    val moved = m.dvs.map { dv =>
+      val p = Paths.get(CowTable.normalizePath(dv))
+      p -> Files.move(p, p.resolveSibling(p.getFileName.toString + ".aside"))
+    }
+    try assert(ids() == want)
+    finally moved.foreach { case (p, aside) => Files.move(aside, p) }
+  }
+
+  test("the driver, columnar and range anti-join DV filters drop the same rows") {
+    def read(t: String) = CowTable.readWhere(spark, t, $"id" >= 1000L)
+    val want = live.filter(_ >= 1000L)
+    Seq(above, below).foreach { case (t, _) =>
+      val plan = read(t).queryExecution.executedPlan.toString
+      assert(plan.contains("dvrunscontain") && !plan.contains("Join"), plan)
+      assert(read(t).select("id").as[Long].collect().toSet == want)
+    }
+    val old = spark.conf.getOption(CowTable.DvBroadcastRunsConf)
+    try {
+      spark.conf.set(CowTable.DvBroadcastRunsConf, "1")
+      Seq(above, below).foreach { case (t, _) =>
+        val plan = read(t).queryExecution.executedPlan.toString
+        assert(!plan.contains("dvrunscontain") && plan.contains("LeftAnti"),
+          plan)
+        assert(read(t).select("id").as[Long].collect().toSet == want)
+      }
+    } finally old match {
+      case Some(v) => spark.conf.set(CowTable.DvBroadcastRunsConf, v)
+      case None => spark.conf.unset(CowTable.DvBroadcastRunsConf)
+    }
+  }
+
+  test("building and planning a DV read runs no job; executing it loads the runs") {
+    Seq(above, below).foreach { case (t, _) =>
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf {
+        df = CowTable.readWhere(spark, t, $"id" >= 1000L).select("id")
+        df.schema
+        df.queryExecution.toString
+      } == 0)
+      assert(df.as[Long].collect().toSet == live.filter(_ >= 1000L))
+    }
+  }
+
+  test("outside whole-stage codegen the DV filter drops the same rows") {
+    // below an exchange, the probe's task is then first serialized on
+    // the scheduler's thread, where the runs load with no Spark job
+    // (columnar-sized too)
+    val old = spark.conf.getOption("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    val want = live.filter(_ >= 1000L)
+    try Seq(above, below).foreach { case (t, _) =>
+      val df = CowTable.readWhere(spark, t, $"id" >= 1000L).select("id")
+      assert(!df.queryExecution.executedPlan.toString.contains("*("))
+      assert(df.as[Long].collect().toSet == want)
+      val agg = CowTable.readWhere(spark, t, $"id" >= 1000L)
+        .agg(count(lit(1)), sum(col("id"))).head()
+      assert(agg.getLong(0) == want.size.toLong && agg.getLong(1) == want.sum)
+      assert(CowTable.readWhere(spark, t, $"id" >= 1000L).repartition(3)
+        .select("id").as[Long].collect().toSet == want)
+    } finally old match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
+      case None => spark.conf.unset("spark.sql.codegen.wholeStage")
     }
   }
 

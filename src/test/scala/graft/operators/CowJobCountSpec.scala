@@ -55,6 +55,8 @@ class CowJobCountSpec extends AnyFunSuite {
 
   private val twoFile = "the 2-file fixture"
   private val withADelete = "the 2-file fixture with a delete"
+  private val lhFeed = "a 4-file table with a DV in every file"
+  private val feedSlice = "tableChanges(...).collect() over a one-row merge"
 
   /** The bound a lowered pin's test is still named with: lowering a pin
     * leaves the test's name, and so its identity in test history, as it
@@ -72,7 +74,10 @@ class CowJobCountSpec extends AnyFunSuite {
     ("countWhere (all files fully matching)", twoFile) -> 2,
     ("countWhere (all files fully matching)", withADelete) -> 3,
     ("metadataRowCount", twoFile) -> 2, ("metadataRowCount", withADelete) -> 3,
-    ("minWhere", twoFile) -> 4, ("minWhere", withADelete) -> 6)
+    ("minWhere", twoFile) -> 4, ("minWhere", withADelete) -> 6,
+    ("readWhere(...).collect()", withADelete) -> 2,
+    (feedSlice, twoFile) -> 6, (feedSlice, withADelete) -> 8,
+    (feedSlice, lhFeed) -> 8)
 
   private def pin(op: String, pinned: Int, build: () => String = () => fixture(),
       fixtureName: String = twoFile)(body: String => Unit): Unit =
@@ -105,10 +110,10 @@ class CowJobCountSpec extends AnyFunSuite {
     t
   }
 
-  pin("upsertMor", 9, () => withDelete(), withADelete)(t =>
+  pin("upsertMor", 8, () => withDelete(), withADelete)(t =>
     CowTable.upsertMor(spark, t, src((10 to 12) ++ (300 to 301), "u"), Seq("id")))
 
-  pin("mergeInto", 11, () => withDelete(), withADelete)(t =>
+  pin("mergeInto", 10, () => withDelete(), withADelete)(t =>
     CowTable.mergeInto(spark, t, src((60 to 64) ++ (200 to 204), "m"), Seq("id")))
 
   /** The 2-file fixture plus three one-row appends (the compactable
@@ -125,11 +130,11 @@ class CowJobCountSpec extends AnyFunSuite {
     CowTable.readManifest(t, 0).files
       .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).min
 
-  pin("compactTable", 4, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTable", 3, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTable(spark, t, targetBytes = 1L << 20,
       smallThreshold = Some(tailThreshold(t))))
 
-  pin("compactTableZorder", 10, () => withTail(), "the 2-file fixture plus a tail")(t =>
+  pin("compactTableZorder", 7, () => withTail(), "the 2-file fixture plus a tail")(t =>
     CowTable.compactTableZorder(spark, t, targetBytes = 1L << 20,
       zCols = Seq("id", "v"), smallThreshold = Some(tailThreshold(t))))
 
@@ -141,14 +146,14 @@ class CowJobCountSpec extends AnyFunSuite {
     t
   }
 
-  pin("rewriteDeletes(minDeadFraction = 0.0)", 2, () => withDeletes(),
+  pin("rewriteDeletes(minDeadFraction = 0.0)", 1, () => withDeletes(),
     "the 2-file fixture with deletes")(t => CowTable.rewriteDeletes(spark, t))
 
-  pin("rewriteDeletes(minDeadFraction = 0.3)", 3, () => withDeletes(),
+  pin("rewriteDeletes(minDeadFraction = 0.3)", 2, () => withDeletes(),
     "the 2-file fixture with deletes")(t =>
     CowTable.rewriteDeletes(spark, t, minDeadFraction = 0.3))
 
-  pin("rebucketTable", 4, () => {
+  pin("rebucketTable", 3, () => {
     val t = s"${System.getProperty("java.io.tmpdir")}/graft_cow_jobs/" +
       java.util.UUID.randomUUID().toString.take(8)
     CowTable.initBucketed(src(0 until 100, "n"), t, "id", 4)
@@ -178,15 +183,14 @@ class CowJobCountSpec extends AnyFunSuite {
     pin("readWhere(...).collect()", readWhere, build, fixtureName)(t =>
       assert(CowTable.readWhere(spark, t, $"id" >= 55L).collect()
         .length >= 44))
-    pin("tableChanges(...).collect() over a one-row merge", tableChanges,
-        thenMerge(build), fixtureName) { t =>
+    pin(feedSlice, tableChanges, thenMerge(build), fixtureName) { t =>
       val v = CowTable.latestManifest(t).get.version
       assert(CowTable.tableChanges(spark, t, v - 1, v, Seq("id")).collect()
         .length == 2)
     }
   }
 
-  readPins(twoFile, () => fixture())(0, 0, 2, 1, 6)
+  readPins(twoFile, () => fixture())(0, 0, 2, 1, 5)
 
   /** `lh_mixed`'s feed shape: 10k-row files of incompressible names
     * (~0.7 MB each), a DV in every file, then a merge that rewrites one
@@ -206,13 +210,11 @@ class CowJobCountSpec extends AnyFunSuite {
     t
   }
 
-  pin("tableChanges(...).collect() over a one-row merge", 8,
-      thenMerge(() => lhShaped()), "a 4-file table with a DV in every file") { t =>
+  pin(feedSlice, 5, thenMerge(() => lhShaped()), lhFeed) { t =>
     val v = CowTable.latestManifest(t).get.version
     assert(CowTable.tableChanges(spark, t, v - 1, v, Seq("id")).collect()
       .length == 2)
   }
 
-  readPins(withADelete, () => withDelete())(
-    0, 0, 3, 2, 8)
+  readPins(withADelete, () => withDelete())(0, 0, 2, 1, 5)
 }

@@ -518,16 +518,20 @@ class CowTableSpec extends AnyFunSuite {
     val q = CowTable.read(spark, t).filter($"id" >= 90L).select("id", "v")
     val plan = q.queryExecution.executedPlan.toString
     // the user predicate reaches the parquet scan THROUGH the DV
-    // anti join (it keeps or drops whole left rows, so Catalyst may
-    // push the filter below it) — without this, every DV'd read becomes
-    // a full scan
+    // filter (it keeps or drops whole rows, so Catalyst may push the
+    // predicate below it) — without this, every DV'd read becomes a
+    // full scan
     assert(plan.contains("PushedFilters") &&
       plan.contains("GreaterThanOrEqual(id,90)"), plan)
-    // the packed per-file runs ride a broadcast, never a shuffle, and
-    // the probe is the codegen'd binary-search dv_runs_contain filter
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftAnti") && plan.contains("dvrunscontain"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
+    // the packed per-file runs ride a broadcast VARIABLE probed by the
+    // codegen'd binary-search dv_runs_contain filter: no join of any
+    // kind, no broadcast exchange, and the data scan is the only scan
+    assert(plan.contains("NOT dvrunscontain("), plan)
+    assert(!plan.contains("BroadcastHashJoin") &&
+      !plan.contains("SortMergeJoin") && !plan.contains("Join") &&
+      !plan.contains("BroadcastExchange"), plan)
+    assert("FileScan".r.findAllIn(plan).size == 1 &&
+      !plan.contains("LocalTableScan"), plan)
     // name is not read: pruning intact despite the _metadata projection
     val readSchemas = plan.split("ReadSchema: ").drop(1).map(_.split("\n").head)
     assert(readSchemas.exists(s => s.contains("id") && !s.contains("name")),
